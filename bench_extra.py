@@ -42,6 +42,7 @@ def profile_decided_pairs(spark, sf_dir):
         blocking_pairs_v2,
         decide_pairs_v2,
         score_pairs_v2,
+        with_norm,
     )
     from earcrawler_spark.queries_fidelity import (
         RECONCILE_BLACKLIST,
@@ -52,7 +53,7 @@ def profile_decided_pairs(spark, sf_dir):
     from pyspark.sql import functions as F
 
     times: dict[str, float] = {}
-    ents = _synth_entities(_t(spark, sf_dir, "part"))
+    ents = with_norm(_synth_entities(_t(spark, sf_dir, "part")))
     _noop(spark, "ents", ents, times)
     pairs = blocking_pairs_v2(ents)
     _noop(spark, "blocking_pairs_v2", pairs, times)

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from urllib.parse import parse_qsl, urlencode, urlsplit, urlunsplit
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
@@ -79,10 +80,12 @@ def _canon_query(qs) -> str:
 def canonicalize_batch(urls: pd.Series) -> pd.Series:
     """Vectorized canonicalization of a string Series; row-for-row equal
     to ``urls.map(canonicalize_one)`` (per-row Python only for the slow
-    tail and the per-UNIQUE-query-string parameter sort)."""
-    s = urls.str.strip()
-    ascii_ok = ~s.str.contains(r"[^\x20-\x7e]", regex=True, na=True)
-    out = pd.Series(index=urls.index, dtype=object)
+    tail and the per-UNIQUE-query-string parameter sort).  Rows are
+    addressed by position, never by index label, so a repeated label in
+    ``urls.index`` cannot mix up rows."""
+    s = urls.reset_index(drop=True).str.strip()
+    ascii_ok = ~s.str.contains(r"[^\x20-\x7e]", regex=True, na=True).to_numpy(bool)
+    out = np.empty(len(s), dtype=object)
     # Identity tier: already-canonical shape (lowercase scheme+host,
     # plain host, non-empty path, no query/fragment, and exactly the
     # scheme's '//' so no duplicate path slashes) — steady-state crawls
@@ -90,31 +93,29 @@ def canonicalize_batch(urls: pd.Series) -> pd.Series:
     # tier; every canonicalize_one step is a no-op on it.
     ident = (
         ascii_ok
-        & s.str.match(r"https?://[a-z0-9.\-]+/[^?#]*\Z", na=False)
-        & (s.str.count("//") == 1)
+        & s.str.match(r"https?://[a-z0-9.\-]+/[^?#]*\Z", na=False).to_numpy(bool)
+        & (s.str.count("//") == 1).to_numpy(bool)
     )
-    out[ident] = s[ident]
-    rest = ~ident
-    if rest.any():
-        r = s[rest]
-        ex = r.str.extract(_FAST_PARTS)
-        fast = ascii_ok[rest] & ex[0].notna()
+    out[ident] = s.to_numpy(object)[ident]
+    rest = np.flatnonzero(~ident)
+    if len(rest):
+        ex = s.iloc[rest].str.extract(_FAST_PARTS)
+        fast = ascii_ok[rest] & ex[0].notna().to_numpy(bool)
         if fast.any():
-            scheme = ex.loc[fast, 0].str.lower()
-            host = ex.loc[fast, 1].str.lower()
-            path = ex.loc[fast, 2].fillna("/").str.replace(
-                r"/{2,}", "/", regex=True
-            )
-            qs = ex.loc[fast, 3]
+            exf = ex[fast]
+            scheme = exf[0].str.lower()
+            host = exf[1].str.lower()
+            path = exf[2].fillna("/").str.replace(r"/{2,}", "/", regex=True)
+            qs = exf[3]
             qmap = {u: _canon_query(u) for u in qs.dropna().unique()}
             query = qs.map(qmap).fillna("")
             res = scheme + "://" + host + path
             res = res.where(query == "", res + "?" + query)
-            out.loc[res.index] = res
-        slow_idx = fast.index[~fast.to_numpy()]
-        if len(slow_idx):
-            out.loc[slow_idx] = urls.loc[slow_idx].map(canonicalize_one)
-    return out
+            out[rest[fast]] = res.to_numpy(object)
+        slow = rest[~fast]
+        if len(slow):
+            out[slow] = urls.iloc[slow].map(canonicalize_one).to_numpy(object)
+    return pd.Series(out, index=urls.index, dtype=object)
 
 
 @F.pandas_udf(StringType())

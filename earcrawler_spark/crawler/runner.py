@@ -215,7 +215,7 @@ class Crawler:
                 ),
             )
         else:
-            self._write_bloom(0, frontier.select("url_hash"), previous=None)
+            self._write_filter(0, frontier.select("url_hash"), previous=None)
         robots = fetch_robots(
             self.spark, [r[2] for r in rows], self.robots_fetcher
         )
@@ -290,10 +290,6 @@ class Crawler:
         )
         self.state.write("bloom", iteration, out)
         return merged
-
-    # backwards-compatible alias
-    def _write_bloom(self, iteration, hashes_df, previous):
-        return self._write_filter(iteration, hashes_df, previous)
 
     def _load_bloom(self, upto_iter: int) -> dict[int, bytes]:
         df = self.state.read_latest("bloom", upto_iter)

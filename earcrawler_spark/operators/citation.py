@@ -139,7 +139,6 @@ def apply_citation_boost(
     metadata: DataFrame,
     targets: DataFrame,
     k: int,
-    materialize: bool = False,
 ) -> DataFrame:
     """results(rank, doc_id, section_id, score) + metadata(row_id,
     mdoc_id, section_id, chunk_kind, ordinal) + targets(target, tpos) ->
@@ -203,12 +202,10 @@ def apply_citation_boost(
         .groupBy("target", "tpos")
         .agg(F.min("srow").alias("b"))
     )
-    if materialize:
-        # `best` (≤ #targets rows) feeds both the boosted rows and the
-        # boost-fired count — raw, each reference re-runs the metadata
-        # argmax scan.  Callers on the materialized path checkpoint it;
-        # the default keeps the raw single plan the shape guards inspect.
-        best = best.localCheckpoint()
+    # `best` (≤ #targets rows) feeds both the boosted rows and the
+    # boost-fired count — un-checkpointed, each reference re-runs the
+    # metadata argmax scan.
+    best = best.localCheckpoint()
 
     # reference floors the bump baseline at 0.0 (initial value with a
     # strict >): all-negative result scores still bump from 0.0, not

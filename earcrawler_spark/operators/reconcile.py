@@ -157,6 +157,16 @@ def normalize_name_v2(col):
     return F.array_join(toks, " ")
 
 
+def with_norm(entities: DataFrame) -> DataFrame:
+    """Entities plus the per-entity normalized name ``norm`` that
+    blocking_pairs_v2 and score_pairs_v2 read.  The reference normalize()
+    coerces None to '' (reconcile.py:66 `text or ""`), so a null name
+    blocks and scores exactly like an empty one."""
+    return entities.withColumn(
+        "norm", normalize_name_v2(F.coalesce(F.col("name"), F.lit("")))
+    )
+
+
 def soundex_v2(norm_col):
     """The reference's simplified soundex (reconcile.py:74-95): first char
     + consonant digits (no adjacent-dedup, vowels/digits/spaces dropped),
@@ -216,16 +226,10 @@ def blocking_pairs_v2(entities: DataFrame) -> DataFrame:
     hot-bucket filter for the lexical families, a single self equi-join on
     the key, distinct on the pair.
 
-    A precomputed per-entity ``norm`` column is reused when present (the
-    staged/materialized caller carries it): the four lexical key exprs
-    each embed the normalize regex+HOF chain otherwise, and on a
-    one-split source table those duplicated evaluations all run at scan
-    parallelism."""
-    norm = (
-        F.col("norm")
-        if "norm" in entities.columns
-        else normalize_name_v2(F.col("name"))
-    )
+    ``entities`` carries the per-entity ``norm`` (see with_norm): the
+    four lexical keys share it instead of each embedding the normalize
+    regex+HOF chain."""
+    norm = F.col("norm")
     alnum = F.regexp_replace(norm, "[^0-9a-z]", "")
     token0 = F.element_at(F.split(norm, " "), 1)
     keyed = entities.select(
@@ -284,7 +288,8 @@ def blocking_pairs_v2(entities: DataFrame) -> DataFrame:
 
 def score_pairs_v2(pairs_with_attrs: DataFrame) -> DataFrame:
     """Full 9-feature weighted score (reconcile.py:156-202). Input columns:
-    id/name/country/source/duns/cage/fr_doc/url suffixed _a/_b."""
+    id/name/country/source/duns/cage/fr_doc/url/norm suffixed _a/_b, where
+    norm is the per-entity normalized name from with_norm."""
     from earcrawler_spark.functions.similarity_udfs import jaro_winkler_udf
 
     # Spread the Arrow-batched JW stage across the cluster: AQE coalesces
@@ -292,19 +297,11 @@ def score_pairs_v2(pairs_with_attrs: DataFrame) -> DataFrame:
     # the Python workers — a cheap shuffle here bought 2.4x end-to-end.
     parallelism = pairs_with_attrs.sparkSession.sparkContext.defaultParallelism
     d = pairs_with_attrs.repartition(parallelism, "id_a")
-    # reference normalize() coerces None to '' (reconcile.py:66 `text or ""`);
-    # without the coalesce a null name on either side nulls the normalized
-    # join key and the inner join back silently drops the pair — reachable
-    # via the id-key blocks (duns/cage/fr_doc/url_host), which don't require
-    # a name.  When the caller already carries per-ENTITY normalized names
-    # (norm_a/norm_b), reuse them: recomputing here costs 2 regex+HOF
-    # evaluations per PAIR row — the measured hot spot of the final stage
-    # (65 CPU-s at sf0.1; the expression is a pure function of the name,
-    # so per-entity and per-pair evaluation are identical).
-    if not {"norm_a", "norm_b"}.issubset(set(d.columns)):
-        na = normalize_name_v2(F.coalesce(F.col("name_a"), F.lit("")))
-        nb = normalize_name_v2(F.coalesce(F.col("name_b"), F.lit("")))
-        d = d.withColumn("norm_a", na).withColumn("norm_b", nb)
+    # norm is never null (with_norm coalesces the name), so a null name on
+    # either side cannot null the join key below and drop the pair, which
+    # the id-key blocks (duns/cage/fr_doc/url_host) can reach.  Normalizing
+    # per ENTITY instead of per PAIR row saves 2 regex+HOF evaluations per
+    # pair, the measured hot spot of the final stage (65 CPU-s at sf0.1).
     a, b = F.col("norm_a"), F.col("norm_b")
     # ALL name-derived features compute on the DISTINCT normalized name
     # pairs and join back: blocking emits each hot name pair many times

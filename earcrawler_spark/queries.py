@@ -1187,225 +1187,6 @@ def _late_oracles() -> None:
 
     QUERIES.update(CRAWLSTATS_QUERIES)
     ORACLES.update(CRAWLSTATS_ORACLES)
-    _reorder_for_gate()
-
-
-# Queries the driver's 50-entry correctness gate already certified in rounds
-# 1-3 (their green rows stand as evidence).  Everything NOT in this set —
-# the 33 round-2/3 queries that have only local-oracle verification, plus any
-# query added after round 3 — is floated to the FRONT of the registry so the
-# driver's first-50 window certifies it this round.
-_GATED_R1_R3: frozenset[str] = frozenset(
-    {
-        "pricing_summary", "top_revenue_nations", "order_priority",
-        "orders_without_lineitems", "latest_order_per_customer",
-        "segment_stats", "asof_latest_event", "hourly_event_rollup",
-        "monitor_delta", "version_assign", "record_merge", "dedup_exact",
-        "seen_anti_join", "top_terms", "token_stats", "doc_quality",
-        "pii_scrub", "lang_distribution", "term_cooccurrence",
-        # NOTE: minhash_lsh_pairs was certified r1-3 but its impl AND
-        # oracle were rewritten in round 4 (4-lane substring minhash) —
-        # modified-since-certification counts as never-certified, so it
-        # is deliberately NOT in this set (ADVICE r4 #1).
-        # NOTE: ngram_jaccard_pairs left this set in round 6: its oracle
-        # was rewritten from the all-pairs list_intersect join (O(n²),
-        # ~50 min at sf0.1) to a value-identical inverted shingle join
-        # (4 s at sf0.1; old-vs-new fetchall identity proven at sf0.001
-        # and sf0.01) — modified-since-certification, so it re-enters
-        # the window.
-        "bm25_topk",
-        "rrf_fusion", "knn_bruteforce", "reconcile_parts",
-        "connected_components", "sparql_construct", "events_json",
-        "simhash_buckets", "ann_lsh_buckets", "entity_classification",
-        "corpus_records", "corpus_digest", "chunking", "mention_scoring",
-        "truncation", "asof_status", "triples_bgp", "triples_integrity",
-        "sparql_ask", "budget_gate", "soundex_keys", "running_totals",
-        "sessionization", "sales_rollup", "event_pivot", "set_operations",
-        "kg_paths", "alias_resolution", "sliding_window",
-        # gated in r1/r2 before later registrations displaced them
-        # (seen_set_cardinality left this set in round 5: its output row
-        # changed to the oracled exact-counts + HLL-bound-check form)
-        "reconcile_jw",
-    }
-)
-
-
-# Rows-only queries whose current impl already has a driver rows-check
-# from an earlier round: re-running them adds no evidence, so when the
-# never-certified set exceeds the 50-slot gate window they yield their
-# slot to oracled queries.  Empty since round 6: media_features (the
-# registry's last rows-only query) gained a header-math oracle — the
-# Spark side decodes the real PPM/WAV/PPMV payloads, DuckDB derives the
-# same metadata from the generative contract — so it competes for a
-# window slot like any other uncertified oracled query.
-_GATE_DEPRIORITIZED: frozenset[str] = frozenset()
-
-# The never-certified set outgrew the driver's 50-slot window in round 5
-# (51+ uncertified oracled queries); 17 explicit deferrals waited here.
-# Round 6 drained the queue: the 41 round-5 greens rotated into
-# _GATED_R5, freeing enough slots for every deferral plus the 9 re-fixed
-# HUGEINT reds and eval_report (its oracle embeds the red queries' SQL,
-# so the round-6 BIGINT casts modified it — re-certifying).  Empty until
-# the uncertified set outgrows 50 again.
-_GATE_OVERFLOW: frozenset[str] = frozenset()
-
-# Queries fully green in CORRECTNESS_r04.json whose impl AND oracle are
-# unchanged since (modified-since-certification counts as never
-# certified, so the round-5 diffs removed: dedup_clusters — pre-collapse
-# rework; index_binding — null-safe/falsy-id ADVICE fixes;
-# llm_output_violations + generation_policy — the shared output_schema
-# operator's context-gated zero-citations fix).  These sort between the
-# never-certified set and the r1-3 set: they fill any spare gate-window
-# slots with harmless re-certification.
-_GATED_R4: frozenset[str] = frozenset(
-    {
-        # retrieval_compare left this set in round 7: the 1-row combined
-        # metrics frame is now localCheckpointed before the three metric
-        # rows re-reference it — modified-since-certification.
-        "token_stats_bpe", "rolling_fingerprint",
-        # reconcile_v2 + reconcile_summary left this set in round 5:
-        # the score fold was rewritten to exact integer micro-arithmetic
-        # (a 1-ulp float-sum divergence flipped round(.,6) at sf0.1) and
-        # the summary oracle derives from the v2 SQL — modified since
-        # certification counts as never certified.
-        "cosine_neardup", "chunking_sections", "entity_extraction",
-        "date_normalization", "text_mining",
-        "record_merge_full", "iri_minting",
-        "part_mining", "provenance_upsert", "part_anchors", "rrf_hybrid",
-        "label_inference", "citation_metrics", "temporal_requests",
-        "knn_l2_bucket", "bm25_tokenized",
-        # citation_boost left this set in round 7: its top-k results
-        # frame is now localCheckpointed before the boost (giant-DAG
-        # fix) — modified-since-certification, re-enters the window.
-        # rag_context + context_lines + rag_context_kg left this set in
-        # round 7: the shared materialization now localCheckpoints the
-        # two ≤20-row narrow-waist frames inside build_rag_context
-        # (round-7 giant-DAG fix) — modified-since-certification counts
-        # as never certified, so they re-enter the window.
-        "kg_expansion_index",
-        # shape_violations, sparql_update and eval_schema_violations left
-        # this set in round 7: their repeatedly-referenced intermediate
-        # frames (triple graph / carded counts / items fixture) are now
-        # localCheckpointed (giant-DAG fix) — modified-since-certification.
-        # claims_extraction left this set in round 6: the (?U) unicode-
-        # whitespace normalization fix (hypothesis-fuzz finding) modified
-        # extract_claims — it re-enters the window.
-        "snapshot_violations", "telemetry_scrub",
-        "egress_audit",
-    }
-)
-
-
-# Queries fully green in CORRECTNESS_r05.json whose impl AND oracle are
-# unchanged since.  Round-6 exclusion: eval_report — green in r5, but
-# its oracle embeds the four red gate queries' SQL, so the round-6
-# CAST(... AS BIGINT) edits modified it (modified-since-certification
-# counts as never-certified); it re-enters the window alongside the 9
-# re-fixed reds as the family's regression canary.  These sort ahead of
-# _GATED_R4 when filling spare window slots: most-recently-certified
-# greens are the highest-value re-certification canaries.
-_GATED_R5: frozenset[str] = frozenset(
-    {
-        # ann_ivf_lists + ann_ivf_search (and pq_codes below) left this
-        # set in round 7: they consume the restructured shuffle-free IVF
-        # assignment — modified-since-certification.
-        "answer_scoring", "bpe_merges",
-        "bpe_segment", "canary_eval", "chunk_dedup", "cms_heavy_hitters",
-        # cross_source_overlap left this set in round 7: the distinct
-        # (source, gram) shingle set is now localCheckpointed before its
-        # four consumers — modified-since-certification.
-        "curation_verdict", "curriculum_order",
-        # dedup_clusters left this set in round 6: the cache-release
-        # rework (eager localCheckpoint + try/finally unpersist, ADVICE
-        # r5 #5) modified its impl — it re-enters the window.
-        "dataset_split", "decontamination", "dsir_weights",
-        "dup_span_coverage", "embedding_outliers", "hitl_summary",
-        # id_consistency left this set in round 6: the codegen-overflow
-        # fix (single-copy normalizer, refs/lines materialization, raw-
-        # token dedup before normalize in scan_kg_sections) modified its
-        # impl — it re-enters the window.
-        "index_binding", "link_pagerank",
-        "llm_output_violations", "media_manifest", "minhash_lsh_pairs",
-        "ngram_novelty", "repetition_quality",
-        "seen_set_cardinality", "semantic_decontamination",
-        # semdedup left this set in round 7: it consumes the restructured
-        # shuffle-free IVF assignment (operators/similarity) —
-        # modified-since-certification.
-        "shard_packing", "source_mix", "stratified_sample",
-        # trace_validation left this set in round 6: the stable-sort
-        # index keys added to operators/trace.py (ADVICE r5) modified
-        # its impl — modified-since-certification counts as never
-        # certified, so it re-enters the window.
-        "temperature_mix", "tfidf_topk",
-        "unigram_quality", "upstream_status", "weighted_sample", "zipf_fit",
-    }
-)
-
-
-# Queries fully green in CORRECTNESS_r06.json whose impl AND oracle are
-# unchanged since.  Round-7 exclusions (modified-since-certification
-# counts as never certified — every one re-enters the window):
-# reconcile_v2 + reconcile_summary (staged decided-pairs materialization,
-# per-entity norm), multihop_ablation + citation_scores_agg + fr_coverage
-# + groundedness_gate (gate-output caches), eval_report (reads them),
-# groundedness_reasons (shared scored-citations frame), id_consistency +
-# graph_triangles (eager tiny-output pin), ann_ivf_lists + ann_ivf_search
-# + pq_codes (shuffle-free IVF assignment).
-_GATED_R6: frozenset[str] = frozenset(
-    {
-        "ngram_jaccard_pairs", "dedup_clusters", "funnel_conversion",
-        "retention_cohorts", "interval_attribution", "conversion_latency",
-        "media_features", "claims_extraction", "evidence_resolution",
-        "phase2_contract_gate", "citation_regressions", "generation_policy",
-        "trace_validation", "token_length_histogram", "ttr_hapax",
-        "contamination_by_source", "lang_source_matrix", "feature_drift",
-        "annotator_agreement", "ks_drift", "histogram_quantiles",
-        "gopher_rules", "domain_quota", "hits_scores", "span_integrity",
-        # url_canonicalize left for round-7 re-certification: its
-        # canonical_url UDF body was vectorized (canonicalize_batch) —
-        # outputs fuzz-proven identical, but modified-since-certification
-        # counts as never-certified.
-        "anchor_text_agg", "recrawl_priority",
-        "frontier_shard_skew", "inverted_index", "robots_compliance",
-        "frontier_dequeue", "url_templates", "sitemap_parse",
-        "bloom_fp_audit", "minhash_lsh_pairs", "seen_set_cardinality",
-    }
-)
-
-
-def _reorder_for_gate() -> None:
-    """Put never-driver-certified queries first in registry iteration
-    order.  Round-7 fill order (VERDICT r6 task 4): after the
-    never-certified set, the STALE r1-r3 greens cycle through the spare
-    window slots first — 44 of them were last driver-gated in r03 and the
-    rotation should not let any green row go more than ~3 rounds stale —
-    then the newest greens (R6, R5, R4) as re-certification canaries."""
-    certified = _GATED_R1_R3 | _GATED_R4 | _GATED_R5 | _GATED_R6
-    order = [
-        k
-        for k in QUERIES
-        if k not in certified
-        and k not in _GATE_DEPRIORITIZED
-        and k not in _GATE_OVERFLOW
-    ]
-    order += [k for k in QUERIES if k in _GATE_OVERFLOW]
-    order += [k for k in QUERIES if k in _GATE_DEPRIORITIZED]
-    order += [k for k in QUERIES if k in _GATED_R1_R3]
-    order += [
-        k for k in QUERIES
-        if k in _GATED_R6 and k not in _GATED_R1_R3
-    ]
-    order += [
-        k for k in QUERIES
-        if k in _GATED_R5 and k not in _GATED_R1_R3 | _GATED_R6
-    ]
-    order += [
-        k for k in QUERIES
-        if k in _GATED_R4 and k not in _GATED_R1_R3 | _GATED_R5 | _GATED_R6
-    ]
-    snap = dict(QUERIES)
-    QUERIES.clear()
-    QUERIES.update({k: snap[k] for k in order})
 
 
 # --- retrieval mode comparison (dense vs hybrid) -----------------------------

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import cached, shared_frame, shared_output
+
 EVAL_QUERIES: dict = {}
 EVAL_ORACLES: dict = {}
 
@@ -451,16 +453,11 @@ EVAL_ORACLES["evidence_resolution"] = _evidence_sql()
 COVERAGE_TOP_N = 5
 
 
-from earcrawler_spark.session import cache_query_output
-
-# Gate OUTPUT cache (≤ 5-row aggregates): eval_report composes these
-# four gates; without the cache each standalone gate query AND the
-# report re-ran the full scoring pipeline (≈2x total work per bench
-# sweep).  At scale the report reads the persisted gate tables.
-_GATE_OUT_CACHE: dict = {}
-
-
-@cache_query_output("fr_coverage", _GATE_OUT_CACHE, ["dataset_id"])
+# Gate outputs (≤ 5-row aggregates) are shared frames: eval_report
+# composes these four gates; without sharing, each standalone gate query
+# AND the report re-ran the full scoring pipeline (≈2x total work per
+# bench sweep).  At scale the report reads the persisted gate tables.
+@shared_output("fr_coverage", "dataset_id")
 def q_fr_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """build_fr_coverage_report's aggregation core
     (eval/coverage_checks.py:276-505): per item, the sorted-distinct
@@ -819,25 +816,19 @@ def _groundedness_fixture(spark: SparkSession, sf_dir: str):
 # Scored-citations materialization: the gate and the reasons histogram
 # both run score_citations over the same fixture, and the reasons query
 # references it three times (melt pass + twice via score_claims) — the
-# raw plan re-executed the token-overlap scoring subtree per reference.
-_SC_CACHE: dict = {}
-
-
+# un-shared plan re-executed the token-overlap scoring subtree per
+# reference.
 def _scored_citations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SC_CACHE:
-        from earcrawler_spark.operators.groundedness import score_citations
-        from earcrawler_spark.session import bound_materialization_cache
+    from earcrawler_spark.operators.groundedness import score_citations
 
-        bound_materialization_cache(_SC_CACHE, key)
+    def build():
         _, citations, context, _ = _groundedness_fixture(spark, sf_dir)
-        sc = score_citations(citations, context).cache()
-        sc.count()
-        _SC_CACHE[key] = sc
-    return _SC_CACHE[key]
+        return cached(score_citations(citations, context))
+
+    return shared_frame(spark, sf_dir, "scored_citations", build)
 
 
-@cache_query_output("groundedness_gate", _GATE_OUT_CACHE, ["dataset_id"])
+@shared_output("groundedness_gate", "dataset_id")
 def q_groundedness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The phase-2 groundedness gate verdict
     (eval/groundedness_gates.py:106-470 +

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import cached, shared_frame
+
 CHUNK_MAX_CHARS = 400
 
 
@@ -267,62 +269,38 @@ def _synth_entities(part: DataFrame) -> DataFrame:
     return a.unionByName(b)
 
 
-# The decided-pairs table is the contract between reconcile_v2 (emit the
-# decisions) and reconcile_summary (aggregate them). At real scale the
-# summary reads the PERSISTED decisions table; within one bench/gate
-# process we mirror that with a per-(session, sf_dir) localCheckpoint so
-# the blocking + 9-feature scoring (incl. the Jaro-Winkler Arrow stage)
-# executes once, not once per consumer.
-_DECIDED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def build_decided_pairs(
-    spark: SparkSession, sf_dir: str, materialize_stages: bool = False
-) -> DataFrame:
-    """The raw (un-checkpointed) blocking → scoring → decisions plan —
-    also the target of the plan-shape regression guard, which must see
-    the joins, not the materialized scan.
-
-    ``materialize_stages`` (the materialized/bench path, guide §1.2 "the
-    distributed algorithm first") fixes the two measured hot spots of the
-    raw plan at one-file scale:
+def build_decided_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The blocking → scoring → decisions pipeline, also the target of the
+    plan-shape regression guard.  Two measured hot spots at one-file
+    scale shape it (guide §1.2 "the distributed algorithm first"):
 
     * the entity table derives from ONE tiny parquet split, so the whole
-      synthesis (normalize/soundex regexes, key explode) runs at scan
-      parallelism 1-2 — and the raw plan re-executes that subtree in
-      every self-reference (keyed/sizes/a/b/left/right ≈ 6 scans).
-      Repartition to the cluster and localCheckpoint: one distributed
-      synthesis, every consumer reads the materialized 40k-row frame.
-    * the normalized name is computed per PAIR ROW (2 × 416k regex+HOF
-      evaluations — 65 CPU-s in the final stage) instead of per ENTITY
-      (2 × 20k).  Carrying norm through the enrichment join cuts that
-      stage ~4×; score_pairs_v2 reuses a present norm_a/norm_b.
+      synthesis (normalize/soundex regexes, key explode) would run at scan
+      parallelism 1-2 — once per self-reference (keyed/sizes/a/b/left/
+      right ≈ 6 scans).  Repartition to the cluster and localCheckpoint:
+      one distributed synthesis, every consumer reads the materialized
+      40k-row frame.
+    * the normalized name is computed per ENTITY (2 × 20k) and carried
+      through the enrichment join, not per PAIR ROW (2 × 416k regex+HOF
+      evaluations — 65 CPU-s in the final stage).
 
     Both are O(entities) materializations — at 100 TB the entity table is
     a real distributed table and the same shape holds (the checkpoint
-    stands in for the persisted table scan).  Default False keeps the raw
-    single-plan shape the guard inspects."""
+    stands in for the persisted table scan)."""
     from earcrawler_spark.operators.reconcile import (
         blocking_pairs_v2,
         decide_pairs_v2,
-        normalize_name_v2,
         score_pairs_v2,
+        with_norm,
     )
 
-    ents = _synth_entities(_t(spark, sf_dir, "part"))
-    attrs = ents
-    if materialize_stages:
-        par = spark.sparkContext.defaultParallelism
-        ents = ents.repartition(par).localCheckpoint()
-        attrs = ents.withColumn(
-            "norm", normalize_name_v2(F.coalesce(F.col("name"), F.lit("")))
-        )
-    # attrs carries the precomputed norm; blocking_pairs_v2 reuses it
-    pairs = blocking_pairs_v2(attrs if materialize_stages else ents)
-    if materialize_stages:
-        pairs = pairs.localCheckpoint()
-    left = attrs.select(*[F.col(c).alias(f"{c}_a") for c in attrs.columns])
-    right = attrs.select(*[F.col(c).alias(f"{c}_b") for c in attrs.columns])
+    par = spark.sparkContext.defaultParallelism
+    ents = with_norm(
+        _synth_entities(_t(spark, sf_dir, "part")).repartition(par).localCheckpoint()
+    )
+    pairs = blocking_pairs_v2(ents).localCheckpoint()
+    left = ents.select(*[F.col(c).alias(f"{c}_a") for c in ents.columns])
+    right = ents.select(*[F.col(c).alias(f"{c}_b") for c in ents.columns])
     enriched = pairs.join(left, "id_a").join(right, "id_b")
     scored = score_pairs_v2(enriched)
     decided = decide_pairs_v2(
@@ -339,20 +317,20 @@ def build_decided_pairs(
     )
 
 
+# The decided-pairs table is the contract between reconcile_v2 (emit the
+# decisions) and reconcile_summary (aggregate them). At real scale the
+# summary reads the PERSISTED decisions table; within one process we
+# mirror that with a shared frame so the blocking + 9-feature scoring
+# (incl. the Jaro-Winkler Arrow stage) executes once, not once per
+# consumer.  cache + eager count, NOT localCheckpoint: checkpointing 416k
+# wide rows re-executes the plan as a raw RDD job (~3x the cost of the
+# pipeline itself); a storage-level cache materializes at pipeline cost
+# and serves every later consumer at read cost.
 def _decided_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DECIDED_CACHE:
-        from earcrawler_spark.session import bound_materialization_cache
-
-        bound_materialization_cache(_DECIDED_CACHE, key)
-        # cache + eager count, NOT localCheckpoint: checkpointing 416k
-        # wide rows re-executes the plan as a raw RDD job (~3x the cost
-        # of the pipeline itself); a storage-level cache materializes at
-        # pipeline cost and serves every later consumer at read cost
-        d = build_decided_pairs(spark, sf_dir, materialize_stages=True).cache()
-        d.count()
-        _DECIDED_CACHE[key] = d
-    return _DECIDED_CACHE[key]
+    return shared_frame(
+        spark, sf_dir, "decided_pairs",
+        lambda: cached(build_decided_pairs(spark, sf_dir)),
+    )
 
 
 def q_reconcile_v2(spark: SparkSession, sf_dir: str) -> DataFrame:

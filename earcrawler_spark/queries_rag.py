@@ -32,6 +32,7 @@ from earcrawler_spark.operators.citation import (
     extract_targets,
     targets_sql,
 )
+from earcrawler_spark.session import shared_frame, shared_output
 
 RAG_QUERIES: dict = {}
 RAG_ORACLES: dict = {}
@@ -220,8 +221,7 @@ def q_citation_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is scanned once; same narrow-waist fix as build_rag_context.
     results = results.localCheckpoint()
     out = apply_citation_boost(
-        results, meta, extract_targets(spark, CITATION_PROMPT), k=CITATION_K,
-        materialize=True,
+        results, meta, extract_targets(spark, CITATION_PROMPT), k=CITATION_K
     )
     return out.select(
         "rank", "doc_id", "section_id", "score", "boost_reason"
@@ -246,11 +246,8 @@ FROM boosted_out ORDER BY rank
 
 # --- rag_context -------------------------------------------------------------
 
-def build_rag_context(
-    spark: SparkSession, sf_dir: str, materialize_stages: bool = False
-) -> DataFrame:
-    """The reference's #3 entry point end-to-end as ONE (raw,
-    un-checkpointed) Spark plan: BM25 + dense over-fetch
+def build_rag_context(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's #3 entry point end-to-end: BM25 + dense over-fetch
     (candidate_k=80) → RRF(60) top-20 → citation boost (query_k=20) →
     as-of temporal classification over the candidates →
     applicable-only, truncated to top_k=5, textless rows skipped after
@@ -258,17 +255,15 @@ def build_rag_context(
     inspects this builder; the registered query serves a shared
     materialization (context-bundle contract).
 
-    ``materialize_stages`` (the materialized/bench path) localCheckpoints
-    the two ≤20-row narrow-waist frames — ``results`` (fused top-20) and
-    ``boosted`` — before fan-out consumers re-reference them.
-    apply_citation_boost references results 3× (present/max/base) and
-    classify_temporal references its input 2× (chosen + join-back), so
-    the raw plan duplicates the whole BM25+dense+RRF subtree ~6× and one
-    cold materialization re-executes it that many times (22.0 s vs
-    11.2 s measured at sf0.1, identical rows — guide §3.3 "materialising
-    an intermediate truncates the plan").  Checkpoint cost is O(20 rows)
-    at any corpus scale.  Default False keeps the raw single-plan shape
-    the guard inspects."""
+    The two ≤20-row narrow-waist frames — ``results`` (fused top-20) and
+    ``boosted`` — are localCheckpointed before fan-out consumers
+    re-reference them.  apply_citation_boost references results 3×
+    (present/max/base) and classify_temporal references its input 2×
+    (chosen + join-back), so an un-checkpointed plan duplicates the whole
+    BM25+dense+RRF subtree ~6× and one cold materialization re-executes
+    it that many times (22.0 s vs 11.2 s measured at sf0.1, identical
+    rows — guide §3.3 "materialising an intermediate truncates the
+    plan").  Checkpoint cost is O(20 rows) at any corpus scale."""
     from earcrawler_spark.operators.ranking import bm25_scores, rrf_fuse, topk_ranked
     from earcrawler_spark.operators.similarity import cosine
     from earcrawler_spark.operators.temporal import classify_temporal
@@ -300,16 +295,11 @@ def build_rag_context(
         "doc_id",
         "section_id",
         F.col("rrf").alias("score"),
-    )
-    if materialize_stages:
-        results = results.localCheckpoint()
+    ).localCheckpoint()
 
     boosted = apply_citation_boost(
-        results, meta, extract_targets(spark, RAG_PROMPT), k=RAG_QUERY_K,
-        materialize=materialize_stages,
-    )
-    if materialize_stages:
-        boosted = boosted.localCheckpoint()
+        results, meta, extract_targets(spark, RAG_PROMPT), k=RAG_QUERY_K
+    ).localCheckpoint()
 
     tm = meta.select(
         F.col("row_id").cast("string").alias("ref_id"),
@@ -514,19 +504,11 @@ FROM ctx ORDER BY ctx_rank
 # rag_context_kg — share one materialization per (session, sf) so the
 # retrieval pipeline runs once per bench, mirroring the persisted-table
 # contract at scale (same pattern as the reconcile decisions table).
-_CTX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _rag_context_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CTX_CACHE:
-        from earcrawler_spark.session import bound_materialization_cache
-
-        bound_materialization_cache(_CTX_CACHE, key)
-        _CTX_CACHE[key] = build_rag_context(
-            spark, sf_dir, materialize_stages=True
-        ).localCheckpoint()
-    return _CTX_CACHE[key]
+    return shared_frame(
+        spark, sf_dir, "rag_context",
+        lambda: build_rag_context(spark, sf_dir).localCheckpoint(),
+    )
 
 
 def q_rag_context(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1228,16 +1210,10 @@ RAG_ORACLES["rag_context_kg"] = _rag_context_kg_sql()
 
 # --- multihop ablation compare (expansion on/off A/B) -------------------------
 
-from earcrawler_spark.session import cache_query_output
-
 # eval_report composes multihop_ablation + citation_scores_agg with the
-# queries_eval gates — cache the ≤5-row outputs per (session, sf) so the
-# report reads them instead of re-running the pipelines (see
-# queries_eval._GATE_OUT_CACHE).
-_RAG_GATE_OUT_CACHE: dict = {}
-
-
-@cache_query_output("multihop_ablation", _RAG_GATE_OUT_CACHE, ["dataset_id"])
+# queries_eval gates — share the ≤5-row outputs per (session, sf) so the
+# report reads them instead of re-running the pipelines.
+@shared_output("multihop_ablation", "dataset_id")
 def q_multihop_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multihop retrieval-ablation compare
     (scripts/eval/run_multihop_ablation_compare_stubbed.py +
@@ -1576,7 +1552,7 @@ RAG_ORACLES["kg_expansion_index"] = _kg_expansion_sql()
 
 # --- citation score aggregation ----------------------------------------------
 
-@cache_query_output("citation_scores_agg", _RAG_GATE_OUT_CACHE, ["dataset_id"])
+@shared_output("citation_scores_agg", "dataset_id")
 def q_citation_scores_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aggregate_citation_scores (scripts/eval/eval_rag_metrics.py:26-87)
     over the citation_metrics per-item scores, per dataset + ALL: micro

@@ -93,25 +93,21 @@ ORDER BY doc_id
 IVF_K = 10
 IVF_ITERS = 4
 
-_CENTS_CACHE: dict = {}
 
-
-def trained_centroids(spark: SparkSession, sf_dir: str,
-                      k: int = IVF_K, iters: int = IVF_ITERS) -> DataFrame:
-    """The (k=10, iters=4) quantizer trained once per (session, sf_dir)
+def trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (IVF_K, IVF_ITERS) quantizer trained once per (session, sf_dir)
     and shared by ann_ivf_lists, ann_ivf_search and semdedup — the three
     queries run the IDENTICAL deterministic Lloyd loop, so the sweep
     paid for it three times.  kmeans_train already ends in a
-    localCheckpoint, so the cached frame is materialized k-row data."""
+    localCheckpoint, so the shared frame is materialized k-row data."""
     from earcrawler_spark.operators.similarity import kmeans_train
-    from earcrawler_spark.session import bound_materialization_cache
+    from earcrawler_spark.session import shared_frame
 
-    key = (spark.sparkContext.applicationId, f"{sf_dir}#k{k}i{iters}")
-    if key not in _CENTS_CACHE:
-        bound_materialization_cache(_CENTS_CACHE, key)
+    def build():
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        _CENTS_CACHE[key] = kmeans_train(emb, k=k, iters=iters)
-    return _CENTS_CACHE[key]
+        return kmeans_train(emb, k=IVF_K, iters=IVF_ITERS)
+
+    return shared_frame(spark, sf_dir, "ivf_centroids", build)
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -353,8 +353,6 @@ ORDER BY doc_id
 
 # --- semdedup ---------------------------------------------------------------
 SEMDEDUP_T = 0.35
-SEMDEDUP_K = 10
-SEMDEDUP_ITERS = 4
 
 
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,7 +367,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.queries_tokens import trained_centroids
 
     emb = _emb(spark, sf_dir)
-    cents = trained_centroids(spark, sf_dir, k=SEMDEDUP_K, iters=SEMDEDUP_ITERS)
+    cents = trained_centroids(spark, sf_dir)
     assigned = ivf_assign(emb, cents).select("vec_id", "centroid_id")
     # per-vector norm computed ONCE (sqrt(dot(v,v)) is deterministic per
     # vector, so dot/(a.nrm*b.nrm) is float-identical to the inline
@@ -411,9 +409,9 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_sql() -> str:
-    from earcrawler_spark.queries_tokens import kmeans_cents_sql
+    from earcrawler_spark.queries_tokens import IVF_ITERS, IVF_K, kmeans_cents_sql
 
-    chain, cents = kmeans_cents_sql(k=SEMDEDUP_K, iters=SEMDEDUP_ITERS)
+    chain, cents = kmeans_cents_sql(k=IVF_K, iters=IVF_ITERS)
 
     def dot(x: str, y: str) -> str:
         return (
@@ -766,8 +764,6 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("merge_rank")
 
 
-_BPE_CACHE: dict = {}
-
 def _bpe_syms():  # lazy: F.expr needs an active SparkContext
     return F.split(F.expr("substring(repr, 2, length(repr)-2)"), r"\)\(")
 
@@ -776,12 +772,14 @@ def _train_bpe(spark: SparkSession, sf_dir: str):
     """Run the merge-learning loop once per (session, sf_dir); both
     bpe_merges and bpe_segment serve off the result.  Returns
     (merge list, final vocab DataFrame (w, repr, cnt))."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BPE_CACHE:
-        return _BPE_CACHE[key]
-    from earcrawler_spark.session import bound_materialization_cache
+    from earcrawler_spark.session import shared_frame
 
-    bound_materialization_cache(_BPE_CACHE, key)
+    return shared_frame(
+        spark, sf_dir, "bpe_train", lambda: _bpe_train_pass(spark, sf_dir)
+    )
+
+
+def _bpe_train_pass(spark: SparkSession, sf_dir: str):
     docs = _docs(spark, sf_dir)
     wc = (
         docs.select(F.explode(tokens(F.col("text"))).alias("w"))
@@ -826,8 +824,7 @@ def _train_bpe(spark: SparkSession, sf_dir: str):
             ).alias("repr"),
             "cnt",
         ).localCheckpoint()
-    _BPE_CACHE[key] = (merges, words)
-    return _BPE_CACHE[key]
+    return merges, words
 
 
 def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,6 +9,7 @@ timestamp semantics.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -56,55 +57,55 @@ def get_spark(
     return spark
 
 
-def cache_query_output(name: str, cache: dict, order_cols: list[str]):
-    """Decorator: session-bounded cache of a query's (tiny, aggregate)
-    OUTPUT so composition queries read persisted gate outputs instead of
-    re-running the scoring pipelines — the report-over-persisted-tables
-    contract at scale, mirrored in-session (same pattern as the shared
-    materializations; eviction rules identical to
-    bound_materialization_cache).  The cached frame is re-ordered on
-    every read so callers see the declared output order regardless of
-    cache state.  Only use for metadata-scale outputs (≤ thousands of
-    rows): the cache pins executor storage for the session."""
-    import functools
+# Shared frames: one value per (applicationId, sf_dir, name), built by the
+# first consumer and served to every later one -- the in-session mirror of
+# the persisted tables (decisions, context bundle, trained quantizer, gate
+# outputs) that consumers read at scale.
+_SHARED: dict[tuple[str, str, str], object] = {}
+
+
+def shared_frame(spark: SparkSession, sf_dir: str, name: str, build):
+    """Return the shared value ``name`` for ``sf_dir``, calling ``build()``
+    on a miss.  ``build`` pins its own result (localCheckpoint, cache +
+    count, or the BPE (merges, words) tuple).  A miss drops the entries
+    of other (ended) applications, whose JVM handles are dead, and evicts
+    and unpersists this name's entries for other sf dirs, so a long-lived
+    session never pins more than one sf_dir per name."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _SHARED:
+        for k in list(_SHARED):
+            if k[0] != key[0]:
+                del _SHARED[k]
+            elif k[2] == name:
+                stale = _SHARED.pop(k)
+                # the BPE tuple has no unpersist; localCheckpoint blocks
+                # are freed with the RDD's GC
+                if hasattr(stale, "unpersist"):
+                    stale.unpersist()
+        _SHARED[key] = build()
+    return _SHARED[key]
+
+
+def cached(df):
+    """Storage-level cache, materialized eagerly."""
+    df = df.cache()
+    df.count()
+    return df
+
+
+def shared_output(name: str, *order_cols: str):
+    """Decorator: serve a query's small aggregate output as a shared
+    frame, so composition queries (eval_report) read the pinned gate
+    output instead of re-running its pipeline.  Re-ordered on every read
+    so callers see the declared output order.  Only for metadata-scale
+    outputs: the cache pins executor storage for the session."""
 
     def deco(fn):
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            if key not in cache:
-                app_id = key[0]
-                for k in [k for k in cache if k[0] == app_id and k[1] != sf_dir]:
-                    df = cache.pop(k)
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass
-                for k in [k for k in cache if k[0] != app_id]:
-                    cache.pop(k, None)
-                df = fn(spark, sf_dir).cache()
-                df.count()
-                cache[key] = df
-            return cache[key].orderBy(*order_cols)
+            df = shared_frame(spark, sf_dir, name, lambda: cached(fn(spark, sf_dir)))
+            return df.orderBy(*order_cols)
 
         return wrapped
 
     return deco
-
-
-def bound_materialization_cache(cache: dict, key: tuple[str, str]) -> None:
-    """Bound a per-(applicationId, sf_dir) materialization dict to the most
-    recent sf_dir per session: evict (and best-effort unpersist) every
-    other entry of the same session, and every entry of a dead session.
-    Keeps a long-lived session that touches many sf dirs from pinning
-    executor storage forever."""
-    app_id, _ = key
-    for k in [k for k in cache if k != key and k[0] == app_id]:
-        df = cache.pop(k)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # localCheckpoint blocks are freed with the RDD's GC
-    # entries from other (ended) applications hold dead JVM handles
-    for k in [k for k in cache if k[0] != app_id]:
-        cache.pop(k, None)

@@ -115,11 +115,20 @@ def test_batch_equals_reference_edge_cases():
 
     from earcrawler_spark.crawler.canonicalize import canonicalize_batch
 
-    got = canonicalize_batch(pd.Series(_BATCH_EDGE_CASES)).tolist()
     want = [canonicalize_one(u) for u in _BATCH_EDGE_CASES]
-    assert got == want, [
-        (u, g, w) for u, g, w in zip(_BATCH_EDGE_CASES, got, want) if g != w
-    ]
+    # a pandas UDF batch may carry repeated index labels: rows must still
+    # come back in place, under the input's own index
+    dup_index = [i // 2 for i in range(len(_BATCH_EDGE_CASES))]
+    for urls in (
+        pd.Series(_BATCH_EDGE_CASES),
+        pd.Series(_BATCH_EDGE_CASES, index=dup_index),
+    ):
+        out = canonicalize_batch(urls)
+        assert out.index.equals(urls.index)
+        got = out.tolist()
+        assert got == want, [
+            (u, g, w) for u, g, w in zip(_BATCH_EDGE_CASES, got, want) if g != w
+        ]
 
 
 @settings(max_examples=200, deadline=None)

@@ -90,9 +90,9 @@ def test_mention_scoring_stays_jvm_side(spark, sf_small):
 
 
 def test_reconcile_v2_blocking_joins_shapes(spark, sf_small):
-    # inspect the RAW pipeline plan — the registered query serves a
-    # shared localCheckpoint (decisions-table contract), which shows as
-    # a materialized scan
+    # inspect the builder's plan — the registered query serves a shared
+    # cached frame (decisions-table contract), which shows as an
+    # in-memory scan
     from earcrawler_spark.queries_fidelity import build_decided_pairs
 
     df = build_decided_pairs(spark, sf_small)
@@ -132,7 +132,7 @@ def test_citation_boost_stays_jvm_side(spark, sf_small):
 
 
 def test_rag_context_plan_shape(spark, sf_small):
-    # raw builder — the registered query serves a shared localCheckpoint
+    # the builder — the registered query serves a shared localCheckpoint
     from earcrawler_spark.queries_rag import build_rag_context
 
     df = build_rag_context(spark, sf_small)

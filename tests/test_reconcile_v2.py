@@ -11,6 +11,7 @@ from earcrawler_spark.operators.reconcile import (
     normalize_name_v2,
     score_pairs_v2,
     soundex_v2,
+    with_norm,
 )
 
 ENT_SCHEMA = (
@@ -20,7 +21,8 @@ ENT_SCHEMA = (
 
 
 def _pairs(spark, rows):
-    ents = spark.createDataFrame(rows, ENT_SCHEMA)
+    # entities carry the per-entity norm, as build_decided_pairs supplies it
+    ents = with_norm(spark.createDataFrame(rows, ENT_SCHEMA))
     pairs = blocking_pairs_v2(ents)
     left = ents.select(*[F.col(c).alias(f"{c}_a") for c in ents.columns])
     right = ents.select(*[F.col(c).alias(f"{c}_b") for c in ents.columns])
@@ -99,7 +101,9 @@ def test_lexical_cap_drops_hot_bucket_but_id_keys_survive(spark):
          "D9" if i < 2 else None, None, None, None)
         for i in range(70)
     ]
-    pairs = blocking_pairs_v2(spark.createDataFrame(rows, ENT_SCHEMA)).collect()
+    pairs = blocking_pairs_v2(
+        with_norm(spark.createDataFrame(rows, ENT_SCHEMA))
+    ).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {("e000", "e001")}
 
 
@@ -125,6 +129,16 @@ def test_null_name_pair_survives_scoring(spark):
     ]
     scored2 = _pairs(spark, rows2).collect()
     assert len(scored2) == 1
+    # a null name gets the same lexical blocking keys as '' (no shared id
+    # key here), so the two entities still meet and match exactly
+    rows3 = [
+        ("e1", None, "US", "other", None, None, None, None),
+        ("e2", "", "US", "other", None, None, None, None),
+    ]
+    scored3 = _pairs(spark, rows3).collect()
+    assert [(r["id_a"], r["id_b"], r["name_exact"]) for r in scored3] == [
+        ("e1", "e2", 1.0)
+    ]
 
 
 def test_load_rules_csv_and_yaml(spark, tmp_path):

@@ -319,10 +319,13 @@ def test_normalize_egress_text_fuzz_vs_model(spark):
         assert got[i] == model(c), (repr(c), repr(got[i]), repr(model(c)))
 
 
-def test_bound_materialization_cache_eviction():
-    """Same-session other-sf entries are evicted (and unpersisted);
-    dead sessions' handles are dropped; the current key survives."""
-    from earcrawler_spark.session import bound_materialization_cache
+def test_shared_frame_registry_eviction(monkeypatch):
+    """A miss evicts (and unpersists) this name's same-session other-sf
+    entries; dead sessions' handles are dropped; another name under the
+    current sf_dir survives; a hit returns the pinned value unbuilt."""
+    from types import SimpleNamespace
+
+    from earcrawler_spark import session
 
     class FakeDF:
         def __init__(self):
@@ -331,15 +334,20 @@ def test_bound_materialization_cache_eviction():
         def unpersist(self):
             self.unpersisted = True
 
-    a, b, c, d = FakeDF(), FakeDF(), FakeDF(), FakeDF()
-    cache = {
-        ("app1", "/sf0.001"): a,
-        ("app1", "/sf0.01"): b,
-        ("app2", "/sf0.001"): c,
-        ("app1", "/sf0.1"): d,
+    a, b, c, d, e = FakeDF(), FakeDF(), FakeDF(), FakeDF(), FakeDF()
+    store = {
+        ("app1", "/sf0.001", "ctx"): a,
+        ("app1", "/sf0.01", "ctx"): b,
+        ("app2", "/sf0.001", "ctx"): c,
+        ("app1", "/sf0.1", "gate"): d,
     }
-    bound_materialization_cache(cache, ("app1", "/sf0.1"))
-    assert set(cache) == {("app1", "/sf0.1")}
+    monkeypatch.setattr(session, "_SHARED", store)
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app1"))
+    assert session.shared_frame(spark, "/sf0.1", "ctx", lambda: e) is e
+    # two names under one sf_dir coexist (eval_report reads several gates)
+    assert set(store) == {("app1", "/sf0.1", "ctx"), ("app1", "/sf0.1", "gate")}
     assert a.unpersisted and b.unpersisted
     assert not c.unpersisted  # dead-session handle dropped, not touched
-    assert not d.unpersisted  # the current key is preserved
+    assert not d.unpersisted  # the other name's current entry is preserved
+    assert session.shared_frame(spark, "/sf0.1", "ctx", FakeDF) is e
+    assert not e.unpersisted

@@ -173,14 +173,11 @@ def test_semdedup_pairs_confined_to_clusters(spark):
     """Every (vec, keeper) pair must share a centroid under the same
     trained quantizer — the whole point of the coarse-quantize step."""
     from earcrawler_spark.operators.similarity import ivf_assign, kmeans_train
-    from earcrawler_spark.queries_training import (
-        SEMDEDUP_ITERS,
-        SEMDEDUP_K,
-        q_semdedup,
-    )
+    from earcrawler_spark.queries_tokens import IVF_ITERS, IVF_K
+    from earcrawler_spark.queries_training import q_semdedup
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = kmeans_train(emb, k=SEMDEDUP_K, iters=SEMDEDUP_ITERS)
+    cents = kmeans_train(emb, k=IVF_K, iters=IVF_ITERS)
     cid = {
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(emb, cents).select("vec_id", "centroid_id").collect()
@@ -348,11 +345,12 @@ def test_bpe_merges_repeated_symbol_greedy_left(spark, tmp_path):
     assert len(out) < 8
 
 
-def test_bpe_segment_matches_reference_segmentation(spark, tmp_path):
+def test_bpe_segment_matches_reference_segmentation(spark, tmp_path, monkeypatch):
     """Per-doc subword counts must equal segmenting each word with the
     sequential reference's merge sequence; both queries share ONE
     training pass per (session, sf_dir)."""
     from earcrawler_spark import queries_training as qt
+    from earcrawler_spark import session
 
     rows = [
         (1, "the cat sat on the mat the cat", "en", "s", 30),
@@ -381,9 +379,18 @@ def test_bpe_segment_matches_reference_segmentation(spark, tmp_path):
             syms = out
         return len(syms)
 
-    qt._BPE_CACHE.clear()
+    trained = []
+    train_pass = qt._bpe_train_pass
+    monkeypatch.setattr(
+        qt, "_bpe_train_pass", lambda s, d: trained.append(d) or train_pass(s, d)
+    )
+
+    def bpe_entries():
+        return [k for k in session._SHARED if k[2] == "bpe_train"]
+
     out = {r["doc_id"]: r for r in qt.q_bpe_segment(spark, str(tmp_path)).collect()}
-    assert len(qt._BPE_CACHE) == 1           # training ran, cached
+    assert trained == [str(tmp_path)]         # training ran, shared
+    assert [k[1] for k in bpe_entries()] == [str(tmp_path)]
     for doc_id, text, *_ in rows:
         words = text.lower().split()
         assert out[doc_id]["n_words"] == len(words)
@@ -398,7 +405,8 @@ def test_bpe_segment_matches_reference_segmentation(spark, tmp_path):
         for r in qt.q_bpe_merges(spark, str(tmp_path)).collect()
     ]
     assert got == merges
-    assert len(qt._BPE_CACHE) == 1
+    assert trained == [str(tmp_path)]
+    assert [k[1] for k in bpe_entries()] == [str(tmp_path)]
 
 
 def test_semantic_decontamination_flags_seeded_paraphrase(spark, tmp_path):
