@@ -17,6 +17,8 @@ e.g. 4096 shards of ~3 MB, each probed only by its shard's rows.
 Hash functions: k indexes derived from two independent 64-bit halves of
 the url's sha256 (Kirsch-Mitzenmacher double hashing) — deterministic,
 no extra hashing work since the sha256 hex is already the seen-set key.
+A batch of keys is decoded in one ``bytes.fromhex`` over the joined hex
+prefixes; keys need at least 32 hex chars (h1 ‖ h2).
 """
 
 from __future__ import annotations
@@ -26,10 +28,22 @@ import numpy as np
 HEX64 = 16  # hex chars per 64-bit half
 
 
+def _decode(hash_hex, n_hex: int, dtype: str) -> np.ndarray:
+    """The first ``n_hex`` hex chars of every key as big-endian words,
+    decoded in one pass. A shorter key would shift every later key in the
+    joined buffer, so it raises instead."""
+    joined = "".join([h[:n_hex] for h in hash_hex])
+    if len(joined) != n_hex * len(hash_hex):
+        raise ValueError(f"hash keys need at least {n_hex} hex chars")
+    raw = bytes.fromhex(joined)
+    if 2 * len(raw) != len(joined):  # fromhex skips whitespace
+        raise ValueError("hash keys must be hex digits only")
+    return np.frombuffer(raw, dtype)
+
+
 def _h1_h2(hash_hex: "np.ndarray | list[str]") -> tuple[np.ndarray, np.ndarray]:
-    h1 = np.array([int(h[:HEX64], 16) for h in hash_hex], dtype=np.uint64)
-    h2 = np.array([int(h[HEX64 : 2 * HEX64], 16) for h in hash_hex], dtype=np.uint64)
-    return h1, h2
+    halves = _decode(hash_hex, 2 * HEX64, ">u8").reshape(-1, 2).astype(np.uint64)
+    return halves[:, 0], halves[:, 1]
 
 
 class BloomShard:
@@ -46,24 +60,25 @@ class BloomShard:
         n_bits = max(1024, 1 << int(np.ceil(np.log2(expected_items * bits_per_item + 1))))
         return cls(n_bits=n_bits, n_hashes=7)
 
-    def _positions(self, hash_hex) -> np.ndarray:
-        h1, h2 = _h1_h2(hash_hex)
-        idx = np.empty((self.n_hashes, len(h1)), dtype=np.uint64)
-        for i in range(self.n_hashes):
-            idx[i] = (h1 + np.uint64(i) * h2) % self.n_bits
-        return idx
+    def _positions(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        i = np.arange(self.n_hashes, dtype=np.uint64)[:, None]
+        return (h1 + i * h2) % self.n_bits
 
     def add_many(self, hash_hex) -> None:
         if len(hash_hex) == 0:
             return
-        pos = self._positions(hash_hex).ravel()
+        pos = self._positions(*_h1_h2(hash_hex)).ravel()
         np.bitwise_or.at(self.bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
 
     def contains_many(self, hash_hex) -> np.ndarray:
         """Vectorized membership probe → bool array (True = maybe seen)."""
         if len(hash_hex) == 0:
             return np.zeros(0, dtype=bool)
-        pos = self._positions(hash_hex)
+        return self.contains_decoded(*_h1_h2(hash_hex))
+
+    def contains_decoded(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        """contains_many over keys already decoded by ``_h1_h2``."""
+        pos = self._positions(h1, h2)
         byte_idx = (pos >> 3).astype(np.int64)
         bit_mask = (1 << (pos & 7)).astype(np.uint8)
         hit = (self.bits[byte_idx] & bit_mask) != 0
@@ -91,7 +106,7 @@ def shard_of(hash_hex: str, n_shards: int) -> int:
 
 
 def shard_of_series(hash_hex_series, n_shards: int) -> np.ndarray:
-    return np.array([int(h[:8], 16) % n_shards for h in hash_hex_series], dtype=np.int32)
+    return (_decode(hash_hex_series, 8, ">u4").astype(np.int64) % n_shards).astype(np.int32)
 
 
 # --- executor-side probe path --------------------------------------------
@@ -217,16 +232,16 @@ def probe_hashes(
     bloom or cuckoo shards. → bool array; True = maybe seen (must be
     verified by the exact anti-join), False = definitely new."""
     out = np.zeros(len(hashes), dtype=bool)
-    if not hashes:
+    if len(hashes) == 0:
         return out
-    shards = shard_of_series(hashes, n_shards)
+    h1, h2 = _h1_h2(hashes)
+    shards = (h1 >> np.uint64(32)) % np.uint64(n_shards)  # == shard_of
     for s in np.unique(shards):
         raw = table.get(int(s))
         if raw is None:
             continue
-        idx = np.nonzero(shards == s)[0]
-        b = _cached_shard(raw, kind)
-        out[idx] = b.contains_many([hashes[i] for i in idx])
+        idx = np.flatnonzero(shards == s)
+        out[idx] = _cached_shard(raw, kind).contains_decoded(h1[idx], h2[idx])
     return out
 
 

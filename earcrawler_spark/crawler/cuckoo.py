@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from earcrawler_spark.crawler.bloom import _h1_h2
+
 SLOTS = 4
 MAX_KICKS = 500
 _FP_MIX = np.uint64(0x5BD1E995)
@@ -85,11 +87,20 @@ class CuckooShard:
             self.add(h)
 
     def contains_many(self, hashes) -> np.ndarray:
-        out = np.zeros(len(hashes), dtype=bool)
-        for k, h in enumerate(hashes):
-            fp, i1, i2 = self._fp_and_buckets(h)
-            out[k] = (self.table[i1] == fp).any() or (self.table[i2] == fp).any()
-        return out
+        if len(hashes) == 0:
+            return np.zeros(0, dtype=bool)
+        return self.contains_decoded(*_h1_h2(hashes))
+
+    def contains_decoded(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        """contains_many over keys decoded by ``bloom._h1_h2``: the same
+        fingerprint and buckets as ``_fp_and_buckets``, batch-wide."""
+        fp = (h2 >> np.uint64(48)).astype(np.uint16)  # hex chars 16:20
+        fp[fp == 0] = 1
+        mask = np.uint64(self._mask)
+        i1 = h1 & mask
+        i2 = (i1 ^ (fp.astype(np.uint64) * _FP_MIX)) & mask
+        fp = fp[:, None]
+        return (self.table[i1] == fp).any(axis=1) | (self.table[i2] == fp).any(axis=1)
 
     def delete_many(self, hashes) -> int:
         """Remove one fingerprint occurrence per present key → #deleted.

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from earcrawler_spark.crawler.state import arrow_frame
+
 ROBOTS_SCHEMA = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
@@ -75,14 +77,21 @@ def fetch_robots(spark: SparkSession, hosts: list[str], fetcher) -> DataFrame:
     is the pluggable transport (synthetic in tests, HTTP in production).
 
     Driver-side by design: the host set per wave is tiny (new hosts only)
-    and the result is broadcast; at 10^10-URL scale the host dimension is
-    still ~10^6 rows — a trivially broadcastable table.
+    and the result is an Arrow-backed frame that is broadcast; at
+    10^10-URL scale the host dimension is still ~10^6 rows — a trivially
+    broadcastable table.
     """
-    rows = []
-    for h in sorted(set(hosts)):
-        dis, delay = parse_robots_txt(fetcher(h))
-        rows.append((h, dis, delay))
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    hosts = sorted(set(hosts))
+    parsed = [parse_robots_txt(fetcher(h)) for h in hosts]
+    return arrow_frame(
+        spark,
+        {
+            "host": hosts,
+            "disallow_prefixes": [dis for dis, _ in parsed],
+            "crawl_delay": [delay for _, delay in parsed],
+        },
+        ROBOTS_SCHEMA,
+    )
 
 
 def allowed_filter(frontier: DataFrame, robots: DataFrame) -> tuple[DataFrame, DataFrame]:

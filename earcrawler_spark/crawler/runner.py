@@ -24,6 +24,14 @@ Determinism contract: visit order — sorted by (iteration, -priority,
 host, seq) — and the seen set are invariant to partition count; proven
 vs the sequential model in tests and at local[2] vs local[8].
 
+State plumbing (state.py): driver-built frames — the seed frontier, robots
+rows, (shard, bits) filter tables — are Arrow-backed, and every state
+read uses its table's declared schema, so neither costs a Python-worker
+scan or a schema-inference job. In driver filter-io mode the crawler
+keeps the shard map it last wrote and serves the next wave's probe from
+it while that snapshot is still the committed one; a resume, a fresh
+Crawler or expire_seen reads the filter from disk instead.
+
 Scale notes (10^10 URLs):
 - frontier/seen are hash-bucketed by url_hash shard → the anti-join is
   a co-partitioned join, no wide shuffle;
@@ -63,7 +71,12 @@ from earcrawler_spark.crawler.canonicalize import (
 )
 from earcrawler_spark.crawler.fetch import fetch_and_parse, synthetic_fetch_one
 from earcrawler_spark.crawler.robots import allowed_filter, fetch_robots
-from earcrawler_spark.crawler.state import CrawlState
+from earcrawler_spark.crawler.state import (
+    FILTER_SCHEMA,
+    FRONTIER_SCHEMA,
+    CrawlState,
+    arrow_frame,
+)
 
 def visit_order_cols():
     return [F.col("iter"), F.col("priority").desc(), F.col("host"), F.col("seq")]
@@ -159,6 +172,10 @@ class Crawler:
         self.transport = transport
         self.robots_fetcher = robots_fetcher
         self.cache_bootstrap = cache_bootstrap
+        # (snapshot key, shard map) of the last filter this crawler wrote
+        # in driver filter-io mode; _load_bloom serves it instead of
+        # reading the snapshot back (see _snapshot_key)
+        self._kept_filter: tuple[tuple, dict[int, bytes]] | None = None
         if self.cfg.n_partitions is None:
             self.cfg.n_partitions = spark.sparkContext.defaultParallelism
         # Filter-critical parameters are persisted in the manifest at
@@ -185,7 +202,6 @@ class Crawler:
     # ------------------------------------------------------------------
     def init_seeds(self, seeds: list[tuple[str, int, int]]) -> None:
         """Iteration 0: canonicalized, deduped seed frontier + seen/bloom."""
-        rows = []
         best: dict[str, tuple] = {}
         for url, priority, seq in seeds:
             cu = canonicalize_one(url)
@@ -194,8 +210,10 @@ class Crawler:
             if h not in best or seq < best[h][4]:
                 best[h] = (cu, h, host, priority, seq)
         rows = sorted(best.values(), key=lambda r: r[4])
-        frontier = self.spark.createDataFrame(
-            rows, "url string, url_hash string, host string, priority int, seq bigint"
+        names = ("url", "url_hash", "host", "priority", "seq")
+        frontier = arrow_frame(
+            self.spark, {n: [r[i] for r in rows] for i, n in enumerate(names)},
+            FRONTIER_SCHEMA,
         )
         self.state.write("frontier", 0, frontier)
         self.state.write(
@@ -205,11 +223,10 @@ class Crawler:
             # shard-local init write: past the broadcast threshold even
             # the seed filter (n_shards x dense shard bytes) must not
             # round-trip the driver
-            empty = self.spark.createDataFrame([], "shard int, bits binary")
             self.state.write(
                 "bloom", 0,
                 extend_filter_join(
-                    frontier.select("url_hash"), empty, self.cfg.n_shards,
+                    frontier.select("url_hash"), self._filter_frame({}), self.cfg.n_shards,
                     self.cfg.seen_filter, self.cfg.bloom_bits_per_shard,
                     self.cfg.cuckoo_capacity_per_shard,
                 ),
@@ -274,27 +291,49 @@ class Crawler:
         delta = {
             r["shard"]: bytes(r["bits"])
             for r in with_shard.groupBy("shard")
-            .applyInPandas(build, "shard int, bits binary")
+            .applyInPandas(build, FILTER_SCHEMA)
             .collect()
         }
         merged = {**prev, **delta}
         return merged
 
+    def _filter_frame(self, shards: dict[int, bytes]) -> DataFrame:
+        """A (shard, bits) filter table, Arrow-built from a shard map."""
+        items = sorted(shards.items())
+        return arrow_frame(
+            self.spark,
+            {"shard": [s for s, _ in items], "bits": [b for _, b in items]},
+            FILTER_SCHEMA,
+        )
+
+    @staticmethod
+    def _snapshot_key(path: str) -> tuple:
+        # the directory names the iteration and generation; the commit
+        # marker's mtime tells a rewrite of the same directory (a later
+        # expire_seen reuses generation 0) from the snapshot we wrote
+        return path, os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
+
     def _write_filter(
         self, iteration: int, hashes_df: DataFrame, previous: dict[int, bytes] | None
     ) -> dict[int, bytes]:
         merged = self._build_filter_shards(hashes_df, previous)
-        out = self.spark.createDataFrame(
-            [(s, bytearray(b)) for s, b in sorted(merged.items())],
-            "shard int, bits binary",
-        )
-        self.state.write("bloom", iteration, out)
+        self.state.write("bloom", iteration, self._filter_frame(merged))
+        path = self.state._iter_dir("bloom", iteration)
+        self._kept_filter = (self._snapshot_key(path), merged)
         return merged
 
     def _load_bloom(self, upto_iter: int) -> dict[int, bytes]:
-        df = self.state.read_latest("bloom", upto_iter)
-        if df is None:
+        """The committed filter snapshot as a shard map: the one this
+        crawler last wrote when it is still the snapshot in force (the
+        steady-state wave), else read from disk (resume, a fresh
+        Crawler, after expire_seen)."""
+        path = self.state.latest_path("bloom", upto_iter)
+        if path is None:
             return {}
+        kept = self._kept_filter
+        if kept is not None and kept[0] == self._snapshot_key(path):
+            return kept[1]
+        df = self.state.read("bloom", path)
         return {r["shard"]: bytes(r["bits"]) for r in df.collect()}
 
     # ------------------------------------------------------------------
@@ -310,7 +349,7 @@ class Crawler:
             it += 1
             m = self.state.manifest()
             frontier = self.state.read_latest("frontier", it - 1)
-            if frontier is None or frontier.rdd.isEmpty():
+            if frontier is None or frontier.isEmpty():
                 break
             self._wave(it, frontier, m)
         return self.state.manifest()
@@ -567,7 +606,7 @@ class Crawler:
         if probe_mode == "join":
             bloom_df = self.state.read_latest("bloom", it - 1)
             if bloom_df is None:
-                bloom_df = spark.createDataFrame([], "shard int, bits binary")
+                bloom_df = self._filter_frame({})
             candidates = probe_maybe_seen_join(
                 candidates, bloom_df, cfg.n_shards, cfg.seen_filter
             ).cache()
@@ -733,9 +772,7 @@ class Crawler:
 
                 bloom_df = self.state.read_latest("bloom", upto)
                 if bloom_df is None:
-                    bloom_df = self.spark.createDataFrame(
-                        [], "shard int, bits binary"
-                    )
+                    bloom_df = self._filter_frame({})
                 delete_filter_join(
                     expired.select("url_hash"), bloom_df, self.cfg.n_shards
                 ).write.mode("overwrite").parquet(
@@ -762,21 +799,16 @@ class Crawler:
                     for r in expired.withColumn(
                         "shard",
                         (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int"),
-                    ).groupBy("shard").applyInPandas(drop, "shard int, bits binary").collect()
+                    ).groupBy("shard").applyInPandas(drop, FILTER_SCHEMA).collect()
                 }
-                merged = {**blooms, **delta}
-                self.spark.createDataFrame(
-                    [(sh, bytearray(b)) for sh, b in sorted(merged.items())],
-                    "shard int, bits binary",
-                ).write.mode("overwrite").parquet(
+                self._filter_frame({**blooms, **delta}).write.mode("overwrite").parquet(
                     self.state._iter_dir("bloom", upto, bloom_gen)
                 )
         elif distributed:
             # blooms can't delete: rebuild shard-locally from the surviving
             # rows (extend over an empty shard table) into the staged dir
-            empty = self.spark.createDataFrame([], "shard int, bits binary")
             extend_filter_join(
-                keep.select("url_hash"), empty, self.cfg.n_shards,
+                keep.select("url_hash"), self._filter_frame({}), self.cfg.n_shards,
                 self.cfg.seen_filter, self.cfg.bloom_bits_per_shard,
                 self.cfg.cuckoo_capacity_per_shard,
             ).write.mode("overwrite").parquet(
@@ -786,10 +818,7 @@ class Crawler:
             # blooms can't delete: rebuild from the surviving rows into the
             # staged generation dir (same build as _write_filter, staged)
             rebuilt = self._build_filter_shards(keep.select("url_hash"), previous=None)
-            self.spark.createDataFrame(
-                [(s, bytearray(b)) for s, b in sorted(rebuilt.items())],
-                "shard int, bits binary",
-            ).write.mode("overwrite").parquet(
+            self._filter_frame(rebuilt).write.mode("overwrite").parquet(
                 self.state._iter_dir("bloom", upto, bloom_gen)
             )
         seen_gen = self.state.fresh_gen("seen", "base", upto)
@@ -798,6 +827,8 @@ class Crawler:
         )
 
         # Stage 2 — the manifest rename is the single visibility switch.
+        # The kept shard map describes the superseded filter: drop it.
+        self._kept_filter = None
         m.setdefault("compacted", {})["seen"] = upto
         gens = m.setdefault("gens", {})
         gens[f"bloom:iter:{upto}"] = bloom_gen

@@ -13,6 +13,12 @@ Layout (one directory per run):
       visits/iter=NNNNN/            # append-only ordered visit log
       metrics/iter=NNNNN/           # append-only per-partition lineage
 
+Every table has a declared schema (``SCHEMAS``): reads pass it to the
+parquet reader, so no read pays a footer schema-inference job, and
+driver-built frames (seed frontier, robots rows, filter shards) go
+through ``arrow_frame`` — an Arrow-backed LocalRelation whose scans stay
+in the JVM, with no pickled rows and no Python-worker scan.
+
 Crash safety: an iteration's directories are written first; the manifest
 (update via write-temp + atomic rename) is the commit point. A run killed
 mid-iteration resumes from the last committed manifest and recomputes the
@@ -30,11 +36,46 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Mapping, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from earcrawler_spark.crawler.cache import CACHE_SCHEMA
+from earcrawler_spark.crawler.spans import SPANS_SCHEMA
 
 APPEND_TABLES = ("seen", "content_seen", "documents", "visits", "metrics")
 FULL_TABLES = ("frontier", "bloom", "robots", "fetch_cache")
+
+FRONTIER_SCHEMA = "url string, url_hash string, host string, priority int, seq bigint"
+FILTER_SCHEMA = "shard int, bits binary"
+# What each table's writer produces, as parquet reads it back (every field
+# nullable). tests/test_crawl_state_contract.py pins writers to these.
+SCHEMAS = {
+    "frontier": FRONTIER_SCHEMA,
+    "seen": "url_hash string, url string, iter int",
+    "content_seen": "content_hash string",
+    "bloom": FILTER_SCHEMA,
+    "robots": "host string, disallow_prefixes array<string>, crawl_delay double",
+    "fetch_cache": CACHE_SCHEMA,
+    "documents": f"doc_id string, url_hash string, content_hash string, spans {SPANS_SCHEMA}, iter int",
+    "visits": "iter int, url string, url_hash string, host string, priority int, seq bigint, "
+              "status int, content_hash string",
+    "metrics": "part_id int, n_fetched bigint, n_ok bigint, n_attempts bigint, n_links bigint, iter int",
+}
+
+
+def arrow_frame(
+    spark: SparkSession, columns: Mapping[str, Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """Driver-side columns as an Arrow-backed frame (a LocalRelation:
+    scans stay in the JVM, no pickled rows). Built through pyarrow, not
+    pandas, so empty list/binary columns keep their declared types."""
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    table = pa.Table.from_pydict(dict(columns), schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)
 
 
 class CrawlState:
@@ -101,15 +142,24 @@ class CrawlState:
             df = df.coalesce(n_files)
         df.write.mode("overwrite").parquet(self._iter_dir(table, iteration))
 
-    def read_latest(self, table: str, upto_iter: int) -> DataFrame | None:
-        """Latest full-rewrite snapshot of a FULL_TABLES table (at the
-        manifest-committed generation for each iteration)."""
+    def read(self, table: str, *paths: str) -> DataFrame:
+        """The given snapshot directories of ``table``, read with its
+        declared schema."""
+        return self.spark.read.schema(SCHEMAS[table]).parquet(*paths)
+
+    def latest_path(self, table: str, upto_iter: int) -> str | None:
+        """Directory of the latest full-rewrite snapshot of a FULL_TABLES
+        table (at the manifest-committed generation for each iteration)."""
         m = self.manifest()
         for i in range(upto_iter, -1, -1):
             p = self._iter_dir(table, i, self._gen_of(m, table, "iter", i))
             if os.path.exists(os.path.join(p, "_SUCCESS")):
-                return self.spark.read.parquet(p)
+                return p
         return None
+
+    def read_latest(self, table: str, upto_iter: int) -> DataFrame | None:
+        p = self.latest_path(table, upto_iter)
+        return None if p is None else self.read(table, p)
 
     def expire(self, upto_iter: int, keep_full_last: int = 1) -> list[str]:
         """Retention GC (reference utils/retention.py:77-130 age-based
@@ -181,7 +231,7 @@ class CrawlState:
         ]
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self.read(table, *paths)
 
     def compact(self, tables: tuple[str, ...] = APPEND_TABLES, n_files: int = 8) -> dict:
         """Compact append-only deltas into one base snapshot per table

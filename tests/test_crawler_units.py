@@ -3,9 +3,21 @@ literal expected values — tests/core/test_ear_crawler.py:25-71)."""
 
 from __future__ import annotations
 
-import numpy as np
+import hashlib
 
-from earcrawler_spark.crawler.bloom import BloomShard, shard_of
+import numpy as np
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from earcrawler_spark.crawler.bloom import (
+    BloomShard,
+    _h1_h2,
+    probe_hashes,
+    shard_of,
+    shard_of_series,
+)
+from earcrawler_spark.crawler.cuckoo import CuckooShard
 from earcrawler_spark.crawler.canonicalize import canonicalize_one
 from earcrawler_spark.crawler.robots import parse_robots_txt
 from earcrawler_spark.crawler.spans import parse_html
@@ -71,6 +83,63 @@ def test_bloom_no_false_negatives():
     back = BloomShard.from_bytes(merged.to_bytes())
     assert np.array_equal(back.bits, merged.bits)
     assert 0 <= shard_of(keys[0], 16) < 16
+
+
+_HEX_KEY = st.text("0123456789abcdefABCDEF", min_size=32, max_size=64)
+
+
+def _scalar_bloom_hit(b: BloomShard, h: str) -> bool:
+    h1, h2 = int(h[:16], 16), int(h[16:32], 16)
+    n = int(b.n_bits)
+    for i in range(b.n_hashes):
+        pos = (h1 + i * h2) % 2**64 % n
+        if not b.bits[pos >> 3] & (1 << (pos & 7)):
+            return False
+    return True
+
+
+def _scalar_cuckoo_hit(c: CuckooShard, h: str) -> bool:
+    fp, i1, i2 = c._fp_and_buckets(h)
+    return bool((c.table[i1] == fp).any() or (c.table[i2] == fp).any())
+
+
+# inserted keys are real sha256 digests (near-identical keys would fill one
+# cuckoo bucket pair); probed keys are any hex
+_DIGEST = st.integers(0, 10**6).map(lambda i: hashlib.sha256(str(i).encode()).hexdigest())
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(_DIGEST, max_size=40, unique=True), st.lists(_HEX_KEY, max_size=40), st.integers(1, 8))
+def test_batch_hash_decode_equals_scalar(added, probed, n_shards):
+    """The one-pass batch decode agrees with int(h, 16) on every key,
+    lower- or upper-case, for the halves, the shard ids and both
+    filter families' probes."""
+    probed = probed + [h.upper() for h in added[:5]]  # some hits
+    h1, h2 = _h1_h2(probed)
+    assert h1.tolist() == [int(h[:16], 16) for h in probed]
+    assert h2.tolist() == [int(h[16:32], 16) for h in probed]
+    assert shard_of_series(probed, n_shards).tolist() == [shard_of(h, n_shards) for h in probed]
+    b = BloomShard(1 << 10, 7)
+    c = CuckooShard.sized_for(64)
+    b.add_many(added)
+    c.add_many(added)
+    for kind, f, scalar in (("bloom", b, _scalar_bloom_hit), ("cuckoo", c, _scalar_cuckoo_hit)):
+        want = [scalar(f, h) for h in probed]
+        assert f.contains_many(probed).tolist() == want
+        assert f.contains_many([h.swapcase() for h in probed]).tolist() == want
+        table = {s: f.to_bytes() for s in range(0, n_shards, 2)}  # odd shards absent
+        got = probe_hashes(probed, table, n_shards, kind)
+        assert got.tolist() == [w and shard_of(h, n_shards) % 2 == 0 for h, w in zip(probed, want)]
+    assert all(_scalar_bloom_hit(b, h) for h in added)  # no false negatives
+
+
+@pytest.mark.parametrize("keys", [["ab" * 15], ["ab" * 16, "cd"], ["ab" * 15 + " ab"]])
+def test_short_or_malformed_keys_raise(keys):
+    # a short key would shift every later key in the joined hex buffer
+    with pytest.raises(ValueError):
+        _h1_h2(keys)
+    with pytest.raises(ValueError):
+        probe_hashes(keys, {}, 4)
 
 
 def test_robots_parse():
