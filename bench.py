@@ -156,7 +156,7 @@ def run_frontier_ops(spark, n_urls: int, n_partitions: int) -> dict:
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from earcrawler_spark.crawler.bloom import BloomShard, probe_hashes
+    from earcrawler_spark.crawler.bloom import build_filter_broadcast, probe_maybe_seen_broadcast
     from earcrawler_spark.crawler.canonicalize import canonical_url, url_hash_col
 
     n_shards = 32
@@ -183,32 +183,13 @@ def run_frontier_ops(spark, n_urls: int, n_partitions: int) -> dict:
         .withColumn("seq", F.col("id"))
     )
 
-    # "seen" half: even ids — build sharded blooms distributed, probe, anti-join
+    # "seen" half: even ids — the crawler's broadcast filter build and
+    # probe kernels, then the exact anti-join
     seen = urls.filter(F.pmod("id", 2) == 0).select("url_hash")
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = BloomShard(1 << 23, 7)
-        b.add_many(pdf["url_hash"].tolist())
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])], "bits": [b.to_bytes()]})
-
-    shards = {
-        r["shard"]: bytes(r["bits"])
-        for r in seen.withColumn(
-            "shard", (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int")
-        ).groupBy("shard").applyInPandas(build, "shard int, bits binary").collect()
-    }
-    bloom_bc = spark.sparkContext.broadcast(shards)
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(hashes: pd.Series) -> pd.Series:
-        res = probe_hashes(hashes.tolist(), bloom_bc.value, n_shards)
-        return pd.Series(res, index=hashes.index)
-
-    candidates = (
-        urls.filter(F.pmod("id", 2) == 1)
-        .withColumn("_maybe", maybe_seen("url_hash"))
-        .cache()
-    )
+    shards = build_filter_broadcast(seen, {}, n_shards, "bloom", 1 << 23)
+    candidates = probe_maybe_seen_broadcast(
+        urls.filter(F.pmod("id", 2) == 1), shards, n_shards
+    ).cache()
     definitely_new = candidates.filter(~F.col("_maybe"))
     checked = candidates.filter(F.col("_maybe")).join(seen, "url_hash", "left_anti")
     new_urls = definitely_new.drop("_maybe").unionByName(checked.drop("_maybe"))

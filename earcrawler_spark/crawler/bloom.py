@@ -1,5 +1,7 @@
-"""Sharded Bloom filter for the URL-seen set — numpy bit arrays, built
-per partition, OR-merged across checkpoints.
+"""Sharded Bloom filter for the URL-seen set — numpy bit arrays, one per
+shard, each rebuilt by one task from its previous bytes plus new hashes —
+and every Spark kernel of the seen filter (bloom or cuckoo), in a
+broadcast and a shard-local form with identical outputs.
 
 Role (north rule): probabilistic pre-filter in front of the exact
 anti-join (reference's exact dict-membership skip,
@@ -10,9 +12,10 @@ positives cost one extra join row; false negatives are impossible, so
 exactness is preserved.
 
 Sharding: shard id = int(url_hash_hex[:8], 16) % n_shards — stable across
-runs and partition layouts. Each shard's filter is small enough to
-broadcast; at 10^10 URLs you'd size m/n≈10 bits → ~12 GB total split over
-e.g. 4096 shards of ~3 MB, each probed only by its shard's rows.
+runs and partition layouts; ``shard_col`` is its one JVM-side form. Each
+shard's filter is small enough to broadcast; at 10^10 URLs you'd size
+m/n≈10 bits → ~12 GB total split over e.g. 4096 shards of ~3 MB, each
+probed only by its shard's rows.
 
 Hash functions: k indexes derived from two independent 64-bit halves of
 the url's sha256 (Kirsch-Mitzenmacher double hashing) — deterministic,
@@ -24,8 +27,12 @@ prefixes; keys need at least 32 hex chars (h1 ‖ h2).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd  # module global: pandas_udf resolves its type hints here
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 HEX64 = 16  # hex chars per 64-bit half
+FILTER_SCHEMA = "shard int, bits binary"
 
 
 def _decode(hash_hex, n_hex: int, dtype: str) -> np.ndarray:
@@ -55,11 +62,6 @@ class BloomShard:
         self.n_hashes = n_hashes
         self.bits = bits if bits is not None else np.zeros(n_bits // 8, dtype=np.uint8)
 
-    @classmethod
-    def sized_for(cls, expected_items: int, bits_per_item: int = 10) -> "BloomShard":
-        n_bits = max(1024, 1 << int(np.ceil(np.log2(expected_items * bits_per_item + 1))))
-        return cls(n_bits=n_bits, n_hashes=7)
-
     def _positions(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
         i = np.arange(self.n_hashes, dtype=np.uint64)[:, None]
         return (h1 + i * h2) % self.n_bits
@@ -84,21 +86,13 @@ class BloomShard:
         hit = (self.bits[byte_idx] & bit_mask) != 0
         return hit.all(axis=0)
 
-    def union(self, other: "BloomShard") -> "BloomShard":
-        assert self.n_bits == other.n_bits and self.n_hashes == other.n_hashes
-        return BloomShard(int(self.n_bits), self.n_hashes, np.bitwise_or(self.bits, other.bits))
-
     def to_bytes(self) -> bytes:
         return self.bits.tobytes()
 
     @classmethod
     def from_bytes(cls, raw: bytes, n_hashes: int = 7) -> "BloomShard":
         bits = np.frombuffer(raw, dtype=np.uint8).copy()
-        return cls(n_bits=len(bits) * 8, n_hashes=n_hashes)._with_bits(bits)
-
-    def _with_bits(self, bits: np.ndarray) -> "BloomShard":
-        self.bits = bits
-        return self
+        return cls(len(bits) * 8, n_hashes, bits)
 
 
 def shard_of(hash_hex: str, n_shards: int) -> int:
@@ -107,6 +101,12 @@ def shard_of(hash_hex: str, n_shards: int) -> int:
 
 def shard_of_series(hash_hex_series, n_shards: int) -> np.ndarray:
     return (_decode(hash_hex_series, 8, ">u4").astype(np.int64) % n_shards).astype(np.int32)
+
+
+def shard_col(n_shards: int):
+    """``shard_of`` over the ``url_hash`` column, JVM-side: the shard id
+    every filter plan groups, joins or probes by."""
+    return (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int")
 
 
 # --- executor-side probe path --------------------------------------------
@@ -120,109 +120,31 @@ def shard_of_series(hash_hex_series, n_shards: int) -> np.ndarray:
 # stale filter could produce FALSE NEGATIVES. The cache therefore stores a
 # strong reference to the exact bytes object alongside the parsed shard:
 # while an entry exists, its key's id cannot be recycled, and an identity
-# check guards the lookup.
+# check guards the lookup. Only broadcast bytes belong here: Arrow→pandas
+# makes new bytes objects per conversion, which would pin without a hit.
 _SHARD_CACHE: dict[int, tuple[bytes, object]] = {}
 
 
-def _cached_shard(raw: bytes, kind: str = "bloom", n_hashes: int = 7):
+def _shard_view(raw: bytes, kind: str = "bloom", n_hashes: int = 7):
+    """A read-only shard over ``raw``; zero-copy for bloom."""
+    if kind == "cuckoo":
+        from earcrawler_spark.crawler.cuckoo import CuckooShard
+
+        return CuckooShard.from_bytes(raw)
+    bits = np.frombuffer(raw, dtype=np.uint8)
+    return BloomShard(len(bits) * 8, n_hashes, bits)
+
+
+def _cached_shard(raw: bytes, kind: str = "bloom"):
     key = id(raw)
     hit = _SHARD_CACHE.get(key)
     if hit is not None and hit[0] is raw:
         return hit[1]
     if len(_SHARD_CACHE) > 512:
         _SHARD_CACHE.clear()
-    if kind == "cuckoo":
-        from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-        b = CuckooShard.from_bytes(raw)
-    else:
-        bits = np.frombuffer(raw, dtype=np.uint8)  # zero-copy, read-only
-        b = BloomShard(len(bits) * 8, n_hashes, bits)
+    b = _shard_view(raw, kind)
     _SHARD_CACHE[key] = (raw, b)
     return b
-
-
-def probe_maybe_seen_join(candidates, bloom_df, n_shards: int, kind: str = "bloom"):
-    """Shard-local maybe-seen probe WITHOUT a whole-filter broadcast:
-    candidates shuffle to their shard, each task cogroups with exactly
-    its shard's (shard, bits) row and probes locally. This is the scale
-    path the module docstring's sharding design implies — at 10^10 URLs
-    the filter is ~12 GB total, far past broadcast range, but any one
-    shard is a few MB. Cost is one shuffle of (url_hash + carry columns)
-    keyed by shard; the broadcast path stays the default at small filter
-    sizes. → candidates + `_maybe` boolean."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    cand = candidates.withColumn(
-        "_shard",
-        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int"),
-    )
-    out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("_maybe", T.BooleanType())]
-    )
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return left.assign(_maybe=pd.Series([], dtype=bool))
-        if len(right) == 0:
-            return left.assign(_maybe=False)
-        shard = _cached_shard(bytes(right["bits"].iloc[0]), kind)
-        return left.assign(_maybe=shard.contains_many(left["url_hash"].tolist()))
-
-    probed = (
-        cand.groupBy("_shard")
-        .cogroup(bloom_df.withColumnRenamed("shard", "_shard").groupBy("_shard"))
-        .applyInPandas(probe, out_schema)
-    )
-    return probed.drop("_shard")
-
-
-def extend_filter_join(
-    hashes_df,
-    bloom_df,
-    n_shards: int,
-    kind: str = "bloom",
-    n_bits: int = 1 << 20,
-    cuckoo_capacity: int = 1 << 17,
-):
-    """Shard-local filter extension WITHOUT broadcasting the previous
-    shards: new hashes cogroup with their shard's bits; untouched shards
-    (right-only groups) pass through unchanged. → new (shard, bits)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    hashed = hashes_df.select(
-        "url_hash",
-        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards)
-        .cast("int")
-        .alias("_shard"),
-    )
-
-    def extend(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return right.rename(columns={"_shard": "shard"})[["shard", "bits"]]
-        shard_id = int(left["_shard"].iloc[0])
-        raw = bytes(right["bits"].iloc[0]) if len(right) else None
-        if kind == "cuckoo":
-            from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-            f = (
-                CuckooShard.sized_for(cuckoo_capacity)
-                if raw is None
-                else CuckooShard.from_bytes(raw)
-            )
-        else:
-            f = BloomShard(n_bits, 7) if raw is None else BloomShard.from_bytes(raw)
-        f.add_many(left["url_hash"].tolist())
-        return pd.DataFrame({"shard": [shard_id], "bits": [f.to_bytes()]})
-
-    return (
-        hashed.groupBy("_shard")
-        .cogroup(bloom_df.withColumnRenamed("shard", "_shard").groupBy("_shard"))
-        .applyInPandas(extend, "shard int, bits binary")
-    )
 
 
 def probe_hashes(
@@ -245,43 +167,151 @@ def probe_hashes(
     return out
 
 
-def delete_filter_join(expired_df, bloom_df, n_shards: int):
-    """Shard-local cuckoo deletion WITHOUT broadcasting the shard map:
-    expired hashes cogroup with exactly their shard's (shard, bits) row,
-    the task deletes the fingerprints locally, untouched shards
-    (right-only groups) pass through unchanged.  → new (shard, bits).
+def _adder(kind: str, n_bits: int, cuckoo_capacity: int):
+    """The per-shard build step of both build plans: ``add(shard_id, raw,
+    hashes)`` loads the shard from ``raw`` (or creates an empty one when
+    None), adds the hashes and returns its (shard, bits) row."""
 
-    This is the retention-path sibling of extend_filter_join — at the
-    10^10-URL design point the shard map is the largest state object in
-    the system, and the former broadcast-the-whole-map deletion was the
-    one remaining driver/SPOF route for filter bytes (VERDICT r6
-    What's-wrong #1)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    def add(shard_id: int, raw: bytes | None, hashes: list[str]) -> pd.DataFrame:
+        if kind == "cuckoo":
+            from earcrawler_spark.crawler.cuckoo import CuckooShard
 
-    hashed = expired_df.select(
-        "url_hash",
-        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards)
-        .cast("int")
-        .alias("_shard"),
-    )
-
-    def drop(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-        if len(right) == 0:
-            # expired hashes for a shard with no bits: nothing to delete
-            return pd.DataFrame({"shard": [], "bits": []})
-        shard_id = int(right["_shard"].iloc[0])
-        raw = bytes(right["bits"].iloc[0])
-        if len(left) == 0:
-            return pd.DataFrame({"shard": [shard_id], "bits": [raw]})
-        f = CuckooShard.from_bytes(raw)
-        f.delete_many(left["url_hash"].tolist())
+            f = CuckooShard.sized_for(cuckoo_capacity) if raw is None else CuckooShard.from_bytes(raw)
+        else:
+            f = BloomShard(n_bits, 7) if raw is None else BloomShard.from_bytes(raw)
+        f.add_many(hashes)
         return pd.DataFrame({"shard": [shard_id], "bits": [f.to_bytes()]})
 
+    return add
+
+
+# --- broadcast kernels: the shard map ships to every executor ---------------
+
+
+def probe_maybe_seen_broadcast(
+    candidates, shards: dict[int, bytes], n_shards: int, kind: str = "bloom"
+):
+    """Maybe-seen probe of each Arrow batch through ``probe_hashes``
+    against the broadcast shard map. → candidates + `_maybe` boolean."""
+    shards_bc = candidates.sparkSession.sparkContext.broadcast(shards)
+
+    @F.pandas_udf("boolean")
+    def maybe_seen(hashes: pd.Series) -> pd.Series:
+        res = probe_hashes(hashes.tolist(), shards_bc.value, n_shards, kind)
+        return pd.Series(res, index=hashes.index)
+
+    return candidates.withColumn("_maybe", maybe_seen("url_hash"))
+
+
+def build_filter_broadcast(
+    hashes_df,
+    previous: dict[int, bytes],
+    n_shards: int,
+    kind: str = "bloom",
+    n_bits: int = 1 << 20,
+    cuckoo_capacity: int = 1 << 17,
+) -> dict[int, bytes]:
+    """Extend the shard map ``previous`` with new hashes: each task loads
+    its shard's previous bytes from a broadcast and extends them; the
+    driver collects only the rebuilt (shard, bits) rows, never the
+    hashes. → the merged shard map."""
+    previous_bc = hashes_df.sparkSession.sparkContext.broadcast(previous)
+    add = _adder(kind, n_bits, cuckoo_capacity)
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(pdf["shard"].iloc[0])
+        return add(shard, previous_bc.value.get(shard), pdf["url_hash"].tolist())
+
+    delta = {
+        r["shard"]: bytes(r["bits"])
+        for r in hashes_df.withColumn("shard", shard_col(n_shards))
+        .groupBy("shard")
+        .applyInPandas(build, FILTER_SCHEMA)
+        .collect()
+    }
+    return {**previous, **delta}
+
+
+# --- shard-local kernels: rows cogroup with their shard's (shard, bits) row -
+# At 10^10 URLs the filter is ~12 GB total, far past broadcast range, but
+# any one shard is a few MB; the cost is one shuffle keyed by shard.
+
+
+def _cogroup_shards(left_df, bloom_df, fn, schema):
     return (
-        hashed.groupBy("_shard")
+        left_df.groupBy("_shard")
         .cogroup(bloom_df.withColumnRenamed("shard", "_shard").groupBy("_shard"))
-        .applyInPandas(drop, "shard int, bits binary")
+        .applyInPandas(fn, schema)
     )
+
+
+def _probe_group(left: pd.DataFrame, right: pd.DataFrame, kind: str) -> pd.DataFrame:
+    """One shard's join probe. The shard is a fresh view, not a cache
+    entry: ``right``'s bytes are new objects on every call."""
+    if len(left) == 0:
+        return left.assign(_maybe=pd.Series([], dtype=bool))
+    if len(right) == 0:
+        return left.assign(_maybe=False)
+    shard = _shard_view(bytes(right["bits"].iloc[0]), kind)
+    return left.assign(_maybe=shard.contains_many(left["url_hash"].tolist()))
+
+
+def probe_maybe_seen_join(candidates, bloom_df, n_shards: int, kind: str = "bloom"):
+    """Maybe-seen probe WITHOUT a whole-filter broadcast: candidates
+    shuffle to their shard and probe its bits locally.
+    → candidates + `_maybe` boolean."""
+    cand = candidates.withColumn("_shard", shard_col(n_shards))
+    out_schema = T.StructType(
+        list(cand.schema.fields) + [T.StructField("_maybe", T.BooleanType())]
+    )
+
+    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        return _probe_group(left, right, kind)
+
+    return _cogroup_shards(cand, bloom_df, probe, out_schema).drop("_shard")
+
+
+def _rewrite_join(hashes_df, bloom_df, n_shards: int, rewrite):
+    """Shards with hashes become ``rewrite(shard_id, raw, hashes)`` (raw
+    None for a shard with no row yet); the others (right-only groups)
+    pass through unchanged. → new (shard, bits)."""
+    hashed = hashes_df.select("url_hash", shard_col(n_shards).alias("_shard"))
+
+    def apply(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if len(left) == 0:
+            return right.rename(columns={"_shard": "shard"})[["shard", "bits"]]
+        raw = bytes(right["bits"].iloc[0]) if len(right) else None
+        return rewrite(int(left["_shard"].iloc[0]), raw, left["url_hash"].tolist())
+
+    return _cogroup_shards(hashed, bloom_df, apply, FILTER_SCHEMA)
+
+
+def extend_filter_join(
+    hashes_df,
+    bloom_df,
+    n_shards: int,
+    kind: str = "bloom",
+    n_bits: int = 1 << 20,
+    cuckoo_capacity: int = 1 << 17,
+):
+    """Filter extension WITHOUT broadcasting the previous shards: new
+    hashes cogroup with their shard's bits. → new (shard, bits)."""
+    return _rewrite_join(hashes_df, bloom_df, n_shards, _adder(kind, n_bits, cuckoo_capacity))
+
+
+def _delete(shard_id: int, raw: bytes | None, hashes: list[str]) -> pd.DataFrame:
+    if raw is None:  # expired hashes for a shard with no bits: nothing to delete
+        return pd.DataFrame({"shard": [], "bits": []})
+    from earcrawler_spark.crawler.cuckoo import CuckooShard
+
+    f = CuckooShard.from_bytes(raw)
+    f.delete_many(hashes)
+    return pd.DataFrame({"shard": [shard_id], "bits": [f.to_bytes()]})
+
+
+def delete_filter_join(expired_df, bloom_df, n_shards: int):
+    """Cuckoo deletion WITHOUT broadcasting the shard map: expired hashes
+    cogroup with their shard's bits, and the task deletes their
+    fingerprints locally — the retention path never routes the largest
+    state object in the system through the driver. → new (shard, bits)."""
+    return _rewrite_join(expired_df, bloom_df, n_shards, _delete)

@@ -27,9 +27,11 @@ vs the sequential model in tests and at local[2] vs local[8].
 State plumbing (state.py): driver-built frames — the seed frontier, robots
 rows, (shard, bits) filter tables — are Arrow-backed, and every state
 read uses its table's declared schema, so neither costs a Python-worker
-scan or a schema-inference job. In driver filter-io mode the crawler
-keeps the shard map it last wrote and serves the next wave's probe from
-it while that snapshot is still the committed one; a resume, a fresh
+scan or a schema-inference job. The seen filter's format and kernels
+live in bloom.py; CrawlConfig.shard_local() picks its broadcast or
+shard-local kernels by filter size. While broadcast, the crawler keeps
+the shard map it last wrote and serves the next wave's probe from it
+while that snapshot is still the committed one; a resume, a fresh
 Crawler or expire_seen reads the filter from disk instead.
 
 Scale notes (10^10 URLs):
@@ -51,15 +53,16 @@ import os
 import time
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.crawler import synth
 from earcrawler_spark.crawler.bloom import (
-    BloomShard,
+    FILTER_SCHEMA,
+    build_filter_broadcast,
+    delete_filter_join,
     extend_filter_join,
-    probe_hashes,
+    probe_maybe_seen_broadcast,
     probe_maybe_seen_join,
 )
 from earcrawler_spark.crawler.cache import evict_cache, merge_cache, split_by_cache
@@ -72,11 +75,15 @@ from earcrawler_spark.crawler.canonicalize import (
 from earcrawler_spark.crawler.fetch import fetch_and_parse, synthetic_fetch_one
 from earcrawler_spark.crawler.robots import allowed_filter, fetch_robots
 from earcrawler_spark.crawler.state import (
-    FILTER_SCHEMA,
     FRONTIER_SCHEMA,
     CrawlState,
     arrow_frame,
 )
+
+# Past this estimated filter size the seen filter's shard map no longer
+# goes through the driver or a broadcast (the 10^10-URL design point).
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
 
 def visit_order_cols():
     return [F.col("iter"), F.col("priority").desc(), F.col("host"), F.col("seq")]
@@ -116,25 +123,6 @@ class CrawlConfig:
     # renames per wave, which dominates wall time. On a cluster with a real
     # object store you'd raise this to the write parallelism you want.
     write_partitions: int = 8
-    # seen-filter probe path: 'broadcast' ships all shards to every
-    # executor (fastest while the filter is MBs); 'join' cogroups
-    # candidates with their shard's bits — shard-local, no whole-filter
-    # broadcast, the 10^10-URL scale path. Outputs are identical
-    # (chain-hash-asserted). 'auto' (default) picks 'join' as soon as
-    # the estimated filter size passes probe_broadcast_max_bytes, so
-    # the 10^10 design point never depends on a hand-set flag.
-    probe_mode: str = "auto"
-    probe_broadcast_max_bytes: int = 64 * 1024 * 1024
-    # filter lifecycle I/O: 'driver' round-trips shard bytes through a
-    # driver dict (fine while the filter is MBs); 'distributed' keeps the
-    # (shard, bits) table executor-side END TO END — build/merge via
-    # extend_filter_join, cuckoo retention via delete_filter_join, bloom
-    # retention rebuild via extend_filter_join over the surviving rows —
-    # so no full-filter collect or broadcast ever happens (the 10^10-URL
-    # path where the shard map would OOM the driver). 'auto' (default)
-    # follows resolved_probe_mode: past the broadcast threshold both the
-    # probe AND the lifecycle go shard-local together.
-    filter_io: str = "auto"
 
     def estimated_filter_bytes(self) -> int:
         if self.seen_filter == "cuckoo":
@@ -144,16 +132,11 @@ class CrawlConfig:
             per_shard = self.bloom_bits_per_shard // 8
         return self.n_shards * per_shard
 
-    def resolved_probe_mode(self) -> str:
-        if self.probe_mode != "auto":
-            return self.probe_mode
-        big = self.estimated_filter_bytes() > self.probe_broadcast_max_bytes
-        return "join" if big else "broadcast"
-
-    def resolved_filter_io(self) -> str:
-        if self.filter_io != "auto":
-            return self.filter_io
-        return "distributed" if self.resolved_probe_mode() == "join" else "driver"
+    def shard_local(self) -> bool:
+        """Whether the seen filter's probe and build cogroup rows with
+        their shard's bits instead of broadcasting the shard map. Only the
+        persisted, resume-validated filter parameters decide it."""
+        return self.estimated_filter_bytes() > BROADCAST_MAX_BYTES
 
 
 class Crawler:
@@ -173,7 +156,7 @@ class Crawler:
         self.robots_fetcher = robots_fetcher
         self.cache_bootstrap = cache_bootstrap
         # (snapshot key, shard map) of the last filter this crawler wrote
-        # in driver filter-io mode; _load_bloom serves it instead of
+        # while broadcast; _load_bloom serves it instead of
         # reading the snapshot back (see _snapshot_key)
         self._kept_filter: tuple[tuple, dict[int, bytes]] | None = None
         if self.cfg.n_partitions is None:
@@ -219,20 +202,7 @@ class Crawler:
         self.state.write(
             "seen", 0, frontier.select("url_hash", "url", F.lit(0).alias("iter"))
         )
-        if self.cfg.resolved_probe_mode() == "join":
-            # shard-local init write: past the broadcast threshold even
-            # the seed filter (n_shards x dense shard bytes) must not
-            # round-trip the driver
-            self.state.write(
-                "bloom", 0,
-                extend_filter_join(
-                    frontier.select("url_hash"), self._filter_frame({}), self.cfg.n_shards,
-                    self.cfg.seen_filter, self.cfg.bloom_bits_per_shard,
-                    self.cfg.cuckoo_capacity_per_shard,
-                ),
-            )
-        else:
-            self._write_filter(0, frontier.select("url_hash"), previous=None)
+        self._write_filter(0, frontier.select("url_hash"), self._committed_filter(-1))
         robots = fetch_robots(
             self.spark, [r[2] for r in rows], self.robots_fetcher
         )
@@ -255,48 +225,6 @@ class Crawler:
             (prev + json.dumps(payload, sort_keys=True, separators=(",", ":"))).encode()
         ).hexdigest()
 
-    def _build_filter_shards(
-        self, hashes_df: DataFrame, previous: dict[int, bytes] | None
-    ) -> dict[int, bytes]:
-        """Extend the per-shard seen filters (bloom or cuckoo —
-        cfg.seen_filter) with new hashes, returning the merged shard map.
-
-        Each shard's rebuild runs executor-side in applyInPandas: the
-        task loads the previous shard bytes from a broadcast, inserts the
-        group's hashes, and returns the new bytes — no wave-sized data
-        ever lands on the driver; the driver only collects n_shards
-        (shard, bytes) rows to persist them."""
-        cfg = self.cfg
-        n_shards, n_bits = cfg.n_shards, cfg.bloom_bits_per_shard
-        kind = cfg.seen_filter
-        cap = cfg.cuckoo_capacity_per_shard
-        prev = dict(previous or {})
-        prev_bc = self.spark.sparkContext.broadcast(prev)
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(pdf["shard"].iloc[0])
-            raw = prev_bc.value.get(shard)
-            if kind == "cuckoo":
-                from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-                f = CuckooShard.sized_for(cap) if raw is None else CuckooShard.from_bytes(raw)
-            else:
-                f = BloomShard(n_bits, 7) if raw is None else BloomShard.from_bytes(raw)
-            f.add_many(pdf["url_hash"].tolist())
-            return pd.DataFrame({"shard": [shard], "bits": [f.to_bytes()]})
-
-        with_shard = hashes_df.withColumn(
-            "shard", (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int")
-        )
-        delta = {
-            r["shard"]: bytes(r["bits"])
-            for r in with_shard.groupBy("shard")
-            .applyInPandas(build, FILTER_SCHEMA)
-            .collect()
-        }
-        merged = {**prev, **delta}
-        return merged
-
     def _filter_frame(self, shards: dict[int, bytes]) -> DataFrame:
         """A (shard, bits) filter table, Arrow-built from a shard map."""
         items = sorted(shards.items())
@@ -313,14 +241,33 @@ class Crawler:
         # expire_seen reuses generation 0) from the snapshot we wrote
         return path, os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
 
+    def _filter_table(self, upto_iter: int) -> DataFrame:
+        """The committed (shard, bits) table; empty before the first."""
+        df = self.state.read_latest("bloom", upto_iter)
+        return self._filter_frame({}) if df is None else df
+
+    def _committed_filter(self, upto_iter: int) -> DataFrame | dict[int, bytes]:
+        """The committed filter in the form this crawler's kernels take:
+        the (shard, bits) table when shard-local, else the shard map."""
+        if self.cfg.shard_local():
+            return self._filter_table(upto_iter)
+        return self._load_bloom(upto_iter)
+
     def _write_filter(
-        self, iteration: int, hashes_df: DataFrame, previous: dict[int, bytes] | None
-    ) -> dict[int, bytes]:
-        merged = self._build_filter_shards(hashes_df, previous)
+        self, iteration: int, hashes_df: DataFrame, previous: DataFrame | dict[int, bytes]
+    ) -> None:
+        """Write ``previous`` (as _committed_filter gave it) extended with
+        new hashes as the iteration's filter snapshot."""
+        cfg = self.cfg
+        params = (cfg.n_shards, cfg.seen_filter, cfg.bloom_bits_per_shard,
+                  cfg.cuckoo_capacity_per_shard)
+        if cfg.shard_local():
+            self.state.write("bloom", iteration, extend_filter_join(hashes_df, previous, *params))
+            return
+        merged = build_filter_broadcast(hashes_df, previous, *params)
         self.state.write("bloom", iteration, self._filter_frame(merged))
         path = self.state._iter_dir("bloom", iteration)
         self._kept_filter = (self._snapshot_key(path), merged)
-        return merged
 
     def _load_bloom(self, upto_iter: int) -> dict[int, bytes]:
         """The committed filter snapshot as a shard map: the one this
@@ -596,32 +543,12 @@ class Crawler:
         )
 
         _mark("link_expand_plan")
-        # bloom pre-filter: only maybe-seen rows pay the anti-join.
-        # probe_mode 'broadcast' ships the whole shard dict to every
-        # executor (right while the filter is MBs); 'join' keeps shards
-        # shard-local via a cogroup — the 10^10-URL path where the filter
-        # is far past broadcast range (bloom.py:12-15 sharding design).
-        blooms = None
-        probe_mode = cfg.resolved_probe_mode()
-        if probe_mode == "join":
-            bloom_df = self.state.read_latest("bloom", it - 1)
-            if bloom_df is None:
-                bloom_df = self._filter_frame({})
-            candidates = probe_maybe_seen_join(
-                candidates, bloom_df, cfg.n_shards, cfg.seen_filter
-            ).cache()
-        else:
-            blooms = self._load_bloom(it - 1)
-            bloom_bc = spark.sparkContext.broadcast(blooms)
-            n_shards = cfg.n_shards
-            filter_kind = cfg.seen_filter
-
-            @F.pandas_udf("boolean")
-            def maybe_seen(hashes: pd.Series) -> pd.Series:
-                res = probe_hashes(hashes.tolist(), bloom_bc.value, n_shards, filter_kind)
-                return pd.Series(res, index=hashes.index)
-
-            candidates = candidates.withColumn("_maybe", maybe_seen("url_hash")).cache()
+        # bloom pre-filter: only maybe-seen rows pay the anti-join. The
+        # probe broadcasts the shard map or cogroups candidates with their
+        # shard's bits, by filter size (CrawlConfig.shard_local).
+        previous = self._committed_filter(it - 1)
+        probe = probe_maybe_seen_join if cfg.shard_local() else probe_maybe_seen_broadcast
+        candidates = probe(candidates, previous, cfg.n_shards, cfg.seen_filter).cache()
         # materialize the cached probe frame once for its two consumers;
         # the stage key stays constant so manifest stage_secs keys are
         # stable across waves — the (data-dependent) candidate count is
@@ -661,17 +588,7 @@ class Crawler:
             n_files=cfg.write_partitions,
         )
         _mark("seen_write")
-        if probe_mode == "join":
-            self.state.write(
-                "bloom", it,
-                extend_filter_join(
-                    new_urls.select("url_hash"), bloom_df, cfg.n_shards,
-                    cfg.seen_filter, cfg.bloom_bits_per_shard,
-                    cfg.cuckoo_capacity_per_shard,
-                ),
-            )
-        else:
-            self._write_filter(it, new_urls.select("url_hash"), previous=blooms)
+        self._write_filter(it, new_urls.select("url_hash"), previous)
         _mark("filter_write")
         frontier_next = remainder.select(
             "url", "url_hash", "host", "priority", "seq"
@@ -744,8 +661,9 @@ class Crawler:
         The exact seen table is compacted to the surviving rows; the
         approximate filters are rebuilt from them (bloom) or keep their
         bytes minus the expired fingerprints (cuckoo delete_many — no full
-        rebuild, executor-side per shard). Commit point is the manifest
-        update, same recipe as compaction."""
+        rebuild). Both run shard-local whatever the filter size: expiry
+        is rare, and it never routes shard bytes through the driver.
+        Commit point is the manifest update, same recipe as compaction."""
         m = self.state.manifest()
         upto = m["completed_iter"]
         seen = self.state.read_all("seen", upto)
@@ -759,68 +677,22 @@ class Crawler:
         # in this stage leaves the previous state fully valid (the old
         # in-place overwrite could delete the only filter snapshot and the
         # very base dir `keep` was being read from).
-        bloom_gen = self.state.fresh_gen("bloom", "iter", upto)
-        distributed = self.cfg.resolved_filter_io() == "distributed"
-        if self.cfg.seen_filter == "cuckoo" and n_expired > 0:
-            if distributed:
-                # shard-local deletion: expired hashes cogroup with their
-                # own shard row — the shard map never leaves the executors
-                # (the former broadcast-the-whole-map path was the last
-                # driver route for filter bytes at the 10^10-URL design
-                # point)
-                from earcrawler_spark.crawler.bloom import delete_filter_join
-
-                bloom_df = self.state.read_latest("bloom", upto)
-                if bloom_df is None:
-                    bloom_df = self._filter_frame({})
-                delete_filter_join(
-                    expired.select("url_hash"), bloom_df, self.cfg.n_shards
-                ).write.mode("overwrite").parquet(
-                    self.state._iter_dir("bloom", upto, bloom_gen)
-                )
-            else:
-                blooms = self._load_bloom(upto)
-                bc = self.spark.sparkContext.broadcast(blooms)
-                n_shards = self.cfg.n_shards
-
-                def drop(pdf: pd.DataFrame) -> pd.DataFrame:
-                    from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-                    shard = int(pdf["shard"].iloc[0])
-                    raw = bc.value.get(shard)
-                    if raw is None:
-                        return pd.DataFrame({"shard": [], "bits": []})
-                    f = CuckooShard.from_bytes(raw)
-                    f.delete_many(pdf["url_hash"].tolist())
-                    return pd.DataFrame({"shard": [shard], "bits": [f.to_bytes()]})
-
-                delta = {
-                    r["shard"]: bytes(r["bits"])
-                    for r in expired.withColumn(
-                        "shard",
-                        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int"),
-                    ).groupBy("shard").applyInPandas(drop, FILTER_SCHEMA).collect()
-                }
-                self._filter_frame({**blooms, **delta}).write.mode("overwrite").parquet(
-                    self.state._iter_dir("bloom", upto, bloom_gen)
-                )
-        elif distributed:
-            # blooms can't delete: rebuild shard-locally from the surviving
-            # rows (extend over an empty shard table) into the staged dir
-            extend_filter_join(
-                keep.select("url_hash"), self._filter_frame({}), self.cfg.n_shards,
-                self.cfg.seen_filter, self.cfg.bloom_bits_per_shard,
-                self.cfg.cuckoo_capacity_per_shard,
-            ).write.mode("overwrite").parquet(
-                self.state._iter_dir("bloom", upto, bloom_gen)
+        cfg = self.cfg
+        if cfg.seen_filter == "cuckoo":
+            # expired fingerprints leave their own shard's row; untouched
+            # shards pass through
+            rebuilt = delete_filter_join(
+                expired.select("url_hash"), self._filter_table(upto), cfg.n_shards
             )
         else:
-            # blooms can't delete: rebuild from the surviving rows into the
-            # staged generation dir (same build as _write_filter, staged)
-            rebuilt = self._build_filter_shards(keep.select("url_hash"), previous=None)
-            self._filter_frame(rebuilt).write.mode("overwrite").parquet(
-                self.state._iter_dir("bloom", upto, bloom_gen)
+            # blooms can't delete: rebuild from the surviving rows
+            # (extend over an empty shard table)
+            rebuilt = extend_filter_join(
+                keep.select("url_hash"), self._filter_frame({}), cfg.n_shards,
+                cfg.seen_filter, cfg.bloom_bits_per_shard, cfg.cuckoo_capacity_per_shard,
             )
+        bloom_gen = self.state.fresh_gen("bloom", "iter", upto)
+        rebuilt.write.mode("overwrite").parquet(self.state._iter_dir("bloom", upto, bloom_gen))
         seen_gen = self.state.fresh_gen("seen", "base", upto)
         keep.coalesce(self.cfg.write_partitions).write.mode("overwrite").parquet(
             self.state._base_dir("seen", upto, seen_gen)

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from earcrawler_spark.crawler.bloom import FILTER_SCHEMA
 from earcrawler_spark.crawler.cache import CACHE_SCHEMA
 from earcrawler_spark.crawler.spans import SPANS_SCHEMA
 
@@ -50,7 +51,6 @@ APPEND_TABLES = ("seen", "content_seen", "documents", "visits", "metrics")
 FULL_TABLES = ("frontier", "bloom", "robots", "fetch_cache")
 
 FRONTIER_SCHEMA = "url string, url_hash string, host string, priority int, seq bigint"
-FILTER_SCHEMA = "shard int, bits binary"
 # What each table's writer produces, as parquet reads it back (every field
 # nullable). tests/test_crawl_state_contract.py pins writers to these.
 SCHEMAS = {

@@ -1,8 +1,9 @@
 """Crawl-state contracts: every table's writer matches the schema that
 ``state.SCHEMAS`` declares for its reads, the driver-side frames are
 Arrow-built (no pickled rows, no RDD conversions on the crawler path),
-and the shard map a crawler keeps between waves never outlives the
-filter snapshot it was written as."""
+the seen filter's Spark kernels stay behind bloom.py, and the shard map
+a crawler keeps between waves never outlives the filter snapshot it was
+written as."""
 
 from __future__ import annotations
 
@@ -121,6 +122,61 @@ def test_crawler_has_no_pickled_row_frames():
         with open(path, encoding="utf-8") as f:
             hits += _pickled_row_sites(f.read(), os.path.basename(path))
     assert hits == []
+
+
+# -- bloom.py owns every seen-filter kernel -----------------------------
+
+_KERNEL_NAMES = {"applyInPandas", "cogroup", "pandas_udf", "conv"}
+
+
+def _filter_kernel_sites(source: str, filename: str) -> list[str]:
+    """Spark constructs of the seen-filter kernels: ``applyInPandas``,
+    ``cogroup``, ``pandas_udf``, ``sparkContext.broadcast`` and ``conv``
+    (the JVM shard-id expression) — as attributes, names or imports."""
+    hits = []
+    for node in ast.walk(ast.parse(source, filename)):
+        if isinstance(node, ast.Attribute) and node.attr in _KERNEL_NAMES:
+            hits.append((node.lineno, node.attr))
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr == "broadcast"
+            and isinstance(node.value, ast.Attribute)
+            and node.value.attr == "sparkContext"
+        ):
+            hits.append((node.lineno, "sparkContext.broadcast"))
+        elif isinstance(node, ast.Name) and node.id in _KERNEL_NAMES:
+            hits.append((node.lineno, node.id))
+        elif isinstance(node, ast.alias) and node.name in _KERNEL_NAMES:
+            hits.append((node.lineno, f"import {node.name}"))
+    return [f"{filename}:{line} {what}" for line, what in sorted(hits)]
+
+
+def test_guard_flags_filter_kernels():
+    bad = (
+        "df.groupBy('s').applyInPandas(f, 'a int')\n"
+        "a.groupBy('s').cogroup(b.groupBy('s'))\n"
+        "@F.pandas_udf('boolean')\n"
+        "def f(s): return s\n"
+        "spark.sparkContext.broadcast({})\n"
+        "F.conv(F.substring('url_hash', 1, 8), 16, 10)\n"
+        "from pyspark.sql.functions import pandas_udf\n"
+        "df.join(F.broadcast(small), 'host')\n"  # a join hint, not a filter kernel
+    )
+    assert [h.split(" ", 1)[1] for h in _filter_kernel_sites(bad, "x.py")] == [
+        "applyInPandas", "cogroup", "pandas_udf", "sparkContext.broadcast", "conv",
+        "import pandas_udf",
+    ]
+
+
+def test_filter_kernels_live_in_bloom():
+    """The runner only picks a kernel; the filter format, its Spark plans
+    and the one JVM shard-id expression stay behind bloom.py."""
+    sites = {}
+    for name in ("runner.py", "bloom.py"):
+        with open(os.path.join(CRAWLER_DIR, name), encoding="utf-8") as f:
+            sites[name] = _filter_kernel_sites(f.read(), name)
+    assert sites["runner.py"] == []
+    assert len([h for h in sites["bloom.py"] if h.endswith(" conv")]) == 1
 
 
 # -- the kept filter never outlives its snapshot ------------------------

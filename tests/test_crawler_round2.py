@@ -9,7 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from earcrawler_spark.crawler import synth
+from earcrawler_spark.crawler import runner, synth
 from earcrawler_spark.crawler.fetch import (
     retrying,
     synthetic_etag,
@@ -190,18 +190,23 @@ def test_robots_user_agent_grouping():
     assert dis == [] and delay == 1.5
 
 
-def test_probe_mode_join_matches_broadcast(spark, tmp_path):
+def test_shard_local_matches_broadcast(spark, tmp_path, monkeypatch):
     """The shard-local cogroup probe/extend path must be output-identical
     to the whole-filter broadcast path: same chain hash, same seen set,
-    same filter semantics (probes agree)."""
+    same filter semantics (probes agree). Both modes run in this one test
+    because each is checked against the other."""
     runs = {}
-    for mode in ("broadcast", "join"):
-        c = Crawler(
-            spark, str(tmp_path / mode),
-            CrawlConfig(max_iters=2, n_partitions=4, probe_mode=mode),
-        )
-        c.init_seeds(synth.seed_list())
-        c.run()
+    for mode in ("broadcast", "shard_local"):
+        with monkeypatch.context() as mp:
+            if mode == "shard_local":
+                mp.setattr(runner, "BROADCAST_MAX_BYTES", 0)
+            c = Crawler(
+                spark, str(tmp_path / mode),
+                CrawlConfig(max_iters=2, n_partitions=4),
+            )
+            assert c.cfg.shard_local() == (mode == "shard_local")
+            c.init_seeds(synth.seed_list())
+            c.run()
         m = c.state.manifest()
         runs[mode] = (
             m["chain_hash"],
@@ -209,10 +214,10 @@ def test_probe_mode_join_matches_broadcast(spark, tmp_path):
             {r["shard"]: bytes(r["bits"])
              for r in c.state.read_latest("bloom", m["completed_iter"]).collect()},
         )
-    assert runs["join"][0] == runs["broadcast"][0], "chain hash diverged"
-    assert runs["join"][1] == runs["broadcast"][1]
+    assert runs["shard_local"][0] == runs["broadcast"][0], "chain hash diverged"
+    assert runs["shard_local"][1] == runs["broadcast"][1]
     # bloom bit-OR is order-independent -> identical shard bytes too
-    assert runs["join"][2] == runs["broadcast"][2]
+    assert runs["shard_local"][2] == runs["broadcast"][2]
 
 
 def test_filter_config_persisted_and_validated(spark, tmp_path):
@@ -341,31 +346,30 @@ def test_fuzz_robots_grouping(spark):
             assert got == (want[0], want[1]), (trial, ua, txt, got, want)
 
 
-def test_probe_mode_auto_resolution_and_no_driver_collect(spark, tmp_path, monkeypatch):
-    """'auto' resolves by estimated filter size; past the broadcast
+def test_shard_local_by_filter_size_and_no_driver_collect(spark, tmp_path, monkeypatch):
+    """The estimated filter size picks the mode; past the broadcast
     threshold the crawl must run the shard-local join path and never
     collect filter bytes to the driver (_load_bloom unused)."""
     small = CrawlConfig()  # 16 shards x 1Mib bloom = 2 MB -> broadcast
-    assert small.resolved_probe_mode() == "broadcast"
+    assert not small.shard_local()
     big = CrawlConfig(n_shards=4096, bloom_bits_per_shard=1 << 20)  # 512 MB
-    assert big.resolved_probe_mode() == "join"
-    assert CrawlConfig(probe_mode="broadcast", n_shards=4096).resolved_probe_mode() == "broadcast"
+    assert big.shard_local()
 
+    monkeypatch.setattr(runner, "BROADCAST_MAX_BYTES", 1024)  # force shard-local
     c = Crawler(
         spark, str(tmp_path / "auto-join"),
-        CrawlConfig(max_iters=2, n_partitions=4,
-                    probe_broadcast_max_bytes=1024),  # force 'join'
+        CrawlConfig(max_iters=2, n_partitions=4),
     )
-    assert c.cfg.resolved_probe_mode() == "join"
+    assert c.cfg.shard_local()
 
     def _boom(upto_iter):
         raise AssertionError("_load_bloom collected filter bytes to the driver")
 
     monkeypatch.setattr(c, "_load_bloom", _boom)
     monkeypatch.setattr(
-        c, "_build_filter_shards",
+        runner, "build_filter_broadcast",
         lambda *a, **k: (_ for _ in ()).throw(
-            AssertionError("driver-side shard build used in join mode")),
+            AssertionError("broadcast shard build used in shard-local mode")),
     )
     c.init_seeds(synth.seed_list())
     c.run()

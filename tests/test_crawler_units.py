@@ -6,13 +6,17 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from earcrawler_spark.crawler import bloom
 from earcrawler_spark.crawler.bloom import (
     BloomShard,
     _h1_h2,
+    _probe_group,
     probe_hashes,
     shard_of,
     shard_of_series,
@@ -74,14 +78,9 @@ def test_bloom_no_false_negatives():
     other = [hashlib.sha256(f"other-{i}".encode()).hexdigest() for i in range(5000)]
     fp = b.contains_many(other).mean()
     assert fp < 0.05, f"false-positive rate too high: {fp}"
-    # OR-merge preserves membership
-    b2 = BloomShard(1 << 16, 7)
-    b2.add_many(other)
-    merged = b.union(b2)
-    assert merged.contains_many(keys).all() and merged.contains_many(other).all()
     # serialization round-trip
-    back = BloomShard.from_bytes(merged.to_bytes())
-    assert np.array_equal(back.bits, merged.bits)
+    back = BloomShard.from_bytes(b.to_bytes())
+    assert np.array_equal(back.bits, b.bits)
     assert 0 <= shard_of(keys[0], 16) < 16
 
 
@@ -131,6 +130,25 @@ def test_batch_hash_decode_equals_scalar(added, probed, n_shards):
         got = probe_hashes(probed, table, n_shards, kind)
         assert got.tolist() == [w and shard_of(h, n_shards) % 2 == 0 for h, w in zip(probed, want)]
     assert all(_scalar_bloom_hit(b, h) for h in added)  # no false negatives
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_join_probe_group_adds_no_shard_cache_entries(kind):
+    """Every Arrow→pandas conversion makes new bytes objects, so the join
+    probe's shards would never hit an id-keyed cache entry; storing them
+    would only pin each shard's bytes in the worker."""
+    keys = [hashlib.sha256(f"k-{i}".encode()).hexdigest() for i in range(200)]
+    f = BloomShard(1 << 12, 7) if kind == "bloom" else CuckooShard.sized_for(256)
+    f.add_many(keys[:100])
+    right = pa.table({"_shard": pa.array([0], pa.int32()), "bits": pa.array([f.to_bytes()])})
+    left = pd.DataFrame({"url_hash": keys, "_shard": 0})
+    first, second = right.to_pandas(), right.to_pandas()
+    assert first["bits"].iloc[0] is not second["bits"].iloc[0]
+    before = len(bloom._SHARD_CACHE)
+    for frame in (first, second):
+        out = _probe_group(left, frame, kind)
+        assert out["_maybe"].tolist() == f.contains_many(keys).tolist()
+    assert len(bloom._SHARD_CACHE) == before
 
 
 @pytest.mark.parametrize("keys", [["ab" * 15], ["ab" * 16, "cd"], ["ab" * 15 + " ab"]])

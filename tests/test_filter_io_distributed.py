@@ -1,30 +1,41 @@
-"""filter_io='distributed': the seen-filter lifecycle (build, probe,
-cuckoo deletion, bloom retention rebuild) keeps shard bytes executor-side
-end to end — no full-filter collect or whole-map broadcast (the r6
-VERDICT's last 10^10-scale driver bottleneck).
+"""Shard-local seen filter: past ``runner.BROADCAST_MAX_BYTES`` the filter
+lifecycle (build, probe, cuckoo deletion, bloom retention rebuild) keeps
+shard bytes executor-side end to end — no full-filter collect or
+whole-map broadcast (the 10^10-URL design point). Tests force the mode by
+lowering that constant.
 
-Covers: (a) seen-set + visit + lineage-hash equality between the driver
-and distributed modes for both filter families, (b) a behavior guard
-asserting the distributed mode never calls the driver round-trip
-helpers, (c) probe equivalence after retention expiry."""
+Covers: (a) seen-set + visit + lineage-hash equality between the
+broadcast and shard-local modes for both filter families, also through
+``expire_seen`` and the wave after it, (b) a behavior guard asserting the
+shard-local mode never calls the driver round-trip helpers, (c) probe
+equivalence after retention expiry."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 
-from earcrawler_spark.crawler import synth
+from earcrawler_spark.crawler import runner, synth
 from earcrawler_spark.crawler.bloom import probe_maybe_seen_join
 from earcrawler_spark.crawler.runner import Crawler, CrawlConfig
 
+BROADCAST_MAX_BYTES = runner.BROADCAST_MAX_BYTES
+# false-positive probes: the filters' answers must agree on these too
+NEVER_SEEN = [hashlib.sha256(f"never-{i}".encode()).hexdigest() for i in range(2000)]
 
-def _crawl(spark, path, kind, io_mode, probe):
+
+def _crawl(spark, path, kind, shard_local, monkeypatch):
+    """A 2-wave crawl in the given mode; the mode holds until the test
+    ends or the next _crawl."""
+    monkeypatch.setattr(
+        runner, "BROADCAST_MAX_BYTES", 0 if shard_local else BROADCAST_MAX_BYTES
+    )
     c = Crawler(
         spark, str(path),
-        CrawlConfig(
-            max_iters=2, n_partitions=4, seen_filter=kind,
-            filter_io=io_mode, probe_mode=probe,
-        ),
+        CrawlConfig(max_iters=2, n_partitions=4, seen_filter=kind),
     )
+    assert c.cfg.shard_local() == shard_local
     c.init_seeds(synth.seed_list())
     c.run()
     return c
@@ -40,9 +51,9 @@ def _fingerprint(c):
 
 
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_distributed_filter_io_equals_driver(spark, tmp_path, kind):
-    a = _crawl(spark, tmp_path / f"drv_{kind}", kind, "driver", "broadcast")
-    b = _crawl(spark, tmp_path / f"dist_{kind}", kind, "distributed", "join")
+def test_shard_local_equals_broadcast(spark, tmp_path, monkeypatch, kind):
+    a = _crawl(spark, tmp_path / f"drv_{kind}", kind, False, monkeypatch)
+    b = _crawl(spark, tmp_path / f"dist_{kind}", kind, True, monkeypatch)
     assert _fingerprint(a) == _fingerprint(b)
 
 
@@ -58,11 +69,11 @@ def _probe_distributed(spark, c, hashes):
 
 
 @pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
-def test_expire_seen_distributed(spark, tmp_path, kind):
-    """Sliding-window expiry in distributed mode: same kept/expired
+def test_expire_seen_distributed(spark, tmp_path, monkeypatch, kind):
+    """Sliding-window expiry in shard-local mode: same kept/expired
     accounting, recent hashes still maybe-seen, expired mostly gone —
     with the whole lifecycle shard-local."""
-    c = _crawl(spark, tmp_path / f"exp_{kind}", kind, "distributed", "join")
+    c = _crawl(spark, tmp_path / f"exp_{kind}", kind, True, monkeypatch)
     seen = c.seen_set().collect()
     old = [r["url_hash"] for r in seen if r["iter"] < 2]
     recent = [r["url_hash"] for r in seen if r["iter"] >= 2]
@@ -79,30 +90,38 @@ def test_expire_seen_distributed(spark, tmp_path, kind):
     assert n_ghost / len(old) < 0.1
 
 
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_expire_seen_equal_across_modes(spark, tmp_path, monkeypatch, kind):
+    """Broadcast and shard-local crawls agree through expire_seen and the
+    wave after it: visits, seen set, the expiry counts, the next wave's
+    chain hash and the filter's probe answers."""
+    runs = {}
+    for shard_local in (False, True):
+        c = _crawl(spark, tmp_path / f"{kind}_{shard_local}", kind, shard_local, monkeypatch)
+        before = sorted(r["url_hash"] for r in c.seen_set().collect())
+        stats = c.expire_seen(older_than_iter=2)
+        m = c.run(max_iters=3)
+        assert m["completed_iter"] == 3
+        after = {r["url_hash"] for r in c.seen_set().collect()}
+        probes = _probe_distributed(spark, c, before + sorted(after) + NEVER_SEEN)
+        runs[shard_local] = (_fingerprint(c), stats, probes)
+    assert runs[True] == runs[False]
+
+
 def test_distributed_mode_never_roundtrips_the_driver(spark, tmp_path, monkeypatch):
-    """Behavior guard: with filter_io='distributed' the crawl + retention
-    lifecycle never calls _load_bloom / _build_filter_shards (the two
-    driver round-trip helpers) and never broadcasts a shard map."""
+    """Behavior guard: in shard-local mode the crawl + retention
+    lifecycle never calls _load_bloom or the broadcast build (the two
+    driver round-trip paths) and never broadcasts a shard map."""
 
     def _boom(name):
         def inner(*a, **k):
-            raise AssertionError(f"{name} called in distributed filter_io")
+            raise AssertionError(f"{name} called in shard-local mode")
 
         return inner
 
     monkeypatch.setattr(Crawler, "_load_bloom", _boom("_load_bloom"))
-    monkeypatch.setattr(
-        Crawler, "_build_filter_shards", _boom("_build_filter_shards")
-    )
-    c = _crawl(spark, tmp_path / "guard", "cuckoo", "distributed", "join")
+    for name in ("build_filter_broadcast", "probe_maybe_seen_broadcast"):
+        monkeypatch.setattr(runner, name, _boom(name))
+    c = _crawl(spark, tmp_path / "guard", "cuckoo", True, monkeypatch)
     stats = c.expire_seen(older_than_iter=2)
     assert stats["kept"] > 0 and stats["expired"] > 0
-
-
-def test_auto_filter_io_follows_probe_mode():
-    small = CrawlConfig(seen_filter="bloom")
-    assert small.resolved_probe_mode() == "broadcast"
-    assert small.resolved_filter_io() == "driver"
-    big = CrawlConfig(seen_filter="bloom", probe_broadcast_max_bytes=1)
-    assert big.resolved_probe_mode() == "join"
-    assert big.resolved_filter_io() == "distributed"
