@@ -48,12 +48,12 @@ def profile_decided_pairs(spark, sf_dir):
         RECONCILE_BLACKLIST,
         RECONCILE_WHITELIST,
         _synth_entities,
-        _t,
     )
+    from earcrawler_spark.session import table
     from pyspark.sql import functions as F
 
     times: dict[str, float] = {}
-    ents = with_norm(_synth_entities(_t(spark, sf_dir, "part")))
+    ents = with_norm(_synth_entities(table(spark, sf_dir, "part")))
     _noop(spark, "ents", ents, times)
     pairs = blocking_pairs_v2(ents)
     _noop(spark, "blocking_pairs_v2", pairs, times)
@@ -82,18 +82,18 @@ def profile_rag_context(spark, sf_dir):
         RAG_PROMPT,
         RAG_QUERY_K,
         _rag_metadata,
-        _t,
         build_rag_context,
     )
+    from earcrawler_spark.session import table
     from earcrawler_spark.operators.citation import apply_citation_boost, extract_targets
     from pyspark.sql import functions as F
 
     times: dict[str, float] = {}
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     meta = _rag_metadata(docs)
     bm25 = bm25_scores(docs, BM25_TERMS, k=RAG_CAND_K).select("doc_id", "rank")
     _noop(spark, "bm25_cand", bm25, times)
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
@@ -133,10 +133,10 @@ def profile_dedup(spark, sf_dir):
         dedup_clusters,
         lsh_candidate_pairs,
     )
-    from earcrawler_spark.queries_fidelity import _t
+    from earcrawler_spark.session import table
 
     times: dict[str, float] = {}
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     _noop(spark, "lsh_candidate_pairs", lsh_candidate_pairs(docs), times)
     t0 = time.perf_counter()
     spark.sparkContext.setJobDescription("dedup_clusters full")

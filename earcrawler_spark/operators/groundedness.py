@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from earcrawler_spark.functions.text import normalize_ws
 from earcrawler_spark.operators.citation import normalize_section_full
 
 DEFAULT_PHASE2_GATES_PATH = os.path.join(
@@ -71,10 +72,6 @@ def load_phase2_gate_thresholds(path: str | None = None) -> dict:
     return out
 
 
-def _normws(col):
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
 def score_citations(citations: DataFrame, context: DataFrame) -> DataFrame:
     """Per-citation validity + quote-in-context signals.
 
@@ -103,7 +100,7 @@ def score_citations(citations: DataFrame, context: DataFrame) -> DataFrame:
         raw.alias("_raw"),
         normalize_section_full(raw).alias("section_id"),
         q.alias("_q"),
-        _normws(q).alias("_qn"),
+        normalize_ws(q).alias("_qn"),
     ).withColumn(
         "valid",
         (F.col("_raw") != "")
@@ -112,7 +109,7 @@ def score_citations(citations: DataFrame, context: DataFrame) -> DataFrame:
         & (F.col("_q") != ""),
     )
     ctx = context.select(
-        F.col("section_id").alias("_csec"), _normws(F.col("ctx_text")).alias("_ctx")
+        F.col("section_id").alias("_csec"), normalize_ws(F.col("ctx_text")).alias("_ctx")
     )
     joined = c.join(ctx, c["section_id"] == ctx["_csec"], "left")
     has_q = F.col("_q") != ""

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from earcrawler_spark.functions.text import normalize_ws
 from earcrawler_spark.sources import normalize_ear_section_id
 
 ALLOWED_LABELS = [
@@ -42,10 +43,6 @@ HINT_PATTERN = (
     r"to determine|to answer)\b"
 )
 CITATIONS_SCHEMA = "array<struct<section_id:string,quote:string,span_id:string>>"
-
-
-def _normws(col):
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
 def validate_llm_outputs(
@@ -70,7 +67,7 @@ def validate_llm_outputs(
     # sorted entry order on both engines so the joined full-context
     # string (assumptions rule) is deterministic
     full_ctx = ent.groupBy("item_id").agg(
-        _normws(
+        normalize_ws(
             F.concat_ws("\n\n", F.array_sort(F.collect_list("_entry")))
         ).alias("_full"),
         # reference truthiness of the RAW '\n\n' join (output_schema.py
@@ -150,8 +147,8 @@ def validate_llm_outputs(
         F.max(
             (
                 F.col("_text").isNotNull()
-                & (_normws(F.col("_q")) != "")
-                & (F.instr(_normws(F.col("_text")), _normws(F.col("_q"))) > 0)
+                & (normalize_ws(F.col("_q")) != "")
+                & (F.instr(normalize_ws(F.col("_text")), normalize_ws(F.col("_q"))) > 0)
             ).cast("int")
         ).alias("_grounded"),
     )
@@ -182,8 +179,8 @@ def validate_llm_outputs(
         & F.coalesce(F.col("_ctx_truthy"), F.lit(False))
         & F.exists(
             F.coalesce("_assumptions", F.array().cast("array<string>")),
-            lambda a: (_normws(a) != "")
-            & (F.instr(F.col("_full"), _normws(a)) == 0),
+            lambda a: (normalize_ws(a) != "")
+            & (F.instr(F.col("_full"), normalize_ws(a)) == 0),
         )
     )
     unanswerable_bad_text = (

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions import text as TXT
+from earcrawler_spark.session import table
 
 EVENTS_T0 = "2024-01-15 00:00:00"
 EVENTS_T1 = "2024-01-23 00:00:00"
@@ -31,10 +32,6 @@ SHIP_CUTOFF = "1999-01-01"
 _STOPWORDS_SQL = "[" + ",".join(f"'{s}'" for s in TXT.EN_STOPWORDS) + "]"
 _TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 _TOKENS_RAW_SQL = "list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> '')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -47,7 +44,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: filter pushes to parquet scan; hash aggregate does map-side
     partial aggregation, shuffle carries only |groups| rows per partition.
     """
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < SHIP_CUTOFF)
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") < SHIP_CUTOFF)
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -85,10 +82,10 @@ def q_top_revenue_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB orders/lineitem would be bucketed on orderkey to kill that
     shuffle too.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
+    nation = table(spark, sf_dir, "nation")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -121,8 +118,8 @@ LIMIT 10
 
 def q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-join + grouped count (reference A10 / TPC-H Q4 shape)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey").distinct()
+    orders = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey").distinct()
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
@@ -142,8 +139,8 @@ ORDER BY o_orderpriority
 
 def q_orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 anti-join integrity check (kg/queries.py:13-55 FILTER NOT EXISTS)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey").distinct()
+    orders = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey").distinct()
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey, "left_anti")
         .select("o_orderkey", "o_custkey", "o_orderstatus")
@@ -163,7 +160,7 @@ def q_latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3 latest-version-per-identifier (corpus/sources.py:43-63): argmax by
     (date, key) per group via row_number window — identical tie-break both
     engines."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.desc("o_orderdate"), F.desc("o_orderkey")
     )
@@ -189,7 +186,7 @@ ORDER BY o_custkey
 def q_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 percentile metrics: exact linear-interpolated percentiles
     (utils/perf_report.py:16-55) per group."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = table(spark, sf_dir, "customer")
     return (
         cust.groupBy("c_mktsegment")
         .agg(
@@ -225,7 +222,7 @@ def q_asof_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the as-of filter pushes to the scan; the window shuffles once on
     user_id — same layout an event-log table would be partitioned by.
     """
-    ev = _t(spark, sf_dir, "events").filter(F.col("ts") <= EVENTS_T0)
+    ev = table(spark, sf_dir, "events").filter(F.col("ts") <= EVENTS_T0)
     w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
         ev.withColumn("rn", F.row_number().over(w))
@@ -253,7 +250,7 @@ def q_hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window rollup (streaming §2.10 batch equivalent): hourly
     counts + sums per event_type. In Structured Streaming this is the same
     plan with a watermark."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.date_trunc("hour", "ts").alias("hour"),
@@ -281,7 +278,7 @@ def q_monitor_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     value per (user_id, event_type) at T0 vs at T1; emit rows whose content
     hash changed or appeared. Full-outer-join-free formulation: new-state
     left join old-state keeps the plan to one shuffle per side."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
 
     def state(cutoff: str) -> DataFrame:
         w = W.partitionBy("user_id", "event_type").orderBy(
@@ -332,7 +329,7 @@ ORDER BY n.user_id, n.event_type
 def q_version_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2/W2 position-version counter (core/ear_crawler.py:84,97-103): each
     event gets version = rank within its (user_id, event_type) stream."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
         ev.withColumn("version", F.row_number().over(w))
@@ -354,7 +351,7 @@ def q_record_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4/SO1 record merge (corpus/records.py:84-125): group by key; first
     field by deterministic order; union + sort identifier set; aggregate.
     Modeled per user over the event stream."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     first_type = (
         ev.withColumn("rn", F.row_number().over(w))
@@ -409,7 +406,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash, doc_id) pairs, not text. At 100 TB the hash would also be the
     bucketing key of the documents table, making this shuffle-free.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return (
         docs.select(TXT.content_sha256(F.col("text")).alias("content_hash"), "doc_id")
         .groupBy("content_hash")
@@ -436,7 +433,7 @@ def q_seen_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the corpus form the persisted seen-set; the second half anti-joins
     against it (the crawl engine's exactness backstop behind the bloom
     pre-filter)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     # No driver-side collect: broadcast the 1-row median aggregate into the
     # plan (a crossJoin of a single row is free; the old `.collect()[0][0]`
     # pattern put an extra full scan + a driver action in the query path).
@@ -478,7 +475,7 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: explode + partial hash agg; the shuffle carries (term, partial
     count) — classic map-side-combine word count.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(TXT.tokens(F.col("text"))).alias("term"))
         .groupBy("term")
@@ -500,7 +497,7 @@ LIMIT 50
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting per source (training-data pipeline op): doc counts,
     token sums, avg tokens/doc."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     counted = docs.select("source", TXT.token_count(F.col("text")).alias("n_tokens"))
     return (
         counted.groupBy("source")
@@ -528,7 +525,7 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring (training-data pipeline op; reference precedent is
     the min-length gate at nsf_case_parser.py:56-64): deterministic [0,1]
     score per doc from length / token-shape / stopword signals."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return (
         docs.select(
             "doc_id",
@@ -567,7 +564,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5 PII scrub (privacy/redaction.py:7-45): the 7-rule regex chain +
     whitespace collapse; emit the scrubbed-content fingerprint so the
     oracle verifies byte-identical scrubbing."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return (
         docs.select(
             "doc_id",
@@ -587,7 +584,7 @@ ORDER BY doc_id
 def q_lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID distribution: multi-language function-word profile
     argmax (de/en/es/fr/und) vs the labeled lang column."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return (
         docs.select("lang", TXT.lang_id(F.col("text")).alias("lang_guess"))
         .groupBy("lang", "lang_guess")
@@ -621,7 +618,7 @@ def q_term_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates the shuffle. The pair aggregation is one shuffle on
     (t1, t2).
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     counted = (
         docs.select("doc_id", F.explode(TXT.tokens(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
@@ -676,7 +673,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     record for the LSH path."""
     from earcrawler_spark.operators.similarity import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), n=3, threshold=0.5)
+    return ngram_jaccard_pairs(table(spark, sf_dir, "documents"), n=3, threshold=0.5)
 
 
 _SQL_NGRAM_JACCARD = f"""
@@ -715,7 +712,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in any engine, so the oracle runs the same LSH in SQL."""
     from earcrawler_spark.operators.similarity import lsh_candidate_pairs
 
-    return lsh_candidate_pairs(_t(spark, sf_dir, "documents"), n=3, bands=8, rows=2)
+    return lsh_candidate_pairs(table(spark, sf_dir, "documents"), n=3, bands=8, rows=2)
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,7 +721,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the keep policy of large training-data dedup pipelines)."""
     from earcrawler_spark.operators.similarity import dedup_clusters
 
-    return dedup_clusters(_t(spark, sf_dir, "documents"))
+    return dedup_clusters(table(spark, sf_dir, "documents"))
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -732,7 +729,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's deterministic bucket+tie-break ranking."""
     from earcrawler_spark.operators.ranking import bm25_scores
 
-    return bm25_scores(_t(spark, sf_dir, "documents"), BM25_QUERY, k=20)
+    return bm25_scores(table(spark, sf_dir, "documents"), BM25_QUERY, k=20)
 
 
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,7 +739,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from earcrawler_spark.operators.ranking import topk_ranked
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     bm25 = bm25_scores(docs, BM25_QUERY, k=50).select("doc_id", "rank")
     length_rank = topk_ranked(
         docs.select("doc_id", "n_chars"),
@@ -782,7 +779,7 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity-search baseline; broadcast query side)."""
     from earcrawler_spark.operators.similarity import cosine_topk
 
-    return cosine_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=10)
+    return cosine_topk(table(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=10)
 
 
 _SQL_KNN = """
@@ -810,7 +807,7 @@ def q_reconcile_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bucket cap, token-feature scoring, threshold decisions."""
     from earcrawler_spark.operators.reconcile import blocking_pairs, score_pairs
 
-    parts = _t(spark, sf_dir, "part")
+    parts = table(spark, sf_dir, "part")
     pairs = blocking_pairs(
         parts, "p_partkey", "p_name",
         [F.concat_ws("|", "p_brand", "p_type")], max_bucket=64,
@@ -918,7 +915,7 @@ def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON scalar surface (§2.9): extract props.k, bucket by decile,
     aggregate (reference parses JSON payloads per row; here it's
     get_json_object in codegen)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.select((F.floor(k / 10) * 10).alias("k_bucket"), "value")
@@ -948,7 +945,7 @@ def q_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality with the per-row column form are pytest-verified."""
     from earcrawler_spark.operators.similarity import simhash_fingerprints
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return (
         simhash_fingerprints(docs)
         .withColumn("bucket", (F.col("simhash") % (1 << 16)).cast("int"))
@@ -961,7 +958,7 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall vs brute force is pytest-verified."""
     from earcrawler_spark.operators.similarity import hyperplane_lsh_buckets
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     return (
         # dim from the testdata table contract (embeddings are 64-wide at
         # every sf) — no driver-side row probe in the query path
@@ -1204,8 +1201,8 @@ def q_retrieval_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.operators.similarity import cosine_topk
 
     K = 20
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
+    docs = table(spark, sf_dir, "documents")
+    emb = table(spark, sf_dir, "embeddings")
     toks = F.array_distinct(
         F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
     )

@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import table
+
 # canonical alias map (transforms/canonical.py:41-106: casefolded keys →
 # canonical names, title-case fallback for unknowns)
 ALIASES = {
@@ -16,14 +18,10 @@ ALIASES = {
 }
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def q_alias_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10 canonical alias resolution: broadcast-map lookup on the
     casefolded key with initcap fallback (canonical.py:41-110)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = table(spark, sf_dir, "customer")
     amap = F.create_map(
         *[F.lit(x) for kv in ALIASES.items() for x in kv]
     )
@@ -60,7 +58,7 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (1 h window, 30 min slide): each event lands in two
     epoch-aligned windows — the streaming F.window(ts,'1 hour','30
     minutes') semantics expressed relationally so DuckDB can replay it."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     epoch = F.unix_timestamp("ts")
     starts = F.array(
         (F.floor(epoch / 1800) * 1800 - 1800).cast("long"),
@@ -107,7 +105,7 @@ def q_reconcile_jw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.functions.similarity_udfs import jaro_winkler_udf
     from earcrawler_spark.operators.reconcile import blocking_pairs
 
-    parts = _t(spark, sf_dir, "part")
+    parts = table(spark, sf_dir, "part")
     pairs = blocking_pairs(
         parts, "p_partkey", "p_name",
         [F.concat_ws("|", "p_brand", "p_type")], max_bucket=64,
@@ -128,7 +126,7 @@ def q_seen_set_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic 5%-relative-error bound check on the estimate
     (rsd 0.02); the raw estimate itself stays pytest-bound-checked
     (tests/test_queries_oracle.py)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     hashed = docs.select(F.sha2("text", 256).alias("h"))
     agg = hashed.agg(
         F.count(F.lit(1)).alias("n_rows"),

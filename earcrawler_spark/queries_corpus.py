@@ -15,10 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions.text import tokens
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from earcrawler_spark.session import table
 
 
 # --- P7/P8: term extraction + rule classification --------------------------
@@ -35,7 +32,7 @@ _CLASSIFY_RULES = [
 def q_entity_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classify extracted terms into buckets via rule chain; count
     mentions + distinct docs per (bucket, term)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     term = F.col("term")
     bucket = F.lit("OTHER")
     for name, toks in reversed(_CLASSIFY_RULES):
@@ -80,7 +77,7 @@ def q_corpus_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     'source:doc_id' (identity.py:15-25), content sha256, identifiers
     array, percent-encoded IRI (iri.py:21-38 — space-free charset here,
     so the encoding reduces to ':'→'%3A')."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     rid = F.concat_ws(":", "source", F.col("doc_id").cast("string"))
     return docs.select(
         rid.alias("record_id"),
@@ -114,7 +111,7 @@ def q_corpus_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D9 order-insensitive corpus digest per source: sha256 over the
     sorted concatenation of content hashes (rag/build_corpus.py
     compute_corpus_digest semantics)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return (
         docs.select("source", F.sha2("text", 256).alias("h"))
         .groupBy("source")
@@ -147,7 +144,7 @@ def q_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic chunking (chunking.py:144-286 re-expressed): split
     each doc into fixed 40-token chunks with stable '#pNNNN' chunk ids
     and 1-based ordinals (chunking.py:118-129's suffix scheme)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"), lowercase=False)
     n_chunks = F.ceil(F.size(toks) / CHUNK_TOKENS).cast("int")
     chunks = F.transform(
@@ -217,7 +214,7 @@ def q_mention_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
         mention_tokens,
     )
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id", mention_tokens(F.col("text")).alias("tt")
     )
     cands = spark.createDataFrame(
@@ -260,7 +257,7 @@ _SQL_MENTION = _mention_sql()
 def q_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prompt-context truncation (rag_service.py:148-161): keep the first
     15 tokens, append '[truncated]' when longer."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"), lowercase=False)
     short = F.array_join(F.slice(toks, 1, 15), " ")
     return docs.select(
@@ -326,7 +323,7 @@ def q_asof_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         refusal_reason_col,
     )
 
-    docs = _temporal_docs(_t(spark, sf_dir, "orders"))
+    docs = _temporal_docs(table(spark, sf_dir, "orders"))
     classified = classify_temporal(docs, ASOF_DATE)
     counts = (
         classified.groupBy("temporal_status", "temporal_reason")
@@ -403,9 +400,9 @@ ORDER BY status, reason
 def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A KG triples table derived from the star schema: the reference's
     RDF graph shape (kg/triples.py:12-52) as DataFrame(s, p, o)."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
+    nation = table(spark, sf_dir, "nation")
+    orders = table(spark, sf_dir, "orders")
     t1 = cust.select(
         F.concat(F.lit("customer/"), F.col("c_custkey").cast("string")).alias("s"),
         F.lit("in_nation").alias("p"),
@@ -554,7 +551,7 @@ BUDGETS = [("click", 60.0), ("purchase", 65.0), ("signup", 55.0), ("error", 50.0
 def q_budget_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Budget gate compare (utils/perf_report.py:71-101): per-event-type
     p95 of value vs a budget table → pass/fail + margin."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     budgets = spark.createDataFrame(BUDGETS, "event_type string, p95_budget double")
     summary = ev.groupBy("event_type").agg(
         F.round(F.percentile("value", F.lit(0.95)), 4).alias("p95_value")
@@ -603,7 +600,7 @@ def q_soundex_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract follows the reference variant."""
     from earcrawler_spark.operators.reconcile import soundex_v2
 
-    parts = _t(spark, sf_dir, "part")
+    parts = table(spark, sf_dir, "part")
     word2 = F.lower(F.split("p_name", " ")[1])
     return (
         parts.select(soundex_v2(word2).alias("sdx"))

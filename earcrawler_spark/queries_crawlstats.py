@@ -70,12 +70,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import table
+
 CRAWLSTATS_QUERIES: dict = {}
 CRAWLSTATS_ORACLES: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _host_col():
@@ -106,7 +104,7 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     url_sha = sha256(canonical) is the frontier's seen-set key."""
     from earcrawler_spark.crawler.canonicalize import canonical_url, url_hash_col
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     h = _host_col()
     path = F.concat(F.lit("/docs/"), F.col("doc_id").cast("string"))
     variants = docs.select(
@@ -179,7 +177,7 @@ def q_anchor_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     most-frequent anchor (count DESC, term ASC tie-break)."""
     from earcrawler_spark.queries_graph import _nodes_edges
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     nodes, edges = _nodes_edges(spark, sf_dir)
     anchors = docs.select(
         F.col("doc_id").alias("src"),
@@ -283,7 +281,7 @@ def q_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority_micro = λ̂_micro · staleness div 3600 — the expected number
     of missed changes, the canonical recrawl-ordering key.  Exact BIGINT
     arithmetic end to end; the global max is a broadcast 1-row agg."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     obs = ev.select(
         (F.col("event_id") % N_PAGES).cast("bigint").alias("page_id"),
         F.unix_timestamp("ts").alias("epoch_s"),
@@ -360,7 +358,7 @@ def q_frontier_shard_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     URL/host counts, the largest single-host share (the statistic that
     triggers skew salting for bis.doc.gov / federalregister.gov) and
     the shard's load vs the uniform ideal.  Micro-integer shares."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     urls = docs.select(
         _host_col().alias("host"),
         F.concat(
@@ -451,7 +449,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARTITIONED by term — the classic impact-ordering shuffle."""
     from earcrawler_spark.functions import text as TXT
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     tf = (
         docs.select(
             "doc_id", F.explode(TXT.tokens(F.col("text"))).alias("term")
@@ -549,7 +547,7 @@ def q_robots_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the dominant blocking rule.  This is the at-scale shape of
     robots matching: rules are a broadcast dim (small — per-host
     robots.txt), URLs never shuffle for the match itself."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     urls = docs.select(
         _host_col().alias("host"),
         F.concat(
@@ -685,7 +683,7 @@ def q_frontier_dequeue(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning — no shuffle beyond the one the seen-set already
     pays) + one wave-keyed aggregation.  n_urls == n_hosts per wave by
     construction (politeness invariant; asserted in tests)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     urls = docs.select(
         _host_col().alias("host"),
         F.concat(
@@ -763,7 +761,7 @@ def q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     URL spaces (every doc_id%5==0 page here sits in a synthetic /cal/
     date space, the classic trap shape).  Pure regexp projection +
     one partial-agg groupBy; no joins until the broadcast host total."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     urls = docs.select(
         _host_col().alias("host"),
         F.when(
@@ -838,7 +836,7 @@ def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sitemaps are one row per host (bounded — real sitemaps cap
     at 50k locs), so the explode fans back out to URL cardinality and
     the anti-join is the same seen-set shuffle the frontier pays."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     known = docs.select(
         _host_col().alias("host"),
         F.concat(
@@ -964,7 +962,7 @@ def q_bloom_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: known→positions is an explode + distinct (the filter build
     the crawler already pays per shard); the probe is one join on
     position and one count-per-URL — both partial-agg shapes."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     known = docs.select(
         F.concat(
             F.lit("http://"), _host_col(), F.lit("/docs/"),

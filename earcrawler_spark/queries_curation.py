@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.session import table
 
 CURATION_QUERIES: dict = {}
 CURATION_ORACLES: dict = {}
@@ -49,7 +50,7 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pure function of doc_id (stable under re-partitioning, re-runs
     and cluster size), so downstream epochs see an identical split with
     zero coordination state."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     h = F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 2)
     split = (
         F.when(h < _TRAIN_HI, "train").when(h < _VAL_HI, "val").otherwise("test")
@@ -140,7 +141,7 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     suites stay O(10^4-10^5) documents even when the training corpus is
     100 TB, so the contamination check is one broadcast-hash probe per
     training-doc shingle, no shuffle of the big side."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     sh = _shingle_rows(docs, DECON_N)
     is_eval = (F.col("doc_id") % _EVAL_MOD) == 0
     ev = sh.filter(is_eval).select(
@@ -212,7 +213,7 @@ def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct ratio < 0.2).  All per-doc work is
     key-partitioned (groupBy doc_id / window over doc_id) — partial
     aggregation keeps the shuffle at one row per (doc, term)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     tk = docs.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "t"))
     word_counts = tk.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("c"))
     per_doc = word_counts.groupBy("doc_id").agg(
@@ -309,7 +310,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     first K.  Reproducible under any partitioning/cluster size (pure
     function of (doc_id, lang)); the window is stratum-partitioned so
     there is no global sort."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     hk = F.sha2(
         F.concat_ws(":", F.col("doc_id").cast("string"), F.col("lang")), 256
     )
@@ -341,7 +342,7 @@ def q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     each source's share of the corpus token budget — the curation view
     used to rebalance a source mix before training.  One groupBy on
     source; the corpus total enters as a broadcast 1-row aggregate."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     per_src = (
         docs.select(
             "source",
@@ -428,7 +429,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-ulp libm-vs-JVM difference cannot change it; the ordering key is
     one IEEE division of two exact integers (l_micro / w) — bit-stable
     across engines, with a doc_id tie-break."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     u32 = F.conv(
         F.substring(
             F.sha2(F.concat(F.col("doc_id").cast("string"), F.lit(":ws")), 256),
@@ -525,7 +526,7 @@ def q_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exponent — integer-exact, no 1-ulp boundary risk.  One partial
     aggregation on a tiny key space (≤64 buckets at any corpus size),
     then a window over the bucket axis."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     n_tok = F.greatest(F.size(tokens(F.col("text"))), F.lit(1))
     per_bucket = (
         docs.select((F.length(F.bin(n_tok)) - 1).cast("long").alias("bucket_exp"),
@@ -596,7 +597,7 @@ def q_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation runs use to spot template-y or boilerplate-heavy sources.
     Plan: one (source, term) partial-agg shuffle, then a per-source
     rollup on the already-small key space."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     tc = (
         docs.select("source", F.explode(tokens(F.col("text"))).alias("t"))
         .groupBy("source", "t")
@@ -660,7 +661,7 @@ def q_contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reuses the 8-gram broadcast-probe pipeline: per source, training-doc
     totals, contaminated-doc counts and token-mass share, and the worst
     per-doc severity."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     sh = _shingle_rows(docs, DECON_N)
     is_eval = (F.col("doc_id") % _EVAL_MOD) == 0
     ev = sh.filter(is_eval).select("s")
@@ -775,7 +776,7 @@ def q_lang_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads before setting per-language sampling temperatures.  One
     groupBy on the (source, lang) key, shares via a window over the
     already-aggregated rows (no second shuffle of the corpus)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     cell = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("chars"),
@@ -852,7 +853,7 @@ def q_feature_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact table, then everything is per-type arithmetic over ≤ 10·types
     rows; the dense bin frame comes from a sequence explode over the
     distinct types, never from the fact table."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = table(spark, sf_dir, "events")
     day = F.floor(F.unix_timestamp(F.col("ts").cast("timestamp")) / 86400)
     binned = ev.select(
         "event_type",
@@ -978,7 +979,7 @@ def q_annotator_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one pass for the confusion diagonal + two marginal
     histograms (10 classes each); the kappa arithmetic runs on a
     broadcast-sized frame."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = table(spark, sf_dir, "embeddings")
     lab = emb.select(
         F.col("label").alias("l1"),
         F.pmod(
@@ -1071,7 +1072,7 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing is global — skew is bounded by the largest single type."""
     from pyspark.sql import Window as W
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = table(spark, sf_dir, "events")
     day = F.floor(F.unix_timestamp(F.col("ts").cast("timestamp")) / 86400)
     per_value = (
         ev.select(

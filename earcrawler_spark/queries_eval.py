@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from earcrawler_spark.session import cached, shared_frame, shared_output
+from earcrawler_spark.session import cached, shared_frame, shared_output, table
 
 EVAL_QUERIES: dict = {}
 EVAL_ORACLES: dict = {}
@@ -53,10 +53,6 @@ STOPWORDS = (
     "question section states stated that the their them these they this "
     "those under when with"
 ).split()
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def normalize_claim_token(tok):
@@ -147,7 +143,7 @@ def q_claims_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Claim decomposition over seeded answers covering every split
     trigger, verdict strip, hedges, section scrubbing, stemming, and
     stopword filtering."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     answer = (
         F.when(
@@ -276,7 +272,7 @@ def q_evidence_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE aggregation over the corpus index joins back per section."""
     from earcrawler_spark.operators.citation import normalize_section_full
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def sec(x):
@@ -472,7 +468,7 @@ def q_fr_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic (the reference accepts any retrieve_context callable)."""
     from pyspark.sql import Window as W
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def sec(x):
@@ -852,7 +848,7 @@ def q_groundedness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _groundedness_fixture_impl(spark: SparkSession, sf_dir: str):
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def sec(x):
@@ -1260,7 +1256,7 @@ def q_phase2_contract_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     th = load_phase2_gate_thresholds()
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def sec(x):
@@ -1884,7 +1880,7 @@ def q_citation_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference CI's first tripwire on retrieval drift."""
     from earcrawler_spark.operators.citation import normalize_section_full
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def sec(x):
@@ -2204,7 +2200,7 @@ def q_id_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_ear_section_id,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def num(x):
@@ -2644,7 +2640,7 @@ def q_answer_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_answer_text,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     gt = (
         F.when(d % 6 == 0, F.lit("Yes."))

@@ -12,13 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from earcrawler_spark.session import cached, shared_frame
+from earcrawler_spark.session import cached, shared_frame, table
 
 CHUNK_MAX_CHARS = 400
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # --- P16 fidelity: section_subsection chunking ------------------------------
@@ -60,7 +56,7 @@ def q_chunking_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
     the relational pipeline against an independent SQL implementation."""
     from earcrawler_spark.operators.chunking import chunk_sections
 
-    sections = _synth_sections(_t(spark, sf_dir, "documents"))
+    sections = _synth_sections(table(spark, sf_dir, "documents"))
     out = chunk_sections(sections, max_chars=CHUNK_MAX_CHARS)
     return out.select(
         "chunk_id",
@@ -296,7 +292,7 @@ def build_decided_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     ents = with_norm(
-        _synth_entities(_t(spark, sf_dir, "part")).repartition(par).localCheckpoint()
+        _synth_entities(table(spark, sf_dir, "part")).repartition(par).localCheckpoint()
     )
     pairs = blocking_pairs_v2(ents).localCheckpoint()
     left = ents.select(*[F.col(c).alias(f"{c}_a") for c in ents.columns])
@@ -550,7 +546,7 @@ def q_record_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_corpus_records,
     )
 
-    frags = _synth_fragments(_t(spark, sf_dir, "documents"))
+    frags = _synth_fragments(table(spark, sf_dir, "documents"))
     merged = merge_corpus_records(frags, on_conflict="flag")
     return merged.select(
         "record_id",
@@ -634,7 +630,7 @@ def q_iri_minting(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch exercised over inputs derived from documents."""
     from earcrawler_spark.functions import iri as I
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     s3 = (700 + d % 300).cast("string")
     section_in = (
@@ -793,7 +789,7 @@ def q_date_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P14 date normalization (corpus/metadata.py:24-31) over a
     deterministic mix of valid ISO dates/timestamps, shaped-but-invalid
     dashed strings, unshaped strings, empties and nulls."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     iso = F.date_format(F.col("o_orderdate"), "yyyy-MM-dd")
     raw = (
@@ -858,7 +854,7 @@ def q_text_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_iso_dates,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     decorated = F.concat(
         F.col("text"),
@@ -933,7 +929,7 @@ def q_entity_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace-normalized), PERSON (2+ capitalized words, skipped when
     the match itself starts like an ORG), sorted distinct union. Entity
     snippets are woven into the documents deterministically."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     person = F.array("text")  # placeholder to keep linters calm
     _ = person
@@ -1047,7 +1043,7 @@ def q_reconcile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[_avg_exact(f) for f in feats],
     )
     stats = (
-        _synth_entities(_t(spark, sf_dir, "part"))
+        _synth_entities(table(spark, sf_dir, "part"))
         .agg(F.count(F.lit(1)).alias("n_entities"))
         .crossJoin(F.broadcast(decided.agg(F.count(F.lit(1)).alias("evaluated"))))
         .select(
@@ -1135,7 +1131,7 @@ def q_provenance_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     new manifest with the changed flag (regenerate signal)."""
     from earcrawler_spark.operators.kg import provenance_upsert
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     subject = F.concat(F.lit("https://ear.example.org/resource/order/"),
                        (k % 2000).cast("string"))
@@ -1193,7 +1189,7 @@ def q_part_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically by (document_id, lower(title)) within each part."""
     from earcrawler_spark.operators.kg import anchor_index
 
-    part = _t(spark, sf_dir, "part")
+    part = table(spark, sf_dir, "part")
     k = F.col("p_partkey")
     anchors = part.select(
         F.concat(F.lit("PART-"), (k % 50).cast("string")).alias("part"),
@@ -1238,7 +1234,7 @@ def q_part_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     (case-insensitive, whitespace-tolerant) mined per doc into the
     sorted distinct digit list; docs without mentions are absent (the
     reference returns an empty set)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     seeded = F.concat(
         F.col("text"),
@@ -1306,9 +1302,9 @@ def q_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.operators.similarity import cosine
     from earcrawler_spark.queries import BM25_QUERY
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     bm25 = bm25_scores(docs, BM25_QUERY, k=50).select("doc_id", "rank")
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     q = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))

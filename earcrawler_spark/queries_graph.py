@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import table
+
 GRAPH_QUERIES: dict = {}
 GRAPH_ORACLES: dict = {}
 
@@ -49,7 +51,7 @@ _STRIDE = 7           # dst_j = (7 * src + 11 * j) % n,  j = 1..3
 
 
 def _nodes_edges(spark: SparkSession, sf_dir: str):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     nd = docs.agg(F.count(F.lit(1)).alias("n"))
     nodes = docs.select(F.col("doc_id").alias("node"))
     edges = (

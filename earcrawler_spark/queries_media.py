@@ -14,12 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import table
+
 MEDIA_QUERIES: dict = {}
 MEDIA_ORACLES: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _span_docs(docs: DataFrame) -> DataFrame:
@@ -89,7 +87,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-wide contract, FEATURE_SCHEMA)."""
     from earcrawler_spark.multimodal import extract_features, media_table_from_spans
 
-    docs = _span_docs(_t(spark, sf_dir, "documents"))
+    docs = _span_docs(table(spark, sf_dir, "documents"))
     media = media_table_from_spans(docs)
     feats = extract_features(media)
     meta = media.select("media_id", "width", "height", "sample_rate", "duration_ms")
@@ -176,7 +174,7 @@ def q_media_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The kind index is JVM-native via conv(hex, 16, 10) % 3; the DuckDB
     mirror uses 16^k ≡ 1 (mod 3): the hex value mod 3 equals the sum of
     its hex digits mod 3."""
-    docs = _span_docs(_t(spark, sf_dir, "documents"))
+    docs = _span_docs(table(spark, sf_dir, "documents"))
     spans = (
         docs.select(F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == "media")

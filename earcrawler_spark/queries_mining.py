@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.session import table
 
 MINING_QUERIES: dict = {}
 MINING_ORACLES: dict = {}
@@ -66,10 +67,6 @@ OVERLAP_SRC_CAP = 8  # boilerplate cap: grams in more sources are excluded
 # high_repeat     6 * max_token_count >= n_tok   (top token >= 1/6 of doc)
 # low_diversity   3 * distinct_tokens < n_tok    (type/token ratio < 1/3)
 VERDICT_MIN_TOK = 15
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _pos_grams(docs: DataFrame, n: int, extra: tuple[str, ...] = ()) -> DataFrame:
@@ -121,7 +118,7 @@ def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-back that would recompute the shingling), islands are per-doc
     windows (second shuffle), and the per-island + per-doc rollup is
     one aggregation chain.  No global sort anywhere."""
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     wins = _pos_grams(docs, SPAN_N)
     occ = F.count(F.lit(1)).over(W.partitionBy("gram"))
     dup_wins = (
@@ -236,7 +233,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW over the gram key (one shuffle, single lineage — a groupBy +
     join-back would recompute the shingling for each side) -> per-doc
     rollup."""
-    sh = _pos_grams(_docs(spark, sf_dir), NOVELTY_N).select(
+    sh = _pos_grams(table(spark, sf_dir, "documents"), NOVELTY_N).select(
         "doc_id", "gram"
     ).distinct()
     return (
@@ -288,11 +285,11 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact integer arithmetic on both engines; ranking ties break on
     the term string.  The DF table is a vocab-sized aggregate broadcast
     back over one corpus scan — the 100 TB keyword-extraction shape."""
-    tk = _docs(spark, sf_dir).select(
+    tk = table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("t")
     )
     tf = tk.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
-    n_docs = _docs(spark, sf_dir).agg(
+    n_docs = table(spark, sf_dir, "documents").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     df_tbl = (
@@ -374,7 +371,7 @@ def q_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     function of token counts — stable across engines, runs and cluster
     size.  One token scan; per-doc aggregates only."""
     tf = (
-        _docs(spark, sf_dir)
+        table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
         .groupBy("doc_id", "t")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -455,7 +452,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  The fit side is a per-lang top-64 aggregate (tiny); vocab
     / hapax / total come from the same single token scan."""
     tf = (
-        _docs(spark, sf_dir)
+        table(spark, sf_dir, "documents")
         .select("lang", F.explode(tokens(F.col("text"))).alias("t"))
         .groupBy("lang", "t")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -564,7 +561,7 @@ def q_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint it once: O(distinct source-grams), the frame a mixing
     # audit would persist anyway at scale.
     gs = (
-        _pos_grams(_docs(spark, sf_dir), SPAN_N, extra=("source",))
+        _pos_grams(table(spark, sf_dir, "documents"), SPAN_N, extra=("source",))
         .select("source", "gram")
         .distinct()
     ).localCheckpoint()

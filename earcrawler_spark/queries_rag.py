@@ -32,7 +32,7 @@ from earcrawler_spark.operators.citation import (
     extract_targets,
     targets_sql,
 )
-from earcrawler_spark.session import shared_frame, shared_output
+from earcrawler_spark.session import shared_frame, shared_output, table
 
 RAG_QUERIES: dict = {}
 RAG_ORACLES: dict = {}
@@ -65,10 +65,6 @@ RAG_TOP_K = 5
 # on every shipped sf (total >= 500).
 RAG_QUERY_K = 20
 RAG_CAND_K = 80
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _rag_metadata(docs: DataFrame) -> DataFrame:
@@ -209,7 +205,7 @@ def q_citation_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped; targets without metadata are dropped."""
     from earcrawler_spark.operators.ranking import bm25_scores
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     meta = _rag_metadata(docs)
     bm = bm25_scores(docs, BM25_TERMS, k=CITATION_K)
     results = bm.join(
@@ -268,11 +264,11 @@ def build_rag_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.operators.similarity import cosine
     from earcrawler_spark.operators.temporal import classify_temporal
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     meta = _rag_metadata(docs)
 
     bm25 = bm25_scores(docs, BM25_TERMS, k=RAG_CAND_K).select("doc_id", "rank")
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
@@ -620,7 +616,7 @@ def q_rag_context_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("section_id").alias("sec"))
         .distinct()
     )
-    edges = _section_edges(_t(spark, sf_dir, "documents"))
+    edges = _section_edges(table(spark, sf_dir, "documents"))
     h1 = (
         F.broadcast(sections)
         .join(edges, sections["sec"] == edges["src"])
@@ -757,7 +753,7 @@ def q_label_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty/unknown fallbacks, and the group-precedence quirks ('license
     exception tmp' wins over 'is permitted'; 'no license is required'
     labels license_required)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     answer = (
         F.when(d % 8 == 0, F.lit("The export IS PROHIBITED under part 744"))
@@ -818,7 +814,7 @@ def q_citation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff nothing to cite; empty ground truth → recall 1.0; F1 0.0 when
     p+r=0. Items exercise full match, partial overlap, pure-fp,
     no-prediction, and empty-gt branches."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def sec(x):
@@ -1025,7 +1021,7 @@ def q_temporal_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
     (refusal), invalid calendar dates (dropped), duplicate mentions
     (keep-first dedup), and explicit parameter dates with and without
     conflicts."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     m = (d % 9 + 1).cast("string")
     question = (
@@ -1111,7 +1107,7 @@ def q_knn_l2_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the cosine variant."""
     from earcrawler_spark.operators.ranking import topk_ranked
 
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
@@ -1180,7 +1176,7 @@ def q_bm25_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.operators.ranking import bm25_scores
 
     terms = [t for t in (normalize_bm25_token_py(w) for w in BM25_TOK_QUERY_RAW) if t]
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return bm25_scores(docs, terms, k=20, tokenizer=bm25_tokens)
 
 
@@ -1233,7 +1229,7 @@ def q_multihop_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the ctx seed side is <= top_k sections and broadcast;
     the edge table is touched once per hop; item scoring is one
     broadcast join per condition over the exploded expected rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def sec(x):
@@ -1417,7 +1413,7 @@ def q_kg_expansion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('EAR-999.99' seeded) or with empty text drop, like the reference."""
     from earcrawler_spark.operators.kg_expansion import build_expansion_index
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def sec(x):

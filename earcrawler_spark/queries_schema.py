@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions.iri import ENTITY_NS, RESOURCE_NS
+from earcrawler_spark.session import table
 
 SCHEMA_QUERIES: dict = {}
 SCHEMA_ORACLES: dict = {}
@@ -47,10 +48,6 @@ LEGACY_NS_LIST = [
     "https://example.org/entity#",
     "http://example.org/ear/",
 ]
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _sec(x):
@@ -285,7 +282,7 @@ def q_eval_schema_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """validate_datasets over seeded items: clean items produce no rows;
     every seeded defect (pattern, required, enum, registration,
     namespace) yields exactly its ValidationIssue rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     # the validator unions one check per rule family, each re-referencing
     # the items fixture — checkpoint it once (was 44 parquet scans); the
@@ -463,7 +460,7 @@ def q_index_binding(spark: SparkSession, sf_dir: str) -> DataFrame:
         verify_index_binding,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     digest = exact_corpus_digest(docs)
     truth = digest.select("digest", "doc_count")
     manifests = (
@@ -557,7 +554,7 @@ def q_llm_output_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     unanswerable refusals verdict 'ok'."""
     from earcrawler_spark.operators.output_schema import validate_llm_outputs
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     sec_d, sec_d1 = _sec(d), _sec(d + 1)
     body_d = _body(d)
@@ -910,7 +907,7 @@ def q_generation_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     disabled_reason).  Retrieval stats come from seeded per-item doc and
     context tables via plain aggregation, exactly how a policy gate
     would read a retrieval log table at scale."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     items = docs.select(
         d.alias("item_id"),
@@ -1033,7 +1030,7 @@ def q_snapshot_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's driver-side dict)."""
     from earcrawler_spark.sources import normalize_ear_section_id
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     sec_raw = (
         F.when(d % 23 == 0, F.lit(""))
@@ -1154,7 +1151,7 @@ def q_telemetry_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     key allowlist as a projection and the string-scrub chain over the
     free-text fields, on events seeded with emails, bearer tokens,
     absolute paths, query-string URLs, and GUIDs."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     error = (
         F.when(
@@ -1273,7 +1270,7 @@ def q_egress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrub, already reference-fuzzed)."""
     from earcrawler_spark.functions.text import pii_scrub
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     question = F.concat(
         F.lit("Does section "), _sec(d),
@@ -1367,7 +1364,7 @@ def q_hitl_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one projection pass over the event relation + two
     partial-agg-friendly aggregates; the reason histogram (<=4 rows)
     broadcast-crossJoins the 1-row stats."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     labels = ["export_controlled", "not_controlled", "unanswerable"]
@@ -1514,7 +1511,7 @@ def q_trace_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         section_quotes_kept_size,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
     def num(x):
@@ -1854,7 +1851,7 @@ def q_canary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     latency, and row-count against its budget, accumulating the
     reference's message parts in order ('; '-joined, 'within budget'
     when clean) and the pass/fail status."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     latency = ((d * 7) % 5000).cast("double") * 0.5
     rows_ = (d % 40).cast("int")
@@ -1946,7 +1943,7 @@ def q_upstream_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — and the snapshot reports sorted rows with the derived
     `degraded` flag (state outside {ok, no_results}, :39-41) and the
     3-dp-rounded cache age (:60)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     d = F.col("event_id")
     state = (
         F.when(d % 6 == 0, F.lit("ok"))

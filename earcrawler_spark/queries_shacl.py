@@ -13,19 +13,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import table
+
 SHACL_QUERIES: dict = {}
 SHACL_ORACLES: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _ear_triples(spark: SparkSession, sf_dir: str, seed_violations: bool = True) -> DataFrame:
     """ear:Entity triples from suppliers + ear:Part triples from parts
     (p_partkey < 900 so valid part IRIs stay inside the 3-digit
     namespace the shape demands)."""
-    sup = _t(spark, sf_dir, "supplier")
+    sup = table(spark, sf_dir, "supplier")
     k = F.col("s_suppkey")
     e_iri = F.when(
         (k % 31 == 3) & F.lit(seed_violations),
@@ -60,7 +58,7 @@ def _ear_triples(spark: SparkSession, sf_dir: str, seed_violations: bool = True)
     )
     ents = sup.select(F.explode(ent_spans).alias("tr")).select("tr.*")
 
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 900)
+    part = table(spark, sf_dir, "part").filter(F.col("p_partkey") < 900)
     j = F.col("p_partkey")
     notation = F.lpad(j.cast("string"), 3, "0")
     p_iri = F.when(

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.session import table
 
 SKETCH_QUERIES: dict = {}
 SKETCH_ORACLES: dict = {}
@@ -75,7 +76,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``overestimate`` with the collision ``inflation``.  The sketch
     build is ONE groupBy with a 256-row result; candidates join it
     broadcast."""
-    tk = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    tk = table(spark, sf_dir, "documents").select(
         F.explode(tokens(F.col("text"))).alias("t")
     )
     rows_i = F.explode(F.array(*[F.lit(i) for i in range(CMS_D)])).alias("row_i")
@@ -145,7 +146,7 @@ def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram guarantee: lower edge <= exact < lower edge + width.
     Bin width is the integer form (range div bins) + 1 so the max
     value always lands inside bin B-1 with no clamp."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 1_000_000, 0).cast("bigint").alias("vm"),

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import table
+
 # BPE-ish pre-tokenizer (GPT-2-style split classes, ASCII-safe so the same
 # pattern runs under Java regex and DuckDB's RE2): letter runs, digit runs,
 # single punctuation marks.
@@ -17,14 +19,10 @@ CHAR_NGRAM = 5
 BOTTOM_K = 8
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def q_token_stats_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish token counting per source next to whitespace counts — the
     two token budgets a training pipeline tracks."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     bpe = F.regexp_extract_all(F.lower("text"), F.lit(BPE_PATTERN), F.lit(0))
     ws = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
     per_doc = docs.select(
@@ -60,7 +58,7 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling (winnowing-style rolling-hash sketch): the 8 smallest
     sha256(5-gram) values identify a document robustly under small edits.
     Emitted as the concatenated sketch hash per doc."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     grams = F.transform(
         F.sequence(
             F.lit(1),
@@ -104,7 +102,7 @@ def trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.session import shared_frame
 
     def build():
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        emb = table(spark, sf_dir, "embeddings")
         return kmeans_train(emb, k=IVF_K, iters=IVF_ITERS)
 
     return shared_frame(spark, sf_dir, "ivf_centroids", build)
@@ -120,7 +118,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-verified."""
     from earcrawler_spark.operators.similarity import ivf_assign
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     assigned = ivf_assign(emb, trained_centroids(spark, sf_dir))
     return (
         assigned.groupBy("centroid_id")
@@ -142,7 +140,7 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth, same role ngram_jaccard_pairs plays for MinHash-LSH)."""
     from earcrawler_spark.operators.similarity import cosine
 
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     a, b = emb.alias("a"), emb.alias("b")
@@ -200,7 +198,7 @@ def q_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_assign,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     cents = trained_centroids(spark, sf_dir)
     assigned = ivf_assign(emb, cents).select("vec_id", "centroid_id")
     e = emb.select(
@@ -447,7 +445,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_train_grouped,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
     sub_all = emb.select(
         "vec_id",

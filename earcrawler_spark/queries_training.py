@@ -37,19 +37,12 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.session import table
 
 TRAINING_QUERIES: dict = {}
 TRAINING_ORACLES: dict = {}
 
 _TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # --- shard_packing ----------------------------------------------------------
@@ -63,7 +56,7 @@ def q_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard deterministic packing that needs no bin-packing state).
     Pure function of (lang, doc_id, n_tok): stable under re-runs and
     cluster size. Emits per-shard manifests."""
-    docs = _docs(spark, sf_dir).select(
+    docs = table(spark, sf_dir, "documents").select(
         "lang", "doc_id", F.size(tokens(F.col("text"))).alias("n_tok")
     )
     w = (
@@ -139,7 +132,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight denominator is a fixed-point micro-integer sum, so every
     emitted float is engine-stable."""
     per_src = (
-        _docs(spark, sf_dir)
+        table(spark, sf_dir, "documents")
         .select("source", F.size(tokens(F.col("text"))).alias("n_tok"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tok").alias("tokens"))
@@ -207,7 +200,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk_no) order anywhere in the corpus. Emits the per-doc duplicate
     load (the rows a span-dedup pass would rewrite). One shuffle on the
     chunk text — the exact-dedup key pattern at corpus scale."""
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     tk = docs.select(
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "t")
     ).withColumn("chunk_no", F.floor(F.col("pos") / F.lit(CHUNK_TOKENS)))
@@ -283,7 +276,7 @@ def q_unigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast dim (vocab aggregate); per-token log-probs are fixed-point
     micro-integers so the per-doc sum is exact on both engines. At 100 TB
     the vocab gets a min-count threshold + OOV floor — same plan shape."""
-    tk = _docs(spark, sf_dir).select(
+    tk = table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("t")
     )
     vocab = tk.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
@@ -366,14 +359,14 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.operators.similarity import dot, ivf_assign
     from earcrawler_spark.queries_tokens import trained_centroids
 
-    emb = _emb(spark, sf_dir)
+    emb = table(spark, sf_dir, "embeddings")
     cents = trained_centroids(spark, sf_dir)
     assigned = ivf_assign(emb, cents).select("vec_id", "centroid_id")
     # per-vector norm computed ONCE (sqrt(dot(v,v)) is deterministic per
     # vector, so dot/(a.nrm*b.nrm) is float-identical to the inline
     # cosine the oracle uses, at a third of the per-pair fold work)
     e = (
-        _emb(spark, sf_dir)
+        table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
         .join(assigned, "vec_id")
@@ -460,7 +453,7 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: reuses shard_packing's per-lang prefix-sum window and
     unigram_quality's broadcast vocab LM; the per-shard rollup is one
     small aggregate and the rank window is partitioned by lang."""
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     tk = docs.select(
         "lang", "doc_id", F.explode(tokens(F.col("text"))).alias("t")
     )
@@ -603,7 +596,7 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     each pair costs one fold."""
     from earcrawler_spark.operators.similarity import dot
 
-    e = _emb(spark, sf_dir).select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
     ev = e.filter(F.col("vec_id") % 37 == 0).select(
@@ -687,7 +680,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (ordered-fold, engine-exact) cosine so the hash is stable."""
     from earcrawler_spark.operators.similarity import cosine
 
-    e = _emb(spark, sf_dir).select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
     mean_vec = (
@@ -780,7 +773,7 @@ def _train_bpe(spark: SparkSession, sf_dir: str):
 
 
 def _bpe_train_pass(spark: SparkSession, sf_dir: str):
-    docs = _docs(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
     wc = (
         docs.select(F.explode(tokens(F.col("text"))).alias("w"))
         .filter(F.col("w").rlike("^[a-z0-9]+$"))
@@ -838,7 +831,7 @@ def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, words = _train_bpe(spark, sf_dir)
     word_sub = words.select("w", F.size(_bpe_syms()).alias("n_sub"))
     tk = (
-        _docs(spark, sf_dir)
+        table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(tokens(F.col("text"))).alias("w"))
         .filter(F.col("w").rlike("^[a-z0-9]+$"))
     )
@@ -961,7 +954,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     side streams once through explode -> join -> per-doc sum (one
     shuffle on doc_id).  Per-bucket log-probs are fixed-point
     micro-integers so the per-doc sum is exact on both engines."""
-    docs = _docs(spark, sf_dir).select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id",
         (F.col("doc_id") % 37 == 0).alias("is_target"),
         tokens(F.col("text")).alias("ts"),

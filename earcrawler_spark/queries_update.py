@@ -20,16 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import table
+
 UPDATE_QUERIES: dict = {}
 UPDATE_ORACLES: dict = {}
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def _parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 900)
+    p = table(spark, sf_dir, "part").filter(F.col("p_partkey") < 900)
     j = F.col("p_partkey")
     partno = F.lpad(j.cast("string"), 3, "0")
     title = F.concat(F.lit("Anchor "), F.col("p_name"))

@@ -44,16 +44,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions import text as TXT
+from earcrawler_spark.session import table
 
 WEBCUR_QUERIES: dict = {}
 WEBCUR_ORACLES: dict = {}
 
 _TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 _STOPWORDS_SQL = "[" + ",".join(f"'{s}'" for s in TXT.EN_STOPWORDS) + "]"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # --- gopher_rules -------------------------------------------------------
@@ -75,7 +72,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality rule ladder (public filter battery; reference
     gate precedent nsf_case_parser.py:56-64): per-doc token and line
     statistics, seven pass/fail rules, fixed-order failure codes."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(TXT.tokens(F.col("text"))).alias("tok"))
     st = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
@@ -197,7 +194,7 @@ def q_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_chars DESC, doc_id ASC tie-break), keep the top QUOTA_K, report
     the per-source kept/dropped budget — the diversity cap a crawler
     applies so a hot domain can't dominate the training corpus."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.col("n_chars").desc(), F.col("doc_id").asc()
     )
@@ -392,7 +389,7 @@ def q_span_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot path; at unbounded span counts this becomes one mapInPandas."""
     from earcrawler_spark.queries_media import _span_docs
 
-    docs = _span_docs(_t(spark, sf_dir, "documents"))
+    docs = _span_docs(table(spark, sf_dir, "documents"))
     spans = F.col("spans")
     seq = F.concat_ws(
         "#",

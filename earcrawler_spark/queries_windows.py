@@ -9,17 +9,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from earcrawler_spark.session import table
+
 SESSION_GAP_MIN = 30
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def q_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame window: per-user running event-value sum + 3-row moving
     average, ordered by time."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "event_id",
@@ -47,7 +45,7 @@ def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous event of the same user exceeds 30 min (lag + cumulative
     flag-sum — the standard relational sessionizer; Structured Streaming
     covers the same with session windows)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap_min = (
         F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -95,7 +93,7 @@ def q_sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-dimensional aggregation: ROLLUP over (returnflag, linestatus)
     — subtotals + grand total in one pass (no reference counterpart;
     §2.5 notes it as a Spark-native extension)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -125,7 +123,7 @@ ORDER BY returnflag, linestatus
 
 def q_event_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: per-user event counts spread over event-type columns."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     types = ["click", "view", "purchase", "signup", "error"]
     return (
         ev.groupBy("user_id")
@@ -152,7 +150,7 @@ ORDER BY user_id
 def q_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SO-family coverage: INTERSECT/EXCEPT over customer key sets —
     buyers of high-priority orders vs low-priority orders."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     hi = orders.filter(F.col("o_orderpriority") <= "2-HIGH").select("o_custkey").distinct()
     lo = (
         orders.filter(F.col("o_orderpriority") >= "4-NOT SPECIFIED")
@@ -202,7 +200,7 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     one user-keyed join — shuffles stay on the user key end to end;
     nothing is collected or windowed globally.  At 100 TB the step
     frames are one row per surviving user, shrinking monotonically."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     reached = []
     prev = None
     for step in FUNNEL_STEPS:
@@ -303,7 +301,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (user, week) activity set is a distinct on the same key; the
     matrix is a (cohort, offset) agg over that — three key-partitioned
     shuffles, no windows, no driver-side state."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     wk = (F.unix_timestamp("ts") / F.lit(604800)).cast("long")
     uw = ev.select("user_id", wk.alias("week")).distinct()
     cohort = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
@@ -377,7 +375,7 @@ def q_interval_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact."""
     from earcrawler_spark.operators.temporal import interval_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     # parquet ts is TIMESTAMP_NTZ; session tz is UTC (session.py:45, and
     # the driver-green sessionization query proves the same parity), so
     # the cast is an exact reinterpretation.
@@ -480,7 +478,7 @@ def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_purchase); the rank window partitions by cohort week — never
     global — and the percentile join probes it with a broadcast of
     (week, p, k) targets."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     tv = (
         ev.filter(F.col("event_type") == "view")

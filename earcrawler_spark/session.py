@@ -5,6 +5,9 @@ executor: AQE on (runtime skew-join splitting + partition coalescing),
 shuffle partitions sized to cores (not the 200 default), Arrow enabled for
 every pandas-UDF boundary, UTC session time zone for deterministic
 timestamp semantics.
+
+The module also holds the one reader of the query tables (``table``, with
+the declared ``TABLE_SCHEMAS``) and the shared-frame registry.
 """
 
 from __future__ import annotations
@@ -12,7 +15,8 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow.dataset as pads
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -55,6 +59,47 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# The ten tables every query reads from ``sf_dir``, as parquet reads them
+# back (every field nullable).  pyarrow writes naive timestamps, which
+# Spark reads as timestamp_ntz: declaring them ``timestamp`` would shift
+# their values by the session time zone.  tests/test_table_schemas.py pins
+# the fixtures and perfbench's generated tables to these.
+TABLE_SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+                "c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, p_size int, "
+            "p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double, "
+              "o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+                "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+                "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+              "value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` under ``sf_dir``, read with its declared schema, so
+    the read starts no footer schema-inference job.  A declared read would
+    fill a column the file lacks with NULLs, so the footer's column names
+    are checked on the driver first (pyarrow, no Spark job); extra columns
+    in the file are allowed.  An undeclared ``name`` raises KeyError."""
+    ddl = TABLE_SCHEMAS[name]
+    path = f"{sf_dir}/{name}.parquet"
+    declared = [field.split(" ", 1)[0] for field in ddl.split(", ")]
+    found = set(pads.dataset(path, format="parquet").schema.names)
+    missing = [c for c in declared if c not in found]
+    if missing:
+        raise ValueError(f"table {name!r} at {path} lacks declared columns {missing}")
+    return spark.read.schema(ddl).parquet(path)
 
 
 # Shared frames: one value per (applicationId, sf_dir, name), built by the

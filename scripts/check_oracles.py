@@ -1,5 +1,9 @@
 """Run every registered query against its DuckDB oracle at the given sf dir.
 
+Each row runs under its own Spark job group; the line of a row prints the
+jobs its construction started and its total jobs (construction plus the
+compare), and the last line the sweep totals.
+
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 """
 
@@ -22,20 +26,27 @@ def main() -> int:
     spark = get_spark("check_oracles")
     con = duckdb_conn(sf_dir)
     print(f"duckdb {duckdb.__version__}; strict compare (raw repr + type)")
-    failed = []
+    sc, failed = spark.sparkContext, []
+    build_jobs = total_jobs = 0
     for name in names:
+        sc.setJobGroup(name, name)
+        n_build = 0
         try:
             df = QUERIES[name](spark, sf_dir)
-            if name not in ORACLES:
-                print(f"{name:32s} rows-only: {df.count()} rows")
-                continue
-            ok, msg = compare(df, con, ORACLES[name])
+            n_build = len(sc.statusTracker().getJobIdsForGroup(name))
+            if name in ORACLES:
+                ok, msg = compare(df, con, ORACLES[name])
+            else:
+                ok, msg = True, f"rows-only: {df.count()} rows"
         except Exception as e:  # noqa: BLE001
             ok, msg = False, f"EXC {type(e).__name__}: {str(e)[:300]}"
-        print(f"{name:32s} {'PASS' if ok else 'FAIL'} {msg}")
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+        build_jobs, total_jobs = build_jobs + n_build, total_jobs + n_jobs
+        print(f"{name:32s} {'PASS' if ok else 'FAIL'} jobs {n_build}/{n_jobs} {msg}")
         if not ok:
             failed.append(name)
     print(f"\n{len(names) - len(failed)}/{len(names)} pass")
+    print(f"jobs: {build_jobs} in construction, {total_jobs} in all, over {len(names)} rows")
     return 1 if failed else 0
 
 
