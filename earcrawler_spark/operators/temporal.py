@@ -22,7 +22,7 @@ broadcast, not a collect.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 STATUSES = ("applicable", "future", "expired", "superseded", "unknown")

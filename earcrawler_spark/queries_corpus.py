@@ -11,7 +11,7 @@ lacks soundex).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions.text import tokens

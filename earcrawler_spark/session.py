@@ -18,6 +18,8 @@ import os
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "earcrawler_spark",
@@ -53,9 +55,17 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    extra = dict(extra_conf or {})
+    if master.startswith("local"):
+        # Python workers import the installed pyspark, not Spark's zip
+        # (see pyworker.py), and find this package from any working
+        # directory.  A cluster job ships the package with --py-files,
+        # which workers add only per task, so it keeps Spark's daemon.
+        extra.setdefault("spark.python.daemon.module", "earcrawler_spark.pyworker")
+        extra["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            filter(None, [_PACKAGE_PARENT, extra.get("spark.executorEnv.PYTHONPATH")]))
+    for k, v in extra.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

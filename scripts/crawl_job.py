@@ -8,6 +8,15 @@ Usage:
 
 On a cluster, swap --master and point --state-dir at shared storage; the
 engine code ships in the zip (no cluster-side install).
+
+The session here is built directly, not with ``session.get_spark``, so
+the workers keep Spark's default daemon (``pyspark.daemon``).  The
+package arrives by ``--py-files``, and workers add that zip to their path
+per task, after the daemon has started; a daemon module inside the
+package (``earcrawler_spark.pyworker``) could not be imported when the
+daemon starts.  So these workers import pyspark from Spark's zip and pay
+its per-task zip-directory re-read (see README, "Sessions and Python
+workers").
 """
 
 from __future__ import annotations

@@ -1,0 +1,54 @@
+"""Every module-level import in the package is referenced in its module."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+PKG_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "earcrawler_spark")
+
+
+def _unused_imports(source: str, filename: str) -> list[str]:
+    """``"<line> <name>"`` for each name bound by a module-level import that
+    no ``Name`` node of the module (nor its ``__all__``) refers to."""
+    tree = ast.parse(source, filename)
+    bound: dict[str, int] = {}
+    for node in tree.body:
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                bound[a.asname or a.name.split(".")[0]] = node.lineno
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            for a in node.names:
+                if a.name != "*":
+                    bound[a.asname or a.name] = node.lineno
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets):
+            used |= {c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant)}
+    return [f"{line} {name}" for name, line in sorted(bound.items(), key=lambda kv: kv[1])
+            if name not in used]
+
+
+def test_guard_flags_unused_import():
+    planted = (
+        "from __future__ import annotations\n"
+        "import os.path\n"
+        "from pyspark.sql import DataFrame, Window as W\n"
+        "from x import *\n"
+        "from y import exported\n"
+        "__all__ = ['exported']\n"
+        "def f(df: DataFrame):\n"
+        "    return os.sep\n"
+    )
+    assert _unused_imports(planted, "x.py") == ["3 W"]
+
+
+def test_no_unused_imports_in_package():
+    hits = []
+    for path in sorted(glob.glob(os.path.join(PKG_DIR, "**", "*.py"), recursive=True)):
+        with open(path, encoding="utf-8") as f:
+            hits += [f"{os.path.relpath(path, PKG_DIR)}:{h}" for h in _unused_imports(f.read(), path)]
+    assert hits == []
