@@ -33,6 +33,9 @@ from pyspark.sql import types as T
 
 HEX64 = 16  # hex chars per 64-bit half
 FILTER_SCHEMA = "shard int, bits binary"
+# Fingerprints a new cuckoo shard is sized for; persisted with the other
+# filter parameters in the crawl manifest's filter_config.
+CUCKOO_CAPACITY_PER_SHARD = 1 << 17
 
 
 def _decode(hash_hex, n_hex: int, dtype: str) -> np.ndarray:
@@ -209,7 +212,7 @@ def build_filter_broadcast(
     n_shards: int,
     kind: str = "bloom",
     n_bits: int = 1 << 20,
-    cuckoo_capacity: int = 1 << 17,
+    cuckoo_capacity: int = CUCKOO_CAPACITY_PER_SHARD,
 ) -> dict[int, bytes]:
     """Extend the shard map ``previous`` with new hashes: each task loads
     its shard's previous bytes from a broadcast and extends them; the
@@ -292,7 +295,7 @@ def extend_filter_join(
     n_shards: int,
     kind: str = "bloom",
     n_bits: int = 1 << 20,
-    cuckoo_capacity: int = 1 << 17,
+    cuckoo_capacity: int = CUCKOO_CAPACITY_PER_SHARD,
 ):
     """Filter extension WITHOUT broadcasting the previous shards: new
     hashes cogroup with their shard's bits. → new (shard, bits)."""

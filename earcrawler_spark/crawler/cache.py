@@ -42,11 +42,12 @@ CACHE_SCHEMA = (
 
 def split_by_cache(
     dequeued: DataFrame, cache: DataFrame | None, it: int, ttl_iters: int
-) -> tuple[DataFrame, DataFrame]:
-    """→ (to_fetch, fresh_hits).
+) -> tuple[DataFrame, DataFrame | None]:
+    """→ (to_fetch, fresh_hits); fresh_hits is None without a cache.
 
     fresh_hits (age <= ttl_iters) bypass the fetch stage and carry the
-    cached parse (cached_content_hash/cached_spans/cached_links).
+    cached parse under the parse's own column names (content_hash, spans,
+    links), so they replay exactly like revalidated 304s.
     to_fetch carries an ``etag`` column — the stored validator for stale
     entries (null for cache misses) — which the fetch stage sends as
     If-None-Match.
@@ -57,14 +58,14 @@ def split_by_cache(
         "url_hash",
         F.col("etag").alias("_etag"),
         ((F.lit(it) - F.col("fetched_iter")) <= ttl_iters).alias("_fresh"),
-        F.col("content_hash").alias("cached_content_hash"),
-        F.col("spans").alias("cached_spans"),
-        F.col("links").alias("cached_links"),
+        "content_hash",
+        "spans",
+        "links",
     )
     joined = dequeued.join(entries, "url_hash", "left")
     to_fetch = (
         joined.filter(F.col("_fresh").isNull() | ~F.col("_fresh"))
-        .drop("_fresh", "cached_content_hash", "cached_spans", "cached_links")
+        .drop("_fresh", "content_hash", "spans", "links")
         .withColumnRenamed("_etag", "etag")
     )
     hits = joined.filter(F.col("_fresh")).drop("_etag", "_fresh")

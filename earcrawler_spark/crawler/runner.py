@@ -7,11 +7,14 @@ Each wave:
      rank by (priority DESC, seq ASC) inside each host (the reference's
      per-document politeness loop, ear_crawler.py:133-135,194-195,
      re-expressed as a relational budget so it is deterministic)
-  3. skew salting — hosts whose dequeue exceeds ``skew_threshold`` get
-     their rows spread over ceil(n/threshold) salted sub-keys before the
+  3. skew salting — hosts whose dequeue exceeds ``SKEW_THRESHOLD`` get
+     their rows spread over ceil(n/SKEW_THRESHOLD) salted sub-keys before the
      ``repartition(part_key)`` that feeds the fetch stage (north rule:
      bis.doc.gov / federalregister.gov dominate by design)
-  4. fetch + parse (mapInPandas; fetch.py) → interleaved text/media spans
+  4. fetch + parse (mapInPandas; fetch.py) → interleaved text/media spans;
+     with the fetch cache on (cache.py), fresh hits and revalidated 304s
+     replay their cached parse as one ``replayed`` frame, joining the
+     visits and the parsed pages once
   5. content dedup — wave-internal argmin + anti-join vs content_seen
      (reference D1, ear_crawler.py:176-177)
   6. link expansion — canonicalize (pandas UDF), wave-internal argmin per
@@ -32,7 +35,9 @@ live in bloom.py; CrawlConfig.shard_local() picks its broadcast or
 shard-local kernels by filter size. While broadcast, the crawler keeps
 the shard map it last wrote and serves the next wave's probe from it
 while that snapshot is still the committed one; a resume, a fresh
-Crawler or expire_seen reads the filter from disk instead.
+Crawler or expire_seen reads the filter from disk instead. Compaction
+and seen-set expiry rewrite committed snapshots through one protocol,
+CrawlState.rewrite; this module touches no CrawlState private.
 
 Scale notes (10^10 URLs):
 - frontier/seen are hash-bucketed by url_hash shard → the anti-join is
@@ -58,6 +63,7 @@ from pyspark.sql import functions as F
 
 from earcrawler_spark.crawler import synth
 from earcrawler_spark.crawler.bloom import (
+    CUCKOO_CAPACITY_PER_SHARD,
     FILTER_SCHEMA,
     build_filter_broadcast,
     delete_filter_join,
@@ -76,6 +82,7 @@ from earcrawler_spark.crawler.fetch import fetch_and_parse, synthetic_fetch_one
 from earcrawler_spark.crawler.robots import allowed_filter, fetch_robots
 from earcrawler_spark.crawler.state import (
     FRONTIER_SCHEMA,
+    WRITE_PARTITIONS,
     CrawlState,
     arrow_frame,
 )
@@ -89,16 +96,26 @@ def visit_order_cols():
     return [F.col("iter"), F.col("priority").desc(), F.col("host"), F.col("seq")]
 
 
+# Hosts whose dequeue exceeds this many URLs are salted over
+# ceil(n / SKEW_THRESHOLD) fetch-partition keys.
+SKEW_THRESHOLD = 8
+# Crawl delay, in seconds, of a host whose robots.txt gives none.
+DEFAULT_CRAWL_DELAY = 1.0
+
+
 @dataclass
 class CrawlConfig:
     wave_seconds: float = 20.0
+    # seen-filter shard count and bloom size: persisted at init_seeds and
+    # checked on resume (see Crawler._filter_config)
     n_shards: int = 16
     bloom_bits_per_shard: int = 1 << 20
-    skew_threshold: int = 8
+    # fetch-stage partitions; None = the session's default parallelism
     n_partitions: int | None = None
     max_iters: int = 5
+    # wall-clock politeness: sleep crawl_delay between a host's fetches
+    # (one partition per host) on top of the per-wave budget
     politeness_sleep: bool = False
-    default_crawl_delay: float = 1.0
     # S8 request budget: global deterministic cap on URLs fetched per wave
     # (rank over (priority DESC, host, seq); overflow stays in the frontier)
     max_urls_per_wave: int | None = None
@@ -108,26 +125,17 @@ class CrawlConfig:
     # size-capped LRU eviction after each merge (reference
     # http_cache.py:165-197, max_entries=4096). None = unbounded.
     cache_max_entries: int | None = 4096
-    # optional hard TTL eviction (drops the validator too); distinct
-    # from cache_ttl_iters, which only gates the fresh-hit fast path.
-    cache_evict_ttl_iters: int | None = None
     # S9 retry policy inside the fetch UDF
     max_attempts: int = 3
     backoff_base: float = 0.0
     # approximate seen-set filter family (north rule: bloom/cuckoo).
     # 'cuckoo' supports deletion (seen-set retention / sliding windows).
     seen_filter: str = "bloom"
-    cuckoo_capacity_per_shard: int = 1 << 17
-    # checkpoint writes are coalesced to this many files per table per
-    # iteration: at sandbox scale 96-way writes mean ~300 tiny-file commit
-    # renames per wave, which dominates wall time. On a cluster with a real
-    # object store you'd raise this to the write parallelism you want.
-    write_partitions: int = 8
 
     def estimated_filter_bytes(self) -> int:
         if self.seen_filter == "cuckoo":
             # n_buckets ~= cap/(4*0.8), 4 uint16 slots per bucket
-            per_shard = int(self.cuckoo_capacity_per_shard * 2 / 0.8)
+            per_shard = int(CUCKOO_CAPACITY_PER_SHARD * 2 / 0.8)
         else:
             per_shard = self.bloom_bits_per_shard // 8
         return self.n_shards * per_shard
@@ -179,7 +187,7 @@ class Crawler:
             "n_shards": self.cfg.n_shards,
             "seen_filter": self.cfg.seen_filter,
             "bloom_bits_per_shard": self.cfg.bloom_bits_per_shard,
-            "cuckoo_capacity_per_shard": self.cfg.cuckoo_capacity_per_shard,
+            "cuckoo_capacity_per_shard": CUCKOO_CAPACITY_PER_SHARD,
         }
 
     # ------------------------------------------------------------------
@@ -259,14 +267,12 @@ class Crawler:
         """Write ``previous`` (as _committed_filter gave it) extended with
         new hashes as the iteration's filter snapshot."""
         cfg = self.cfg
-        params = (cfg.n_shards, cfg.seen_filter, cfg.bloom_bits_per_shard,
-                  cfg.cuckoo_capacity_per_shard)
+        params = (cfg.n_shards, cfg.seen_filter, cfg.bloom_bits_per_shard)
         if cfg.shard_local():
             self.state.write("bloom", iteration, extend_filter_join(hashes_df, previous, *params))
             return
         merged = build_filter_broadcast(hashes_df, previous, *params)
-        self.state.write("bloom", iteration, self._filter_frame(merged))
-        path = self.state._iter_dir("bloom", iteration)
+        path = self.state.write("bloom", iteration, self._filter_frame(merged))
         self._kept_filter = (self._snapshot_key(path), merged)
 
     def _load_bloom(self, upto_iter: int) -> dict[int, bytes]:
@@ -304,7 +310,6 @@ class Crawler:
     # ------------------------------------------------------------------
     def _wave(self, it: int, frontier: DataFrame, manifest: dict) -> None:
         cfg, spark = self.cfg, self.spark
-        _timing = os.environ.get("EARCRAWLER_TIMING")
         _t0 = time.perf_counter()
         _stage_secs: dict[str, float] = {}
 
@@ -312,8 +317,6 @@ class Crawler:
             nonlocal _t0
             now = time.perf_counter()
             _stage_secs[phase] = round(now - _t0, 3)
-            if _timing:
-                print(f"[wave {it}] {phase}: {now - _t0:.2f}s", flush=True)
             _t0 = now
         prev_chain = manifest["chain_hash"]
         max_seq = manifest["max_seq"]
@@ -346,7 +349,7 @@ class Crawler:
         n_denied = denied.count()
         budget = F.greatest(
             F.lit(1),
-            F.floor(F.lit(cfg.wave_seconds) / F.coalesce("crawl_delay", F.lit(cfg.default_crawl_delay))),
+            F.floor(F.lit(cfg.wave_seconds) / F.coalesce("crawl_delay", F.lit(DEFAULT_CRAWL_DELAY))),
         ).cast("int")
         w_host = W.partitionBy("host").orderBy(F.col("priority").desc(), F.col("seq"))
         ranked = allowed.withColumn("_rk", F.row_number().over(w_host)).withColumn(
@@ -374,12 +377,10 @@ class Crawler:
         # the cached parse; stale entries carry their stored etag into the
         # fetch stage (If-None-Match) and may come back 304.
         cache = None
-        cache_hits = None
+        fresh_hits = None
         if cfg.cache_ttl_iters is not None:
             cache = self.state.read_latest("fetch_cache", it - 1)
-            selected, cache_hits = split_by_cache(selected, cache, it, cfg.cache_ttl_iters)
-            if cache_hits is not None:
-                cache_hits = cache_hits.cache()
+            selected, fresh_hits = split_by_cache(selected, cache, it, cfg.cache_ttl_iters)
 
         _mark("dequeue")
         # 3. partitioning for the fetch stage
@@ -397,7 +398,7 @@ class Crawler:
         else:
             # deterministic (budget-based) politeness: salt hot hosts so the
             # dequeue skew (bis.doc.gov / federalregister.gov) spreads over
-            # ceil(n/threshold) sub-keys. Counts stay distributed — the
+            # ceil(n/SKEW_THRESHOLD) sub-keys. Counts stay distributed — the
             # per-host salt table broadcasts without a driver collect.
             salt_df = (
                 selected.groupBy("host")
@@ -406,7 +407,7 @@ class Crawler:
                     "host",
                     F.greatest(
                         F.lit(1),
-                        F.ceil(F.col("cnt") / cfg.skew_threshold),
+                        F.ceil(F.col("cnt") / SKEW_THRESHOLD),
                     ).cast("int").alias("salt"),
                 )
             )
@@ -425,80 +426,53 @@ class Crawler:
         n_fetched = fetched.count()
 
         _mark("fetch+parse")
-        # 304s from conditional revalidation replay the cached parse and
-        # slide their TTL window (merge_cache refreshes fetched_iter)
-        revalidated = None
-        n_revalidated = 0
-        if cache is not None:
-            revalidated = (
-                fetched.filter(F.col("status") == 304)
-                .drop("content_hash", "spans", "links")
-                .join(
-                    cache.select("url_hash", "content_hash", "spans", "links"),
-                    "url_hash",
-                )
-                .cache()
-            )
-            n_revalidated = revalidated.count()
-
+        # Cached pages REPLAY their cached parse: fresh hits, and 304s from
+        # conditional revalidation (which also slide their TTL window:
+        # merge_cache refreshes fetched_iter). Both are 304 visits, and both
+        # keep contributing documents (deduped by content_seen) and outlinks.
+        parse_cols = ["url", "url_hash", "host", "priority", "seq",
+                      "content_hash", "spans", "links"]
         visits = fetched.filter(F.col("status") != 304).select(
             F.lit(it).alias("iter"), "url", "url_hash", "host",
             "priority", "seq", "status", "content_hash",
         )
-        if revalidated is not None:
-            visits = visits.unionByName(
-                revalidated.select(
-                    F.lit(it).alias("iter"), "url", "url_hash", "host",
-                    "priority", "seq", F.lit(304).alias("status"), "content_hash",
-                )
+        ok = fetched.filter(F.col("status") == 200).select(*parse_cols)
+        n_fresh = n_revalidated = 0
+        replayed = None
+        if fresh_hits is not None:
+            revalidated = (
+                fetched.filter(F.col("status") == 304)
+                .drop("content_hash", "spans", "links")
+                .join(cache.select("url_hash", "content_hash", "spans", "links"), "url_hash")
             )
-        n_cache_hits = 0
-        if cache_hits is not None:
-            n_cache_hits = cache_hits.count()
-            visits = visits.unionByName(
-                cache_hits.select(
-                    F.lit(it).alias("iter"), "url", "url_hash", "host",
-                    "priority", "seq", F.lit(304).alias("status"),
-                    F.col("cached_content_hash").alias("content_hash"),
-                )
+            replayed = (
+                revalidated.select(*parse_cols, F.lit(False).alias("fresh"))
+                .unionByName(fresh_hits.select(*parse_cols, F.lit(True).alias("fresh")))
+                .cache()
             )
+            n_fresh, n_revalidated = replayed.agg(
+                F.count_if("fresh"), F.count_if(~F.col("fresh"))
+            ).first()
+            visits = visits.unionByName(replayed.select(
+                F.lit(it).alias("iter"), "url", "url_hash", "host",
+                "priority", "seq", F.lit(304).alias("status"), "content_hash",
+            ))
+            ok = ok.unionByName(replayed.select(*parse_cols))
         if cfg.cache_ttl_iters is not None:
             merged_cache = merge_cache(
                 cache,
                 fetched.select("url_hash", "content_hash", "status", "spans", "links"),
                 it,
             )
-            if cfg.cache_max_entries is not None or cfg.cache_evict_ttl_iters is not None:
-                merged_cache = evict_cache(
-                    merged_cache,
-                    it,
-                    max_entries=cfg.cache_max_entries or 0,
-                    evict_ttl_iters=cfg.cache_evict_ttl_iters,
-                )
+            if cfg.cache_max_entries is not None:
+                merged_cache = evict_cache(merged_cache, it, max_entries=cfg.cache_max_entries)
             self.state.write(
-                "fetch_cache", it, merged_cache, n_files=cfg.write_partitions,
+                "fetch_cache", it, merged_cache, n_files=WRITE_PARTITIONS,
             )
-        self.state.write("visits", it, visits, n_files=cfg.write_partitions)
+        self.state.write("visits", it, visits, n_files=WRITE_PARTITIONS)
 
         _mark("visits_write")
-        # 5. content dedup (wave-internal argmin by seq, then anti-join).
-        # Fresh hits and revalidated 304s REPLAY their cached parse here
-        # and in link expansion, so cached pages keep contributing
-        # documents (deduped by content_seen) and outlinks.
-        parse_cols = ["url", "url_hash", "host", "priority", "seq",
-                      "content_hash", "spans", "links"]
-        ok = fetched.filter(F.col("status") == 200).select(*parse_cols)
-        if revalidated is not None:
-            ok = ok.unionByName(revalidated.select(*parse_cols))
-        if cache_hits is not None:
-            ok = ok.unionByName(
-                cache_hits.select(
-                    "url", "url_hash", "host", "priority", "seq",
-                    F.col("cached_content_hash").alias("content_hash"),
-                    F.col("cached_spans").alias("spans"),
-                    F.col("cached_links").alias("links"),
-                )
-            )
+        # 5. content dedup (wave-internal argmin by seq, then anti-join)
         w_content = W.partitionBy("content_hash").orderBy("seq")
         wave_docs = ok.withColumn("_rn", F.row_number().over(w_content)).filter(
             F.col("_rn") == 1
@@ -512,11 +486,11 @@ class Crawler:
             F.col("url").alias("doc_id"), "url_hash", "content_hash", "spans",
             F.lit(it).alias("iter"),
         ).cache()  # consumed 3x: documents write, content_seen write, totals
-        self.state.write("documents", it, documents, n_files=cfg.write_partitions)
+        self.state.write("documents", it, documents, n_files=WRITE_PARTITIONS)
         self.state.write(
             "content_seen", it,
             documents.select("content_hash").distinct(),
-            n_files=cfg.write_partitions,
+            n_files=WRITE_PARTITIONS,
         )
 
         _mark("content_dedup")
@@ -549,14 +523,8 @@ class Crawler:
         previous = self._committed_filter(it - 1)
         probe = probe_maybe_seen_join if cfg.shard_local() else probe_maybe_seen_broadcast
         candidates = probe(candidates, previous, cfg.n_shards, cfg.seen_filter).cache()
-        # materialize the cached probe frame once for its two consumers;
-        # the stage key stays constant so manifest stage_secs keys are
-        # stable across waves — the (data-dependent) candidate count is
-        # only computed and reported when timing is on.
-        if _timing:
-            print(f"[wave {it}] probe n_cand={candidates.count()}", flush=True)
-        else:
-            candidates.count()
+        # materialize the cached probe frame once for its two consumers
+        candidates.count()
         _mark("probe_cache")
         definitely_new = candidates.filter(~F.col("_maybe")).drop("_maybe")
         seen = self.state.read_all("seen", it - 1)
@@ -585,7 +553,7 @@ class Crawler:
         self.state.write(
             "seen", it,
             new_urls.select("url_hash", "url", F.lit(it).alias("iter")),
-            n_files=cfg.write_partitions,
+            n_files=WRITE_PARTITIONS,
         )
         _mark("seen_write")
         self._write_filter(it, new_urls.select("url_hash"), previous)
@@ -593,7 +561,7 @@ class Crawler:
         frontier_next = remainder.select(
             "url", "url_hash", "host", "priority", "seq"
         ).unionByName(new_urls)
-        self.state.write("frontier", it, frontier_next, n_files=cfg.write_partitions)
+        self.state.write("frontier", it, frontier_next, n_files=WRITE_PARTITIONS)
         _mark("frontier_write")
 
         part_metrics = (
@@ -617,7 +585,7 @@ class Crawler:
             "new_docs": documents.count(),
         }
         if cfg.cache_ttl_iters is not None:
-            totals["cache_hits"] = n_cache_hits
+            totals["cache_hits"] = n_fresh
             totals["revalidated"] = n_revalidated
         chain = self._chain(prev_chain, totals)
         new_max_seq = max_seq + n_new
@@ -626,10 +594,8 @@ class Crawler:
         candidates.unpersist()
         new_urls.unpersist()
         ranked.unpersist()
-        if cache_hits is not None:
-            cache_hits.unpersist()
-        if revalidated is not None:
-            revalidated.unpersist()
+        if replayed is not None:
+            replayed.unpersist()
         # stage timings ride the manifest OUTSIDE the chained totals —
         # wall-clock is host-dependent and must not perturb the
         # deterministic lineage chain hash.
@@ -663,20 +629,15 @@ class Crawler:
         bytes minus the expired fingerprints (cuckoo delete_many — no full
         rebuild). Both run shard-local whatever the filter size: expiry
         is rare, and it never routes shard bytes through the driver.
-        Commit point is the manifest update, same recipe as compaction."""
-        m = self.state.manifest()
-        upto = m["completed_iter"]
+        The compacted seen base and the filter snapshot commit together
+        through CrawlState.rewrite, the one rewrite protocol compaction
+        uses too."""
+        upto = self.state.manifest()["completed_iter"]
         seen = self.state.read_all("seen", upto)
         keep = seen.filter(F.col("iter") >= older_than_iter).cache()
         expired = seen.filter(F.col("iter") < older_than_iter)
         n_keep, n_expired = keep.count(), expired.count()
 
-        # Stage 1 — write the rebuilt filter and the compacted seen base to
-        # FRESH generation directories. Nothing committed yet touches the
-        # snapshots read_all / read_latest are sourcing, so a crash anywhere
-        # in this stage leaves the previous state fully valid (the old
-        # in-place overwrite could delete the only filter snapshot and the
-        # very base dir `keep` was being read from).
         cfg = self.cfg
         if cfg.seen_filter == "cuckoo":
             # expired fingerprints leave their own shard's row; untouched
@@ -689,42 +650,23 @@ class Crawler:
             # (extend over an empty shard table)
             rebuilt = extend_filter_join(
                 keep.select("url_hash"), self._filter_frame({}), cfg.n_shards,
-                cfg.seen_filter, cfg.bloom_bits_per_shard, cfg.cuckoo_capacity_per_shard,
+                cfg.seen_filter, cfg.bloom_bits_per_shard,
             )
-        bloom_gen = self.state.fresh_gen("bloom", "iter", upto)
-        rebuilt.write.mode("overwrite").parquet(self.state._iter_dir("bloom", upto, bloom_gen))
-        seen_gen = self.state.fresh_gen("seen", "base", upto)
-        keep.coalesce(self.cfg.write_partitions).write.mode("overwrite").parquet(
-            self.state._base_dir("seen", upto, seen_gen)
-        )
-
-        # Stage 2 — the manifest rename is the single visibility switch.
-        # The kept shard map describes the superseded filter: drop it.
+        # the kept shard map describes the superseded filter: drop it
         self._kept_filter = None
-        m.setdefault("compacted", {})["seen"] = upto
-        gens = m.setdefault("gens", {})
-        gens[f"bloom:iter:{upto}"] = bloom_gen
-        gens[f"seen:base:{upto}"] = seen_gen
-        self.state._write_manifest(m)
-
-        # Stage 3 — only now delete superseded directories.
-        import shutil
-
-        for i in range(upto + 1):
-            shutil.rmtree(self.state._iter_dir("seen", i), ignore_errors=True)
-        for g in range(bloom_gen):
-            shutil.rmtree(self.state._iter_dir("bloom", upto, g), ignore_errors=True)
-        for g in range(seen_gen):
-            shutil.rmtree(self.state._base_dir("seen", upto, g), ignore_errors=True)
+        self.state.rewrite(upto, {"bloom": rebuilt, "seen": keep.coalesce(WRITE_PARTITIONS)})
         keep.unpersist()
         return {"kept": n_keep, "expired": n_expired}
 
 
-def main() -> None:
+def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> None:
     """CLI: run a fixture-backed synthetic crawl.
 
     python -m earcrawler_spark.crawler.runner --state-dir /tmp/crawl \
         --max-iters 3 [--wave-seconds 20] [--partitions 8] [--resume]
+
+    ``spark`` is the session to crawl on; without one, ``get_spark`` builds
+    it (scripts/crawl_job.py passes its spark-submit session).
     """
     import argparse
 
@@ -737,9 +679,9 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--resume", action="store_true",
                     help="continue from the state dir's manifest instead of seeding")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
-    spark = get_spark("crawler")
+    spark = spark or get_spark("crawler")
     c = Crawler(
         spark, args.state_dir,
         CrawlConfig(wave_seconds=args.wave_seconds, max_iters=args.max_iters,

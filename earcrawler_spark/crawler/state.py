@@ -23,18 +23,22 @@ Crash safety: an iteration's directories are written first; the manifest
 (update via write-temp + atomic rename) is the commit point. A run killed
 mid-iteration resumes from the last committed manifest and recomputes the
 partial iteration from identical inputs — determinism makes the redo
-byte-equivalent (proven by tests/test_crawler_resume.py).
+byte-equivalent (tests/test_crawler_engine.py::test_resume_reconverges).
+Rewrites of committed state (compaction's ``base=NNNNN`` snapshots,
+seen-set expiry) all go through ``CrawlState.rewrite``.
 
 On a production deployment every append-only table here is an Iceberg
 table (snapshot = manifest) and `seen` is MERGE'd; the store keeps that
-swap behind ``read_all`` / ``write_delta`` so the engine code is
+swap behind ``read_all``, ``write`` and ``rewrite`` so the engine code is
 layout-agnostic.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import tempfile
 from collections.abc import Mapping, Sequence
 
@@ -49,6 +53,12 @@ from earcrawler_spark.crawler.spans import SPANS_SCHEMA
 
 APPEND_TABLES = ("seen", "content_seen", "documents", "visits", "metrics")
 FULL_TABLES = ("frontier", "bloom", "robots", "fetch_cache")
+
+# Crawler writes are coalesced to this many files per table per
+# iteration: at sandbox scale 96-way writes mean ~300 tiny-file commit
+# renames per wave, which dominates wall time. On a cluster with a real
+# object store you'd raise this to the write parallelism you want.
+WRITE_PARTITIONS = 8
 
 FRONTIER_SCHEMA = "url string, url_hash string, host string, priority int, seq bigint"
 # What each table's writer produces, as parquet reads it back (every field
@@ -115,32 +125,39 @@ class CrawlState:
         os.replace(tmp, self._manifest_path)  # atomic commit point
 
     # -- table io -----------------------------------------------------
-    # Generations: rewrites of an already-committed snapshot (compaction,
-    # seen-set expiry) NEVER overwrite the directory readers are sourcing.
-    # They write to a fresh `...-gN` sibling; the manifest's "gens" map is
-    # flipped in the same atomic manifest write that commits the rewrite;
-    # superseded directories are deleted only after that commit. A crash
-    # at any point leaves the previously-committed snapshot fully intact.
+    # Generations: a rewrite of an already-committed snapshot writes a
+    # fresh `...-gN` sibling, and the manifest's "gens" map names the
+    # committed one; ``rewrite`` is the one place that happens.
+
+    def _dir(self, table: str, kind: str, iteration: int, gen: int = 0) -> str:
+        """``kind`` "iter": an iteration's snapshot or delta; "base": a
+        compacted base covering the deltas through ``iteration``."""
+        name = f"{kind}={iteration:05d}" + (f"-g{gen}" if gen else "")
+        return os.path.join(self.dir, table, name)
 
     def _iter_dir(self, table: str, iteration: int, gen: int = 0) -> str:
-        name = f"iter={iteration:05d}" + (f"-g{gen}" if gen else "")
-        return os.path.join(self.dir, table, name)
+        return self._dir(table, "iter", iteration, gen)
+
+    def _base_dir(self, table: str, upto: int, gen: int = 0) -> str:
+        return self._dir(table, "base", upto, gen)
 
     def _gen_of(self, m: dict, table: str, kind: str, iteration: int) -> int:
         return m.get("gens", {}).get(f"{table}:{kind}:{iteration}", 0)
 
     def fresh_gen(self, table: str, kind: str, iteration: int) -> int:
         """Smallest generation whose directory does not exist yet."""
-        path_fn = self._base_dir if kind == "base" else self._iter_dir
         gen = 0
-        while os.path.exists(path_fn(table, iteration, gen)):
+        while os.path.exists(self._dir(table, kind, iteration, gen)):
             gen += 1
         return gen
 
-    def write(self, table: str, iteration: int, df: DataFrame, n_files: int | None = None) -> None:
+    def write(self, table: str, iteration: int, df: DataFrame, n_files: int | None = None) -> str:
+        """Write an iteration's snapshot or delta. → its directory."""
+        path = self._iter_dir(table, iteration)
         if n_files is not None and n_files > 0:
             df = df.coalesce(n_files)
-        df.write.mode("overwrite").parquet(self._iter_dir(table, iteration))
+        df.write.mode("overwrite").parquet(path)
+        return path
 
     def read(self, table: str, *paths: str) -> DataFrame:
         """The given snapshot directories of ``table``, read with its
@@ -169,8 +186,6 @@ class CrawlState:
         (Iceberg snapshot expiry would handle both).
 
         Returns the deleted directory paths."""
-        import shutil
-
         assert keep_full_last >= 1
         m = self.manifest()
         deleted: list[str] = []
@@ -207,10 +222,6 @@ class CrawlState:
                     deleted.append(path)
         return deleted
 
-    def _base_dir(self, table: str, upto: int, gen: int = 0) -> str:
-        name = f"base={upto:05d}" + (f"-g{gen}" if gen else "")
-        return os.path.join(self.dir, table, name)
-
     def read_all(self, table: str, upto_iter: int) -> DataFrame | None:
         """Union of committed deltas of an APPEND_TABLES table — a
         compacted base (if the manifest records one) plus the deltas
@@ -233,56 +244,51 @@ class CrawlState:
             return None
         return self.read(table, *paths)
 
-    def compact(self, tables: tuple[str, ...] = APPEND_TABLES, n_files: int = 8) -> dict:
+    def compact(self, tables: tuple[str, ...] = APPEND_TABLES, n_files: int = WRITE_PARTITIONS) -> dict:
         """Compact append-only deltas into one base snapshot per table
-        (Iceberg rewrite_data_files analog). Crash-safe: the base dir is
-        written first; the manifest update is the commit point; old
-        delta dirs are removed only after it. A crash in between leaves
-        both base and deltas readable (read_all prefers base + tail).
-        """
-        import shutil
-
-        m = self.manifest()
-        upto = m["completed_iter"]
-        compacted = dict(m.get("compacted", {}))
-        gens = dict(m.get("gens", {}))
+        (Iceberg rewrite_data_files analog), through ``rewrite``."""
+        upto = self.manifest()["completed_iter"]
+        frames = {}
         for table in tables:
             df = self.read_all(table, upto)
-            if df is None:
-                continue
-            # fresh generation: never overwrite a directory read_all may be
-            # sourcing (the old base at the same iteration in particular)
-            gen = self.fresh_gen(table, "base", upto)
-            df.coalesce(n_files).write.mode("overwrite").parquet(
-                self._base_dir(table, upto, gen)
-            )
-            compacted[table] = upto
-            gens[f"{table}:base:{upto}"] = gen
-        m["compacted"] = compacted
-        m["gens"] = gens
-        self._write_manifest(m)  # the commit point
-        # post-commit cleanup of superseded deltas + old bases
-        self.cleanup_superseded(tables)
-        return compacted
+            if df is not None:
+                frames[table] = df.coalesce(n_files)
+        return self.rewrite(upto, frames)["compacted"]
 
-    def cleanup_superseded(self, tables: tuple[str, ...]) -> None:
-        """Delete delta dirs covered by a committed base and base dirs
-        other than the committed generation. Safe to re-run; only reads
-        the committed manifest."""
-        import shutil
+    def rewrite(self, upto: int, frames: Mapping[str, DataFrame]) -> dict:
+        """Replace each table's committed state at ``upto`` with its frame:
+        an APPEND_TABLES table's deltas through ``upto`` by one compacted
+        base, a FULL_TABLES table's snapshot at ``upto`` by a new
+        generation of it. Compaction and seen-set expiry both commit here.
 
+        Crash-safe: each frame is written to a fresh generation directory,
+        never over one a reader (or the frame itself) may be sourcing; one
+        manifest write flips every "gens" entry and commits them all; only
+        then are the directories they supersede deleted: the deltas and
+        every other base of a compacted table, every other generation of
+        a rewritten snapshot. A crash before the manifest write leaves the
+        previous state intact. → the committed manifest."""
         m = self.manifest()
-        for table in tables:
-            upto_t = m.get("compacted", {}).get(table, -1)
-            if upto_t < 0:
-                continue
-            keep = os.path.basename(
-                self._base_dir(table, upto_t, self._gen_of(m, table, "base", upto_t))
-            )
-            for i in range(upto_t + 1):
-                shutil.rmtree(self._iter_dir(table, i), ignore_errors=True)
-            tdir = os.path.join(self.dir, table)
-            if os.path.isdir(tdir):
-                for d in os.listdir(tdir):
-                    if d.startswith("base=") and d != keep:
-                        shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
+        compacted = m.setdefault("compacted", {})
+        gens = m.setdefault("gens", {})
+        keep = {}
+        for table, df in frames.items():
+            kind = "base" if table in APPEND_TABLES else "iter"
+            gen = self.fresh_gen(table, kind, upto)
+            keep[table] = self._dir(table, kind, upto, gen)
+            df.write.mode("overwrite").parquet(keep[table])
+            gens[f"{table}:{kind}:{upto}"] = gen
+            if kind == "base":
+                compacted[table] = upto
+        self._write_manifest(m)  # the commit point
+        for table, path in keep.items():
+            tdir = glob.escape(os.path.join(self.dir, table))
+            if table in APPEND_TABLES:
+                doomed = glob.glob(os.path.join(tdir, "base=*"))
+                doomed += [self._iter_dir(table, i) for i in range(upto + 1)]
+            else:
+                doomed = glob.glob(os.path.join(tdir, f"iter={upto:05d}*"))
+            for d in doomed:
+                if d != path:
+                    shutil.rmtree(d, ignore_errors=True)
+        return m

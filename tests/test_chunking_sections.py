@@ -7,7 +7,6 @@ prefix, oversize errors."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from earcrawler_spark.operators.chunking import chunk_sections
 from tests.chunking_model import chunk_model

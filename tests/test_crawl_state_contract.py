@@ -1,7 +1,8 @@
 """Crawl-state contracts: every table's writer matches the schema that
 ``state.SCHEMAS`` declares for its reads, the driver-side frames are
 Arrow-built (no pickled rows, no RDD conversions on the crawler path),
-the seen filter's Spark kernels stay behind bloom.py, and the shard map
+the seen filter's Spark kernels stay behind bloom.py, the snapshot
+layout and its rewrite protocol stay behind state.py, and the shard map
 a crawler keeps between waves never outlives the filter snapshot it was
 written as."""
 
@@ -21,10 +22,10 @@ from earcrawler_spark.crawler.robots import ROBOTS_SCHEMA, fetch_robots
 from earcrawler_spark.crawler.runner import Crawler, CrawlConfig
 from earcrawler_spark.crawler.state import SCHEMAS, CrawlState
 
-CRAWLER_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "earcrawler_spark", "crawler",
+PKG_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "earcrawler_spark"
 )
+CRAWLER_DIR = os.path.join(PKG_DIR, "crawler")
 
 
 def _snapshot_dirs(state_dir: str, table: str) -> list[str]:
@@ -177,6 +178,53 @@ def test_filter_kernels_live_in_bloom():
             sites[name] = _filter_kernel_sites(f.read(), name)
     assert sites["runner.py"] == []
     assert len([h for h in sites["bloom.py"] if h.endswith(" conv")]) == 1
+
+
+# -- state.py owns the snapshot layout and its rewrite protocol ---------
+
+_STATE_PRIVATES = {"_iter_dir", "_base_dir", "_write_manifest", "fresh_gen"}
+
+
+def _state_private_sites(source: str, filename: str) -> list[str]:
+    """References to CrawlState's directory layout and manifest writer —
+    as attributes, names or imports."""
+    hits = []
+    for node in ast.walk(ast.parse(source, filename)):
+        if isinstance(node, ast.Attribute) and node.attr in _STATE_PRIVATES:
+            hits.append((node.lineno, node.attr))
+        elif isinstance(node, ast.Name) and node.id in _STATE_PRIVATES:
+            hits.append((node.lineno, node.id))
+        elif isinstance(node, ast.alias) and node.name in _STATE_PRIVATES:
+            hits.append((node.lineno, f"import {node.name}"))
+    return [f"{filename}:{line} {what}" for line, what in sorted(hits)]
+
+
+def test_guard_flags_state_privates():
+    bad = (
+        "p = self.state._iter_dir('bloom', upto, gen)\n"
+        "gen = state.fresh_gen('seen', 'base', upto)\n"
+        "self.state._write_manifest(m)\n"
+        "from earcrawler_spark.crawler.state import _base_dir\n"
+        "path = self.state.write('bloom', it, df)\n"  # the public writer
+    )
+    assert [h.split(" ", 1)[1] for h in _state_private_sites(bad, "x.py")] == [
+        "_iter_dir", "fresh_gen", "_write_manifest", "import _base_dir",
+    ]
+
+
+def test_state_layout_lives_in_state():
+    """Every rewrite of committed state (compaction, seen-set expiry) goes
+    through CrawlState.rewrite; no other package module names a snapshot
+    directory or writes the manifest. Tests stay exempt: they simulate
+    crashes between the protocol's stages."""
+    hits = []
+    for path in sorted(glob.glob(os.path.join(PKG_DIR, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, PKG_DIR)
+        if rel == os.path.join("crawler", "state.py"):
+            continue
+        with open(path, encoding="utf-8") as f:
+            hits += _state_private_sites(f.read(), rel)
+    assert hits == []
 
 
 # -- the kept filter never outlives its snapshot ------------------------

@@ -4,7 +4,6 @@ resume validation."""
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import functions as F

@@ -7,8 +7,6 @@ from __future__ import annotations
 import contextlib
 import io
 
-import pytest
-
 SF = "/root/testdata/sf0.001"
 
 

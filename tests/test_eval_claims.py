@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import functions as F
-
 from earcrawler_spark.queries_eval import STOPWORDS, extract_claims
 
 _SECTION_INLINE_RE = re.compile(

@@ -8,8 +8,6 @@ from __future__ import annotations
 import random
 import re
 
-from pyspark.sql import functions as F
-
 from earcrawler_spark.operators.groundedness import (
     load_phase2_gate_thresholds,
     score_citations,

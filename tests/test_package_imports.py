@@ -1,4 +1,5 @@
-"""Every module-level import in the package is referenced in its module."""
+"""Every module-level import in the package and in the tests is referenced
+in its module."""
 
 from __future__ import annotations
 
@@ -6,8 +7,9 @@ import ast
 import glob
 import os
 
-PKG_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "earcrawler_spark")
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG_DIR = os.path.join(REPO_DIR, "earcrawler_spark")
+TESTS_DIR = os.path.join(REPO_DIR, "tests")
 
 
 def _unused_imports(source: str, filename: str) -> list[str]:
@@ -46,9 +48,17 @@ def test_guard_flags_unused_import():
     assert _unused_imports(planted, "x.py") == ["3 W"]
 
 
-def test_no_unused_imports_in_package():
+def _unused_imports_in(paths: list[str]) -> list[str]:
     hits = []
-    for path in sorted(glob.glob(os.path.join(PKG_DIR, "**", "*.py"), recursive=True)):
+    for path in sorted(paths):
         with open(path, encoding="utf-8") as f:
-            hits += [f"{os.path.relpath(path, PKG_DIR)}:{h}" for h in _unused_imports(f.read(), path)]
-    assert hits == []
+            hits += [f"{os.path.relpath(path, REPO_DIR)}:{h}" for h in _unused_imports(f.read(), path)]
+    return hits
+
+
+def test_no_unused_imports_in_package():
+    assert _unused_imports_in(glob.glob(os.path.join(PKG_DIR, "**", "*.py"), recursive=True)) == []
+
+
+def test_no_unused_imports_in_tests():
+    assert _unused_imports_in(glob.glob(os.path.join(TESTS_DIR, "*.py"))) == []

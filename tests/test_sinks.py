@@ -4,7 +4,6 @@ tests/corpus/test_artifacts_determinism.py — byte-identical rebuilds)."""
 from __future__ import annotations
 
 import hashlib
-import json
 
 from earcrawler_spark.sinks import read_jsonl, write_sorted_jsonl, write_sorted_turtle
 
