@@ -1,0 +1,48 @@
+"""The doc_id-derived vocabulary of the synthetic eval/RAG/schema fixtures.
+
+The eval, RAG and schema queries build their items, citations and corpora
+from ``documents.doc_id``, and their DuckDB oracles rebuild the same
+strings. Each derivation is written here once, as a Column function for the
+Spark side and as a SQL fragment over a SQL expression for the oracle:
+
+- section body ``<700 + x % 37>.<1 + x % 7>`` (e.g. ``712.3``),
+- section id ``EAR-`` + section body,
+- dataset id ``ds<x % 3>``.
+
+It also holds the BM25 query terms of the retrieval rows, which the
+``queries_fidelity`` oracles read at import time: kept outside ``queries``,
+they do not make a family module import the registry it is part of.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+BM25_QUERY = ["spark", "join", "stream"]
+
+
+def section_body(x: Column) -> Column:
+    return F.concat(
+        (x % 37 + 700).cast("string"), F.lit("."), (x % 7 + 1).cast("string")
+    )
+
+
+def section_id(x: Column) -> Column:
+    return F.concat(F.lit("EAR-"), section_body(x))
+
+
+def dataset_id(x: Column) -> Column:
+    return F.concat(F.lit("ds"), (x % 3).cast("string"))
+
+
+def section_body_sql(x: str) -> str:
+    return f"CAST(({x}) % 37 + 700 AS VARCHAR) || '.' || CAST(({x}) % 7 + 1 AS VARCHAR)"
+
+
+def section_id_sql(x: str) -> str:
+    return f"'EAR-' || {section_body_sql(x)}"
+
+
+def dataset_id_sql(x: str) -> str:
+    return f"'ds' || CAST(({x}) % 3 AS VARCHAR)"

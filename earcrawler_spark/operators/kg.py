@@ -14,8 +14,13 @@ Reference:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+
+def triple(s: Column, p: str, o: Column) -> Column:
+    """One (s, p, o) triple struct with a literal predicate."""
+    return F.struct(s.alias("s"), F.lit(p).alias("p"), o.alias("o"))
 
 
 def provenance_upsert(prev: DataFrame | None, current: DataFrame) -> DataFrame:

@@ -358,83 +358,33 @@ def kmeans_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Deterministic spherical k-means (Lloyd) for IVF coarse quantizers —
-    (centroid_id, cv array<double>).
+    """kmeans_train_grouped over one constant group — (centroid_id, cv)."""
+    one = embeddings.withColumn("_one", F.lit(0))
+    return kmeans_train_grouped(one, k, iters, "_one", id_col, vec_col).drop("_one")
 
-    Init = the k smallest ids (seedless, reproducible; a TakeOrdered of
-    k rows — at real scale you'd swap in a k-means|| sample, the Lloyd
-    loop below is unchanged). Each round: broadcast the k centroids,
-    argmax-cosine assignment (struct-min, no window), then the
-    per-dimension mean via posexplode -> groupBy(centroid, dim)
-    partial-avg -> array rebuild — the shuffle carries (cid, dim,
-    partial sums) only, never whole vectors to a single node. Centroids
-    are localCheckpointed per round (k rows) so the lineage stays flat.
-    Empty clusters keep their previous centroid.
-    """
-    e = embeddings.select(
-        F.col(id_col).alias("vid"),
-        normalize_vec(F.col(vec_col).cast("array<double>")).alias("v"),
-    ).persist()  # scanned once per Lloyd round — don't re-normalize each time
-    cents = (
-        e.orderBy("vid")
-        .limit(k)
-        .select(F.col("vid").alias("centroid_id"), F.col("v").alias("cv"))
-        .localCheckpoint()
+
+def _nearest(e: DataFrame, centroids: DataFrame, group_col: str) -> DataFrame:
+    """e's columns + ``best`` struct(negsim, cid): each vector ``v`` to the
+    nearest centroid of its group. The group's centroids ride along as ONE
+    broadcast array row and the argmax is an array_min over per-centroid
+    structs (round(sim, 6) + centroid-id tie-break, the same ordering as
+    an aggregate min), so assignment is a pure projection that re-shuffles
+    no vector."""
+    cent_arr = centroids.groupBy(group_col).agg(
+        F.collect_list(F.struct("centroid_id", "cv")).alias("cs")
     )
-    for _ in range(iters):
-        # argmin on round(sim, 6) + centroid-id tie-break — the repo's
-        # deterministic bucket+tie-break ranking pattern, which also makes
-        # the Lloyd assignment reproducible across engines (the DuckDB
-        # oracle replays the identical unrolled rounds).  The k centroids
-        # ride along as ONE broadcast array row and the argmin is an
-        # array_min over per-centroid structs (identical struct ordering
-        # to the aggregate min), so assignment is a pure projection — the
-        # former crossJoin+groupBy(vid) re-shuffled every vector (with its
-        # payload) once per Lloyd round for nothing (guide §2.4).
-        cent_arr = cents.agg(
-            F.collect_list(F.struct("centroid_id", "cv")).alias("cs")
-        )
-        best = (
-            e.crossJoin(F.broadcast(cent_arr))
-            .select(
-                "vid", "v",
-                F.array_min(
-                    F.transform(
-                        "cs",
-                        lambda c: F.struct(
-                            (-F.round(cosine(F.col("v"), c["cv"]), 6)).alias(
-                                "negsim"
-                            ),
-                            c["centroid_id"].alias("cid"),
-                        ),
-                    )
-                ).alias("best"),
+    return e.join(F.broadcast(cent_arr), group_col).select(
+        *e.columns,
+        F.array_min(
+            F.transform(
+                "cs",
+                lambda c: F.struct(
+                    (-F.round(cosine(F.col("v"), c["cv"]), 6)).alias("negsim"),
+                    c["centroid_id"].alias("cid"),
+                ),
             )
-            .select("vid", F.col("best.cid").alias("centroid_id"), "v")
-        )
-        dims = best.select(
-            "centroid_id", F.posexplode("v").alias("dim", "x")
-        )
-        means = (
-            dims.groupBy("centroid_id", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv_raw")
-            )
-            .select("centroid_id", normalize_vec(F.col("cv_raw")).alias("cv"))
-        )
-        cents = (
-            cents.select("centroid_id", F.col("cv").alias("cv_prev"))
-            .join(means, "centroid_id", "left")
-            .select("centroid_id", F.coalesce("cv", "cv_prev").alias("cv"))
-            .localCheckpoint()
-        )
-    e.unpersist()
-    return cents
+        ).alias("best"),
+    )
 
 
 def kmeans_train_grouped(
@@ -445,22 +395,28 @@ def kmeans_train_grouped(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """kmeans_train with a grouping key: trains ONE independent
-    quantizer per distinct ``group_col`` value in a single lineage —
-    (group, centroid_id, cv).  Semantically identical to looping
-    kmeans_train over the groups (same init = k smallest ids per
-    group, same argmin/update/empty-cluster rules), but every Lloyd
-    round is ONE assignment + ONE (group, cid, dim) partial-avg
-    shuffle for ALL groups instead of one sequential job chain per
-    group — this is what makes product quantization (8 subspaces) a
-    2-round job rather than a 16-round one, and at 1000 executors it
-    is the difference between 8x serial barriers and one."""
+    """Deterministic spherical k-means (Lloyd) for IVF/PQ quantizers: ONE
+    independent quantizer per distinct ``group_col`` value, all trained
+    in a single lineage — (group, centroid_id, cv array<double>).
+
+    Init = the k smallest ids per group (seedless, reproducible; at real
+    scale you'd swap in a k-means|| sample, the Lloyd loop below is
+    unchanged). Each round: the broadcast argmax assignment of
+    ``_nearest`` (the DuckDB oracles replay the identical unrolled
+    rounds), then the per-dimension mean via posexplode ->
+    groupBy(group, centroid, dim) partial-avg -> array rebuild — the
+    shuffle carries (group, cid, dim, partial sums) only, never whole
+    vectors to a single node. Centroids are localCheckpointed per round
+    so the lineage stays flat. Empty clusters keep their previous
+    centroid. Every round is ONE assignment + ONE partial-avg shuffle for
+    ALL groups, so product quantization (8 subspaces) is a 2-round job
+    rather than 8 sequential trainings."""
     g = group_col
     e = embeddings.select(
         F.col(g).alias("grp"),
         F.col(id_col).alias("vid"),
         normalize_vec(F.col(vec_col).cast("array<double>")).alias("v"),
-    ).persist()
+    ).persist()  # scanned once per Lloyd round — don't re-normalize each time
     rn = F.row_number().over(W.partitionBy("grp").orderBy("vid"))
     cents = (
         e.withColumn("rn", rn)
@@ -468,51 +424,31 @@ def kmeans_train_grouped(
         .select("grp", F.col("vid").alias("centroid_id"), F.col("v").alias("cv"))
         .localCheckpoint()
     )
+    member = F.col("member")
     for _ in range(iters):
-        # per-group centroid ARRAY broadcast + array_min projection
-        # (identical struct ordering to the aggregate min): assignment
-        # no longer re-shuffles every vector per Lloyd round — see
-        # kmeans_train for the rationale.
-        cent_arr = cents.groupBy("grp").agg(
-            F.collect_list(F.struct("centroid_id", "cv")).alias("cs")
-        )
-        best = (
-            e.join(F.broadcast(cent_arr), "grp")
-            .select(
-                "grp", "vid", "v",
-                F.array_min(
-                    F.transform(
-                        "cs",
-                        lambda c: F.struct(
-                            (-F.round(cosine(F.col("v"), c["cv"]), 6)).alias(
-                                "negsim"
-                            ),
-                            c["centroid_id"].alias("cid"),
-                        ),
-                    )
-                ).alias("best"),
-            )
-            .select("grp", F.col("best.cid").alias("centroid_id"), "v")
-        )
-        means = (
-            best.select("grp", "centroid_id", F.posexplode("v").alias("dim", "x"))
-            .groupBy("grp", "centroid_id", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("grp", "centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv_raw")
-            )
-            .select(
-                "grp", "centroid_id", normalize_vec(F.col("cv_raw")).alias("cv")
-            )
-        )
+        # each centroid's previous vector rides along as a non-member row,
+        # so an empty cluster keeps it without a join back to ``cents``
+        rows = _nearest(e, cents, "grp").select(
+            "grp", F.col("best.cid").alias("centroid_id"), "v",
+            F.lit(True).alias("member"),
+        ).unionByName(cents.select(
+            "grp", "centroid_id", F.col("cv").alias("v"),
+            F.lit(False).alias("member"),
+        ))
         cents = (
-            cents.select("grp", "centroid_id", F.col("cv").alias("cv_prev"))
-            .join(means, ["grp", "centroid_id"], "left")
-            .select("grp", "centroid_id", F.coalesce("cv", "cv_prev").alias("cv"))
+            rows.select("grp", "centroid_id", "member",
+                        F.posexplode("v").alias("dim", "x"))
+            .groupBy("grp", "centroid_id", "dim")
+            .agg(F.avg(F.when(member, F.col("x"))).alias("m"),
+                 F.max(F.when(~member, F.col("x"))).alias("prev"))
+            .groupBy("grp", "centroid_id")
+            .agg(F.array_sort(F.collect_list(F.struct("dim", "m", "prev"))).alias("d"))
+            .select(
+                "grp", "centroid_id",
+                F.when(F.col("d")[0]["m"].isNull(), F.transform("d", lambda s: s["prev"]))
+                .otherwise(normalize_vec(F.transform("d", lambda s: s["m"])))
+                .alias("cv"),
+            )
             .localCheckpoint()
         )
     e.unpersist()
@@ -526,72 +462,28 @@ def ivf_assign_grouped(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ivf_assign per group: (group, vec_id, centroid_id, sim) with the
-    same broadcast + struct-min argmax, joined on the group key."""
+    """(group, vec_id, centroid_id, sim): each vector to the nearest
+    trained centroid of its group (``_nearest``)."""
     g = group_col
     e = embeddings.select(
         F.col(g),
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    cent_arr = centroids.groupBy(g).agg(
-        F.collect_list(F.struct("centroid_id", "cv")).alias("cs")
-    )
-    return (
-        e.join(F.broadcast(cent_arr), g)
-        .select(
-            g,
-            "vec_id",
-            F.array_min(
-                F.transform(
-                    "cs",
-                    lambda c: F.struct(
-                        (-F.round(cosine(F.col("v"), c["cv"]), 6)).alias("negsim"),
-                        c["centroid_id"].alias("cid"),
-                    ),
-                )
-            ).alias("best"),
-        )
-        .select(
-            g,
-            "vec_id",
-            F.col("best.cid").alias("centroid_id"),
-            (-F.col("best.negsim")).alias("sim"),
-        )
+    return _nearest(e, centroids, g).select(
+        g,
+        "vec_id",
+        F.col("best.cid").alias("centroid_id"),
+        (-F.col("best.negsim")).alias("sim"),
     )
 
 
 def ivf_assign(embeddings: DataFrame, centroids: DataFrame,
                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, centroid_id, sim): each vector to its nearest trained
-    centroid — broadcast centroids + struct-min argmax, no window."""
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    cent_arr = centroids.agg(
-        F.collect_list(F.struct("centroid_id", "cv")).alias("cs")
-    )
-    return (
-        e.crossJoin(F.broadcast(cent_arr))
-        .select(
-            "vec_id",
-            F.array_min(
-                F.transform(
-                    "cs",
-                    lambda c: F.struct(
-                        (-F.round(cosine(F.col("v"), c["cv"]), 6)).alias("negsim"),
-                        c["centroid_id"].alias("cid"),
-                    ),
-                )
-            ).alias("best"),
-        )
-        .select(
-            "vec_id",
-            F.col("best.cid").alias("centroid_id"),
-            (-F.col("best.negsim")).alias("sim"),
-        )
-    )
+    """ivf_assign_grouped over one constant group — (vec_id, centroid_id, sim)."""
+    one = F.lit(0).alias("_one")
+    return ivf_assign_grouped(embeddings.select("*", one), centroids.select("*", one),
+                              "_one", id_col, vec_col).drop("_one")
 
 
 def hyperplane_lsh_buckets(

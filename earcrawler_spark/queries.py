@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from earcrawler_spark.fixture_vocab import BM25_QUERY
 from earcrawler_spark.functions import text as TXT
 from earcrawler_spark.session import table
 
@@ -665,8 +666,6 @@ LIMIT 25
 # D. Similarity / dedup families + ranking + reconcile
 # ---------------------------------------------------------------------------
 
-BM25_QUERY = ["spark", "join", "stream"]
-
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (threshold 0.5) — the oracle of
@@ -1099,91 +1098,46 @@ ORDER BY d.doc_id
 ORACLES["simhash_buckets"] = _SQL_SIMHASH
 
 
+# (module, registry prefix) of each query family, in registry order
+_FAMILIES = (
+    ("queries_corpus", "CORPUS"),
+    ("queries_windows", "WINDOW"),
+    ("queries_alias", "ALIAS"),
+    ("queries_tokens", "TOKEN"),
+    ("queries_fidelity", "FIDELITY"),
+    ("queries_rag", "RAG"),
+    ("queries_media", "MEDIA"),
+    ("queries_shacl", "SHACL"),
+    ("queries_update", "UPDATE"),
+    ("queries_eval", "EVAL"),
+    ("queries_schema", "SCHEMA"),
+    ("queries_curation", "CURATION"),
+    ("queries_training", "TRAINING"),
+    ("queries_mining", "MINING"),
+    ("queries_graph", "GRAPH"),
+    ("queries_sketches", "SKETCH"),
+    ("queries_webcur", "WEBCUR"),
+    ("queries_crawlstats", "CRAWLSTATS"),
+)
+
+
 def _late_oracles() -> None:
+    import importlib
+
     from earcrawler_spark.operators.ranking import bm25_sql
-    from earcrawler_spark.operators.similarity import minhash_sql
-    from earcrawler_spark.queries_corpus import CORPUS_ORACLES, CORPUS_QUERIES
-    from earcrawler_spark.queries_windows import WINDOW_ORACLES, WINDOW_QUERIES
+    from earcrawler_spark.operators.similarity import dedup_clusters_sql, minhash_sql
 
     ORACLES["bm25_topk"] = bm25_sql(BM25_QUERY, k=20)
     ORACLES["rrf_fusion"] = _SQL_RRF.format(bm25=bm25_sql(BM25_QUERY, k=50))
     ORACLES["minhash_lsh_pairs"] = minhash_sql(n=3, bands=8, rows=2)
-    from earcrawler_spark.operators.similarity import dedup_clusters_sql
-
     QUERIES["dedup_clusters"] = q_dedup_clusters
     ORACLES["dedup_clusters"] = dedup_clusters_sql()
     QUERIES["retrieval_compare"] = q_retrieval_compare
     ORACLES["retrieval_compare"] = _retrieval_compare_sql()
-    QUERIES.update(CORPUS_QUERIES)
-    ORACLES.update(CORPUS_ORACLES)
-    QUERIES.update(WINDOW_QUERIES)
-    ORACLES.update(WINDOW_ORACLES)
-    from earcrawler_spark.queries_alias import ALIAS_ORACLES, ALIAS_QUERIES
-
-    QUERIES.update(ALIAS_QUERIES)
-    ORACLES.update(ALIAS_ORACLES)
-    from earcrawler_spark.queries_tokens import TOKEN_ORACLES, TOKEN_QUERIES
-
-    QUERIES.update(TOKEN_QUERIES)
-    ORACLES.update(TOKEN_ORACLES)
-    from earcrawler_spark.queries_fidelity import FIDELITY_ORACLES, FIDELITY_QUERIES
-
-    QUERIES.update(FIDELITY_QUERIES)
-    ORACLES.update(FIDELITY_ORACLES)
-    from earcrawler_spark.queries_rag import RAG_ORACLES, RAG_QUERIES
-
-    QUERIES.update(RAG_QUERIES)
-    ORACLES.update(RAG_ORACLES)
-    from earcrawler_spark.queries_media import MEDIA_ORACLES, MEDIA_QUERIES
-
-    QUERIES.update(MEDIA_QUERIES)
-    ORACLES.update(MEDIA_ORACLES)
-    from earcrawler_spark.queries_shacl import SHACL_ORACLES, SHACL_QUERIES
-
-    QUERIES.update(SHACL_QUERIES)
-    ORACLES.update(SHACL_ORACLES)
-    from earcrawler_spark.queries_update import UPDATE_ORACLES, UPDATE_QUERIES
-
-    QUERIES.update(UPDATE_QUERIES)
-    ORACLES.update(UPDATE_ORACLES)
-    from earcrawler_spark.queries_eval import EVAL_ORACLES, EVAL_QUERIES
-
-    QUERIES.update(EVAL_QUERIES)
-    ORACLES.update(EVAL_ORACLES)
-    from earcrawler_spark.queries_schema import SCHEMA_ORACLES, SCHEMA_QUERIES
-
-    QUERIES.update(SCHEMA_QUERIES)
-    ORACLES.update(SCHEMA_ORACLES)
-    from earcrawler_spark.queries_curation import CURATION_ORACLES, CURATION_QUERIES
-
-    QUERIES.update(CURATION_QUERIES)
-    ORACLES.update(CURATION_ORACLES)
-    from earcrawler_spark.queries_training import TRAINING_ORACLES, TRAINING_QUERIES
-
-    QUERIES.update(TRAINING_QUERIES)
-    ORACLES.update(TRAINING_ORACLES)
-    from earcrawler_spark.queries_mining import MINING_ORACLES, MINING_QUERIES
-
-    QUERIES.update(MINING_QUERIES)
-    ORACLES.update(MINING_ORACLES)
-    from earcrawler_spark.queries_graph import GRAPH_ORACLES, GRAPH_QUERIES
-    from earcrawler_spark.queries_sketches import SKETCH_ORACLES, SKETCH_QUERIES
-
-    QUERIES.update(GRAPH_QUERIES)
-    ORACLES.update(GRAPH_ORACLES)
-    QUERIES.update(SKETCH_QUERIES)
-    ORACLES.update(SKETCH_ORACLES)
-    from earcrawler_spark.queries_webcur import WEBCUR_ORACLES, WEBCUR_QUERIES
-
-    QUERIES.update(WEBCUR_QUERIES)
-    ORACLES.update(WEBCUR_ORACLES)
-    from earcrawler_spark.queries_crawlstats import (
-        CRAWLSTATS_ORACLES,
-        CRAWLSTATS_QUERIES,
-    )
-
-    QUERIES.update(CRAWLSTATS_QUERIES)
-    ORACLES.update(CRAWLSTATS_ORACLES)
+    for module, prefix in _FAMILIES:
+        family = importlib.import_module(f"earcrawler_spark.{module}")
+        QUERIES.update(getattr(family, f"{prefix}_QUERIES"))
+        ORACLES.update(getattr(family, f"{prefix}_ORACLES"))
 
 
 # --- retrieval mode comparison (dense vs hybrid) -----------------------------

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.operators.similarity import shingle_rows
 from earcrawler_spark.session import table
 
 CURATION_QUERIES: dict = {}
@@ -115,25 +116,6 @@ DECON_N = 8
 _EVAL_MOD = 37
 
 
-def _shingle_rows(docs: DataFrame, n: int) -> DataFrame:
-    """Distinct (doc_id, s) word n-gram rows, JVM-native (posexplode +
-    key-partitioned lead window — the interpreted array-HOF form measured
-    ~2x slower; see operators/similarity.shingle_rows)."""
-    tk = docs.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "t"))
-    w = W.partitionBy("doc_id").orderBy("pos")
-    leads = [F.lead("t", k).over(w) for k in range(1, n)]
-    return (
-        tk.select(
-            "doc_id",
-            F.concat_ws(" ", F.col("t"), *leads).alias("s"),
-            leads[-1].alias("_tail"),
-        )
-        .filter(F.col("_tail").isNotNull())
-        .dropDuplicates(["doc_id", "s"])
-        .select("doc_id", "s")
-    )
-
-
 def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     8-gram word shingle with the held-out eval slice (doc_id % 37 == 0
@@ -142,7 +124,7 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB, so the contamination check is one broadcast-hash probe per
     training-doc shingle, no shuffle of the big side."""
     docs = table(spark, sf_dir, "documents")
-    sh = _shingle_rows(docs, DECON_N)
+    sh = shingle_rows(docs, DECON_N)
     is_eval = (F.col("doc_id") % _EVAL_MOD) == 0
     ev = sh.filter(is_eval).select(
         F.col("s"), F.col("doc_id").alias("eval_id")
@@ -662,7 +644,7 @@ def q_contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals, contaminated-doc counts and token-mass share, and the worst
     per-doc severity."""
     docs = table(spark, sf_dir, "documents")
-    sh = _shingle_rows(docs, DECON_N)
+    sh = shingle_rows(docs, DECON_N)
     is_eval = (F.col("doc_id") % _EVAL_MOD) == 0
     ev = sh.filter(is_eval).select("s")
     tr = sh.filter(~is_eval)

@@ -26,6 +26,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.fixture_vocab import (
+    dataset_id,
+    dataset_id_sql,
+    section_body,
+    section_body_sql,
+    section_id,
+    section_id_sql,
+)
 from earcrawler_spark.session import cached, shared_frame, shared_output, table
 
 EVAL_QUERIES: dict = {}
@@ -160,10 +168,7 @@ def q_claims_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             d % 6 == 2,
             F.concat(
                 F.lit("U.S. entities described in "),
-                F.lit("EAR-"),
-                (d % 37 + 700).cast("string"),
-                F.lit("."),
-                (d % 7 + 1).cast("string"),
+                section_id(d),
                 F.lit(" cannot determine applicability, not even partially."),
             ),
         )
@@ -208,7 +213,7 @@ WITH answers AS (
   SELECT doc_id AS item_id,
     CASE WHEN doc_id % 6 = 0 THEN 'Yes: the export is prohibited under EAR-744.11(b). However, exceptions may apply; see 740.13!'
          WHEN doc_id % 6 = 1 THEN 'No, licenses are required before exporting, but section 742.4 states otherwise.'
-         WHEN doc_id % 6 = 2 THEN 'U.S. entities described in EAR-' || CAST(doc_id % 37 + 700 AS VARCHAR) || '.' || CAST(doc_id % 7 + 1 AS VARCHAR) || ' cannot determine applicability, not even partially.'
+         WHEN doc_id % 6 = 2 THEN 'U.S. entities described in ' || {section_id_sql('doc_id')} || ' cannot determine applicability, not even partially.'
          WHEN doc_id % 6 = 3 THEN 'True: shipping containers moved; cases closed.'
          WHEN doc_id % 6 = 4 THEN '   '
          ELSE 'The answer depends on context excerpt ' || CAST(doc_id AS VARCHAR) || '? It is permitted.' END AS answer
@@ -275,13 +280,7 @@ def q_evidence_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def sec(x):
-        return F.concat(
-            F.lit("EAR-"), (x % 37 + 700).cast("string"),
-            F.lit("."), (x % 7 + 1).cast("string"),
-        )
-
-    corpus = docs.select(sec(d).alias("section_id")).groupBy("section_id").agg(
+    corpus = docs.select(section_id(d).alias("section_id")).groupBy("section_id").agg(
         F.count(F.lit(1)).alias("n_records")
     )
 
@@ -289,8 +288,8 @@ def q_evidence_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.alias("item_id"),
         F.filter(
             F.array(
-                sec(d),
-                F.when(d % 3 == 0, sec(d + 1)),
+                section_id(d),
+                F.when(d % 3 == 0, section_id(d + 1)),
                 F.when(d % 5 == 0, F.lit("EAR-999.99")),
                 F.when(d % 7 == 0, F.lit("§ 701.1.")),
             ),
@@ -298,8 +297,8 @@ def q_evidence_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ear_sections_raw"),
         F.filter(
             F.array(
-                sec(d),
-                F.when(d % 4 == 0, sec(d + 2)),
+                section_id(d),
+                F.when(d % 4 == 0, section_id(d + 2)),
                 F.when(d % 6 == 0, F.lit("EAR-888.88")),
             ),
             lambda x: x.isNotNull(),
@@ -374,21 +373,19 @@ def _evidence_sql() -> str:
     # identical in every DuckDB version.
     from earcrawler_spark.operators.citation import normalize_section_full_sql
 
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
     norm_raw = normalize_section_full_sql("raw_sec")
     norm_span = normalize_section_full_sql("raw_span")
     return f"""
 WITH corpus AS (
-  SELECT {sec.format(x='doc_id')} AS section_id, count(*) AS n_records
+  SELECT {section_id_sql('doc_id')} AS section_id, count(*) AS n_records
   FROM documents GROUP BY 1
 ), sec_raw AS (
   SELECT item_id, pos0, raw_sec FROM (
     SELECT doc_id AS item_id, generate_subscripts(arr, 1) AS pos0,
            unnest(arr) AS raw_sec
     FROM (SELECT doc_id, [
-            {sec.format(x='doc_id')},
-            CASE WHEN doc_id % 3 = 0 THEN {sec.format(x='doc_id + 1')} END,
+            {section_id_sql('doc_id')},
+            CASE WHEN doc_id % 3 = 0 THEN {section_id_sql('doc_id + 1')} END,
             CASE WHEN doc_id % 5 = 0 THEN 'EAR-999.99' END,
             CASE WHEN doc_id % 7 = 0 THEN '§ 701.1.' END
           ] AS arr FROM documents))
@@ -413,8 +410,8 @@ WITH corpus AS (
   SELECT DISTINCT item_id, {norm_span} AS norm_span FROM (
     SELECT item_id, raw_span FROM (
       SELECT doc_id AS item_id, unnest([
-        {sec.format(x='doc_id')},
-        CASE WHEN doc_id % 4 = 0 THEN {sec.format(x='doc_id + 2')} END,
+        {section_id_sql('doc_id')},
+        CASE WHEN doc_id % 4 = 0 THEN {section_id_sql('doc_id + 2')} END,
         CASE WHEN doc_id % 6 = 0 THEN 'EAR-888.88' END
       ]) AS raw_span FROM documents)
     WHERE raw_span IS NOT NULL)
@@ -471,23 +468,17 @@ def q_fr_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def sec(x):
-        return F.concat(
-            F.lit("EAR-"), (x % 37 + 700).cast("string"),
-            F.lit("."), (x % 7 + 1).cast("string"),
-        )
-
-    corpus = docs.select(sec(d).alias("section_id")).distinct()
+    corpus = docs.select(section_id(d).alias("section_id")).distinct()
 
     expected = F.array_sort(
         F.array_distinct(
             F.filter(
                 F.array(
-                    sec(d),
-                    F.when(d % 3 == 0, sec(d + 1)),
+                    section_id(d),
+                    F.when(d % 3 == 0, section_id(d + 1)),
                     F.when(d % 9 == 0, F.lit("EAR-736.2(a)")),
                     F.when(d % 5 == 0, F.lit("EAR-999.99")),
-                    F.when(d % 4 == 0, sec(d + 2)),  # evidence span
+                    F.when(d % 4 == 0, section_id(d + 2)),  # evidence span
                 ),
                 lambda x: x.isNotNull(),
             )
@@ -495,18 +486,18 @@ def q_fr_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     retrieved = F.filter(
         F.array(
-            F.when(d % 2 == 0, sec(d)),
-            F.when(d % 6 == 0, F.concat(sec(d + 1), F.lit("(b)"))),
-            F.when(d % 6 == 3, sec(d + 1)),
-            sec(d + 7),
+            F.when(d % 2 == 0, section_id(d)),
+            F.when(d % 6 == 0, F.concat(section_id(d + 1), F.lit("(b)"))),
+            F.when(d % 6 == 3, section_id(d + 1)),
+            section_id(d + 7),
             F.when(d % 4 == 0, F.lit("EAR-736.2(a)(1)")),
-            F.when(d % 2 == 0, sec(d)),  # duplicate: first rank wins
+            F.when(d % 2 == 0, section_id(d)),  # duplicate: first rank wins
         ),
         lambda x: x.isNotNull(),
     )
     items = docs.select(
         d.alias("item_id"),
-        F.concat(F.lit("ds"), (d % 3).cast("string")).alias("dataset_id"),
+        dataset_id(d).alias("dataset_id"),
         expected.alias("expected"),
         retrieved.alias("retrieved"),
     )
@@ -661,21 +652,19 @@ def _fr_coverage_sql() -> str:
     # ORDER BY), no list lambdas (unnest + WHERE/DISTINCT), and every
     # ratio is DOUBLE from the first operation (`* 1.0 /` is DECIMAL
     # division in DuckDB, whose result-scale rules moved across versions).
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
     return f"""
 WITH corpus AS (
-  SELECT DISTINCT {sec.format(x='doc_id')} AS section_id FROM documents
+  SELECT DISTINCT {section_id_sql('doc_id')} AS section_id FROM documents
 ), exp_rows AS (
   SELECT DISTINCT item_id, dataset_id, esec FROM (
     SELECT doc_id AS item_id,
-           'ds' || CAST(doc_id % 3 AS VARCHAR) AS dataset_id,
+           {dataset_id_sql('doc_id')} AS dataset_id,
            unnest([
-             {sec.format(x='doc_id')},
-             CASE WHEN doc_id % 3 = 0 THEN {sec.format(x='doc_id + 1')} END,
+             {section_id_sql('doc_id')},
+             CASE WHEN doc_id % 3 = 0 THEN {section_id_sql('doc_id + 1')} END,
              CASE WHEN doc_id % 9 = 0 THEN 'EAR-736.2(a)' END,
              CASE WHEN doc_id % 5 = 0 THEN 'EAR-999.99' END,
-             CASE WHEN doc_id % 4 = 0 THEN {sec.format(x='doc_id + 2')} END
+             CASE WHEN doc_id % 4 = 0 THEN {section_id_sql('doc_id + 2')} END
            ]) AS esec
     FROM documents)
   WHERE esec IS NOT NULL
@@ -684,12 +673,12 @@ WITH corpus AS (
     SELECT doc_id AS item_id, generate_subscripts(arr, 1) AS pos0,
            unnest(arr) AS rsec
     FROM (SELECT doc_id, [
-            CASE WHEN doc_id % 2 = 0 THEN {sec.format(x='doc_id')} END,
-            CASE WHEN doc_id % 6 = 0 THEN {sec.format(x='doc_id + 1')} || '(b)' END,
-            CASE WHEN doc_id % 6 = 3 THEN {sec.format(x='doc_id + 1')} END,
-            {sec.format(x='doc_id + 7')},
+            CASE WHEN doc_id % 2 = 0 THEN {section_id_sql('doc_id')} END,
+            CASE WHEN doc_id % 6 = 0 THEN {section_id_sql('doc_id + 1')} || '(b)' END,
+            CASE WHEN doc_id % 6 = 3 THEN {section_id_sql('doc_id + 1')} END,
+            {section_id_sql('doc_id + 7')},
             CASE WHEN doc_id % 4 = 0 THEN 'EAR-736.2(a)(1)' END,
-            CASE WHEN doc_id % 2 = 0 THEN {sec.format(x='doc_id')} END
+            CASE WHEN doc_id % 2 = 0 THEN {section_id_sql('doc_id')} END
           ] AS arr FROM documents))
   WHERE rsec IS NOT NULL
 ), ret_rows AS (
@@ -803,12 +792,6 @@ EVAL_ORACLES["fr_coverage"] = _fr_coverage_sql()
 
 # --- groundedness support gate ------------------------------------------------
 
-def _groundedness_fixture(spark: SparkSession, sf_dir: str):
-    """The shared groundedness fixture: (items, citations, context,
-    decisive_claims) — see q_groundedness_gate for branch coverage."""
-    return _groundedness_fixture_impl(spark, sf_dir)
-
-
 # Scored-citations materialization: the gate and the reasons histogram
 # both run score_citations over the same fixture, and the reasons query
 # references it three times (melt pass + twice via score_claims) — the
@@ -847,22 +830,16 @@ def q_groundedness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("dataset_id")
 
 
-def _groundedness_fixture_impl(spark: SparkSession, sf_dir: str):
+def _groundedness_fixture(spark: SparkSession, sf_dir: str):
+    """The shared groundedness fixture: (items, citations, context,
+    decisive_claims) — see q_groundedness_gate for branch coverage."""
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def sec(x):
-        return F.concat(
-            F.lit("EAR-"), (x % 37 + 700).cast("string"),
-            F.lit("."), (x % 7 + 1).cast("string"),
-        )
-
-    body = F.concat(
-        (d % 37 + 700).cast("string"), F.lit("."), (d % 7 + 1).cast("string")
-    )
+    body = section_body(d)
     items = docs.select(
         d.alias("item_id"),
-        F.concat(F.lit("ds"), (d % 3).cast("string")).alias("dataset_id"),
+        dataset_id(d).alias("dataset_id"),
         F.when(d % 7 == 0, F.lit("unanswerable"))
         .otherwise(F.lit("answerable"))
         .alias("label"),
@@ -873,7 +850,7 @@ def _groundedness_fixture_impl(spark: SparkSession, sf_dir: str):
         .otherwise(F.lit("answerable"))
         .alias("predicted_label"),
     )
-    context = docs.select(sec(d).alias("section_id")).distinct().select(
+    context = docs.select(section_id(d).alias("section_id")).distinct().select(
         "section_id",
         F.concat(
             F.lit("Exports of encryption software require licensing review "
@@ -892,16 +869,16 @@ def _groundedness_fixture_impl(spark: SparkSession, sf_dir: str):
         )
 
     citations = (
-        cit(d % 13 != 0, 0, sec(d),
+        cit(d % 13 != 0, 0, section_id(d),
             F.lit("licensing review and compliance checks"))
         .unionByName(cit((d % 13 != 0) & (d % 4 == 0), 1,
                          F.concat(F.lit("§ "), body),
                          F.lit("compliance checks")))
-        .unionByName(cit(d % 5 == 0, 2, sec(d + 13),
+        .unionByName(cit(d % 5 == 0, 2, section_id(d + 13),
                          F.lit("quantum tunneling manifold")))
         .unionByName(cit(d % 6 == 0, 3, F.lit("EAR-999.99"),
                          F.lit("licensing review")))
-        .unionByName(cit(d % 9 == 0, 4, sec(d), F.lit("")))
+        .unionByName(cit(d % 9 == 0, 4, section_id(d), F.lit("")))
     )
     answer = F.when(
         d % 7 == 0, F.lit("Cannot determine from the provided information.")
@@ -910,7 +887,7 @@ def _groundedness_fixture_impl(spark: SparkSession, sf_dir: str):
             F.lit("Exports need licensing review and compliance checks"),
             F.when(
                 d % 3 == 0,
-                F.concat(F.lit(". Shipments are prohibited under "), sec(d)),
+                F.concat(F.lit(". Shipments are prohibited under "), section_id(d)),
             ).otherwise(F.lit("")),
             F.when(
                 d % 5 == 0,
@@ -986,23 +963,20 @@ def _groundedness_sql() -> str:
     )
 
     th = load_phase2_gate_thresholds()
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
     sec_norm = (
         "CASE WHEN upper(m) LIKE 'EAR-%' THEN split_part(m, '#', 1) "
         "ELSE 'EAR-' || split_part(m, '#', 1) END"
     )
     norm_full = normalize_section_full_sql("raw")
-    sec_d = sec.format(x="doc_id")
-    sec_d13 = sec.format(x="doc_id + 13")
-    body = ("CAST(doc_id % 37 + 700 AS VARCHAR) || '.' "
-            "|| CAST(doc_id % 7 + 1 AS VARCHAR)")
+    sec_d = section_id_sql("doc_id")
+    sec_d13 = section_id_sql("doc_id + 13")
+    body = section_body_sql("doc_id")
     cit_tok = _tok_rows_sql("scored_cit", "cit_idx", "q")
     claim_tok = _tok_rows_sql("decisive0", "claim_idx", "claim")
     return f"""
 WITH items AS (
   SELECT doc_id AS item_id,
-         'ds' || CAST(doc_id % 3 AS VARCHAR) AS dataset_id,
+         {dataset_id_sql('doc_id')} AS dataset_id,
          CASE WHEN doc_id % 7 = 0 THEN 'unanswerable' ELSE 'answerable' END AS label,
          CASE WHEN (doc_id % 7 = 0 AND doc_id % 3 <> 1)
                 OR (doc_id % 11 = 5 AND doc_id % 7 <> 0)
@@ -1259,15 +1233,9 @@ def q_phase2_contract_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def sec(x):
-        return F.concat(
-            F.lit("EAR-"), (x % 37 + 700).cast("string"),
-            F.lit("."), (x % 7 + 1).cast("string"),
-        )
-
     items = docs.select(
         d.alias("item_id"),
-        F.concat(F.lit("ds"), (d % 3).cast("string")).alias("dataset_id"),
+        dataset_id(d).alias("dataset_id"),
         F.when(d % 7 == 0, F.lit("unanswerable"))
         .otherwise(F.lit("answerable")).alias("expected_label"),
         F.when(
@@ -1277,28 +1245,28 @@ def q_phase2_contract_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (d % 23 != 0).alias("schema_valid"),
         (d % 10 == 0).alias("multi_required"),
         F.filter(
-            F.array(sec(d), F.when(d % 4 == 0, sec(d + 1))),
+            F.array(section_id(d), F.when(d % 4 == 0, section_id(d + 1))),
             lambda x: x.isNotNull(),
         ).alias("expected_citations"),
-        F.array(sec(d), sec(d + 1), sec(d + 7)).alias("retrieved_sections"),
+        F.array(section_id(d), section_id(d + 1), section_id(d + 7)).alias("retrieved_sections"),
     )
     def cit(flt, raw, quote):
         return docs.filter(flt).select(
             d.alias("item_id"), raw.alias("raw_sec"), quote.alias("quote")
         )
     citations = (
-        cit(d % 13 != 0, sec(d), F.concat(F.lit("quote-"), sec(d)))
-        .unionByName(cit(d % 5 == 0, sec(d + 2), F.lit("bad quote")))
+        cit(d % 13 != 0, section_id(d), F.concat(F.lit("quote-"), section_id(d)))
+        .unionByName(cit(d % 5 == 0, section_id(d + 2), F.lit("bad quote")))
         .unionByName(cit(d % 9 == 0, F.lit(""), F.lit("orphan quote")))
-        .unionByName(cit(d % 11 == 0, sec(d), F.lit("")))
+        .unionByName(cit(d % 11 == 0, section_id(d), F.lit("")))
         .unionByName(cit(d % 17 == 0, F.lit("EAR-740.9(a)(2)"),
                          F.lit("reserved quote")))
     )
     rdocs = None
     for k in (0, 1, 7):
         part = docs.select(
-            d.alias("item_id"), sec(d + k).alias("dsec"),
-            F.concat(F.lit("Reference text quote-"), sec(d + k),
+            d.alias("item_id"), section_id(d + k).alias("dsec"),
+            F.concat(F.lit("Reference text quote-"), section_id(d + k),
                      F.lit(" end")).alias("dtext"),
         )
         rdocs = part if rdocs is None else rdocs.unionByName(part)
@@ -1428,15 +1396,13 @@ def _phase2_contract_sql() -> str:
     )
 
     th = load_phase2_gate_thresholds()
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    s0, s1, s2, s7 = (sec.format(x=f"doc_id + {k}") for k in (0, 1, 2, 7))
+    s0, s1, s2, s7 = (section_id_sql(f"doc_id + {k}") for k in (0, 1, 2, 7))
     norm = normalize_section_full_sql("raw_sec")
     reserved = ", ".join(f"'{s}'" for s in RESERVED_OR_INVALID_SECTION_IDS)
     return f"""
 WITH items AS (
   SELECT doc_id AS item_id,
-         'ds' || CAST(doc_id % 3 AS VARCHAR) AS dataset_id,
+         {dataset_id_sql('doc_id')} AS dataset_id,
          CASE WHEN doc_id % 7 = 0 THEN 'unanswerable' ELSE 'answerable' END AS expected_label,
          CASE WHEN (doc_id % 7 = 0 AND doc_id % 3 <> 1)
                 OR (doc_id % 11 = 5 AND doc_id % 7 <> 0)
@@ -1649,23 +1615,20 @@ def _groundedness_reasons_sql() -> str:
     # except the 0.5 coverage compare (DOUBLE-cast single division).
     from earcrawler_spark.operators.citation import normalize_section_full_sql
 
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
     sec_norm = (
         "CASE WHEN upper(m) LIKE 'EAR-%' THEN split_part(m, '#', 1) "
         "ELSE 'EAR-' || split_part(m, '#', 1) END"
     )
     norm_full = normalize_section_full_sql("raw")
-    sec_d = sec.format(x="doc_id")
-    sec_d13 = sec.format(x="doc_id + 13")
-    body = ("CAST(doc_id % 37 + 700 AS VARCHAR) || '.' "
-            "|| CAST(doc_id % 7 + 1 AS VARCHAR)")
+    sec_d = section_id_sql("doc_id")
+    sec_d13 = section_id_sql("doc_id + 13")
+    body = section_body_sql("doc_id")
     cit_tok = _tok_rows_sql("scored_cit", "cit_idx", "q")
     claim_tok = _tok_rows_sql("decisive0", "claim_idx", "claim")
     return f"""
 WITH items AS (
   SELECT doc_id AS item_id,
-         'ds' || CAST(doc_id % 3 AS VARCHAR) AS dataset_id,
+         {dataset_id_sql('doc_id')} AS dataset_id,
          CASE WHEN doc_id % 7 = 0 THEN 'unanswerable' ELSE 'answerable' END AS label
   FROM documents
 ), context AS (
@@ -1883,19 +1846,13 @@ def q_citation_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def sec(x):
-        return F.concat(
-            F.lit("EAR-"), (x % 37 + 700).cast("string"),
-            F.lit("."), (x % 7 + 1).cast("string"),
-        )
-
-    corpus = docs.select(sec(d).alias("ref_sec")).distinct()
+    corpus = docs.select(section_id(d).alias("ref_sec")).distinct()
 
     gt_rows = docs.select(
         d.alias("item_id"),
         F.explode(
             F.filter(
-                F.array(sec(d), F.when(d % 4 == 0, sec(d + 1))),
+                F.array(section_id(d), F.when(d % 4 == 0, section_id(d + 1))),
                 lambda x: x.isNotNull(),
             )
         ).alias("gsec"),
@@ -1905,8 +1862,8 @@ def q_citation_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.filter(
                 F.array(
-                    sec(d), sec(d + 7),
-                    F.when((d % 4 == 0) & (d % 6 != 0), sec(d + 1)),
+                    section_id(d), section_id(d + 7),
+                    F.when((d % 4 == 0) & (d % 6 != 0), section_id(d + 1)),
                 ),
                 lambda x: x.isNotNull(),
             )
@@ -1917,8 +1874,8 @@ def q_citation_regressions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.filter(
                 F.array(
-                    F.when(d % 13 == 0, sec(d + 5)).otherwise(sec(d)),
-                    F.when((d % 4 == 0) & (d % 13 != 0), sec(d + 1)),
+                    F.when(d % 13 == 0, section_id(d + 5)).otherwise(section_id(d)),
+                    F.when((d % 4 == 0) & (d % 13 != 0), section_id(d + 1)),
                     F.when(d % 17 == 0, F.lit("EAR-740.9(a)(2)")),
                     F.when(d % 19 == 0, F.lit("")),
                     F.when(d % 23 == 0, F.lit("EAR-999.99")),
@@ -2056,12 +2013,10 @@ def _citation_regressions_sql() -> str:
     # single divisions, CASE-concat + ltrim code list (no aggregate lists)
     from earcrawler_spark.operators.citation import normalize_section_full_sql
 
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    s0 = sec.format(x="doc_id")
-    s1 = sec.format(x="doc_id + 1")
-    s5 = sec.format(x="doc_id + 5")
-    s7 = sec.format(x="doc_id + 7")
+    s0 = section_id_sql("doc_id")
+    s1 = section_id_sql("doc_id + 1")
+    s5 = section_id_sql("doc_id + 5")
+    s7 = section_id_sql("doc_id + 7")
     norm = normalize_section_full_sql("raw")
     reserved = ", ".join(f"'{s}'" for s in RESERVED_OR_INVALID_SECTION_IDS)
     return f"""
@@ -2203,29 +2158,21 @@ def q_id_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def num(x):
-        return F.concat(
-            (x % 37 + 700).cast("string"), F.lit("."), (x % 7 + 1).cast("string")
-        )
-
-    def base(x):
-        return F.concat(F.lit("EAR-"), num(x))
-
     def ref(field, raw):
         return F.struct(F.lit(field).alias("field"), raw.alias("raw"))
 
     refs = (
         docs.select(
             d.alias("item_id"),
-            F.concat(F.lit("ds"), (d % 3).cast("string")).alias("dataset_id"),
+            dataset_id(d).alias("dataset_id"),
             F.filter(
                 F.array(
-                    ref("ear_sections", base(d)),
-                    F.when(d % 3 == 0, ref("ear_sections", F.concat(F.lit("§ "), num(d + 1)))),
+                    ref("ear_sections", section_id(d)),
+                    F.when(d % 3 == 0, ref("ear_sections", F.concat(F.lit("§ "), section_body(d + 1)))),
                     F.when(d % 11 == 0, ref("ear_sections", F.lit("not a section"))),
-                    F.when(d % 4 == 0, ref("expected.citations", F.concat(F.lit("15 CFR "), num(d + 2)))),
+                    F.when(d % 4 == 0, ref("expected.citations", F.concat(F.lit("15 CFR "), section_body(d + 2)))),
                     F.when(d % 13 == 0, ref("expected.citations", F.lit("EAR-"))),
-                    F.when(d % 5 == 0, ref("evidence.doc_spans.span_id", F.concat(base(d + 3), F.lit("(B)")))),
+                    F.when(d % 5 == 0, ref("evidence.doc_spans.span_id", F.concat(section_id(d + 3), F.lit("(B)")))),
                     F.when(d % 17 == 0, ref("evidence.doc_spans.doc_id", F.lit("part XIV"))),
                 ),
                 lambda x: x.isNotNull(),
@@ -2478,9 +2425,7 @@ def _id_consistency_sql() -> str:
     from earcrawler_spark.operators.id_consistency import SECTION_IRI_PREFIX
     from earcrawler_spark.queries_schema import normalize_ear_section_sql
 
-    num = ("CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    nd, nd1, nd2, nd3 = (num.format(x=f"doc_id + {k}") for k in range(4))
+    nd, nd1, nd2, nd3 = (section_body_sql(f"doc_id + {k}") for k in range(4))
     norm = normalize_ear_section_sql("raw")
     norm_enc = normalize_ear_section_sql(
         "replace(replace(replace(encoded, '%28', '('), '%29', ')'), '%2E', '.')"
@@ -2489,6 +2434,7 @@ def _id_consistency_sql() -> str:
         "t0 || '.' || t1 || CASE WHEN t2 <> '' THEN '(' || lower(t2) || ')' ELSE '' END"
     )
     pre = SECTION_IRI_PREFIX
+    ds = dataset_id_sql("doc_id")
     sec = ("'EAR-' || CAST(p + 700 AS VARCHAR) || '.' || CAST(m AS VARCHAR) "
            "|| CASE WHEN t = 1 THEN '(b)' ELSE '' END")
     tok = ("'ear:s_' || CAST(p + 700 AS VARCHAR) || '_' || CAST(m AS VARCHAR) "
@@ -2500,20 +2446,20 @@ def _id_consistency_sql() -> str:
     expected_iri = f"'{pre}' || replace(replace(s.sec, '(', '%28'), ')', '%29')"
     return f"""
 WITH refs AS (
-  SELECT doc_id AS item_id, 'ds' || CAST(doc_id % 3 AS VARCHAR) AS dataset_id,
+  SELECT doc_id AS item_id, {ds} AS dataset_id,
          'ear_sections' AS field, 'EAR-' || {nd} AS raw FROM documents
-  UNION ALL SELECT doc_id, 'ds' || CAST(doc_id % 3 AS VARCHAR),
+  UNION ALL SELECT doc_id, {ds},
          'ear_sections', '§ ' || {nd1} FROM documents WHERE doc_id % 3 = 0
-  UNION ALL SELECT doc_id, 'ds' || CAST(doc_id % 3 AS VARCHAR),
+  UNION ALL SELECT doc_id, {ds},
          'ear_sections', 'not a section' FROM documents WHERE doc_id % 11 = 0
-  UNION ALL SELECT doc_id, 'ds' || CAST(doc_id % 3 AS VARCHAR),
+  UNION ALL SELECT doc_id, {ds},
          'expected.citations', '15 CFR ' || {nd2} FROM documents WHERE doc_id % 4 = 0
-  UNION ALL SELECT doc_id, 'ds' || CAST(doc_id % 3 AS VARCHAR),
+  UNION ALL SELECT doc_id, {ds},
          'expected.citations', 'EAR-' FROM documents WHERE doc_id % 13 = 0
-  UNION ALL SELECT doc_id, 'ds' || CAST(doc_id % 3 AS VARCHAR),
+  UNION ALL SELECT doc_id, {ds},
          'evidence.doc_spans.span_id', 'EAR-' || {nd3} || '(B)'
          FROM documents WHERE doc_id % 5 = 0
-  UNION ALL SELECT doc_id, 'ds' || CAST(doc_id % 3 AS VARCHAR),
+  UNION ALL SELECT doc_id, {ds},
          'evidence.doc_spans.doc_id', 'part XIV' FROM documents WHERE doc_id % 17 = 0
 ), normalized AS (
   SELECT item_id, dataset_id, field, {norm} AS norm FROM refs

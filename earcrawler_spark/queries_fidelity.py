@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.fixture_vocab import BM25_QUERY
 from earcrawler_spark.session import cached, shared_frame, table
 
 CHUNK_MAX_CHARS = 400
@@ -1300,7 +1301,6 @@ def q_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lexical⊕length variant for comparison."""
     from earcrawler_spark.operators.ranking import bm25_scores, rrf_fuse, topk_ranked
     from earcrawler_spark.operators.similarity import cosine
-    from earcrawler_spark.queries import BM25_QUERY
 
     docs = table(spark, sf_dir, "documents")
     bm25 = bm25_scores(docs, BM25_QUERY, k=50).select("doc_id", "rank")
@@ -1324,7 +1324,6 @@ def q_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rrf_hybrid_sql() -> str:
     from earcrawler_spark.operators.ranking import bm25_sql
-    from earcrawler_spark.queries import BM25_QUERY
 
     return f"""
 WITH bm25 AS (

@@ -32,6 +32,12 @@ from earcrawler_spark.operators.citation import (
     extract_targets,
     targets_sql,
 )
+from earcrawler_spark.fixture_vocab import (
+    dataset_id,
+    dataset_id_sql,
+    section_id,
+    section_id_sql,
+)
 from earcrawler_spark.session import shared_frame, shared_output, table
 
 RAG_QUERIES: dict = {}
@@ -73,12 +79,7 @@ def _rag_metadata(docs: DataFrame) -> DataFrame:
     string forms exercising the exact/child/opaque branches, chunk
     kind/ordinal, and as-of temporal lineage fields."""
     d = F.col("doc_id")
-    sec_base = F.concat(
-        F.lit("EAR-"),
-        (d % 37 + 700).cast("string"),
-        F.lit("."),
-        (d % 7 + 1).cast("string"),
-    )
+    sec_base = section_id(d)
     sec_eff = F.when(d % 11 == 3, F.concat(sec_base, F.lit("(b)"))).otherwise(
         sec_base
     )
@@ -108,12 +109,11 @@ def _rag_metadata(docs: DataFrame) -> DataFrame:
     )
 
 
-_SQL_META = """
+_SQL_META = f"""
   SELECT doc_id AS row_id,
-         'EAR-' || CAST(doc_id % 37 + 700 AS VARCHAR) || '.' || CAST(doc_id % 7 + 1 AS VARCHAR) AS sec_base,
-         CASE WHEN doc_id % 11 = 3
-              THEN 'EAR-' || CAST(doc_id % 37 + 700 AS VARCHAR) || '.' || CAST(doc_id % 7 + 1 AS VARCHAR) || '(b)'
-              ELSE 'EAR-' || CAST(doc_id % 37 + 700 AS VARCHAR) || '.' || CAST(doc_id % 7 + 1 AS VARCHAR) END AS sec_eff,
+         {section_id_sql('doc_id')} AS sec_base,
+         CASE WHEN doc_id % 11 = 3 THEN {section_id_sql('doc_id')} || '(b)'
+              ELSE {section_id_sql('doc_id')} END AS sec_eff,
          CASE WHEN doc_id % 17 = 0 THEN NULL
               ELSE DATE '2020-01-01' + CAST(doc_id % 300 AS INT) END AS snapshot_date,
          CASE WHEN doc_id % 4 = 1 THEN DATE '2020-04-01' + CAST(doc_id % 120 AS INT) END AS effective_from,
@@ -566,18 +566,10 @@ def section_ref_groups(docs: DataFrame) -> DataFrame:
     classes)."""
     d = F.col("doc_id")
 
-    def sec(col):
-        return F.concat(
-            F.lit("EAR-"),
-            (col % 37 + 700).cast("string"),
-            F.lit("."),
-            (col % 7 + 1).cast("string"),
-        )
-
     return docs.select(
-        sec(d + 17).alias("parent"),
+        section_id(d + 17).alias("parent"),
         F.when(d % 2 == 0, F.lit("cites")).otherwise(F.lit("amends")).alias("rel"),
-        sec(d).alias("child"),
+        section_id(d).alias("child"),
     ).distinct()
 
 
@@ -588,11 +580,11 @@ def _section_edges(docs: DataFrame) -> DataFrame:
     )
 
 
-_SQL_SECTION_EDGES = """
+_SQL_SECTION_EDGES = f"""
   SELECT DISTINCT
-    'EAR-' || CAST(doc_id % 37 + 700 AS VARCHAR) || '.' || CAST(doc_id % 7 + 1 AS VARCHAR) AS src,
+    {section_id_sql('doc_id')} AS src,
     CASE WHEN doc_id % 2 = 0 THEN 'cites' ELSE 'amends' END AS rel,
-    'EAR-' || CAST((doc_id + 17) % 37 + 700 AS VARCHAR) || '.' || CAST((doc_id + 17) % 7 + 1 AS VARCHAR) AS dst
+    {section_id_sql('doc_id + 17')} AS dst
   FROM documents
 """
 
@@ -817,21 +809,13 @@ def q_citation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def sec(x):
-        return F.concat(
-            F.lit("EAR-"),
-            (x % 37 + 700).cast("string"),
-            F.lit("."),
-            (x % 7 + 1).cast("string"),
-        )
-
     gt = F.when(d % 13 == 0, F.array().cast("array<string>")).otherwise(
         F.array_distinct(
             F.filter(
                 F.array(
-                    sec(d),
-                    F.when(d % 2 == 0, sec(d + 5)),
-                    F.when(d % 3 == 0, sec(d + 11)),
+                    section_id(d),
+                    F.when(d % 2 == 0, section_id(d + 5)),
+                    F.when(d % 3 == 0, section_id(d + 11)),
                 ),
                 lambda x: x.isNotNull(),
             )
@@ -841,9 +825,9 @@ def q_citation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_distinct(
             F.filter(
                 F.array(
-                    F.when(d % 4 != 1, sec(d)),
-                    F.when(d % 5 == 0, sec(d + 5)),
-                    F.when(d % 6 == 0, sec(d + 23)),
+                    F.when(d % 4 != 1, section_id(d)),
+                    F.when(d % 5 == 0, section_id(d + 5)),
+                    F.when(d % 6 == 0, section_id(d + 23)),
                 ),
                 lambda x: x.isNotNull(),
             )
@@ -879,27 +863,20 @@ def q_citation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("item_id")
 
 
-def _sec_sql(x: str) -> str:
-    return (
-        f"'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-        f"|| CAST(({x}) % 7 + 1 AS VARCHAR)"
-    )
-
-
 _SQL_CITATION_METRICS = f"""
 WITH items AS (
   SELECT doc_id AS item_id,
          CASE WHEN doc_id % 13 = 0 THEN CAST([] AS VARCHAR[])
               ELSE list_distinct(list_filter([
-                {_sec_sql('doc_id')},
-                CASE WHEN doc_id % 2 = 0 THEN {_sec_sql('doc_id + 5')} END,
-                CASE WHEN doc_id % 3 = 0 THEN {_sec_sql('doc_id + 11')} END
+                {section_id_sql('doc_id')},
+                CASE WHEN doc_id % 2 = 0 THEN {section_id_sql('doc_id + 5')} END,
+                CASE WHEN doc_id % 3 = 0 THEN {section_id_sql('doc_id + 11')} END
               ], x -> x IS NOT NULL)) END AS gt,
          CASE WHEN doc_id % 11 = 0 THEN CAST([] AS VARCHAR[])
               ELSE list_distinct(list_filter([
-                CASE WHEN doc_id % 4 <> 1 THEN {_sec_sql('doc_id')} END,
-                CASE WHEN doc_id % 5 = 0 THEN {_sec_sql('doc_id + 5')} END,
-                CASE WHEN doc_id % 6 = 0 THEN {_sec_sql('doc_id + 23')} END
+                CASE WHEN doc_id % 4 <> 1 THEN {section_id_sql('doc_id')} END,
+                CASE WHEN doc_id % 5 = 0 THEN {section_id_sql('doc_id + 5')} END,
+                CASE WHEN doc_id % 6 = 0 THEN {section_id_sql('doc_id + 23')} END
               ], x -> x IS NOT NULL)) END AS pred
   FROM documents
 ), scored AS (
@@ -1232,12 +1209,6 @@ def q_multihop_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def sec(x):
-        return F.concat(
-            F.lit("EAR-"), (x % 37 + 700).cast("string"),
-            F.lit("."), (x % 7 + 1).cast("string"),
-        )
-
     ctx = _rag_context_materialized(spark, sf_dir).filter(
         F.col("section_id").isNotNull()
     )
@@ -1264,10 +1235,10 @@ def q_multihop_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     exp_rows = docs.select(
         d.alias("item_id"),
-        F.concat(F.lit("ds"), (d % 3).cast("string")).alias("dataset_id"),
+        dataset_id(d).alias("dataset_id"),
         F.explode(
             F.filter(
-                F.array(sec(d), sec(d + 1), F.when(d % 4 == 0, sec(d + 2))),
+                F.array(section_id(d), section_id(d + 1), F.when(d % 4 == 0, section_id(d + 2))),
                 lambda x: x.isNotNull(),
             )
         ).alias("esec"),
@@ -1318,11 +1289,9 @@ def q_multihop_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _multihop_ablation_sql() -> str:
     # version-stable SQL: counts + single DOUBLE divisions, UNION ALL
     # rollup, unnest fixture — nothing DuckDB-version-sensitive
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    s0 = sec.format(x="doc_id")
-    s1 = sec.format(x="doc_id + 1")
-    s2 = sec.format(x="doc_id + 2")
+    s0 = section_id_sql("doc_id")
+    s1 = section_id_sql("doc_id + 1")
+    s2 = section_id_sql("doc_id + 2")
     rag_sql = _rag_context_sql().rstrip()
     return f"""
 WITH rag AS ({rag_sql}),
@@ -1347,7 +1316,7 @@ h1 AS (
 ), exp_rows AS (
   SELECT item_id, dataset_id, esec FROM (
     SELECT doc_id AS item_id,
-           'ds' || CAST(doc_id % 3 AS VARCHAR) AS dataset_id,
+           {dataset_id_sql('doc_id')} AS dataset_id,
            unnest([{s0}, {s1},
                    CASE WHEN doc_id % 4 = 0 THEN {s2} END]) AS esec
     FROM documents) WHERE esec IS NOT NULL
@@ -1416,18 +1385,12 @@ def q_kg_expansion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def sec(x):
-        return F.concat(
-            F.lit("EAR-"), (x % 37 + 700).cast("string"),
-            F.lit("."), (x % 7 + 1).cast("string"),
-        )
-
     corpus = docs.select(
-        sec(d).alias("section_raw"),
+        section_id(d).alias("section_raw"),
         F.concat(F.lit("rec-"), F.lpad(d.cast("string"), 6, "0")).alias("rec_id"),
-        F.concat(F.lit("Part "), sec(d)).alias("title"),
+        F.concat(F.lit("Part "), section_id(d)).alias("title"),
         F.col("text"),
-        F.concat(F.lit("https://ecfr.example/"), sec(d)).alias("source_url"),
+        F.concat(F.lit("https://ecfr.example/"), section_id(d)).alias("source_url"),
     )
     ref_groups = section_ref_groups(docs).select("parent", "child").distinct()
     manifest_hints = spark.createDataFrame(
@@ -1436,7 +1399,7 @@ def q_kg_expansion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = docs.filter(d % 3 == 0).select(
         d.alias("item_id"),
         F.filter(
-            F.array(sec(d), F.when(d % 5 == 0, F.lit("EAR-999.99"))),
+            F.array(section_id(d), F.when(d % 5 == 0, F.lit("EAR-999.99"))),
             lambda x: x.isNotNull(),
         ).alias("ear_sections"),
         F.array(F.concat(F.lit("node-"), (d % 5).cast("string"))).alias("kg_nodes"),
@@ -1447,7 +1410,7 @@ def q_kg_expansion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: x.isNotNull(),
         ).alias("kg_paths"),
         F.filter(
-            F.array(F.when(d % 4 == 0, F.concat(sec(d + 3), F.lit("#p0001")))),
+            F.array(F.when(d % 4 == 0, F.concat(section_id(d + 3), F.lit("#p0001")))),
             lambda x: x.isNotNull(),
         ).alias("span_ids"),
     )
@@ -1457,11 +1420,9 @@ def q_kg_expansion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_expansion_sql() -> str:
     from earcrawler_spark.operators.citation import normalize_section_full_sql
 
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    sec_d = sec.format(x="doc_id")
-    sec_d17 = sec.format(x="doc_id + 17")
-    sec_d3 = sec.format(x="doc_id + 3")
+    sec_d = section_id_sql("doc_id")
+    sec_d17 = section_id_sql("doc_id + 17")
+    sec_d3 = section_id_sql("doc_id + 3")
     norm_raw = normalize_section_full_sql("section_raw")
     norm_s = normalize_section_full_sql("s")
     return f"""
@@ -1566,9 +1527,7 @@ def q_citation_scores_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(tp_i / (tp_i + fp_i))
     r_i = F.when(gt_i == 0, F.lit(1.0)).otherwise(tp_i / gt_i)
     d = per.select(
-        F.concat(F.lit("ds"), (F.col("item_id") % 3).cast("string")).alias(
-            "dataset_id"
-        ),
+        dataset_id(F.col("item_id")).alias("dataset_id"),
         "tp", "fp", "fn",
         p_i.alias("_p"), r_i.alias("_r"),
         ((tp_i + fp_i + fn_i) > 0).cast("int").alias("_nz"),
@@ -1616,7 +1575,7 @@ def q_citation_scores_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_CITATION_AGG = f"""
 WITH base AS ({_SQL_CITATION_METRICS.replace("ORDER BY item_id", "")}),
 d AS (
-  SELECT 'ds' || CAST(item_id % 3 AS VARCHAR) AS dataset_id, tp, fp, fn,
+  SELECT {dataset_id_sql('item_id')} AS dataset_id, tp, fp, fn,
          CASE WHEN tp + fp = 0
               THEN CASE WHEN tp + fn = 0 THEN CAST(1.0 AS DOUBLE)
                         ELSE CAST(0.0 AS DOUBLE) END

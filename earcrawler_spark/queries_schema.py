@@ -27,6 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from earcrawler_spark.fixture_vocab import (
+    dataset_id,
+    dataset_id_sql,
+    section_body,
+    section_body_sql,
+    section_id,
+    section_id_sql,
+)
 from earcrawler_spark.functions.iri import ENTITY_NS, RESOURCE_NS
 from earcrawler_spark.session import table
 
@@ -48,19 +56,6 @@ LEGACY_NS_LIST = [
     "https://example.org/entity#",
     "http://example.org/ear/",
 ]
-
-
-def _sec(x):
-    return F.concat(
-        F.lit("EAR-"), (x % 37 + 700).cast("string"),
-        F.lit("."), (x % 7 + 1).cast("string"),
-    )
-
-
-def _body(x):
-    return F.concat(
-        (x % 37 + 700).cast("string"), F.lit("."), (x % 7 + 1).cast("string")
-    )
 
 
 def validate_items(
@@ -203,20 +198,20 @@ def _fixture_items(docs: DataFrame) -> DataFrame:
     """Deterministic eval items with seeded violations of every rule."""
     d = F.col("doc_id")
     return docs.select(
-        F.concat(F.lit("ds"), (d % 3).cast("string")).alias("dataset_id"),
+        dataset_id(d).alias("dataset_id"),
         d.alias("line"),
         F.when(d % 23 == 0, F.lit("")).otherwise(
             F.concat(F.lit("item-"), d.cast("string"))
         ).alias("id"),
         F.when(d % 29 == 0, F.lit("")).otherwise(
-            F.concat(F.lit("Does "), _sec(d), F.lit(" apply?"))
+            F.concat(F.lit("Does "), section_id(d), F.lit(" apply?"))
         ).alias("question"),
         F.when(d % 31 == 0, F.lit(None).cast("string")).otherwise(
             F.lit("It applies.")
         ).alias("answer_text"),
         F.filter(
             F.array(
-                _sec(d),
+                section_id(d),
                 F.when(d % 8 == 0, F.lit("EAR-9999.1")),
                 F.when(d % 10 == 0, F.lit("EAR-736")),
             ),
@@ -224,7 +219,7 @@ def _fixture_items(docs: DataFrame) -> DataFrame:
         ).alias("ear_sections"),
         F.filter(
             F.array(
-                F.struct(_sec(d).alias("doc_id"), _body(d).alias("span_id")),
+                F.struct(section_id(d).alias("doc_id"), section_body(d).alias("span_id")),
                 F.when(
                     d % 6 == 0,
                     F.struct(
@@ -236,12 +231,12 @@ def _fixture_items(docs: DataFrame) -> DataFrame:
                     d % 12 == 0,
                     F.struct(
                         F.concat(F.lit("D"), d.cast("string")).alias("doc_id"),
-                        _body(d).alias("span_id"),
+                        section_body(d).alias("span_id"),
                     ),
                 ),
                 F.when(
                     d % 15 == 0,
-                    F.struct(_sec(d).alias("doc_id"),
+                    F.struct(section_id(d).alias("doc_id"),
                              F.lit("weird span").alias("span_id")),
                 ),
             ),
@@ -292,9 +287,9 @@ def q_eval_schema_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the next one; entity nodes e0..e6; paths path-0..2 (path-3 is the
     # seeded unregistered value)
     manifest_spans = (
-        docs.select(_sec(d).alias("mdoc_id"), _body(d).alias("mspan_id"))
+        docs.select(section_id(d).alias("mdoc_id"), section_body(d).alias("mspan_id"))
         .unionByName(
-            docs.select(_sec(d).alias("mdoc_id"), _body(d + 1).alias("mspan_id"))
+            docs.select(section_id(d).alias("mdoc_id"), section_body(d + 1).alias("mspan_id"))
         )
         .distinct()
         .localCheckpoint()
@@ -310,18 +305,14 @@ def q_eval_schema_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _schema_sql() -> str:
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    body = ("CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-            "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    sec_d, body_d = sec.format(x="doc_id"), body.format(x="doc_id")
-    body_d1 = body.format(x="doc_id + 1")
+    sec_d, body_d = section_id_sql("doc_id"), section_body_sql("doc_id")
+    body_d1 = section_body_sql("doc_id + 1")
     node_ns = RESOURCE_NS + "ear/entity/"
     legacy = " OR ".join(f"n LIKE '{ns}%'" for ns in LEGACY_NS_LIST)
     e_legacy = " OR ".join(f"e LIKE '{ns}%'" for ns in LEGACY_NS_LIST)
     return f"""
 WITH items AS (
-  SELECT 'ds' || CAST(doc_id % 3 AS VARCHAR) AS dataset_id,
+  SELECT {dataset_id_sql('doc_id')} AS dataset_id,
          doc_id AS line,
          CASE WHEN doc_id % 23 = 0 THEN '' ELSE 'item-' || CAST(doc_id AS VARCHAR) END AS id,
          CASE WHEN doc_id % 29 = 0 THEN '' ELSE 'Does ' || {sec_d} || ' apply?' END AS question,
@@ -556,8 +547,8 @@ def q_llm_output_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
-    sec_d, sec_d1 = _sec(d), _sec(d + 1)
-    body_d = _body(d)
+    sec_d, sec_d1 = section_id(d), section_id(d + 1)
+    body_d = section_body(d)
 
     entries = docs.select(
         d.alias("item_id"),
@@ -685,13 +676,9 @@ def _llm_output_sql() -> str:
         REQUIRED_KEYS,
     )
 
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    body = ("CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-            "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    sd = sec.format(x="doc_id")
-    sd1 = sec.format(x="doc_id + 1")
-    bd = body.format(x="doc_id")
+    sd = section_id_sql("doc_id")
+    sd1 = section_id_sql("doc_id + 1")
+    bd = section_body_sql("doc_id")
     allowed_keys = ", ".join(f"'{k}'" for k in REQUIRED_KEYS + OPTIONAL_KEYS)
     required_keys = ", ".join(f"'{k}'" for k in REQUIRED_KEYS)
     labels = ", ".join(f"'{v}'" for v in ALLOWED_LABELS)
@@ -1036,7 +1023,7 @@ def q_snapshot_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(d % 23 == 0, F.lit(""))
         .when(d % 19 == 0, F.lit("part x"))
         .when(d % 17 == 0, F.lit(None).cast("string"))
-        .otherwise(_sec(d % 101))  # 101 > 37x7 classes -> duplicates seeded
+        .otherwise(section_id(d % 101))  # 101 > 37x7 classes -> duplicates seeded
     )
     text = (
         F.when(d % 29 == 0, F.lit(None).cast("string"))
@@ -1075,9 +1062,7 @@ def q_snapshot_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _snapshot_sql() -> str:
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    sd = sec.format(x="doc_id % 101")
+    sd = section_id_sql("doc_id % 101")
     norm = normalize_ear_section_sql("section_id")
     return f"""
 WITH snap AS (
@@ -1273,7 +1258,7 @@ def q_egress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     question = F.concat(
-        F.lit("Does section "), _sec(d),
+        F.lit("Does section "), section_id(d),
         F.lit(" apply?  \r\nContact j.doe@example.com for detail\t\r\n\r\n"),
     )
     sysmsg = F.lit("You are an export-control assistant.")
@@ -1307,9 +1292,7 @@ def q_egress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _egress_sql() -> str:
     from earcrawler_spark.functions.text import pii_scrub_sql
 
-    sec = ("'EAR-' || CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    sd = sec.format(x="doc_id")
+    sd = section_id_sql("doc_id")
 
     def norm(expr):
         n1 = f"regexp_replace({expr}, '\\r\\n|\\r', chr(10), 'g')"
@@ -1514,14 +1497,6 @@ def q_trace_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
 
-    def num(x):
-        return F.concat(
-            (x % 37 + 700).cast("string"), F.lit("."), (x % 7 + 1).cast("string")
-        )
-
-    def sec(x):
-        return F.concat(F.lit("EAR-"), num(x))
-
     answerable = (d % 4 == 0) | (d % 4 == 1)
     label = (
         F.when(d % 4 == 0, F.lit("export_controlled"))
@@ -1537,7 +1512,7 @@ def q_trace_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(
                 has_q,
                 F.struct(
-                    sec(d).alias("section_id"),
+                    section_id(d).alias("section_id"),
                     F.concat(F.lit("alpha "), d.cast("string")).alias("quote"),
                     F.concat(F.lit("https://s/"), d.cast("string")).alias(
                         "source_url"
@@ -1548,7 +1523,7 @@ def q_trace_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(
                 has_q & (d % 2 == 0),
                 F.struct(
-                    F.concat(F.lit("§ "), num(d + 1)).alias("section_id"),
+                    F.concat(F.lit("§ "), section_body(d + 1)).alias("section_id"),
                     F.lit("beta").alias("quote"),
                     ns.alias("source_url"),
                     nd.alias("score"),
@@ -1608,7 +1583,7 @@ def q_trace_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cit = F.filter(
         F.array(
             F.struct(
-                sec(d).alias("section_id"), F.lit("z").alias("quote"),
+                section_id(d).alias("section_id"), F.lit("z").alias("quote"),
                 F.lit("s1").alias("span_id"), F.lit("faiss").alias("source"),
             ),
             F.when(
@@ -1633,7 +1608,7 @@ def q_trace_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(
             F.struct(
                 F.concat(F.lit("d"), d.cast("string")).alias("id"),
-                sec(d).alias("section"), F.lit(1.5).alias("score"),
+                section_id(d).alias("section"), F.lit(1.5).alias("score"),
                 F.lit("faiss").alias("source"),
                 F.concat(F.lit("https://u/"), d.cast("string")).alias("url"),
                 F.lit("T").alias("title"),
@@ -1642,7 +1617,7 @@ def q_trace_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 d % 2 == 1,
                 F.struct(
                     F.lit("").alias("id"),
-                    F.concat(F.lit("15 CFR "), num(d + 1)).alias("section"),
+                    F.concat(F.lit("15 CFR "), section_body(d + 1)).alias("section"),
                     nd.alias("score"), F.lit("kg").alias("source"),
                     F.lit("").alias("url"), F.lit("").alias("title"),
                 ),
@@ -1689,7 +1664,7 @@ def q_trace_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sha2(F.concat(F.lit("q"), d.cast("string")), 256)
         ).alias("question_hash"),
         F.when(d % 31 == 0, F.lit("")).otherwise(
-            F.concat(F.lit("Answer for "), sec(d))
+            F.concat(F.lit("Answer for "), section_id(d))
         ).alias("answer_text"),
         label.alias("label"),
         sq.alias("section_quotes"),
@@ -1755,9 +1730,7 @@ def _trace_sql() -> str:
     # explicit CASE comparisons on the reference sort keys (the engine
     # side runs the general normalize/sort operators).  Strings + one
     # sha256 per part — version-stable.
-    num = ("CAST(({x}) % 37 + 700 AS VARCHAR) || '.' "
-           "|| CAST(({x}) % 7 + 1 AS VARCHAR)")
-    numd, numd1 = num.format(x="doc_id"), num.format(x="doc_id + 1")
+    numd, numd1 = section_body_sql("doc_id"), section_body_sql("doc_id + 1")
     di = "CAST(doc_id AS VARCHAR)"
     d1 = "CAST(doc_id + 1 AS VARCHAR)"
     jA = (f"'{{\"quote\":\"alpha ' || {di} || '\",\"score\":0.5,"

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.operators.kg import triple
 from earcrawler_spark.session import table
 
 SHACL_QUERIES: dict = {}
@@ -32,27 +33,24 @@ def _ear_triples(spark: SparkSession, sf_dir: str, seed_violations: bool = True)
         F.concat(F.lit("https://ear.example.org/entity/S"), k.cast("string"))
     )
 
-    def t(s, p, o):
-        return F.struct(s.alias("s"), F.lit(p).alias("p"), o.alias("o"))
-
     ent_spans = F.filter(
         F.array(
-            t(e_iri, "rdf:type", F.lit("ear:Entity")),
+            triple(e_iri, "rdf:type", F.lit("ear:Entity")),
             F.when(
                 ~((k % 23 == 5) & F.lit(seed_violations)),
-                t(e_iri, "ear:name", F.col("s_name")),
+                triple(e_iri, "ear:name", F.col("s_name")),
             ),
             F.when(
                 (k % 29 == 7) & F.lit(seed_violations),
-                t(e_iri, "ear:name", F.concat(F.col("s_name"), F.lit(" DUP"))),
+                triple(e_iri, "ear:name", F.concat(F.col("s_name"), F.lit(" DUP"))),
             ),
-            t(e_iri, "ear:source", F.lit("tradegov")),
-            F.when(k % 2 == 0, t(e_iri, "ear:country", F.concat(F.lit("C"), (k % 5).cast("string")))),
+            triple(e_iri, "ear:source", F.lit("tradegov")),
+            F.when(k % 2 == 0, triple(e_iri, "ear:country", F.concat(F.lit("C"), (k % 5).cast("string")))),
             F.when(
                 (k % 19 == 4) & F.lit(seed_violations),
-                t(e_iri, "ear:country", F.lit("C9")),
+                triple(e_iri, "ear:country", F.lit("C9")),
             ),
-            F.when(k % 3 == 0, t(e_iri, "ear:programs", F.lit("p1,p2"))),
+            F.when(k % 3 == 0, triple(e_iri, "ear:programs", F.lit("p1,p2"))),
         ),
         lambda x: x.isNotNull(),
     )
@@ -68,19 +66,19 @@ def _ear_triples(spark: SparkSession, sf_dir: str, seed_violations: bool = True)
     bad_notation = F.concat(F.lit("x"), j.cast("string"))
     part_spans = F.filter(
         F.array(
-            t(p_iri, "rdf:type", F.lit("ear:Part")),
+            triple(p_iri, "rdf:type", F.lit("ear:Part")),
             F.when(
                 ~((j % 43 == 0) & F.lit(seed_violations)),
-                t(
+                triple(
                     p_iri,
                     "ear:notation",
                     F.when((j % 37 == 0) & F.lit(seed_violations), bad_notation).otherwise(notation),
                 ),
             ),
-            t(p_iri, "ear:title", F.col("p_name")),
+            triple(p_iri, "ear:title", F.col("p_name")),
             F.when(
                 (j % 47 == 0) & F.lit(seed_violations),
-                t(p_iri, "ear:title", F.concat(F.col("p_name"), F.lit(" DUP"))),
+                triple(p_iri, "ear:title", F.concat(F.col("p_name"), F.lit(" DUP"))),
             ),
         ),
         lambda x: x.isNotNull(),

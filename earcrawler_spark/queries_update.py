@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earcrawler_spark.operators.kg import triple
 from earcrawler_spark.session import table
 
 UPDATE_QUERIES: dict = {}
@@ -48,13 +49,10 @@ def _parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _part_node_triples(parts: DataFrame) -> DataFrame:
-    def t(s, p, o):
-        return F.struct(s.alias("s"), F.lit(p).alias("p"), o.alias("o"))
-
     spans = F.array(
-        t(F.col("part_iri"), "rdf:type", F.lit("ear:Part")),
-        t(F.col("part_iri"), "skos:notation", F.col("partno")),
-        t(
+        triple(F.col("part_iri"), "rdf:type", F.lit("ear:Part")),
+        triple(F.col("part_iri"), "skos:notation", F.col("partno")),
+        triple(
             F.col("part_iri"),
             "dct:title",
             F.concat(F.lit("15 CFR Part "), F.col("partno")),
@@ -91,16 +89,13 @@ def _base_graph(parts: DataFrame) -> DataFrame:
 def _update_batch(parts: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(inserts, deletes) for the full upsert batch."""
 
-    def t(s, p, o):
-        return F.struct(s.alias("s"), F.lit(p).alias("p"), o.alias("o"))
-
     anchor_spans = F.array(
-        t(F.col("part_iri"), "ear:hasAnchor", F.col("anch_iri")),
-        t(F.col("anch_iri"), "rdf:type", F.lit("ear:Anchor")),
-        t(F.col("anch_iri"), "ear:anchorDocument", F.col("doc_id")),
-        t(F.col("anch_iri"), "dct:title", F.col("title")),
-        t(F.col("anch_iri"), "dct:source", F.col("src")),
-        t(F.col("anch_iri"), "ear:anchorSnippet", F.col("snippet")),
+        triple(F.col("part_iri"), "ear:hasAnchor", F.col("anch_iri")),
+        triple(F.col("anch_iri"), "rdf:type", F.lit("ear:Anchor")),
+        triple(F.col("anch_iri"), "ear:anchorDocument", F.col("doc_id")),
+        triple(F.col("anch_iri"), "dct:title", F.col("title")),
+        triple(F.col("anch_iri"), "dct:source", F.col("src")),
+        triple(F.col("anch_iri"), "ear:anchorSnippet", F.col("snippet")),
     )
     inserts = _part_node_triples(parts).unionByName(
         parts.select(F.explode(anchor_spans).alias("tr")).select("tr.*")

@@ -136,23 +136,8 @@ def paginated_scan(
 def point_lookup(spark: SparkSession, keys: list[str], fetch_one) -> DataFrame:
     """S2 keyed point lookup: a (small) key list fans out across tasks;
     ``fetch_one(key) -> dict | None`` (missing keys yield no row)."""
-    import json as _json
-
-    import pandas as pd
-
     keys_df = spark.createDataFrame([(k,) for k in sorted(set(keys))], "key string")
-
-    def run(batches):
-        for pdf in batches:
-            out_k, out_j = [], []
-            for k in pdf["key"]:
-                rec = fetch_one(k)
-                if rec is not None:
-                    out_k.append(k)
-                    out_j.append(_json.dumps(rec, sort_keys=True))
-            yield pd.DataFrame({"key": out_k, "record_json": out_j})
-
-    return keys_df.mapInPandas(run, "key string, record_json string")
+    return point_lookup_df(keys_df, fetch_one)
 
 
 def point_lookup_df(keys: DataFrame, fetch_one) -> DataFrame:

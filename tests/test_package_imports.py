@@ -62,3 +62,41 @@ def test_no_unused_imports_in_package():
 
 def test_no_unused_imports_in_tests():
     assert _unused_imports_in(glob.glob(os.path.join(TESTS_DIR, "*.py"))) == []
+
+
+def _duplicate_bodies(sources: dict[str, str], min_len: int = 150) -> list[list[str]]:
+    """Groups (``"<file>:<line> <name>"``) of functions whose bodies, with
+    the docstring stripped, have the same ``ast.dump`` longer than
+    ``min_len`` characters."""
+    by_body: dict[str, list[str]] = {}
+    for filename, source in sorted(sources.items()):
+        for node in ast.walk(ast.parse(source, filename)):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            body = node.body
+            if (body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant)
+                    and isinstance(body[0].value.value, str)):
+                body = body[1:]
+            dump = "".join(ast.dump(stmt) for stmt in body)
+            if len(dump) > min_len:
+                by_body.setdefault(dump, []).append(f"{filename}:{node.lineno} {node.name}")
+    return sorted(sites for sites in by_body.values() if len(sites) > 1)
+
+
+def test_guard_flags_duplicate_body():
+    body = "    n = len(xs)\n    return [x * n + 1 for x in xs if x is not None]\n"
+    planted = {
+        "a.py": f"def f(xs):\n    \"\"\"One.\"\"\"\n{body}",
+        "b.py": f"class C:\n    def g(self, xs):\n{body.replace('    ', '        ')}\n"
+                "def short(xs):\n    return xs\n",
+        "c.py": "def short2(xs):\n    return xs\n",
+    }
+    assert _duplicate_bodies(planted) == [["a.py:1 f", "b.py:2 g"]]
+
+
+def test_no_duplicate_function_bodies_in_package():
+    sources = {}
+    for path in glob.glob(os.path.join(PKG_DIR, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            sources[os.path.relpath(path, REPO_DIR)] = f.read()
+    assert _duplicate_bodies(sources) == []

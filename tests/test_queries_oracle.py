@@ -9,6 +9,23 @@ from earcrawler_spark.queries import ORACLES, QUERIES
 from tests.oracle_harness import compare, duckdb_conn
 
 
+def test_registry_order_and_oracle_keys_are_pinned():
+    """bench.py and scripts/check_oracles.py run rows in registry order, so
+    the family loop that fills QUERIES/ORACLES must keep the order: the
+    sha256 of the newline-joined names, read from the registry before the
+    loop replaced its per-module import ladder."""
+    import hashlib
+
+    def sha(names):
+        return hashlib.sha256("\n".join(names).encode()).hexdigest()
+
+    assert (len(QUERIES), list(QUERIES)[:2], list(QUERIES)[-1]) == (
+        161, ["pricing_summary", "top_revenue_nations"], "bloom_fp_audit")
+    assert sha(QUERIES) == "00946bbc581a7d93214b9b1e1a4b360351835e968953d433643e7ad653f93662"
+    assert sha(sorted(ORACLES)) == (
+        "c9f84fcbb94f2298d77d0796ac51d0310bf9778442f3c33467a396efc666c415")
+
+
 @pytest.fixture(scope="module")
 def con(sf_small):
     return duckdb_conn(sf_small)
