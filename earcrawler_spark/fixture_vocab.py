@@ -5,7 +5,8 @@ from ``documents.doc_id``, and their DuckDB oracles rebuild the same
 strings. Each derivation is written here once, as a Column function for the
 Spark side and as a SQL fragment over a SQL expression for the oracle:
 
-- section body ``<700 + x % 37>.<1 + x % 7>`` (e.g. ``712.3``),
+- part number ``700 + x % 37`` (a 15 CFR part, e.g. ``712``),
+- section body ``<part number>.<1 + x % 7>`` (e.g. ``712.3``),
 - section id ``EAR-`` + section body,
 - dataset id ``ds<x % 3>``.
 
@@ -22,9 +23,13 @@ from pyspark.sql import functions as F
 BM25_QUERY = ["spark", "join", "stream"]
 
 
+def part_number(x: Column) -> Column:
+    return x % 37 + 700
+
+
 def section_body(x: Column) -> Column:
     return F.concat(
-        (x % 37 + 700).cast("string"), F.lit("."), (x % 7 + 1).cast("string")
+        part_number(x).cast("string"), F.lit("."), (x % 7 + 1).cast("string")
     )
 
 
@@ -36,8 +41,12 @@ def dataset_id(x: Column) -> Column:
     return F.concat(F.lit("ds"), (x % 3).cast("string"))
 
 
+def part_number_sql(x: str) -> str:
+    return f"({x}) % 37 + 700"
+
+
 def section_body_sql(x: str) -> str:
-    return f"CAST(({x}) % 37 + 700 AS VARCHAR) || '.' || CAST(({x}) % 7 + 1 AS VARCHAR)"
+    return f"CAST({part_number_sql(x)} AS VARCHAR) || '.' || CAST(({x}) % 7 + 1 AS VARCHAR)"
 
 
 def section_id_sql(x: str) -> str:

@@ -13,7 +13,6 @@ Reference semantics (cited file:line are in /root/reference):
   phone, SSN) then whitespace collapse.
 - content fingerprint:  earCrawler/corpus/identity.py:9-12 — sha256 hex of
   the normalized text (Spark's native ``sha2``; stays in codegen).
-- HTML strip:           api_clients/federalregister_client.py:567-571.
 - ISO-date mining:      earCrawler/rag/temporal.py:34-44.
 
 All of these are pure Column expressions — no Python in the hot path.
@@ -42,11 +41,6 @@ EN_STOPWORDS = (
 def normalize_ws(col: Column) -> Column:
     """Collapse runs of whitespace to single spaces and trim."""
     return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
-def strip_html(col: Column) -> Column:
-    """Drop HTML tags (replace with a space) — federalregister_client.py:567."""
-    return normalize_ws(F.regexp_replace(col, r"<[^>]+>", " "))
 
 
 def extract_fr_citations(col: Column) -> Column:
@@ -127,6 +121,16 @@ def tokens(col: Column, lowercase: bool = True) -> Column:
     return F.filter(F.split(base, TOKEN_SPLIT_PATTERN), lambda t: t != "")
 
 
+def tokens_sql(expr: str) -> str:
+    """``tokens`` as a DuckDB expression over the SQL expression ``expr``."""
+    return f"list_filter(regexp_split_to_array(lower({expr}), '\\s+'), t -> t <> '')"
+
+
+# the oracles' forms of ``tokens(text)`` and of EN_STOPWORDS
+TOKENS_SQL = tokens_sql("text")
+STOPWORDS_SQL = "[" + ",".join(f"'{s}'" for s in EN_STOPWORDS) + "]"
+
+
 BM25_TOKEN_PATTERN = r"[A-Za-z0-9]+(?:\.[A-Za-z0-9]+)*(?:\([A-Za-z0-9]+\))*"
 
 
@@ -188,22 +192,6 @@ def bm25_tokens_sql(expr: str) -> str:
 
 def token_count(col: Column) -> Column:
     return F.size(tokens(col, lowercase=False))
-
-
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """n-gram word shingles as 'w1 w2 w3' strings (array<string>, distinct).
-
-    Built from native array functions: transform over token positions +
-    slice + array_join. No Python.
-    """
-    toks = tokens(col)
-    # positions 1 .. size-n+1; slice(toks, i, n) -> join with spaces
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(0))),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
 
 
 # --- Quality / language heuristics --------------------------------------
@@ -279,7 +267,7 @@ def lang_id(col: Column) -> Column:
 
 def lang_id_sql(expr: str) -> str:
     """The identical profile argmax as DuckDB SQL over ``expr``."""
-    tk = f"list_filter(regexp_split_to_array(lower({expr}), '\\s+'), t -> t <> '')"
+    tk = tokens_sql(expr)
     hit = {
         lang: f"len(list_filter({tk}, t -> t IN ({', '.join(repr(w) for w in words)})))"
         for lang, words in LANG_PROFILES.items()

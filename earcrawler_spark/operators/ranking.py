@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.functions.text import TOKENS_SQL, tokens
 
 K1 = 1.5
 B = 0.75
@@ -107,9 +107,7 @@ def bm25_sql(
     query_terms: list[str], k: int = 20, table: str = "documents",
     tokenizer_sql: str | None = None,
 ) -> str:
-    toks = tokenizer_sql or (
-        "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
-    )
+    toks = tokenizer_sql or TOKENS_SQL
     terms = ", ".join(f"'{t}'" for t in query_terms)
     return f"""
 WITH tok AS (

@@ -153,36 +153,23 @@ def shape_violations(
         F.coalesce("n", F.lit(0)).alias("n"),
         F.coalesce("n_bad", F.lit(0)).alias("n_bad"),
     )
-    # three violation filters re-reference carded — materialize the
-    # O(focus x constrained-props) frame once instead of re-running the
-    # property aggregation per filter
-    carded = carded.localCheckpoint()
-    min_viol = carded.filter(F.col("n") < F.col("min_count")).select(
-        "shape",
-        "focus",
-        F.lit("min_count").alias("violation"),
-        "path",
-        F.concat(F.lit("have "), F.col("n").cast("string")).alias("detail"),
+    # the three per-property checks read ``carded`` once: each yields a
+    # (violation, detail) struct or NULL, exploded into rows
+    n, n_bad = F.col("n"), F.col("n_bad")
+
+    def check(cond, violation, detail):
+        return F.when(cond, F.struct(F.lit(violation).alias("violation"), detail.alias("detail")))
+
+    checks = F.array(
+        check(n < F.col("min_count"), "min_count", F.concat(F.lit("have "), n.cast("string"))),
+        check(
+            F.col("max_count").isNotNull() & (n > F.col("max_count")),
+            "max_count",
+            F.concat(F.lit("have "), n.cast("string")),
+        ),
+        check(n_bad > 0, "value_pattern", F.concat(F.lit("bad "), n_bad.cast("string"))),
     )
-    max_viol = carded.filter(
-        F.col("max_count").isNotNull() & (F.col("n") > F.col("max_count"))
-    ).select(
-        "shape",
-        "focus",
-        F.lit("max_count").alias("violation"),
-        "path",
-        F.concat(F.lit("have "), F.col("n").cast("string")).alias("detail"),
-    )
-    pat_viol = carded.filter(F.col("n_bad") > 0).select(
-        "shape",
-        "focus",
-        F.lit("value_pattern").alias("violation"),
-        "path",
-        F.concat(F.lit("bad "), F.col("n_bad").cast("string")).alias("detail"),
-    )
-    return (
-        node_viol.unionByName(min_viol)
-        .unionByName(max_viol)
-        .unionByName(pat_viol)
-        .orderBy("shape", "focus", "violation", "path")
-    )
+    prop_viol = carded.select(
+        "shape", "focus", "path", F.explode(F.filter(checks, lambda c: c.isNotNull())).alias("c")
+    ).select("shape", "focus", "c.violation", "path", "c.detail")
+    return node_viol.unionByName(prop_viol).orderBy("shape", "focus", "violation", "path")

@@ -8,7 +8,7 @@ expressible in ANSI/DuckDB SQL.
 Families (training-data pipeline requirements):
 - exact dedup        → queries.q_dedup_exact (sha256 groupBy)
 - n-gram Jaccard     → ngram_jaccard_pairs (exact; the oracle of record)
-- MinHash + LSH      → minhash_signatures / lsh_candidate_pairs (the scale
+- MinHash + LSH      → lsh_candidate_pairs (the scale
                        path: banding turns O(n²) pair space into
                        per-band hash-join buckets)
 - SimHash            → simhash64 (bit-vote fingerprint; Hamming buckets)
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from earcrawler_spark.functions.text import tokens, word_shingles
+from earcrawler_spark.functions.text import TOKENS_SQL, tokens
 
 
 # --- n-gram Jaccard (exact) ----------------------------------------------
@@ -38,17 +38,11 @@ def jaccard(a: Column, b: Column) -> Column:
     return inter / (F.size(a) + F.size(b) - inter)
 
 
-def shingle_docs(docs: DataFrame, n: int = 3) -> DataFrame:
-    return docs.select(
-        "doc_id", word_shingles(F.col("text"), n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
 def shingle_rows(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, s) rows of distinct n-gram shingles — the LSH-path form.
 
     posexplode tokens + window lead + concat stays fully JVM-native;
-    the array-building word_shingles HOF evaluates INTERPRETED per doc
+    an array-building transform/slice HOF evaluates INTERPRETED per doc
     and measured ~2x slower at sf0.1 before even paying the explode the
     LSH needs anyway.  The per-doc window is key-partitioned (no global
     sort)."""
@@ -72,53 +66,37 @@ def shingle_rows(docs: DataFrame, n: int = 3) -> DataFrame:
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5) -> DataFrame:
     """Exact all-pairs n-gram Jaccard ≥ threshold.
 
-    O(n²) — the correctness oracle for the LSH path. Scale note: at 100 TB
-    you never run this; LSH candidates + per-pair verification replace it
-    (same output for pairs above the LSH design threshold).
+    The correctness oracle for the LSH path, planned as an inverted
+    index: the (doc, gram) rows equi-join on the gram, the shared grams
+    are counted per pair, and Jaccard comes from the set sizes. Only
+    pairs sharing a gram are ever formed (a zero-overlap pair has
+    Jaccard 0), so the cost follows the grams' document frequencies,
+    not the O(n²) pair space. Scale note: at 100 TB a frequent gram
+    still fans out quadratically; LSH candidates + per-pair verification
+    replace this there (same output for pairs above the LSH design
+    threshold).
     """
-    sh = shingle_docs(docs, n)
-    a, b = sh.alias("a"), sh.alias("b")
+    g = shingle_rows(docs, n)
+    sz = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    a, b = g.alias("a"), g.alias("b")
+    shared = (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    sa = sz.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("na"))
+    sb = sz.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("nb"))
+    c = F.col("c")
     return (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(jaccard(F.col("a.shingles"), F.col("b.shingles")), 6).alias("jaccard"),
-        )
+        shared.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", F.round(c / (F.col("na") + F.col("nb") - c), 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
         .orderBy("doc_a", "doc_b")
     )
 
 
 # --- MinHash + LSH ---------------------------------------------------------
-
-def minhash_signature(shingles: Column, n_hashes: int) -> Column:
-    """array<string> of n_hashes minhash values.
-
-    Four independent 64-bit lanes come out of each sha256: h_i(doc) =
-    min over shingles s of hex-chars [16*(i%4), 16*(i%4)+16) of
-    sha256((i//4) ‖ '|' ‖ s) — 4× less hashing than one digest per
-    permutation, still engine-independent (lexicographic min over hex).
-    Pure Column expressions → codegen'd, no UDF.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                shingles,
-                lambda s: F.substring(
-                    F.sha2(
-                        F.concat((i / 4).cast("int").cast("string"),
-                                 F.lit("|"), s),
-                        256,
-                    ),
-                    (i % 4).cast("int") * 16 + 1,
-                    16,
-                ),
-            )
-        ),
-    )
-
 
 def lsh_candidate_pairs(
     docs: DataFrame, n: int = 3, bands: int = 8, rows: int = 2
@@ -201,10 +179,9 @@ def lsh_candidate_pairs(
 
 def minhash_sql(n: int, bands: int, rows: int, table: str = "documents") -> str:
     """The identical LSH pipeline as DuckDB SQL (oracle of record)."""
-    toks = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
     return f"""
 WITH toks AS (
-  SELECT doc_id, {toks} AS tk FROM {table}
+  SELECT doc_id, {TOKENS_SQL} AS tk FROM {table}
 ), sh AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(len(tk)-{n - 1}, 0)+1),
@@ -417,12 +394,15 @@ def kmeans_train_grouped(
         F.col(id_col).alias("vid"),
         normalize_vec(F.col(vec_col).cast("array<double>")).alias("v"),
     ).persist()  # scanned once per Lloyd round — don't re-normalize each time
+    # init: one bounded collect of the ≤ k smallest ids per group, read
+    # back from ``e`` through a literal filter (a frame of the collected
+    # vectors overflows the rounds' size estimates, and they then plan
+    # runtime bloom filters: 2 more jobs a round)
     rn = F.row_number().over(W.partitionBy("grp").orderBy("vid"))
-    cents = (
-        e.withColumn("rn", rn)
-        .filter(F.col("rn") <= k)
-        .select("grp", F.col("vid").alias("centroid_id"), F.col("v").alias("cv"))
-        .localCheckpoint()
+    init = e.select("grp", "vid").withColumn("rn", rn).filter(F.col("rn") <= k)
+    ids = [F.struct(F.lit(r.grp).alias("grp"), F.lit(r.vid).alias("vid")) for r in init.collect()]
+    cents = e.filter(F.struct("grp", "vid").isin(ids)).select(
+        "grp", F.col("vid").alias("centroid_id"), F.col("v").alias("cv")
     )
     member = F.col("member")
     for _ in range(iters):
@@ -560,101 +540,84 @@ def dedup_clusters(
     groups = th.groupBy("th").agg(
         F.min("doc_id").alias("g_rep"), F.count(F.lit(1)).alias("g_n")
     )
-    member = th.join(groups, "th").select("doc_id", "g_rep", "g_n").cache()
-    cands = sh = None
-    try:
-        rep_docs = docs.join(
-            member.filter(F.col("doc_id") == F.col("g_rep")).select("doc_id"),
-            "doc_id",
-            "left_semi",
-        )
+    member = th.join(groups, "th").select("doc_id", "g_rep", "g_n")
+    rep_docs = docs.join(
+        member.filter(F.col("doc_id") == F.col("g_rep")).select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
 
-        # The candidate set is near-dup-bounded (tiny relative to the corpus)
-        # and feeds three consumers — materialize it once so the LSH pipeline
-        # runs once, and shingle ONLY candidate docs for the verify (the
-        # whole-corpus shingling already happened inside the LSH hash pass;
-        # re-running it corpus-wide for the verify doubled the query cost).
-        cands = lsh_candidate_pairs(rep_docs, n=n, bands=bands, rows=rows).cache()
-        cands.count()
-        cand_ids = cands.select(
-            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-        ).distinct()
-        # candidate-doc shingle sets: native window-lead rows re-assembled
-        # into arrays, cached because BOTH join sides read them (uncached,
-        # the semi-join + shingling subtree ran twice and dominated the
-        # whole verify stage)
-        sh = (
-            shingle_rows(rep_docs.join(cand_ids, "doc_id", "left_semi"), n)
-            .groupBy("doc_id")
-            .agg(F.collect_list("s").alias("shingles"))
-            .cache()
+    # The candidate set is near-dup-bounded (tiny relative to the corpus)
+    # and feeds the verify join and the candidate-doc shingling: pin it so
+    # the LSH pipeline runs once.  Pays at sf0.1: without it the row takes
+    # 1.39x as long (same boot, 3 interleaved runs a side, A/A spread
+    # 0.08).  Shingle ONLY candidate docs for the verify (the whole-corpus
+    # shingling already happened inside the LSH hash pass).
+    cands = lsh_candidate_pairs(rep_docs, n=n, bands=bands, rows=rows).localCheckpoint()
+    cand_ids = cands.select(
+        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+    ).distinct()
+    # candidate-doc shingle sets: native window-lead rows re-assembled
+    # into arrays
+    sh = (
+        shingle_rows(rep_docs.join(cand_ids, "doc_id", "left_semi"), n)
+        .groupBy("doc_id")
+        .agg(F.collect_list("s").alias("shingles"))
+    )
+    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("_sa"))
+    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("_sb"))
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    union = F.size("_sa") + F.size("_sb") - inter
+    verified = (
+        cands.join(a, "doc_a")
+        .join(b, "doc_b")
+        .filter((union > 0) & (inter / union >= threshold))
+        .select("doc_a", "doc_b")
+    )
+    cc = connected_components(verified, src="doc_a", dst="doc_b")
+    # multi-member exact-dup groups whose rep never met another rep form
+    # a component of their own IF the rep is shingle-eligible (≥ n
+    # tokens) — exactly the pairs the uncollapsed graph would have
+    # verified among the identical members.  Shorter docs never shingle,
+    # never become candidates, and stay out — mirroring the uncollapsed
+    # behavior.
+    eligible = rep_docs.select(
+        "doc_id", F.size(tokens(F.col("text"))).alias("_ntok")
+    ).filter(F.col("_ntok") >= n).select("doc_id")
+    self_groups = (
+        member.filter((F.col("doc_id") == F.col("g_rep")) & (F.col("g_n") >= 2))
+        .join(eligible, "doc_id", "left_semi")
+        .join(cc.select(F.col("id").alias("doc_id")), "doc_id", "left_anti")
+        .select(F.col("doc_id").alias("id"), F.col("doc_id").alias("component"))
+    )
+    rep_cc = cc.unionByName(self_groups)
+    # expand rep components back to every member of each text group
+    doc_cc = (
+        member.join(
+            rep_cc.select(F.col("id").alias("g_rep"), "component"), "g_rep"
         )
-        a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("_sa"))
-        b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("_sb"))
-        inter = F.size(F.array_intersect("_sa", "_sb"))
-        union = F.size("_sa") + F.size("_sb") - inter
-        verified = (
-            cands.join(a, "doc_a")
-            .join(b, "doc_b")
-            .filter((union > 0) & (inter / union >= threshold))
-            .select("doc_a", "doc_b")
-        )
-        cc = connected_components(verified, src="doc_a", dst="doc_b")
-        # multi-member exact-dup groups whose rep never met another rep form
-        # a component of their own IF the rep is shingle-eligible (≥ n
-        # tokens) — exactly the pairs the uncollapsed graph would have
-        # verified among the identical members.  Shorter docs never shingle,
-        # never become candidates, and stay out — mirroring the uncollapsed
-        # behavior.
-        eligible = rep_docs.select(
-            "doc_id", F.size(tokens(F.col("text"))).alias("_ntok")
-        ).filter(F.col("_ntok") >= n).select("doc_id")
-        self_groups = (
-            member.filter((F.col("doc_id") == F.col("g_rep")) & (F.col("g_n") >= 2))
-            .join(eligible, "doc_id", "left_semi")
-            .join(cc.select(F.col("id").alias("doc_id")), "doc_id", "left_anti")
-            .select(F.col("doc_id").alias("id"), F.col("doc_id").alias("component"))
-        )
-        rep_cc = cc.unionByName(self_groups)
-        # expand rep components back to every member of each text group
-        doc_cc = (
-            member.join(
-                rep_cc.select(F.col("id").alias("g_rep"), "component"), "g_rep"
-            )
-            .select(F.col("doc_id").alias("id"), "component")
-        )
-        stats = docs.select(F.col("doc_id").alias("id"), "n_chars")
-        labeled = doc_cc.join(stats, "id")
-        rep = (
-            labeled.select(
-                "component",
-                F.struct(
-                    (-F.col("n_chars")).alias("neg"), F.col("id").alias("rep_id")
-                ).alias("r"),
-            )
-            .groupBy("component")
-            .agg(F.min("r").alias("r"), F.count(F.lit(1)).alias("cluster_size"))
-            .select("component", F.col("r.rep_id").alias("rep_id"), "cluster_size")
-        )
-        out = labeled.join(rep, "component").select(
+        .select(F.col("doc_id").alias("id"), "component")
+    )
+    stats = docs.select(F.col("doc_id").alias("id"), "n_chars")
+    labeled = doc_cc.join(stats, "id")
+    rep = (
+        labeled.select(
             "component",
-            F.col("id").alias("doc_id"),
-            (F.col("id") == F.col("rep_id")).alias("is_rep"),
-            "cluster_size",
+            F.struct(
+                (-F.col("n_chars")).alias("neg"), F.col("id").alias("rep_id")
+            ).alias("r"),
         )
-        # eager localCheckpoint: the output is O(clustered docs), tiny
-        # relative to the corpus, and pinning it lets the finally block
-        # release member/cands/sh immediately — a long-lived session
-        # invoking dedup repeatedly no longer accumulates executor
-        # storage (ADVICE r5 #5)
-        return out.localCheckpoint().orderBy("component", "doc_id")
-    finally:
-        for df in (member, cands, sh):
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+        .groupBy("component")
+        .agg(F.min("r").alias("r"), F.count(F.lit(1)).alias("cluster_size"))
+        .select("component", F.col("r.rep_id").alias("rep_id"), "cluster_size")
+    )
+    out = labeled.join(rep, "component").select(
+        "component",
+        F.col("id").alias("doc_id"),
+        (F.col("id") == F.col("rep_id")).alias("is_rep"),
+        "cluster_size",
+    )
+    return out.orderBy("component", "doc_id")
 
 
 def dedup_clusters_sql(
@@ -666,11 +629,10 @@ def dedup_clusters_sql(
     lsh = minhash_sql(n=n, bands=bands, rows=rows, table=table).replace(
         "ORDER BY doc_a, doc_b", ""
     )
-    toks = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
     return f"""
 WITH cands AS ({lsh}),
 toks2 AS (
-  SELECT doc_id, {toks} AS tk FROM {table}
+  SELECT doc_id, {TOKENS_SQL} AS tk FROM {table}
 ), shset AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(len(tk)-{n - 1}, 0)+1),

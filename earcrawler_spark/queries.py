@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from earcrawler_spark.fixture_vocab import BM25_QUERY
 from earcrawler_spark.functions import text as TXT
+from earcrawler_spark.functions.text import STOPWORDS_SQL, TOKENS_SQL
 from earcrawler_spark.session import table
 
 EVENTS_T0 = "2024-01-15 00:00:00"
@@ -30,8 +31,6 @@ EVENTS_T1 = "2024-01-23 00:00:00"
 SHIP_CUTOFF = "1999-01-01"
 
 # DuckDB-side fragments shared by several oracles (must mirror functions/text.py)
-_STOPWORDS_SQL = "[" + ",".join(f"'{s}'" for s in TXT.EN_STOPWORDS) + "]"
-_TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 _TOKENS_RAW_SQL = "list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> '')"
 
 
@@ -488,7 +487,7 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_TOP_TERMS = f"""
 SELECT term, count(*) AS freq
-FROM (SELECT unnest({_TOKENS_SQL}) AS term FROM documents)
+FROM (SELECT unnest({TOKENS_SQL}) AS term FROM documents)
 GROUP BY term
 ORDER BY freq DESC, term
 LIMIT 50
@@ -539,7 +538,7 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_DOC_QUALITY = f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKENS_SQL} AS tk FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
 ), feats AS (
   SELECT doc_id,
          len(tk) AS n,
@@ -547,7 +546,7 @@ WITH toks AS (
               THEN length(list_aggregate(tk, 'string_agg', '')) * 1.0 / len(tk)
               ELSE 0.0 END AS mean_len,
          CASE WHEN len(tk) > 0
-              THEN len(list_filter(tk, t -> list_contains({_STOPWORDS_SQL}, t))) * 1.0 / len(tk)
+              THEN len(list_filter(tk, t -> list_contains({STOPWORDS_SQL}, t))) * 1.0 / len(tk)
               ELSE 0.0 END AS stop_ratio
   FROM toks
 )
@@ -645,7 +644,7 @@ def q_term_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_COOCCUR = f"""
 WITH tf AS (
   SELECT doc_id, term, count(*) AS tf
-  FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS term FROM documents)
+  FROM (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM documents)
   GROUP BY doc_id, term
 ), dt AS (
   SELECT doc_id, term FROM (
@@ -677,7 +676,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_NGRAM_JACCARD = f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKENS_SQL} AS tk FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
 ), sh AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(len(tk)-2, 0)+1),
@@ -746,12 +745,6 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         50,
     ).select("doc_id", "rank")
     return rrf_fuse(bm25, length_rank, k=20)
-
-
-def _bm25_sql_cte(k: int) -> str:
-    from earcrawler_spark.operators.ranking import bm25_sql
-
-    return bm25_sql(BM25_QUERY, k=k)
 
 
 _SQL_RRF = """
@@ -1070,7 +1063,7 @@ ORACLES["ann_lsh_buckets"] = _SQL_ANN_LSH
 # exactly the Spark pipeline in similarity.simhash_fingerprints.
 _SQL_SIMHASH = f"""
 WITH toks AS (
-  SELECT doc_id, list_distinct({_TOKENS_SQL}) AS tk FROM documents
+  SELECT doc_id, list_distinct({TOKENS_SQL}) AS tk FROM documents
 ), tok AS (
   SELECT doc_id, unnest(tk) AS t FROM toks
 ), h AS (
@@ -1187,7 +1180,10 @@ def q_retrieval_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the three metric rows each re-reference this 1-row aggregate — on
     # the raw plan every reference re-executed both retrieval pipelines
     # (96 Exchange / 54 scans); checkpoint the single row so the dense
-    # and hybrid rankings compute once (guide §3.3 plan truncation)
+    # and hybrid rankings compute once.  Pays at sf0.1: without the pin
+    # the row takes 1.36x as long, and 1.16x with the three rows exploded
+    # from one reference (same boot, 3-4 interleaved runs a side, A/A
+    # spread 0.12-0.18).
     combined = (
         metrics(dense20, "d")
         .crossJoin(metrics(hybrid20, "h"))
@@ -1230,7 +1226,7 @@ def _retrieval_compare_sql() -> str:
     return f"""
 WITH gt AS (
   SELECT doc_id FROM (
-    SELECT doc_id, list_distinct({_TOKENS_SQL}) AS tk FROM documents
+    SELECT doc_id, list_distinct({TOKENS_SQL}) AS tk FROM documents
   ) WHERE {terms_all}
 ), e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.functions.text import TOKENS_SQL, tokens
 from earcrawler_spark.session import table
 
 
@@ -58,7 +58,7 @@ def _classify_sql() -> str:
     return f"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')) AS term
+         unnest({TOKENS_SQL}) AS term
   FROM documents
 ), cls AS (
   SELECT doc_id, term, CASE {cases} ELSE 'OTHER' END AS bucket FROM tok

@@ -493,12 +493,12 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _inverted_index_sql() -> str:
-    from earcrawler_spark.queries_webcur import _TOKENS_SQL
+    from earcrawler_spark.functions.text import TOKENS_SQL
 
     return f"""
 WITH tf AS (
   SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS term FROM documents)
+  FROM (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM documents)
   GROUP BY term, doc_id
 ), stats AS (
   SELECT term, CAST(count(*) AS BIGINT) AS df, CAST(sum(tf) AS BIGINT) AS cf

@@ -27,14 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.functions.text import TOKENS_SQL, tokens, tokens_sql
 from earcrawler_spark.operators.similarity import shingle_rows
 from earcrawler_spark.session import table
 
 CURATION_QUERIES: dict = {}
 CURATION_ORACLES: dict = {}
 
-_TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 
 # --- dataset_split ---------------------------------------------------------
 # First hex byte of sha256(doc_id) → 256 buckets; lexicographic compare on
@@ -93,7 +92,7 @@ WITH tagged AS (
   SELECT CASE WHEN substr(sha256(CAST(doc_id AS VARCHAR)), 1, 2) < '{_TRAIN_HI}' THEN 'train'
               WHEN substr(sha256(CAST(doc_id AS VARCHAR)), 1, 2) < '{_VAL_HI}' THEN 'val'
               ELSE 'test' END AS split,
-         len({_TOKENS_SQL}) AS n_tok, n_chars, lang
+         len({TOKENS_SQL}) AS n_tok, n_chars, lang
   FROM documents
 ), per_split AS (
   SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
@@ -155,7 +154,7 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_DECONTAMINATION = f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKENS_SQL} AS tk FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
 ), sh AS (
   SELECT DISTINCT doc_id, s FROM (
     SELECT doc_id,
@@ -248,8 +247,8 @@ def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_REPETITION = f"""
 WITH tk AS (
   SELECT doc_id, t, CAST(pos AS BIGINT) AS pos FROM (
-    SELECT doc_id, unnest({_TOKENS_SQL}) AS t,
-           generate_subscripts({_TOKENS_SQL}, 1) AS pos
+    SELECT doc_id, unnest({TOKENS_SQL}) AS t,
+           generate_subscripts({TOKENS_SQL}, 1) AS pos
     FROM documents)
 ), wc AS (
   SELECT doc_id, t, count(*) AS c FROM tk GROUP BY doc_id, t
@@ -366,7 +365,7 @@ _SQL_SOURCE_MIX = f"""
 WITH per_src AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          CAST(count(DISTINCT sha256(text)) AS BIGINT) AS distinct_texts,
-         CAST(sum(len({_TOKENS_SQL})) AS BIGINT) AS ws_tokens,
+         CAST(sum(len({TOKENS_SQL})) AS BIGINT) AS ws_tokens,
          round(avg(n_chars), 4) AS avg_chars
   FROM documents GROUP BY source
 ), tot AS (
@@ -444,7 +443,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_WEIGHTED_SAMPLE = f"""
 WITH base AS (
   SELECT source, doc_id,
-         CAST(greatest(len({_TOKENS_SQL}), 1) AS BIGINT) AS w,
+         CAST(greatest(len({TOKENS_SQL}), 1) AS BIGINT) AS w,
          CAST(round(ln(CAST({_hex_int_sql("sha", 8)} + 1 AS DOUBLE)
                        / CAST(4294967296 AS DOUBLE)) * 1000000, 0) AS BIGINT)
              AS l_micro
@@ -551,7 +550,7 @@ def q_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_TOKEN_LENGTH_HISTOGRAM = f"""
 WITH lens AS (
-  SELECT greatest(len({_TOKENS_SQL}), 1) AS n_tok FROM documents
+  SELECT greatest(len({TOKENS_SQL}), 1) AS n_tok FROM documents
 ), b AS (
   SELECT CAST(length(bin(n_tok)) - 1 AS BIGINT) AS bucket_exp,
          CAST(count(*) AS BIGINT) AS n_docs,
@@ -617,7 +616,7 @@ def q_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_TTR_HAPAX = f"""
 WITH tc AS (
   SELECT source, t, CAST(count(*) AS BIGINT) AS c FROM (
-    SELECT source, unnest({_TOKENS_SQL}) AS t FROM documents
+    SELECT source, unnest({TOKENS_SQL}) AS t FROM documents
   ) GROUP BY source, t
 ), per_src AS (
   SELECT source,
@@ -706,7 +705,7 @@ def q_contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CONTAMINATION_BY_SOURCE = f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKENS_SQL} AS tk FROM documents
+  SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
 ), sh AS (
   SELECT DISTINCT doc_id, s FROM (
     SELECT doc_id,
@@ -724,7 +723,7 @@ WITH toks AS (
   FROM tr JOIN ev ON tr.s = ev.s GROUP BY tr.doc_id
 ), per_doc AS (
   SELECT d.source,
-         len({_TOKENS_SQL.replace('text', 'd.text')}) AS n_tok,
+         len({tokens_sql('d.text')}) AS n_tok,
          coalesce(h.hit_shingles, 0) AS hit_shingles,
          CASE WHEN t.n_shingles IS NOT NULL AND coalesce(h.hit_shingles, 0) > 0
               THEN CAST(h.hit_shingles AS DOUBLE) / t.n_shingles

@@ -194,20 +194,49 @@ def q_claims_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("item_id", "claim_idx")
 
 
+def _stem_sql(v: str) -> str:
+    """The one-rule-per-token stemming ladder over SQL expression `v`."""
+    return (
+        f"CASE WHEN len({v}) > 5 AND {v} LIKE '%ing' THEN substr({v}, 1, len({v})-3) "
+        f"WHEN len({v}) > 4 AND {v} LIKE '%ies' THEN substr({v}, 1, len({v})-3) || 'y' "
+        f"WHEN len({v}) > 4 AND {v} LIKE '%ed' THEN substr({v}, 1, len({v})-2) "
+        f"WHEN len({v}) > 4 AND {v} LIKE '%es' THEN substr({v}, 1, len({v})-2) "
+        f"WHEN len({v}) > 4 AND {v} LIKE '%s' AND {v} NOT LIKE '%ss' THEN substr({v}, 1, len({v})-1) "
+        f"ELSE {v} END"
+    )
+
+
+# The DuckDB form of ``extract_claims``' split over an ``answers(item_id,
+# answer)`` CTE: norm → split_parts → cleaned → claims(item_id, claim,
+# claim_idx).  The patterns are the Spark constants above, verbatim.
+_CLAIM_SPLIT_SQL = f"""norm AS (
+  SELECT item_id,
+         regexp_replace(trim(regexp_replace(answer, '\\s+', ' ', 'g')), 'U\\.S\\.?', 'US', 'g') AS t
+  FROM answers
+), split_parts AS (
+  SELECT item_id, pos, raw FROM (
+    SELECT item_id,
+           generate_subscripts(parts, 1) AS pos, unnest(parts) AS raw
+    FROM (SELECT item_id,
+                 regexp_split_to_array(t, '{CLAIM_SPLIT_PATTERN}') AS parts
+          FROM norm))
+), cleaned AS (
+  SELECT item_id, pos,
+         trim(regexp_replace(raw, '{LEADING_VERDICT_PATTERN}', ''), ' ,:') AS claim
+  FROM split_parts
+), claims AS (
+  SELECT item_id, claim,
+         row_number() OVER (PARTITION BY item_id ORDER BY pos) - 1 AS claim_idx
+  FROM cleaned WHERE claim <> ''
+)"""
+_SEC_NORM_SQL = (
+    "CASE WHEN upper(m) LIKE 'EAR-%' THEN split_part(m, '#', 1) "
+    "ELSE 'EAR-' || split_part(m, '#', 1) END"
+)
+
+
 def _claims_sql() -> str:
     stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
-    stem = (
-        "CASE WHEN len(x) > 5 AND x LIKE '%ing' THEN substr(x, 1, len(x)-3) "
-        "WHEN len(x) > 4 AND x LIKE '%ies' THEN substr(x, 1, len(x)-3) || 'y' "
-        "WHEN len(x) > 4 AND x LIKE '%ed' THEN substr(x, 1, len(x)-2) "
-        "WHEN len(x) > 4 AND x LIKE '%es' THEN substr(x, 1, len(x)-2) "
-        "WHEN len(x) > 4 AND x LIKE '%s' AND x NOT LIKE '%ss' THEN substr(x, 1, len(x)-1) "
-        "ELSE x END"
-    )
-    sec_norm = (
-        "CASE WHEN upper(m) LIKE 'EAR-%' THEN split_part(m, '#', 1) "
-        "ELSE 'EAR-' || split_part(m, '#', 1) END"
-    )
     return f"""
 WITH answers AS (
   SELECT doc_id AS item_id,
@@ -218,37 +247,18 @@ WITH answers AS (
          WHEN doc_id % 6 = 4 THEN '   '
          ELSE 'The answer depends on context excerpt ' || CAST(doc_id AS VARCHAR) || '? It is permitted.' END AS answer
   FROM documents
-), norm AS (
-  SELECT item_id,
-         regexp_replace(trim(regexp_replace(answer, '\\s+', ' ', 'g')), 'U\\.S\\.?', 'US', 'g') AS t
-  FROM answers
-), split_parts AS (
-  SELECT item_id, pos, raw FROM (
-    SELECT item_id,
-           generate_subscripts(parts, 1) AS pos, unnest(parts) AS raw
-    FROM (SELECT item_id,
-                 regexp_split_to_array(t, '(?i)\\s*(?:[;!?]+|\\.\\s|\\.$|\\bbut\\b|\\bhowever\\b|\\byet\\b|,\\s*not\\b)\\s*') AS parts
-          FROM norm))
-), cleaned AS (
-  SELECT item_id, pos,
-         trim(regexp_replace(raw, '(?i)^(?:yes|no|true|false)\\b[:,]?\\s*', ''), ' ,:') AS claim
-  FROM split_parts
-), claims AS (
-  SELECT item_id, claim,
-         row_number() OVER (PARTITION BY item_id ORDER BY pos) - 1 AS claim_idx
-  FROM cleaned WHERE claim <> ''
-), enriched AS (
+), {_CLAIM_SPLIT_SQL}, enriched AS (
   SELECT item_id, claim_idx, claim,
-    NOT regexp_matches(claim, '(?i)\\b(may|might|could|can depend|depends|dependent|unclear|uncertain|insufficient (?:info|information|evidence)|not enough (?:info|information|evidence)|cannot determine|unable to determine|cannot answer|unanswerable|need more|need additional|if provided|if more information)\\b') AS decisive,
+    NOT regexp_matches(claim, '{HEDGE_PATTERN}') AS decisive,
     list_sort(list_distinct(list_filter(list_transform(
       list_filter(regexp_extract_all(
-        regexp_replace(lower(claim), '(?i)\\bEAR-\\d[\\w().-]*|\\b\\d{{3}}\\.\\d+(?:\\([^)]+\\))*', ' ', 'g'),
+        regexp_replace(lower(claim), '{SECTION_INLINE_PATTERN}', ' ', 'g'),
         '[a-z0-9]+'),
         w -> len(w) > 1 AND w NOT IN ({stop_list})),
-      x -> {stem}), tk -> tk <> ''))) AS tokens,
+      x -> {_stem_sql('x')}), tk -> tk <> ''))) AS tokens,
     list_sort(list_distinct(list_transform(
-      regexp_extract_all(claim, '(?i)\\bEAR-\\d[\\w().-]*|\\b\\d{{3}}\\.\\d+(?:\\([^)]+\\))*'),
-      m -> {sec_norm}))) AS sections
+      regexp_extract_all(claim, '{SECTION_INLINE_PATTERN}'),
+      m -> {_SEC_NORM_SQL}))) AS sections
   FROM claims
 )
 SELECT item_id, claim_idx, claim, decisive,
@@ -916,22 +926,6 @@ def _groundedness_fixture(spark: SparkSession, sf_dir: str):
     return items, citations, context, decisive
 
 
-def _stem_sql(v: str) -> str:
-    """The one-rule-per-token stemming ladder over SQL expression `v`."""
-    return (
-        f"CASE WHEN len({v}) > 5 AND {v} LIKE '%ing' THEN substr({v}, 1, len({v})-3) "
-        f"WHEN len({v}) > 4 AND {v} LIKE '%ies' THEN substr({v}, 1, len({v})-3) || 'y' "
-        f"WHEN len({v}) > 4 AND {v} LIKE '%ed' THEN substr({v}, 1, len({v})-2) "
-        f"WHEN len({v}) > 4 AND {v} LIKE '%es' THEN substr({v}, 1, len({v})-2) "
-        f"WHEN len({v}) > 4 AND {v} LIKE '%s' AND {v} NOT LIKE '%ss' THEN substr({v}, 1, len({v})-1) "
-        f"ELSE {v} END"
-    )
-
-
-# regex literal as it must appear inside the SQL string (single backslashes)
-_SECPAT_SQL = "(?i)\\bEAR-\\d[\\w().-]*|\\b\\d{3}\\.\\d+(?:\\([^)]+\\))*"
-
-
 def _tok_rows_sql(src: str, key: str, txt: str) -> str:
     """Relational token extraction: distinct stemmed content tokens of
     `txt` per (item_id, {key}) — replaces the list_sort/list_distinct/
@@ -943,7 +937,7 @@ def _tok_rows_sql(src: str, key: str, txt: str) -> str:
     SELECT item_id, {key}, {_stem_sql('w')} AS tok FROM (
       SELECT item_id, {key},
              unnest(regexp_extract_all(
-               regexp_replace(lower({txt}), '{_SECPAT_SQL}', ' ', 'g'),
+               regexp_replace(lower({txt}), '{SECTION_INLINE_PATTERN}', ' ', 'g'),
                '[a-z0-9]+')) AS w
       FROM {src})
     WHERE len(w) > 1 AND w NOT IN ({stop_list}))
@@ -951,22 +945,18 @@ def _tok_rows_sql(src: str, key: str, txt: str) -> str:
 """
 
 
-def _groundedness_sql() -> str:
-    # Version-stable SQL only (VERDICT r4 What's-wrong #1): token sets,
-    # section mentions, overlap counts and the supporting-token union are
-    # relational rows (DISTINCT/joins/EXISTS-free aggregates) instead of
-    # aggregate lists + list_intersect/flatten; the ALL row is UNION ALL
-    # instead of ROLLUP; every rate is DOUBLE from the first operation.
-    from earcrawler_spark.operators.citation import normalize_section_full_sql
-    from earcrawler_spark.operators.groundedness import (
-        load_phase2_gate_thresholds,
-    )
+def _groundedness_chain_sql() -> str:
+    """The CTE chain both groundedness oracles share, from the items and
+    citations through ``claimv`` (per-claim ``supported`` + ``reason``);
+    each oracle appends its own CTEs and final SELECT.
 
-    th = load_phase2_gate_thresholds()
-    sec_norm = (
-        "CASE WHEN upper(m) LIKE 'EAR-%' THEN split_part(m, '#', 1) "
-        "ELSE 'EAR-' || split_part(m, '#', 1) END"
-    )
+    Version-stable SQL only (VERDICT r4 What's-wrong #1): token sets,
+    section mentions, overlap counts and the supporting-token union are
+    relational rows (DISTINCT/joins/EXISTS-free aggregates) instead of
+    aggregate lists + list_intersect/flatten; every rate is DOUBLE from
+    the first operation."""
+    from earcrawler_spark.operators.citation import normalize_section_full_sql
+
     norm_full = normalize_section_full_sql("raw")
     sec_d = section_id_sql("doc_id")
     sec_d13 = section_id_sql("doc_id + 13")
@@ -1019,14 +1009,19 @@ WITH items AS (
          trim(regexp_replace(ctx_text, '\\s+', ' ', 'g')) AS ctx
   FROM context
 ), scored0 AS (
-  SELECT c.item_id, c.cit_idx, c.section_id, c.valid, c.q,
+  SELECT c.item_id, c.cit_idx, c.raw, c.section_id, c.valid, c.q,
+         CASE WHEN x.ctx IS NOT NULL THEN 1 ELSE 0 END AS has_ctx,
          CASE WHEN c.qn <> '' AND x.ctx IS NOT NULL
                    AND position(c.qn IN x.ctx) > 0
               THEN 1 ELSE 0 END AS _in
   FROM cit_v c LEFT JOIN ctxn x ON c.section_id = x.csec
 ), scored_cit AS (
   SELECT item_id, cit_idx, section_id, valid, q,
-         (section_id IS NOT NULL AND _in = 1) AS qin
+         (section_id IS NOT NULL AND _in = 1) AS qin,
+         (raw = '' OR section_id IS NULL OR raw <> section_id) AS r_invalid,
+         (q = '') AS r_qmissing,
+         (section_id IS NOT NULL AND q <> '' AND has_ctx = 1 AND _in = 0) AS r_notin,
+         (section_id IS NOT NULL AND q <> '' AND has_ctx = 0) AS r_ctxmiss
   FROM scored0
 ), cit_tok AS ({cit_tok}
 ), answers AS (
@@ -1039,38 +1034,19 @@ WITH items AS (
       || CASE WHEN doc_id % 2 = 0 THEN '. The outcome may depend on surrounding circumstances' ELSE '' END
       || '.' END AS answer
   FROM documents
-), norm AS (
-  SELECT item_id,
-         regexp_replace(trim(regexp_replace(answer, '\\s+', ' ', 'g')), 'U\\.S\\.?', 'US', 'g') AS t
-  FROM answers
-), split_parts AS (
-  SELECT item_id, pos, raw FROM (
-    SELECT item_id,
-           generate_subscripts(parts, 1) AS pos, unnest(parts) AS raw
-    FROM (SELECT item_id,
-                 regexp_split_to_array(t, '(?i)\\s*(?:[;!?]+|\\.\\s|\\.$|\\bbut\\b|\\bhowever\\b|\\byet\\b|,\\s*not\\b)\\s*') AS parts
-          FROM norm))
-), cleaned AS (
-  SELECT item_id, pos,
-         trim(regexp_replace(raw, '(?i)^(?:yes|no|true|false)\\b[:,]?\\s*', ''), ' ,:') AS claim
-  FROM split_parts
-), claims0 AS (
-  SELECT item_id, claim,
-         row_number() OVER (PARTITION BY item_id ORDER BY pos) - 1 AS claim_idx
-  FROM cleaned WHERE claim <> ''
-), decisive0 AS (
+), {_CLAIM_SPLIT_SQL}, decisive0 AS (
   SELECT c.item_id, c.claim_idx, c.claim
-  FROM claims0 c JOIN items i ON c.item_id = i.item_id
-  WHERE NOT regexp_matches(c.claim, '(?i)\\b(may|might|could|can depend|depends|dependent|unclear|uncertain|insufficient (?:info|information|evidence)|not enough (?:info|information|evidence)|cannot determine|unable to determine|cannot answer|unanswerable|need more|need additional|if provided|if more information)\\b')
+  FROM claims c JOIN items i ON c.item_id = i.item_id
+  WHERE NOT regexp_matches(c.claim, '{HEDGE_PATTERN}')
     AND i.label <> 'unanswerable'
 ), claim_tok AS ({claim_tok}
 ), claim_ntok AS (
   SELECT item_id, claim_idx, count(*) AS n_tok
   FROM claim_tok GROUP BY item_id, claim_idx
 ), claim_sec AS (
-  SELECT DISTINCT item_id, claim_idx, {sec_norm} AS sec FROM (
+  SELECT DISTINCT item_id, claim_idx, {_SEC_NORM_SQL} AS sec FROM (
     SELECT item_id, claim_idx,
-           unnest(regexp_extract_all(claim, '{_SECPAT_SQL}')) AS m
+           unnest(regexp_extract_all(claim, '{SECTION_INLINE_PATTERN}')) AS m
     FROM decisive0)
 ), pair_explicit AS (
   SELECT DISTINCT s.item_id, cs.claim_idx, s.cit_idx
@@ -1096,7 +1072,8 @@ WITH items AS (
 ), clagg AS (
   SELECT item_id, claim_idx,
          max(CASE WHEN (explicit OR has_ov) AND valid AND qin THEN 1 ELSE 0 END) AS any_sup,
-         max(CASE WHEN (explicit OR has_ov) AND valid AND qin AND explicit THEN 1 ELSE 0 END) AS explicit_hit
+         max(CASE WHEN (explicit OR has_ov) AND valid AND qin AND explicit THEN 1 ELSE 0 END) AS explicit_hit,
+         max(CASE WHEN (explicit OR has_ov) AND NOT (valid AND qin) THEN 1 ELSE 0 END) AS any_unsup
   FROM pair GROUP BY item_id, claim_idx
 ), sup_tok AS (
   SELECT DISTINCT p.item_id, p.claim_idx, qt.tok
@@ -1115,10 +1092,31 @@ WITH items AS (
       coalesce(i.inter_cnt, 0) >=
         CASE WHEN n.n_tok <= 2 THEN 1 ELSE 2 END
       OR (CAST(coalesce(i.inter_cnt, 0) AS DOUBLE) / n.n_tok)
-          >= CAST(0.5 AS DOUBLE))))) AS supported
+          >= CAST(0.5 AS DOUBLE))))) AS supported,
+    CASE WHEN g.any_sup = 1 THEN
+           CASE WHEN g.explicit_hit = 1 THEN 'supported_by_explicit_section_reference'
+                WHEN (coalesce(n.n_tok, 0) > 0 AND (
+                       coalesce(i.inter_cnt, 0) >=
+                         CASE WHEN n.n_tok <= 2 THEN 1 ELSE 2 END
+                       OR (CAST(coalesce(i.inter_cnt, 0) AS DOUBLE) / n.n_tok)
+                           >= CAST(0.5 AS DOUBLE)))
+                THEN 'supported_by_section_quote'
+                ELSE 'claim_not_supported_by_quote' END
+         WHEN g.any_unsup = 1 THEN 'claim_linked_citation_not_supported'
+         ELSE 'claim_without_linked_citation' END AS reason
   FROM clagg g
   LEFT JOIN claim_ntok n ON n.item_id = g.item_id AND n.claim_idx = g.claim_idx
-  LEFT JOIN inter i ON i.item_id = g.item_id AND i.claim_idx = g.claim_idx
+  LEFT JOIN inter i ON i.item_id = g.item_id AND i.claim_idx = g.claim_idx"""
+
+
+def _groundedness_sql() -> str:
+    # the ALL row is UNION ALL instead of ROLLUP
+    from earcrawler_spark.operators.groundedness import (
+        load_phase2_gate_thresholds,
+    )
+
+    th = load_phase2_gate_thresholds()
+    return _groundedness_chain_sql() + f"""
 ), cit_item AS (
   SELECT item_id, count(*) AS n_cit,
          sum(CASE WHEN valid THEN 1 ELSE 0 END) AS n_valid
@@ -1610,181 +1608,8 @@ def q_groundedness_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _groundedness_reasons_sql() -> str:
-    # Version-stable SQL only — same relational token/section machinery as
-    # _groundedness_sql (see the comment there); counts only, no floats
-    # except the 0.5 coverage compare (DOUBLE-cast single division).
-    from earcrawler_spark.operators.citation import normalize_section_full_sql
-
-    sec_norm = (
-        "CASE WHEN upper(m) LIKE 'EAR-%' THEN split_part(m, '#', 1) "
-        "ELSE 'EAR-' || split_part(m, '#', 1) END"
-    )
-    norm_full = normalize_section_full_sql("raw")
-    sec_d = section_id_sql("doc_id")
-    sec_d13 = section_id_sql("doc_id + 13")
-    body = section_body_sql("doc_id")
-    cit_tok = _tok_rows_sql("scored_cit", "cit_idx", "q")
-    claim_tok = _tok_rows_sql("decisive0", "claim_idx", "claim")
-    return f"""
-WITH items AS (
-  SELECT doc_id AS item_id,
-         {dataset_id_sql('doc_id')} AS dataset_id,
-         CASE WHEN doc_id % 7 = 0 THEN 'unanswerable' ELSE 'answerable' END AS label
-  FROM documents
-), context AS (
-  SELECT section_id,
-         'Exports of encryption software require licensing review and compliance checks under '
-           || section_id || ' with annual audits' AS ctx_text
-  FROM (SELECT DISTINCT {sec_d} AS section_id FROM documents)
-), citations AS (
-  SELECT doc_id AS item_id, 0 AS cit_idx, {sec_d} AS raw_section_id,
-         'licensing review and compliance checks' AS quote
-  FROM documents WHERE doc_id % 13 <> 0
-  UNION ALL
-  SELECT doc_id, 1, '§ ' || {body}, 'compliance checks'
-  FROM documents WHERE doc_id % 13 <> 0 AND doc_id % 4 = 0
-  UNION ALL
-  SELECT doc_id, 2, {sec_d13}, 'quantum tunneling manifold'
-  FROM documents WHERE doc_id % 5 = 0
-  UNION ALL
-  SELECT doc_id, 3, 'EAR-999.99', 'licensing review'
-  FROM documents WHERE doc_id % 6 = 0
-  UNION ALL
-  SELECT doc_id, 4, {sec_d}, ''
-  FROM documents WHERE doc_id % 9 = 0
-), cit_norm AS (
-  SELECT item_id, cit_idx,
-         trim(coalesce(raw_section_id, '')) AS raw,
-         trim(coalesce(quote, '')) AS q,
-         trim(regexp_replace(coalesce(quote, ''), '\\s+', ' ', 'g')) AS qn
-  FROM citations
-), cit_v AS (
-  SELECT *, ({norm_full}) AS section_id,
-         (raw <> '' AND ({norm_full}) IS NOT NULL AND raw = ({norm_full})
-          AND q <> '') AS valid
-  FROM cit_norm
-), ctxn AS (
-  SELECT section_id AS csec,
-         trim(regexp_replace(ctx_text, '\\s+', ' ', 'g')) AS ctx
-  FROM context
-), scored0 AS (
-  SELECT c.item_id, c.cit_idx, c.raw, c.section_id, c.valid, c.q,
-         CASE WHEN x.ctx IS NOT NULL THEN 1 ELSE 0 END AS has_ctx,
-         CASE WHEN c.qn <> '' AND x.ctx IS NOT NULL
-                   AND position(c.qn IN x.ctx) > 0
-              THEN 1 ELSE 0 END AS _in
-  FROM cit_v c LEFT JOIN ctxn x ON c.section_id = x.csec
-), scored_cit AS (
-  SELECT item_id, cit_idx, section_id, valid, q,
-         (section_id IS NOT NULL AND _in = 1) AS qin,
-         (raw = '' OR section_id IS NULL OR raw <> section_id) AS r_invalid,
-         (q = '') AS r_qmissing,
-         (section_id IS NOT NULL AND q <> '' AND has_ctx = 1 AND _in = 0) AS r_notin,
-         (section_id IS NOT NULL AND q <> '' AND has_ctx = 0) AS r_ctxmiss
-  FROM scored0
-), cit_tok AS ({cit_tok}
-), answers AS (
-  SELECT doc_id AS item_id,
-    CASE WHEN doc_id % 7 = 0 THEN 'Cannot determine from the provided information.'
-    ELSE 'Exports need licensing review and compliance checks'
-      || CASE WHEN doc_id % 3 = 0 THEN '. Shipments are prohibited under ' || {sec_d} ELSE '' END
-      || CASE WHEN doc_id % 5 = 0 THEN '. Encryption export rules involve compliance obligations everywhere. Quantum tunneling manifold applies' ELSE '' END
-      || CASE WHEN doc_id % 11 = 0 THEN '. Paperwork wizardry dominates galactic trade' ELSE '' END
-      || CASE WHEN doc_id % 2 = 0 THEN '. The outcome may depend on surrounding circumstances' ELSE '' END
-      || '.' END AS answer
-  FROM documents
-), norm AS (
-  SELECT item_id,
-         regexp_replace(trim(regexp_replace(answer, '\\s+', ' ', 'g')), 'U\\.S\\.?', 'US', 'g') AS t
-  FROM answers
-), split_parts AS (
-  SELECT item_id, pos, raw FROM (
-    SELECT item_id,
-           generate_subscripts(parts, 1) AS pos, unnest(parts) AS raw
-    FROM (SELECT item_id,
-                 regexp_split_to_array(t, '(?i)\\s*(?:[;!?]+|\\.\\s|\\.$|\\bbut\\b|\\bhowever\\b|\\byet\\b|,\\s*not\\b)\\s*') AS parts
-          FROM norm))
-), cleaned AS (
-  SELECT item_id, pos,
-         trim(regexp_replace(raw, '(?i)^(?:yes|no|true|false)\\b[:,]?\\s*', ''), ' ,:') AS claim
-  FROM split_parts
-), claims0 AS (
-  SELECT item_id, claim,
-         row_number() OVER (PARTITION BY item_id ORDER BY pos) - 1 AS claim_idx
-  FROM cleaned WHERE claim <> ''
-), decisive0 AS (
-  SELECT c.item_id, c.claim_idx, c.claim
-  FROM claims0 c JOIN items i ON c.item_id = i.item_id
-  WHERE NOT regexp_matches(c.claim, '(?i)\\b(may|might|could|can depend|depends|dependent|unclear|uncertain|insufficient (?:info|information|evidence)|not enough (?:info|information|evidence)|cannot determine|unable to determine|cannot answer|unanswerable|need more|need additional|if provided|if more information)\\b')
-    AND i.label <> 'unanswerable'
-), claim_tok AS ({claim_tok}
-), claim_ntok AS (
-  SELECT item_id, claim_idx, count(*) AS n_tok
-  FROM claim_tok GROUP BY item_id, claim_idx
-), claim_sec AS (
-  SELECT DISTINCT item_id, claim_idx, {sec_norm} AS sec FROM (
-    SELECT item_id, claim_idx,
-           unnest(regexp_extract_all(claim, '{_SECPAT_SQL}')) AS m
-    FROM decisive0)
-), pair_explicit AS (
-  SELECT DISTINCT s.item_id, cs.claim_idx, s.cit_idx
-  FROM scored_cit s
-  JOIN claim_sec cs ON cs.item_id = s.item_id AND cs.sec = s.section_id
-  WHERE s.section_id IS NOT NULL
-), pair_ov AS (
-  SELECT DISTINCT ct.item_id, ct.claim_idx, qt.cit_idx
-  FROM claim_tok ct
-  JOIN cit_tok qt ON qt.item_id = ct.item_id AND qt.tok = ct.tok
-), pair AS (
-  SELECT c.item_id, c.claim_idx, s.cit_idx,
-         coalesce(s.valid, FALSE) AS valid, coalesce(s.qin, FALSE) AS qin,
-         (pe.cit_idx IS NOT NULL) AS explicit,
-         (po.cit_idx IS NOT NULL) AS has_ov
-  FROM decisive0 c
-  LEFT JOIN (SELECT * FROM scored_cit WHERE section_id IS NOT NULL) s
-    ON c.item_id = s.item_id
-  LEFT JOIN pair_explicit pe ON pe.item_id = c.item_id
-    AND pe.claim_idx = c.claim_idx AND pe.cit_idx = s.cit_idx
-  LEFT JOIN pair_ov po ON po.item_id = c.item_id
-    AND po.claim_idx = c.claim_idx AND po.cit_idx = s.cit_idx
-), clagg AS (
-  SELECT item_id, claim_idx,
-         max(CASE WHEN (explicit OR has_ov) AND valid AND qin THEN 1 ELSE 0 END) AS any_sup,
-         max(CASE WHEN (explicit OR has_ov) AND valid AND qin AND explicit THEN 1 ELSE 0 END) AS explicit_hit,
-         max(CASE WHEN (explicit OR has_ov) AND NOT (valid AND qin) THEN 1 ELSE 0 END) AS any_unsup
-  FROM pair GROUP BY item_id, claim_idx
-), sup_tok AS (
-  SELECT DISTINCT p.item_id, p.claim_idx, qt.tok
-  FROM pair p
-  JOIN cit_tok qt ON qt.item_id = p.item_id AND qt.cit_idx = p.cit_idx
-  WHERE (p.explicit OR p.has_ov) AND p.valid AND p.qin
-), inter AS (
-  SELECT ct.item_id, ct.claim_idx, count(*) AS inter_cnt
-  FROM claim_tok ct
-  JOIN sup_tok st ON st.item_id = ct.item_id
-    AND st.claim_idx = ct.claim_idx AND st.tok = ct.tok
-  GROUP BY ct.item_id, ct.claim_idx
-), claimv AS (
-  SELECT g.item_id, g.claim_idx,
-    (g.any_sup = 1 AND (g.explicit_hit = 1 OR (coalesce(n.n_tok, 0) > 0 AND (
-      coalesce(i.inter_cnt, 0) >=
-        CASE WHEN n.n_tok <= 2 THEN 1 ELSE 2 END
-      OR (CAST(coalesce(i.inter_cnt, 0) AS DOUBLE) / n.n_tok)
-          >= CAST(0.5 AS DOUBLE))))) AS supported,
-    CASE WHEN g.any_sup = 1 THEN
-           CASE WHEN g.explicit_hit = 1 THEN 'supported_by_explicit_section_reference'
-                WHEN (coalesce(n.n_tok, 0) > 0 AND (
-                       coalesce(i.inter_cnt, 0) >=
-                         CASE WHEN n.n_tok <= 2 THEN 1 ELSE 2 END
-                       OR (CAST(coalesce(i.inter_cnt, 0) AS DOUBLE) / n.n_tok)
-                           >= CAST(0.5 AS DOUBLE)))
-                THEN 'supported_by_section_quote'
-                ELSE 'claim_not_supported_by_quote' END
-         WHEN g.any_unsup = 1 THEN 'claim_linked_citation_not_supported'
-         ELSE 'claim_without_linked_citation' END AS reason
-  FROM clagg g
-  LEFT JOIN claim_ntok n ON n.item_id = g.item_id AND n.claim_idx = g.claim_idx
-  LEFT JOIN inter i ON i.item_id = g.item_id AND i.claim_idx = g.claim_idx
+    # counts only, no floats except the 0.5 coverage compare in the chain
+    return _groundedness_chain_sql() + """
 ), rows_all AS (
   SELECT i.dataset_id, 'invalid_section_id' AS reason
   FROM scored_cit s JOIN items i ON s.item_id = i.item_id WHERE s.r_invalid
@@ -2288,11 +2113,10 @@ def q_id_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Materialize the fixture line relation once: it feeds BOTH scan
-    # passes (canonical + legacy), and leaving it lazy fuses the two
-    # fixture explodes with the scan explode into a single nested-
-    # generate codegen span that overflows janino's 64 KB method limit
-    # (interpreted fallback).  At real scale `lines` is a stored KG
-    # table, so reading it twice is the natural plan anyway.
+    # passes (canonical + legacy).  Its distinct shuffle runs while the
+    # query is built (one job), and pays at sf0.1: without it the row
+    # takes 1.19x as long (same boot, 3 interleaved runs a side, A/A
+    # spread 0.12).
     lines = lines.localCheckpoint(eager=False)
     canonical, legacy = scan_kg_sections(lines)
     canon_agg = canonical.groupBy("section_id").agg(
@@ -2408,12 +2232,7 @@ def q_id_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
             issues + F.col("invalid_dataset_refs") > 0, F.lit("fail")
         ).otherwise(F.lit("ok")).alias("status"),
     )
-    # eager tiny-output pin (ADVICE r6 #2, dedup_clusters pattern): the
-    # lazy refs/lines checkpoints above are only referenced by this
-    # function's locals once the 4-row result is materialized, so a
-    # long-lived session invoking the query repeatedly no longer
-    # accumulates their executor-storage blocks (freed with RDD GC).
-    return out.localCheckpoint().orderBy("dataset_id")
+    return out.orderBy("dataset_id")
 
 
 def _id_consistency_sql() -> str:

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from earcrawler_spark.fixture_vocab import BM25_QUERY
+from earcrawler_spark.fixture_vocab import BM25_QUERY, part_number, part_number_sql
 from earcrawler_spark.session import cached, shared_frame, table
 
 CHUNK_MAX_CHARS = 400
@@ -1243,7 +1243,7 @@ def q_part_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             d % 4 == 0,
             F.concat(
                 F.lit(" See 15 CFR Part "),
-                (700 + d % 37).cast("string"),
+                part_number(d).cast("string"),
                 F.lit(" and 15 cfr part 744."),
             ),
         ).otherwise(F.lit("")),
@@ -1261,12 +1261,12 @@ def q_part_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_PART_MINING = r"""
+_SQL_PART_MINING = rf"""
 WITH seeded AS (
   SELECT doc_id,
          text
          || CASE WHEN doc_id % 4 = 0
-                 THEN ' See 15 CFR Part ' || CAST(700 + doc_id % 37 AS VARCHAR)
+                 THEN ' See 15 CFR Part ' || CAST({part_number_sql('doc_id')} AS VARCHAR)
                       || ' and 15 cfr part 744.' ELSE '' END
          || CASE WHEN doc_id % 10 = 3
                  THEN ' Also 15  CFR  PART 736 applies; part 99 does not.'
@@ -1275,9 +1275,9 @@ WITH seeded AS (
 )
 SELECT doc_id,
        array_to_string(list_sort(list_distinct(
-         regexp_extract_all(t, '(?i)\b15\s*CFR\s*Part\s*(\d{3})\b', 1))), '|') AS parts
+         regexp_extract_all(t, '(?i)\b15\s*CFR\s*Part\s*(\d{{3}})\b', 1))), '|') AS parts
 FROM seeded
-WHERE len(regexp_extract_all(t, '(?i)\b15\s*CFR\s*Part\s*(\d{3})\b', 1)) > 0
+WHERE len(regexp_extract_all(t, '(?i)\b15\s*CFR\s*Part\s*(\d{{3}})\b', 1)) > 0
 ORDER BY doc_id
 """
 

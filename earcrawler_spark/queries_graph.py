@@ -69,12 +69,6 @@ def _nodes_edges(spark: SparkSession, sf_dir: str):
         )
         .filter(F.col("dst") != F.col("src"))
         .distinct()
-        # materialize ONCE (IVF-Lloyd precedent, operators/similarity.py):
-        # without this the unrolled rounds re-derive the edge table —
-        # and re-pay its distinct shuffle — once per iteration; at scale
-        # the edge list is the big input and must be computed exactly
-        # once.  localCheckpoint blocks are freed with the RDD's GC.
-        .localCheckpoint()
     )
     return nodes, edges
 
@@ -84,6 +78,9 @@ def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id-derived link graph; per-node centrality + degrees.  See the
     module docstring for the scale shape and the exact recurrence."""
     nodes, edges = _nodes_edges(spark, sf_dir)
+    # materialize the edge table once: every unrolled round re-reads it,
+    # and would re-pay its distinct shuffle
+    edges = edges.localCheckpoint()
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     in_deg = edges.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
     edges_deg = edges.join(out_deg, "src")
@@ -200,9 +197,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .distinct()
-        # consumed by three joins + the degree agg: materialize once,
-        # like the edge table itself (IVF-Lloyd precedent)
-        .localCheckpoint()
     )
     deg = (
         und.select(F.col("u").alias("node"))
@@ -224,7 +218,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    out = (
+    return (
         base.crossJoin(F.broadcast(n_edges))
         .crossJoin(F.broadcast(tri))
         .select(
@@ -237,10 +231,6 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("clustering"),
         )
     )
-    # eager 1-row pin (ADVICE r6 #2): once the result is materialized the
-    # `und` checkpoint is referenced only by this frame's (now truncated)
-    # lineage, so repeated invocations no longer accumulate its blocks
-    return out.localCheckpoint()
 
 
 _SQL_GRAPH_TRIANGLES = f"""

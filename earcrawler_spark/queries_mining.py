@@ -48,13 +48,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.functions.text import TOKENS_SQL, tokens
 from earcrawler_spark.session import table
 
 MINING_QUERIES: dict = {}
 MINING_ORACLES: dict = {}
 
-_TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 
 SPAN_N = 8        # dup_span_coverage / cross_source_overlap window width
 NOVELTY_N = 5     # ngram_novelty shingle width
@@ -95,7 +94,7 @@ def _grams_sql(n: int, cols: str = "doc_id") -> str:
     return f"""
   SELECT {cols}, i - 1 AS pos,
          array_to_string(list_slice(tk, i, i + {n - 1}), ' ') AS gram
-  FROM (SELECT {cols}, {_TOKENS_SQL} AS tk FROM documents) toks,
+  FROM (SELECT {cols}, {TOKENS_SQL} AS tk FROM documents) toks,
        unnest(range(1, greatest(len(tk) - {n - 1}, 0) + 1)) AS u(i)
 """
 
@@ -204,8 +203,8 @@ dup_grams AS (
 ), dupcnt AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS dup_windows FROM dup_wins GROUP BY doc_id
 ), base AS (
-  SELECT doc_id, len({_TOKENS_SQL}) AS n_tok,
-         greatest(len({_TOKENS_SQL}) - {SPAN_N - 1}, 0) AS n_windows
+  SELECT doc_id, len({TOKENS_SQL}) AS n_tok,
+         greatest(len({TOKENS_SQL}) - {SPAN_N - 1}, 0) AS n_windows
   FROM documents
 )
 SELECT b.doc_id, b.n_tok, b.n_windows,
@@ -334,7 +333,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_TFIDF_TOPK = f"""
 WITH tk AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS t FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS t FROM documents
 ), tf AS (
   SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf FROM tk GROUP BY doc_id, t
 ), nd AS (
@@ -416,7 +415,7 @@ def q_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_CURATION_VERDICT = f"""
 WITH tf AS (
   SELECT doc_id, t, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS t FROM documents)
+  FROM (SELECT doc_id, unnest({TOKENS_SQL}) AS t FROM documents)
   GROUP BY doc_id, t
 ), sig AS (
   SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tok, CAST(max(c) AS BIGINT) AS max_tok,
@@ -514,7 +513,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_ZIPF_FIT = f"""
 WITH tf AS (
   SELECT lang, t, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT lang, unnest({_TOKENS_SQL}) AS t FROM documents)
+  FROM (SELECT lang, unnest({TOKENS_SQL}) AS t FROM documents)
   GROUP BY lang, t
 ), stats AS (
   SELECT lang, CAST(count(*) AS BIGINT) AS vocab_size,
@@ -555,16 +554,11 @@ def q_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate (nav chrome / license footers) — the exclusion is both
     the honest mixing-audit semantics AND the bound that keeps the
     gram self-join linear (<= C(8,2)=28 pair rows per gram) at 100 TB."""
-    # the distinct (source, gram) set feeds the boilerplate cap AND the
-    # pair join's two sides AND the totals — the raw plan re-ran the
-    # corpus shingle explode per reference (62 Exchange / 16 scans).
-    # Checkpoint it once: O(distinct source-grams), the frame a mixing
-    # audit would persist anyway at scale.
     gs = (
         _pos_grams(table(spark, sf_dir, "documents"), SPAN_N, extra=("source",))
         .select("source", "gram")
         .distinct()
-    ).localCheckpoint()
+    )
     kept = (
         gs.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("ns"))

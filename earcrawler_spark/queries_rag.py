@@ -214,7 +214,10 @@ def q_citation_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     # apply_citation_boost references results 3x (present/max/base) — on
     # the raw plan each reference re-executed the BM25 corpus pass (74
     # Exchange / 28 scans).  Checkpoint the <=k-row frame so the corpus
-    # is scanned once; same narrow-waist fix as build_rag_context.
+    # is scanned once.  Pays at sf0.1 with the `best` pin in
+    # apply_citation_boost: without both the row takes 1.21x as long, with
+    # this one alone 1.10x (same boot, 3 interleaved runs a side, A/A
+    # spread 0.11).
     results = results.localCheckpoint()
     out = apply_citation_boost(
         results, meta, extract_targets(spark, CITATION_PROMPT), k=CITATION_K

@@ -280,8 +280,9 @@ def q_eval_schema_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     d = F.col("doc_id")
     # the validator unions one check per rule family, each re-referencing
-    # the items fixture — checkpoint it once (was 44 parquet scans); the
-    # manifests are dimension tables and ride broadcasts as before
+    # the items fixture — checkpoint it once (was 44 parquet scans).  Pays
+    # at sf0.1: without it the row takes 1.19x as long (same boot, 3
+    # interleaved runs a side, A/A spread 0.08).
     items = _fixture_items(docs).localCheckpoint()
     # manifest references: every section registers its own span body and
     # the next one; entity nodes e0..e6; paths path-0..2 (path-3 is the
@@ -292,7 +293,6 @@ def q_eval_schema_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.select(section_id(d).alias("mdoc_id"), section_body(d + 1).alias("mspan_id"))
         )
         .distinct()
-        .localCheckpoint()
     )
     node_ns = RESOURCE_NS + "ear/entity/"
     manifest_nodes = spark.createDataFrame(

@@ -95,12 +95,7 @@ def q_shape_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass for all shapes (operators/shacl.py)."""
     from earcrawler_spark.operators.shacl import shape_violations
 
-    # the validator reads the triple table three ways (focus selection,
-    # property pass, expected-cardinality join) — checkpoint the
-    # synthesized graph once so the raw plan doesn't re-derive it per
-    # reference (was 52 Exchange / 40 scans); at scale this is the
-    # persisted triple store the validator reads.
-    return shape_violations(_ear_triples(spark, sf_dir).localCheckpoint())
+    return shape_violations(_ear_triples(spark, sf_dir))
 
 
 _SQL_SHAPE_VIOLATIONS = """

@@ -39,13 +39,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.functions.text import TOKENS_SQL, tokens
 from earcrawler_spark.session import table
 
 SKETCH_QUERIES: dict = {}
 SKETCH_ORACLES: dict = {}
 
-_TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 
 CMS_D = 4          # hash rows
 CMS_W = 64         # buckets per row
@@ -110,7 +109,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CMS_HEAVY_HITTERS = f"""
 WITH tk AS (
-  SELECT unnest({_TOKENS_SQL}) AS t FROM documents
+  SELECT unnest({TOKENS_SQL}) AS t FROM documents
 ), hashed AS (
   SELECT row_i, {_CMS_BUCKET_SQL} AS bucket FROM (
     SELECT row_i, sha256(CAST(row_i AS VARCHAR) || ':' || t) AS sha

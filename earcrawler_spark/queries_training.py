@@ -36,13 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from earcrawler_spark.functions.text import tokens
+from earcrawler_spark.functions.text import TOKENS_SQL, tokens
 from earcrawler_spark.session import table
 
 TRAINING_QUERIES: dict = {}
 TRAINING_ORACLES: dict = {}
 
-_TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 
 
 # --- shard_packing ----------------------------------------------------------
@@ -102,7 +101,7 @@ def q_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_SHARD_PACKING = f"""
 WITH toks AS (
-  SELECT lang, doc_id, len({_TOKENS_SQL}) AS n_tok FROM documents
+  SELECT lang, doc_id, len({TOKENS_SQL}) AS n_tok FROM documents
 ), packed AS (
   SELECT lang, doc_id, n_tok,
          CAST(floor(CAST(sum(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
@@ -169,7 +168,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_TEMPERATURE_MIX = f"""
 WITH per_src AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len({_TOKENS_SQL})) AS BIGINT) AS tokens
+         CAST(sum(len({TOKENS_SQL})) AS BIGINT) AS tokens
   FROM documents GROUP BY source
 ), sw AS (
   SELECT source, n_docs, tokens,
@@ -243,7 +242,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_CHUNK_DEDUP = f"""
 WITH tk AS (
   SELECT doc_id, generate_subscripts(ts, 1) - 1 AS pos, unnest(ts) AS t
-  FROM (SELECT doc_id, {_TOKENS_SQL} AS ts FROM documents)
+  FROM (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents)
 ), chunks AS (
   SELECT doc_id, CAST(floor(pos / {CHUNK_TOKENS}) AS BIGINT) AS chunk_no,
          string_agg(t, ' ' ORDER BY pos) AS chunk_text,
@@ -318,7 +317,7 @@ def q_unigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_UNIGRAM_QUALITY = f"""
 WITH tk AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS t FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS t FROM documents
 ), vocab AS (
   SELECT t, CAST(count(*) AS BIGINT) AS c FROM tk GROUP BY t
 ), tot AS (
@@ -536,7 +535,7 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CURRICULUM = f"""
 WITH tk AS (
-  SELECT lang, doc_id, unnest({_TOKENS_SQL}) AS t FROM documents
+  SELECT lang, doc_id, unnest({TOKENS_SQL}) AS t FROM documents
 ), vocab AS (
   SELECT t, CAST(count(*) AS BIGINT) AS c FROM tk GROUP BY t
 ), tot AS (
@@ -867,7 +866,7 @@ def _bpe_chain_sql(n_merges: int = BPE_MERGES) -> str:
     current vocab, picks the (total DESC, l, r) argmax, and applies the
     bracket-replace.  Ends with words{n_merges} = (w, repr, cnt)."""
     head = f"""toks AS (
-  SELECT unnest({_TOKENS_SQL}) AS w FROM documents
+  SELECT unnest({TOKENS_SQL}) AS w FROM documents
 ), wc AS (
   SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM toks
   WHERE regexp_matches(w, '^[a-z0-9]+$') GROUP BY w
@@ -916,7 +915,7 @@ word_sub AS (
            AS n_sub
   FROM words{n_merges}
 ), tk AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS w FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS w FROM documents
 ), agg AS (
   SELECT tk.doc_id, CAST(count(*) AS BIGINT) AS n_words,
          CAST(sum(ws.n_sub) AS BIGINT) AS n_subwords,
@@ -1022,7 +1021,7 @@ _DSIR_BUCKET = (
 
 _SQL_DSIR = f"""
 WITH base AS (
-  SELECT doc_id, (doc_id % 37 = 0) AS is_target, {_TOKENS_SQL} AS ts
+  SELECT doc_id, (doc_id % 37 = 0) AS is_target, {TOKENS_SQL} AS ts
   FROM documents
 ), feats AS (
   SELECT doc_id, is_target, unnest(ts) AS f FROM base

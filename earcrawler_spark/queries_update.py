@@ -119,7 +119,10 @@ def q_sparql_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sized — checkpoint the narrow waists (guide §3.3: materialise an
     # intermediate to truncate a very wide plan); the delta then reads
     # materialized before/after exactly like the reference diffs two
-    # graph snapshots.  9 Exchange / 0 re-scans after.
+    # graph snapshots.  9 Exchange / 0 re-scans after.  Pays at sf0.1:
+    # without the three pins the row takes 2.69x as long, with `parts`
+    # pinned alone 1.81x (same boot, 3 interleaved runs a side, A/A
+    # spread 0.11).
     parts = _parts(spark, sf_dir).localCheckpoint()
     before = _base_graph(parts).localCheckpoint()
     inserts, deletes = _update_batch(parts)

@@ -44,13 +44,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from earcrawler_spark.functions import text as TXT
+from earcrawler_spark.functions.text import STOPWORDS_SQL, TOKENS_SQL
 from earcrawler_spark.session import table
 
 WEBCUR_QUERIES: dict = {}
 WEBCUR_ORACLES: dict = {}
 
-_TOKENS_SQL = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
-_STOPWORDS_SQL = "[" + ",".join(f"'{s}'" for s in TXT.EN_STOPWORDS) + "]"
 
 
 # --- gopher_rules -------------------------------------------------------
@@ -145,14 +144,14 @@ _FAILED_SQL = " || ".join(
 
 _SQL_GOPHER_RULES = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS tok FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
 ), st AS (
   SELECT doc_id,
          CAST(count(*) AS BIGINT) AS n_words,
          CAST(sum(length(tok)) AS BIGINT) AS sum_chars,
          CAST(sum(CASE WHEN regexp_matches(tok, '[a-z]') THEN 1 ELSE 0 END) AS BIGINT) AS alpha_words,
          CAST(sum(CASE WHEN tok = '#' OR contains(tok, '...') THEN 1 ELSE 0 END) AS BIGINT) AS symbol_words,
-         CAST(count(DISTINCT CASE WHEN list_contains({_STOPWORDS_SQL}, tok) THEN tok END) AS BIGINT) AS stop_hits
+         CAST(count(DISTINCT CASE WHEN list_contains({STOPWORDS_SQL}, tok) THEN tok END) AS BIGINT) AS stop_hits
   FROM toks GROUP BY doc_id
 ), ln AS (
   SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM documents
@@ -258,6 +257,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from earcrawler_spark.queries_graph import _nodes_edges
 
     nodes, edges = _nodes_edges(spark, sf_dir)
+    edges = edges.localCheckpoint()  # re-read by every round (link_pagerank)
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     in_deg = edges.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
 

@@ -1,11 +1,14 @@
 """Every module-level import in the package and in the tests is referenced
-in its module."""
+in its module, no two package functions share a body, and every
+module-level package function is named somewhere outside its definition."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import os
+import re
+from collections import Counter
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG_DIR = os.path.join(REPO_DIR, "earcrawler_spark")
@@ -100,3 +103,51 @@ def test_no_duplicate_function_bodies_in_package():
         with open(path, encoding="utf-8") as f:
             sources[os.path.relpath(path, REPO_DIR)] = f.read()
     assert _duplicate_bodies(sources) == []
+
+
+# where a package function may be referenced from
+REFERENCE_GLOBS = [
+    os.path.join(d, "**", "*.py") for d in (PKG_DIR, TESTS_DIR,
+                                          os.path.join(REPO_DIR, "scripts"),
+                                          os.path.join(REPO_DIR, "perfbench"))
+] + [os.path.join(REPO_DIR, "bench.py")]
+
+
+def _unreferenced_functions(package: dict[str, str], others: dict[str, str]) -> list[str]:
+    """``"<file>:<line> <name>"`` for each module-level function of
+    ``package`` whose name, as a word, occurs in no source of ``package``
+    or ``others`` beyond its own definitions."""
+    words = Counter(w for src in [*package.values(), *others.values()]
+                    for w in re.findall(r"\w+", src))
+    defs = [(filename, node.lineno, node.name)
+            for filename, source in sorted(package.items())
+            for node in ast.parse(source, filename).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))]
+    n_defs = Counter(name for _, _, name in defs)
+    return [f"{f}:{line} {name}" for f, line, name in defs if words[name] <= n_defs[name]]
+
+
+def _reference_sources() -> tuple[dict[str, str], dict[str, str]]:
+    package, others = {}, {}
+    for pattern in REFERENCE_GLOBS:
+        for path in glob.glob(pattern, recursive=True):
+            with open(path, encoding="utf-8") as f:
+                rel = os.path.relpath(path, REPO_DIR)
+                (package if rel.startswith("earcrawler_spark") else others)[rel] = f.read()
+    return package, others
+
+
+def test_guard_flags_unreferenced_function():
+    package, others = _reference_sources()
+    name = "_".join(["q", "planted", "dead"])  # not a word of this file
+    planted = dict(package)
+    planted["earcrawler_spark/queries.py"] += f"\n\ndef {name}(spark, sf_dir):\n    return None\n"
+    line = planted["earcrawler_spark/queries.py"].count("\n") - 1
+    assert _unreferenced_functions(planted, others) == [f"earcrawler_spark/queries.py:{line} {name}"]
+    # one mention anywhere (a registry entry, a test) is a reference
+    others = {**others, "tests/t.py": f"QUERIES['x'] = {name}\n"}
+    assert _unreferenced_functions(planted, others) == []
+
+
+def test_no_unreferenced_package_functions():
+    assert _unreferenced_functions(*_reference_sources()) == []

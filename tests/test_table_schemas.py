@@ -1,7 +1,9 @@
 """The query-side table contract: ``session.TABLE_SCHEMAS`` equals the
 footer schema of every fixture, ``session.table`` reads with it and starts
 no Spark job, a column the file lacks fails loudly instead of reading as
-NULLs, and no other parquet reader exists in the package."""
+NULLs, and no other parquet reader exists in the package. Building a
+registered query starts no more Spark jobs than its ceiling, and the rows
+whose pins went leave no cached intermediate."""
 
 from __future__ import annotations
 
@@ -103,6 +105,68 @@ def test_sweep_rows_build_without_jobs(spark):
         with _job_group(spark, f"build-{name}") as jobs:
             QUERIES[name](spark, FIXTURE_DIRS[0])
             assert jobs() == 0, name
+
+
+# Jobs a row may start while it is built (sf0.001, the row alone in a fresh
+# session); any row not listed builds with none. Building starts jobs only
+# (a) inside an iterative loop, with the inputs it re-reads every round,
+# (b) in the result pin of a session.shared_frame / shared_output build, or
+# (c) at a fan-out waist whose pin an sf0.1 A/B showed to pay (the ratio is
+# in the pin's comment).
+BUILD_JOB_CEILINGS = {
+    # (a) connected components (operators/reconcile.py); dedup_clusters
+    # also (c) pins its LSH candidate set
+    "connected_components": 22, "sparql_construct": 22, "dedup_clusters": 39,
+    # (a) Lloyd k-means, inside the (b) ivf_centroids build
+    "ann_ivf_lists": 23, "ann_ivf_search": 23, "semdedup": 23, "pq_codes": 13,
+    # (a) BPE merges, inside the (b) bpe_train build
+    "bpe_merges": 26, "bpe_segment": 26,
+    # (a) the edge table the unrolled PageRank/HITS rounds re-read
+    "link_pagerank": 4, "hits_scores": 4,
+    # (b) decided_pairs, rag_context, scored_citations and the gate outputs
+    "reconcile_v2": 20, "reconcile_summary": 20,
+    "rag_context": 26, "context_lines": 26, "rag_context_kg": 26,
+    "multihop_ablation": 40, "citation_scores_agg": 8, "eval_report": 98,
+    "fr_coverage": 30, "groundedness_gate": 20, "groundedness_reasons": 6,
+    # (c) fan-out waists
+    "retrieval_compare": 14, "citation_boost": 11, "sparql_update": 7,
+    "eval_schema_violations": 1, "id_consistency": 1,
+}
+
+
+def test_rows_build_within_job_ceilings(spark):
+    from earcrawler_spark.queries import QUERIES
+
+    assert set(BUILD_JOB_CEILINGS) <= set(QUERIES)
+    over = {}
+    for name, fn in QUERIES.items():
+        with _job_group(spark, f"ceiling-{name}") as jobs:
+            fn(spark, FIXTURE_DIRS[0])
+            if jobs() > BUILD_JOB_CEILINGS.get(name, 0):
+                over[name] = jobs()
+    assert over == {}
+
+
+def _cache_manager_entries(spark) -> int:
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_unpinned_rows_leave_no_cache_entries(spark):
+    """A ``.cache()`` frame stays in the CacheManager until unpersisted,
+    so a row whose pins went must not cache an intermediate instead."""
+    from earcrawler_spark.queries import QUERIES
+
+    before = _cache_manager_entries(spark)
+    for name in (
+        "id_consistency", "graph_triangles", "dedup_clusters", "shape_violations",
+        "eval_schema_violations", "cross_source_overlap", "anchor_text_agg",
+    ):
+        for _ in range(2):
+            QUERIES[name](spark, FIXTURE_DIRS[0]).count()
+        assert _cache_manager_entries(spark) == before, name
 
 
 # -- one reader ----------------------------------------------------------
