@@ -9,7 +9,7 @@ in this sandbox it is fixture-backed by the synthetic web.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -94,8 +94,10 @@ def fetch_robots(spark: SparkSession, hosts: list[str], fetcher) -> DataFrame:
     )
 
 
-def allowed_filter(frontier: DataFrame, robots: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (allowed, denied) via broadcast robots join.
+def allowed_filter(frontier: DataFrame, robots: DataFrame) -> tuple[DataFrame, Observation]:
+    """The frontier's robots-allowed rows, via a broadcast robots join,
+    and an Observation of the frontier rows it read (``frontier``) and
+    denied (``denied``), which reports once the allowed rows are read.
 
     A URL is denied when its path starts with any disallow prefix of its
     host. `exists` over the (short) prefix array stays in codegen.
@@ -111,6 +113,8 @@ def allowed_filter(frontier: DataFrame, robots: DataFrame) -> tuple[DataFrame, D
             F.lit(False),
         ),
     )
-    allowed = joined.filter(~F.col("_denied")).drop("_denied", "disallow_prefixes")
-    denied = joined.filter(F.col("_denied")).drop("_denied", "disallow_prefixes", "crawl_delay")
-    return allowed, denied
+    counts = Observation()
+    joined = joined.observe(
+        counts, F.count(F.lit(1)).alias("frontier"), F.count_if("_denied").alias("denied")
+    )
+    return joined.filter(~F.col("_denied")).drop("_denied", "disallow_prefixes"), counts

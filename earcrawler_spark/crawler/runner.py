@@ -39,6 +39,10 @@ Crawler or expire_seen reads the filter from disk instead. Compaction
 and seen-set expiry rewrite committed snapshots through one protocol,
 CrawlState.rewrite; this module touches no CrawlState private.
 
+Counts: the wave's totals and its stats record are Observations on
+frames it already writes or caches, read at the commit, so no count
+runs a job of its own (README, "Where a crawl wave's counts come from").
+
 Scale notes (10^10 URLs):
 - frontier/seen are hash-bucketed by url_hash shard → the anti-join is
   a co-partitioned join, no wide shuffle;
@@ -58,7 +62,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from earcrawler_spark.crawler import synth
@@ -90,6 +94,21 @@ from earcrawler_spark.crawler.state import (
 # Past this estimated filter size the seen filter's shard map no longer
 # goes through the driver or a broadcast (the 10^10-URL design point).
 BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
+
+def _observed(obs: Observation, *names: str, timeout_s: float = 60.0) -> list[int]:
+    """The named counts of ``obs`` once a plan it sits in has run (an
+    Observation reports through a listener, just after its action). A
+    subtree the optimizer pruned as provably empty reports no row: its
+    counts are 0."""
+    future = obs._jo.future()
+    deadline = time.monotonic() + timeout_s
+    while not future.isCompleted():
+        if time.monotonic() > deadline:
+            raise RuntimeError(f"no plan observed {names} within {timeout_s} s")
+        time.sleep(0.002)
+    row = obs.get if obs._jo.getRow().length() else {}
+    return [int(row.get(n) or 0) for n in names]
 
 
 def visit_order_cols():
@@ -344,16 +363,20 @@ class Crawler:
             robots = self.state.read_latest("robots", it)
 
         _mark("robots")
-        # 2. politeness dequeue (budget = wave_seconds / crawl_delay)
-        allowed, denied = allowed_filter(frontier, robots)
-        n_denied = denied.count()
+        # 2. politeness dequeue (budget = wave_seconds / crawl_delay).
+        # The wave's counts are Observations on frames it already writes or
+        # caches, read at the commit: no count runs a job of its own.
+        allowed, robots_obs = allowed_filter(frontier, robots)
         budget = F.greatest(
             F.lit(1),
             F.floor(F.lit(cfg.wave_seconds) / F.coalesce("crawl_delay", F.lit(DEFAULT_CRAWL_DELAY))),
         ).cast("int")
         w_host = W.partitionBy("host").orderBy(F.col("priority").desc(), F.col("seq"))
+        ranked_obs = Observation()
         ranked = allowed.withColumn("_rk", F.row_number().over(w_host)).withColumn(
             "_budget", budget
+        ).observe(
+            ranked_obs, F.count_if(F.col("_rk") <= F.col("_budget")).alias("dequeued"),
         ).cache()  # selected/remainder/frontier_next all reuse this
         selected = ranked.filter(F.col("_rk") <= F.col("_budget")).drop("_rk", "_budget")
         remainder = (
@@ -418,12 +441,15 @@ class Crawler:
             )
 
         _mark("partitioning")
-        # 4. fetch + parse
+        # 4. fetch + parse; the first write that reads it fills this cache
+        fetched_obs = Observation()
         fetched = fetch_and_parse(
             selected, politeness_sleep=cfg.politeness_sleep, transport=self.transport,
             max_attempts=cfg.max_attempts, backoff_base=cfg.backoff_base,
-        ).withColumn("part_id", F.spark_partition_id()).cache()
-        n_fetched = fetched.count()
+        ).withColumn("part_id", F.spark_partition_id()).observe(
+            fetched_obs, F.count(F.lit(1)).alias("fetched"),
+            F.count_if(F.col("status") == 200).alias("ok"),
+        ).cache()
 
         _mark("fetch+parse")
         # Cached pages REPLAY their cached parse: fresh hits, and 304s from
@@ -437,22 +463,21 @@ class Crawler:
             "priority", "seq", "status", "content_hash",
         )
         ok = fetched.filter(F.col("status") == 200).select(*parse_cols)
-        n_fresh = n_revalidated = 0
-        replayed = None
+        replayed = replay_obs = None
         if fresh_hits is not None:
             revalidated = (
                 fetched.filter(F.col("status") == 304)
                 .drop("content_hash", "spans", "links")
                 .join(cache.select("url_hash", "content_hash", "spans", "links"), "url_hash")
             )
+            replay_obs = Observation()
             replayed = (
                 revalidated.select(*parse_cols, F.lit(False).alias("fresh"))
                 .unionByName(fresh_hits.select(*parse_cols, F.lit(True).alias("fresh")))
+                .observe(replay_obs, F.count_if("fresh").alias("cache_hits"),
+                         F.count_if(~F.col("fresh")).alias("revalidated"))
                 .cache()
             )
-            n_fresh, n_revalidated = replayed.agg(
-                F.count_if("fresh"), F.count_if(~F.col("fresh"))
-            ).first()
             visits = visits.unionByName(replayed.select(
                 F.lit(it).alias("iter"), "url", "url_hash", "host",
                 "priority", "seq", F.lit(304).alias("status"), "content_hash",
@@ -469,14 +494,18 @@ class Crawler:
             self.state.write(
                 "fetch_cache", it, merged_cache, n_files=WRITE_PARTITIONS,
             )
+        # AQE fills the `fetched` cache as a query stage of its own, with the
+        # fetch stage's partitions, so this write's coalesce does not run
+        # fetch+parse in fewer tasks
         self.state.write("visits", it, visits, n_files=WRITE_PARTITIONS)
 
         _mark("visits_write")
         # 5. content dedup (wave-internal argmin by seq, then anti-join)
         w_content = W.partitionBy("content_hash").orderBy("seq")
+        wave_docs_obs, docs_obs = Observation(), Observation()
         wave_docs = ok.withColumn("_rn", F.row_number().over(w_content)).filter(
             F.col("_rn") == 1
-        ).drop("_rn")
+        ).drop("_rn").observe(wave_docs_obs, F.count(F.lit(1)).alias("wave_docs"))
         content_seen = self.state.read_all("content_seen", it - 1)
         if content_seen is not None:
             new_docs = wave_docs.join(content_seen, "content_hash", "left_anti")
@@ -485,7 +514,9 @@ class Crawler:
         documents = new_docs.select(
             F.col("url").alias("doc_id"), "url_hash", "content_hash", "spans",
             F.lit(it).alias("iter"),
-        ).cache()  # consumed 3x: documents write, content_seen write, totals
+        ).observe(docs_obs, F.count(F.lit(1)).alias("new_docs")).cache()
+        # consumed 2x: the documents write (which fills the cache) and the
+        # content_seen write
         self.state.write("documents", it, documents, n_files=WRITE_PARTITIONS)
         self.state.write(
             "content_seen", it,
@@ -495,6 +526,7 @@ class Crawler:
 
         _mark("content_dedup")
         # 6. link expansion (ok includes replayed cache hits / 304s)
+        links_obs = Observation()
         links = (
             ok.select(
                 F.col("priority").alias("parent_priority"),
@@ -504,6 +536,7 @@ class Crawler:
             .withColumn("url", canonical_url("raw_url"))
             .withColumn("host", url_host("url"))
             .withColumn("url_hash", url_hash_col(F.col("url")))
+            .observe(links_obs, F.count(F.lit(1)).alias("links"))
         )
         w_link = W.partitionBy("url_hash").orderBy("parent_seq", "link_idx")
         candidates = (
@@ -522,9 +555,12 @@ class Crawler:
         # shard's bits, by filter size (CrawlConfig.shard_local).
         previous = self._committed_filter(it - 1)
         probe = probe_maybe_seen_join if cfg.shard_local() else probe_maybe_seen_broadcast
-        candidates = probe(candidates, previous, cfg.n_shards, cfg.seen_filter).cache()
-        # materialize the cached probe frame once for its two consumers
-        candidates.count()
+        probe_obs = Observation()
+        # cached for its two consumers below; the seen write fills it
+        candidates = probe(candidates, previous, cfg.n_shards, cfg.seen_filter).observe(
+            probe_obs, F.count(F.lit(1)).alias("candidates"),
+            F.count_if("_maybe").alias("maybe"),
+        ).cache()
         _mark("probe_cache")
         definitely_new = candidates.filter(~F.col("_maybe")).drop("_maybe")
         seen = self.state.read_all("seen", it - 1)
@@ -542,11 +578,13 @@ class Crawler:
         w_seq = W.partitionBy(F.crc32(F.col("url_hash")) * F.lit(0)).orderBy(
             "parent_seq", "link_idx", "url_hash"
         )
+        new_urls_obs = Observation()
         new_urls = new_urls.withColumn(
             "seq", (F.lit(max_seq) + F.row_number().over(w_seq)).cast("long")
-        ).select("url", "url_hash", "host", "priority", "seq").cache()
+        ).select("url", "url_hash", "host", "priority", "seq").observe(
+            new_urls_obs, F.count(F.lit(1)).alias("new_urls"),
+        ).cache()  # the seen write fills it
         _mark("new_urls_plan")
-        n_new = new_urls.count()
 
         _mark("dedup_new_urls")
         # 7. persist deltas + next frontier + lineage
@@ -577,17 +615,37 @@ class Crawler:
         self.state.write("metrics", it, part_metrics, n_files=1)
 
         _mark("persist")
+        n_frontier, n_denied = _observed(robots_obs, "frontier", "denied")
+        n_fetched, n_ok = _observed(fetched_obs, "fetched", "ok")
+        n_new, = _observed(new_urls_obs, "new_urls")
+        n_candidates, n_maybe = _observed(probe_obs, "candidates", "maybe")
         totals = {
             "iter": it,
             "fetched": n_fetched,
             "denied": n_denied,
             "new_urls": n_new,
-            "new_docs": documents.count(),
+            "new_docs": _observed(docs_obs, "new_docs")[0],
         }
-        if cfg.cache_ttl_iters is not None:
-            totals["cache_hits"] = n_fresh
-            totals["revalidated"] = n_revalidated
+        if replay_obs is not None:
+            totals["cache_hits"], totals["revalidated"] = _observed(
+                replay_obs, "cache_hits", "revalidated")
         chain = self._chain(prev_chain, totals)
+        # maybe-seen candidates the exact anti-join kept are the filter's
+        # false positives; every new URL is a true negative of the filter
+        filter_fp = n_new - (n_candidates - n_maybe)
+        wave_stats = {
+            "frontier": n_frontier, "denied": n_denied,
+            "dequeued": _observed(ranked_obs, "dequeued")[0],
+            "fetched": n_fetched, "ok": n_ok,
+            **{k: totals[k] for k in ("cache_hits", "revalidated") if k in totals},
+            "wave_docs": _observed(wave_docs_obs, "wave_docs")[0],
+            "new_docs": totals["new_docs"],
+            "links": _observed(links_obs, "links")[0],
+            "candidates": n_candidates, "maybe_seen": n_maybe,
+            "seen_hits": n_maybe - filter_fp, "filter_fp": filter_fp,
+            "filter_fp_rate": round(filter_fp / n_new, 6) if n_new else 0.0,
+            "new_urls": n_new, "shard_local": cfg.shard_local(),
+        }
         new_max_seq = max_seq + n_new
         documents.unpersist()
         fetched.unpersist()
@@ -596,13 +654,14 @@ class Crawler:
         ranked.unpersist()
         if replayed is not None:
             replayed.unpersist()
-        # stage timings ride the manifest OUTSIDE the chained totals —
-        # wall-clock is host-dependent and must not perturb the
-        # deterministic lineage chain hash.
+        # stage timings and the wave's stats ride the manifest OUTSIDE the
+        # chained totals — wall-clock is host-dependent and must not
+        # perturb the deterministic lineage chain hash.
         self.state.commit(
             it, chain,
             extra={"max_seq": new_max_seq, "totals": totals,
                    "stage_secs": _stage_secs},
+            wave_stats={**wave_stats, "stage_secs": dict(_stage_secs)},
         )
         _mark("metrics+commit")
 

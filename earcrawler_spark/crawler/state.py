@@ -88,6 +88,21 @@ def arrow_frame(
     return spark.createDataFrame(table, struct)
 
 
+def crawl_report(state_dir: str) -> list[dict]:
+    """The committed waves' stats records of the crawl in ``state_dir``,
+    in iteration order, each with its "iter": rows in and out per stage,
+    the seen filter's live false-positive rate, the probe mode and the
+    stage seconds. Reads the manifest only; starts no Spark job."""
+    path = os.path.join(state_dir, "manifest.json")
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        m = json.load(f)
+    records = m.get("wave_stats", {})
+    return [{"iter": i, **records[str(i)]}
+            for i in range(1, m["completed_iter"] + 1) if str(i) in records]
+
+
 class CrawlState:
     def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
@@ -106,9 +121,15 @@ class CrawlState:
             return json.load(f)
 
     # durable manifest keys that survive per-iteration commits
-    _STICKY_KEYS = ("compacted", "gens", "filter_config")
+    _STICKY_KEYS = ("compacted", "gens", "filter_config", "wave_stats")
 
-    def commit(self, iteration: int, chain_hash: str, extra: dict | None = None) -> None:
+    def commit(
+        self, iteration: int, chain_hash: str, extra: dict | None = None,
+        wave_stats: dict | None = None,
+    ) -> None:
+        """Commit ``iteration``. ``wave_stats`` joins the manifest's
+        per-iteration "wave_stats" records (read back by ``crawl_report``),
+        which, like every key but "chain_hash", stay outside the chain."""
         prev = self.manifest()
         m = {
             **{k: v for k, v in prev.items() if k in self._STICKY_KEYS},
@@ -116,6 +137,8 @@ class CrawlState:
             "chain_hash": chain_hash,
             **(extra or {}),
         }
+        if wave_stats is not None:
+            m["wave_stats"] = {**m.get("wave_stats", {}), str(iteration): wave_stats}
         self._write_manifest(m)
 
     def _write_manifest(self, m: dict) -> None:

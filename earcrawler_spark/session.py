@@ -20,6 +20,27 @@ from pyspark.sql import DataFrame, SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Generated classes Spark's codegen cache keeps (its default is 100).  A
+# smaller cache than the engine's working set misses on every lookup and
+# recompiles: a crawl pass (init_seeds + one wave) looks up ~145 distinct
+# classes, so at 100 entries each pass recompiled ~129 of them, while the
+# sf0.01 ``scripts/check_oracles.py`` sweep compiles 2899 distinct ones.
+# 4096 holds both, so a steady-state crawl wave compiles only the ~10
+# projections that carry its per-wave literals (``it``, ``max_seq``).
+CODEGEN_CACHE_ENTRIES = 4096
+
+# The static engine settings of every session this package builds:
+# get_spark's and the spark-submit job's (scripts/crawl_job.py).
+ENGINE_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+}
+
 
 def get_spark(
     app_name: str = "earcrawler_spark",
@@ -46,16 +67,10 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    extra = dict(extra_conf or {})
+    extra = {**ENGINE_CONFS, **(extra_conf or {})}
     if master.startswith("local"):
         # Python workers import the installed pyspark, not Spark's zip
         # (see pyworker.py), and find this package from any working

@@ -17,7 +17,8 @@ per task, after the daemon has started; a daemon module inside the
 package (``earcrawler_spark.pyworker``) could not be imported when the
 daemon starts.  So these workers import pyspark from Spark's zip and pay
 its per-task zip-directory re-read (see README, "Sessions and Python
-workers").
+workers").  The engine's static settings (``session.ENGINE_CONFS``,
+among them the codegen cache size) are the same as ``get_spark``'s.
 """
 
 from __future__ import annotations
@@ -25,13 +26,10 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 if __name__ == "__main__":
-    spark = (
-        SparkSession.builder.appName("earcrawler-crawl")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
     from earcrawler_spark.crawler import runner
+    from earcrawler_spark.session import ENGINE_CONFS
+
+    spark = SparkSession.builder.appName("earcrawler-crawl").config(map=ENGINE_CONFS).getOrCreate()
 
     runner.main(spark=spark)
     spark.stop()

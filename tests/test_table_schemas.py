@@ -15,7 +15,7 @@ import os
 import pytest
 from pyspark.sql import types as T
 
-from earcrawler_spark.session import TABLE_SCHEMAS, table
+from earcrawler_spark.session import _SHARED, TABLE_SCHEMAS, table
 from perfbench import sweep, tables
 from tests.conftest import SF_MED, SF_SMALL
 
@@ -167,6 +167,13 @@ def test_unpinned_rows_leave_no_cache_entries(spark):
         for _ in range(2):
             QUERIES[name](spark, FIXTURE_DIRS[0]).count()
         assert _cache_manager_entries(spark) == before, name
+
+    # a shared_output build leaves its one pin and no intermediate
+    for key in [k for k in _SHARED if k[2] == "fr_coverage"]:
+        _SHARED.pop(key).unpersist()
+    before = _cache_manager_entries(spark)
+    QUERIES["fr_coverage"](spark, FIXTURE_DIRS[0]).count()
+    assert _cache_manager_entries(spark) == before + 1
 
 
 # -- one reader ----------------------------------------------------------
