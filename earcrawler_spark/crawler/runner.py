@@ -96,16 +96,25 @@ from earcrawler_spark.crawler.state import (
 BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
-def _observed(obs: Observation, *names: str, timeout_s: float = 60.0) -> list[int]:
-    """The named counts of ``obs`` once a plan it sits in has run (an
-    Observation reports through a listener, just after its action). A
-    subtree the optimizer pruned as provably empty reports no row: its
-    counts are 0."""
+# How long the commit waits for an Observation whose plan has already run
+# (its listener reports just after the action); a longer wait means the
+# observed frame sat in no plan that ran.
+OBSERVATION_WAIT_S = 60.0
+
+
+def _observed(obs: Observation, *names: str) -> list[int]:
+    """The named counts of ``obs`` once a plan it sits in has run. A
+    subtree the optimizer pruned as provably empty reports an empty row:
+    its counts are 0.
+
+    Reads Observation's JVM handle (``_jo.future()``, ``_jo.getRow()``),
+    which PySpark keeps private; checked against PySpark/Spark 4.1.2, and
+    tests/test_crawl_wave_cost.py pins both behaviours."""
     future = obs._jo.future()
-    deadline = time.monotonic() + timeout_s
+    deadline = time.monotonic() + OBSERVATION_WAIT_S
     while not future.isCompleted():
         if time.monotonic() > deadline:
-            raise RuntimeError(f"no plan observed {names} within {timeout_s} s")
+            raise RuntimeError(f"no plan observed {names} within {OBSERVATION_WAIT_S} s")
         time.sleep(0.002)
     row = obs.get if obs._jo.getRow().length() else {}
     return [int(row.get(n) or 0) for n in names]
@@ -585,8 +594,6 @@ class Crawler:
             new_urls_obs, F.count(F.lit(1)).alias("new_urls"),
         ).cache()  # the seen write fills it
         _mark("new_urls_plan")
-
-        _mark("dedup_new_urls")
         # 7. persist deltas + next frontier + lineage
         self.state.write(
             "seen", it,
@@ -626,25 +633,26 @@ class Crawler:
             "new_urls": n_new,
             "new_docs": _observed(docs_obs, "new_docs")[0],
         }
-        if replay_obs is not None:
-            totals["cache_hits"], totals["revalidated"] = _observed(
-                replay_obs, "cache_hits", "revalidated")
+        if cfg.cache_ttl_iters is not None:
+            # a wave with no fetch cache yet replays nothing: 0 and 0
+            totals["cache_hits"], totals["revalidated"] = (
+                (0, 0) if replay_obs is None
+                else _observed(replay_obs, "cache_hits", "revalidated"))
         chain = self._chain(prev_chain, totals)
         # maybe-seen candidates the exact anti-join kept are the filter's
         # false positives; every new URL is a true negative of the filter
         filter_fp = n_new - (n_candidates - n_maybe)
+        # the wave's stage counts that `totals` does not carry
         wave_stats = {
-            "frontier": n_frontier, "denied": n_denied,
+            "frontier": n_frontier,
             "dequeued": _observed(ranked_obs, "dequeued")[0],
-            "fetched": n_fetched, "ok": n_ok,
-            **{k: totals[k] for k in ("cache_hits", "revalidated") if k in totals},
+            "ok": n_ok,
             "wave_docs": _observed(wave_docs_obs, "wave_docs")[0],
-            "new_docs": totals["new_docs"],
             "links": _observed(links_obs, "links")[0],
             "candidates": n_candidates, "maybe_seen": n_maybe,
             "seen_hits": n_maybe - filter_fp, "filter_fp": filter_fp,
             "filter_fp_rate": round(filter_fp / n_new, 6) if n_new else 0.0,
-            "new_urls": n_new, "shard_local": cfg.shard_local(),
+            "shard_local": cfg.shard_local(),
         }
         new_max_seq = max_seq + n_new
         documents.unpersist()
@@ -660,8 +668,8 @@ class Crawler:
         self.state.commit(
             it, chain,
             extra={"max_seq": new_max_seq, "totals": totals,
-                   "stage_secs": _stage_secs},
-            wave_stats={**wave_stats, "stage_secs": dict(_stage_secs)},
+                   "stage_secs": _stage_secs,
+                   "wave_stats": {**manifest.get("wave_stats", {}), str(it): wave_stats}},
         )
         _mark("metrics+commit")
 

@@ -90,17 +90,23 @@ def arrow_frame(
 
 def crawl_report(state_dir: str) -> list[dict]:
     """The committed waves' stats records of the crawl in ``state_dir``,
-    in iteration order, each with its "iter": rows in and out per stage,
-    the seen filter's live false-positive rate, the probe mode and the
-    stage seconds. Reads the manifest only; starts no Spark job."""
+    in iteration order, each with its "iter": the stage counts `totals`
+    does not carry (rows into and out of dequeue, parse, content dedup,
+    link expansion and the seen-filter probe), the filter's live
+    false-positive rate and the probe mode. The manifest keeps `totals`
+    and `stage_secs` for the last committed wave only; they join its
+    record. Reads the manifest only; starts no Spark job."""
     path = os.path.join(state_dir, "manifest.json")
     if not os.path.exists(path):
         return []
     with open(path) as f:
         m = json.load(f)
     records = m.get("wave_stats", {})
-    return [{"iter": i, **records[str(i)]}
-            for i in range(1, m["completed_iter"] + 1) if str(i) in records]
+    report = [{"iter": i, **records[str(i)]}
+              for i in range(1, m["completed_iter"] + 1) if str(i) in records]
+    if report and report[-1]["iter"] == m["completed_iter"]:
+        report[-1].update(m["totals"], stage_secs=m["stage_secs"])
+    return report
 
 
 class CrawlState:
@@ -121,15 +127,9 @@ class CrawlState:
             return json.load(f)
 
     # durable manifest keys that survive per-iteration commits
-    _STICKY_KEYS = ("compacted", "gens", "filter_config", "wave_stats")
+    _STICKY_KEYS = ("compacted", "gens", "filter_config")
 
-    def commit(
-        self, iteration: int, chain_hash: str, extra: dict | None = None,
-        wave_stats: dict | None = None,
-    ) -> None:
-        """Commit ``iteration``. ``wave_stats`` joins the manifest's
-        per-iteration "wave_stats" records (read back by ``crawl_report``),
-        which, like every key but "chain_hash", stay outside the chain."""
+    def commit(self, iteration: int, chain_hash: str, extra: dict | None = None) -> None:
         prev = self.manifest()
         m = {
             **{k: v for k, v in prev.items() if k in self._STICKY_KEYS},
@@ -137,8 +137,6 @@ class CrawlState:
             "chain_hash": chain_hash,
             **(extra or {}),
         }
-        if wave_stats is not None:
-            m["wave_stats"] = {**m.get("wave_stats", {}), str(iteration): wave_stats}
         self._write_manifest(m)
 
     def _write_manifest(self, m: dict) -> None:

@@ -22,6 +22,17 @@ EXPECTED = {
         "c406a193e303ee10a1970cdb63bcae89eb65d3c3d26fe61ca89abb412c87d48b"),
 }
 
+# The same for the un-bootstrapped crawl that fills the cache: its wave 1
+# finds no cache yet and still counts 0 hits and 0 revalidations.
+EXPECTED_SRC = {
+    1: ({"iter": 1, "fetched": 12, "denied": 0, "new_urls": 48, "new_docs": 12,
+         "cache_hits": 0, "revalidated": 0},
+        "b46538b1e9df840f3dbc2a4ab28507387d3c8f34602b5978a6f6525eba0f7e6a"),
+    2: ({"iter": 2, "fetched": 46, "denied": 2, "new_urls": 148, "new_docs": 43,
+         "cache_hits": 0, "revalidated": 0},
+        "52f1b9ec67d57878acb2f5b5d5f7d9b7c8f0466b3d220058a2740f5c9ff231f2"),
+}
+
 
 def _seen(c: Crawler) -> set[str]:
     return {r["url_hash"] for r in c.seen_set().collect()}
@@ -33,7 +44,11 @@ def test_fresh_hits_and_revalidations_replay_alike(spark, tmp_path):
     src = Crawler(spark, str(tmp_path / "src"),
                   CrawlConfig(max_iters=2, n_partitions=4, cache_ttl_iters=1))
     src.init_seeds(synth.seed_list())
-    src.run()
+    got = {}
+    for it in (1, 2):
+        m = src.run(max_iters=it)
+        got[it] = (m["totals"], m["chain_hash"])
+    assert got == EXPECTED_SRC
     cache = src.state.read_latest("fetch_cache", src.state.manifest()["completed_iter"])
 
     # bootstrapped entries start at age 0, so with ttl 1 wave 1's seeds

@@ -8,12 +8,13 @@ from __future__ import annotations
 
 import pytest
 from pyspark import TaskContext
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from earcrawler_spark.crawler import synth
 from earcrawler_spark.crawler.bloom import probe_hashes
 from earcrawler_spark.crawler.fetch import synthetic_fetch_one
-from earcrawler_spark.crawler.runner import Crawler, CrawlConfig
+from earcrawler_spark.crawler.runner import Crawler, CrawlConfig, _observed
 from earcrawler_spark.crawler.state import crawl_report
 from tests.test_table_schemas import _job_group
 
@@ -86,24 +87,55 @@ def test_wave_stats_equal_direct_counts(spark, tmp_path):
         visits = c.state.read_all("visits", i).filter(F.col("iter") == i)
         pages = visits.filter(F.col("status") == 200)
         seen_delta = c.state.read_all("seen", i).filter(F.col("iter") == i)
-        remainder = c.state.read_latest("frontier", i).count() - r["new_urls"]
         links = c.state.read_all("metrics", i).filter(F.col("iter") == i).agg(
             F.sum("n_links")).first()[0]
         fp = sum(probe_hashes([row.url_hash for row in seen_delta.collect()],
                               c._load_bloom(i - 1), c.cfg.n_shards))
         assert r["frontier"] == c.state.read_latest("frontier", i - 1).count()
-        assert r["dequeued"] == r["fetched"] == visits.count()
-        assert r["denied"] == r["frontier"] - r["dequeued"] - remainder
+        assert r["dequeued"] == visits.count()
         assert r["ok"] == pages.count()
         assert r["wave_docs"] == pages.select("content_hash").distinct().count()
-        assert r["new_docs"] == c.state.read_all("documents", i).filter(
-            F.col("iter") == i).count()
         assert r["links"] == links
-        assert r["new_urls"] == seen_delta.count()
         assert r["filter_fp"] == fp
         assert r["seen_hits"] + r["filter_fp"] == r["maybe_seen"]
         assert r["shard_local"] is False
-        assert set(r["stage_secs"]) >= {"robots", "visits_write", "seen_write"}
-    last = report[-1]
-    assert c.state.manifest()["totals"] == {
-        "iter": 2, **{k: last[k] for k in ("fetched", "denied", "new_urls", "new_docs")}}
+    # the last wave's record also carries the manifest's totals and timings
+    last, m = report[-1], c.state.manifest()
+    assert "fetched" not in report[0] and "stage_secs" not in report[0]
+    assert {k: last[k] for k in m["totals"]} == m["totals"]
+    assert last["stage_secs"] == m["stage_secs"]
+    assert set(last["stage_secs"]) >= {"robots", "visits_write", "seen_write"}
+    remainder = c.state.read_latest("frontier", 2).count() - last["new_urls"]
+    assert last["denied"] == last["frontier"] - last["dequeued"] - remainder
+    assert last["fetched"] == last["dequeued"]
+    assert last["new_urls"] == c.state.read_all("seen", 2).filter(F.col("iter") == 2).count()
+    assert last["new_docs"] == c.state.read_all("documents", 2).filter(
+        F.col("iter") == 2).count()
+
+
+def _noop_write(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_observed_reads_pruned_plans_as_zero_and_cache_fills_in_full(spark):
+    """`runner._observed` reads PySpark's private Observation handle; this
+    pins the two behaviours the wave's totals rely on, so an upgrade that
+    changes either fails here rather than moving a chain hash."""
+    # a frame the optimizer prunes as provably empty (here: above it)
+    # still completes its Observation, with an empty metrics row
+    pruned = Observation()
+    _noop_write(spark.range(10).observe(pruned, F.count(F.lit(1)).alias("n"))
+                .filter(F.lit(False)))
+    assert pruned._jo.getRow().length() == 0
+    assert _observed(pruned, "n") == [0]
+    # an observed frame cached and filled by a reader of only some of its
+    # rows counts all of them, also from one branch of a union
+    filled = Observation()
+    cached = spark.range(100).repartition(4).observe(
+        filled, F.count(F.lit(1)).alias("n"), F.count_if(F.col("id") < 10).alias("small"),
+    ).cache()
+    try:
+        _noop_write(spark.range(3).unionByName(cached.filter(F.col("id") < 10)))
+        assert _observed(filled, "n", "small") == [100, 10]
+    finally:
+        cached.unpersist()
